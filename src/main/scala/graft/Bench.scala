@@ -47,8 +47,10 @@ object Bench {
       }
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
-      queries.foreach { case (_, fn) =>
-        try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+      queries.foreach { case (name, fn) =>
+        try run(fn(spark, warmDir)) catch {
+          case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e")
+        }
       }
     // Median-of-N per query (default 3, SPARK_GRAFT_REPS to override):
     // single-shot timings on a shared local[32] JVM swing 3-5x on
@@ -69,6 +71,10 @@ object Bench {
     // for every steady-state query.
     val priced = graft.queries.Queries.priced
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
+    // A rep that threw is never a sample: a query dying early would
+    // otherwise LOWER its reading and the total. Its last message lands
+    // in bench_out.json's "failed" map instead.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for (rep <- 1 to reps; (name, fn) <- queries
          if rep <= 2 || !priced(name)) {
       // Collect the PREVIOUS query's garbage before starting the clock:
@@ -76,12 +82,17 @@ object Bench {
       // debris whose collection otherwise lands inside whichever query
       // runs next — measured 3.7x inflation on mm_resize (1.4s isolated
       // vs 5.4s interleaved) purely from inherited heap pressure.
-      // SPARK_GRAFT_GC=0 disables (A/B attribution knob).
-      if (sys.env.getOrElse("SPARK_GRAFT_GC", "1") != "0") System.gc()
+      System.gc()
       val t0 = System.nanoTime()
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
-      val t = (System.nanoTime() - t0) / 1e9
-      samples.updateWith(name)(prev => Some(t :: prev.getOrElse(Nil)))
+      try {
+        run(fn(spark, sfDir))
+        val t = (System.nanoTime() - t0) / 1e9
+        samples.updateWith(name)(prev => Some(t :: prev.getOrElse(Nil)))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name rep $rep failed: $e")
+          failed(name) = String.valueOf(e)
+      }
     }
     // linear-interpolated quantile over the sorted reps: with the default
     // 3 reps this reads (min, median, max) — exactly the spread that
@@ -117,8 +128,11 @@ object Bench {
         s"\"p75\":${quantile(sorted, 0.75)}}"
     }.mkString("{", ",", "}")
     val pricedRan = queries.keys.filter(priced).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map { case (name, msg) =>
+      Verify.jsonString(name) + ":" + Verify.jsonString(msg)
+    }.mkString("{", ",", "}")
     val fileLine = line.dropRight(1) +
-      s""","reps":$reps,"priced_min_of_2":$pricedRan,"quantiles":$spread}"""
+      s""","reps":$reps,"priced_min_of_2":$pricedRan,"quantiles":$spread,"failed":$failedJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       (fileLine + "\n").getBytes("UTF-8"))

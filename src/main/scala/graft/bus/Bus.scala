@@ -29,9 +29,28 @@ trait Bus {
   def spark: SparkSession
 
   /** Producer side: wrap and publish a typed batch to the type's topic
-    * (reference: bus/package.scala:52-60 `Publisher.publish[T]`).
+    * (reference: bus/package.scala:52-60 `Publisher.publish[T]`). Every
+    * bus does it the same way: [[envelopesOf]] through
+    * [[publishEnvelopes]] to topic `EnvelopeCodec.fqnOf[T]`.
     */
   def publish[T: Encoder](events: Seq[T], key: Option[T => String] = None): Unit
+
+  /** One fresh envelope per event for [[publish]]: payloads encoded
+    * through [[encodePayloads]], event type = the payload type's FQN.
+    */
+  protected def envelopesOf[T](events: Seq[T], key: Option[T => String])
+                              (implicit enc: Encoder[T]): Seq[PublishedEvent] = {
+    val fqn = EnvelopeCodec.fqnOf[T]
+    events.zip(encodePayloads(events)).map { case (e, payload) =>
+      PublishedEvent(
+        EventMeta(
+          eventId = java.util.UUID.randomUUID().toString,
+          eventType = fqn,
+          key = key.map(f => f(e)),
+          occurredAt = new java.sql.Timestamp(System.currentTimeMillis())),
+        payload = payload)
+    }
+  }
 
   /** Publish pre-built envelopes (reference: `publish(event: PublishedEvent)`,
     * KafkaBus.scala:56-80) — used for RPC replies where meta is enriched.
@@ -97,23 +116,18 @@ final class MemoryBus(val spark: SparkSession) extends Bus {
         spark.sqlContext))
 
   def publish[T](events: Seq[T], key: Option[T => String] = None)
-                (implicit enc: Encoder[T]): Unit = {
-    val fqn = EnvelopeCodec.fqnOf[T]
-    val payloads = encodePayloads(events)
-    val envs = events.zip(payloads).map { case (e, payload) =>
-      PublishedEvent(
-        EventMeta(
-          eventId = java.util.UUID.randomUUID().toString,
-          eventType = fqn,
-          key = key.map(f => f(e)),
-          occurredAt = new java.sql.Timestamp(System.currentTimeMillis())),
-        payload = payload)
-    }
-    streamFor(fqn).addData(envs)
-  }
+                (implicit enc: Encoder[T]): Unit =
+    publishEnvelopes(EnvelopeCodec.fqnOf[T], envelopesOf(events, key))
 
-  def publishEnvelopes(topic: String, events: Seq[PublishedEvent]): Unit =
-    streamFor(topic).addData(events)
+  /** `addData` encodes rows through the stream's one shared serializer,
+    * which is not thread-safe: concurrent callers (sink tasks closing
+    * their partitions, RPC clients) corrupt topic rows unless each
+    * stream's appends are serialized.
+    */
+  def publishEnvelopes(topic: String, events: Seq[PublishedEvent]): Unit = {
+    val stream = streamFor(topic)
+    stream.synchronized(stream.addData(events))
+  }
 
   def source(topic: String): DataFrame = streamFor(topic).toDF()
 

@@ -90,19 +90,8 @@ final class KafkaBus(val spark: SparkSession,
   }
 
   def publish[T](events: Seq[T], key: Option[T => String] = None)
-                (implicit enc: Encoder[T]): Unit = {
-    val fqn = EnvelopeCodec.fqnOf[T]
-    val payloads = encodePayloads(events)
-    publishEnvelopes(fqn, events.zip(payloads).map { case (e, payload) =>
-      PublishedEvent(
-        EventMeta(
-          eventId = java.util.UUID.randomUUID().toString,
-          eventType = fqn,
-          key = key.map(f => f(e)),
-          occurredAt = new java.sql.Timestamp(System.currentTimeMillis())),
-        payload = payload)
-    })
-  }
+                (implicit enc: Encoder[T]): Unit =
+    publishEnvelopes(EnvelopeCodec.fqnOf[T], envelopesOf(events, key))
 
   /** Driver-originated publish (RPC clients, tests): a one-batch write
     * through the stock Kafka sink — same wire transform as the streaming

@@ -2470,9 +2470,9 @@ object TextAnalysis {
                           dim: Int = 4096): DataFrame = {
     val tok = s"filter(split($text, ' '), w -> w <> '')"
     // the logit loop is the compiled graft_classifier_logit (one
-    // md5-per-token pass); the declarative HOF twin below stays as the
-    // parity baseline the oracle runs -- it pays an interpreted lambda
-    // plus a hex-string parse per token (measured 4x at 1M docs)
+    // md5-per-token pass): a declarative HOF loop pays an interpreted
+    // lambda plus a hex-string parse per token (measured 4x at 1M docs);
+    // the oracle runs the DuckDB twin below
     graft.functions.VectorFunctions.attach(docs)
       .select(col(id),
         expr(s"size($tok)").as("n_tokens"),
@@ -2481,17 +2481,6 @@ object TextAnalysis {
       .withColumn("score", round(col("logit").cast("double") /
         (col("n_tokens") * 1000.0), 6))
       .withColumn("keep", (col("score") >= 0.0).cast("int"))
-  }
-
-  /** Declarative Spark twin of the compiled logit (parity baseline —
-    * see HashOpsPropertySpec).
-    */
-  def hashClassifierLogitHof(text: String, dim: Int): String = {
-    val tok = s"filter(split($text, ' '), w -> w <> '')"
-    val h = graft.ops.PortableHash.sparkStringHash("t")
-    val wExpr = s"((($h % $dim) * 37 + 11) % 2001) - 1000"
-    s"aggregate(transform($tok, t -> cast($wExpr AS BIGINT)), " +
-      "cast(0 AS BIGINT), (acc, v) -> acc + v)"
   }
 
   /** DuckDB twin of [[hashClassifierScore]]. */

@@ -170,8 +170,9 @@ object Queries {
     * index every run by design; `embed_ivf_kmeans` trains its centroids
     * in-query as the build leg) and the two quarantined quadratic
     * verifiers (whose linear twins are the registered scale paths).
-    * [[graft.Bench]] times these at ONE rep instead of the median-of-N
-    * so suite growth stays sublinear in query count; the median
+    * [[graft.Bench]] times these at most TWICE and reports the minimum
+    * instead of the median-of-N, so suite growth stays sublinear in
+    * query count; the median
     * discipline (and cross-round attribution) is unchanged for every
     * steady-state query. Membership is a registration decision — add a
     * query here ONLY with a comment on which twin carries its
@@ -278,38 +279,30 @@ object Queries {
     s"CASE WHEN doc_id % 3 = 0 THEN replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
       s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') || '$zhDictPlant' ELSE text END"
 
+  /** Full-width sentence fixture shared by `text_sentences_cjk` and
+    * `text_chunk_sentences_cjk` (r14; the first query's comment says
+    * what each row class exercises).
+    */
+  private val zhSentenceFixtureSpark: String =
+    s"IF(doc_id % 3 = 0, " +
+      s"concat(replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.', " +
+      s"'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', ''), " +
+      s"'「中文句子。」结尾带省略号…完'), " +
+      s"text || '. Planted tail!  Second one? Third.')"
+  private val zhSentenceFixtureDuckTable: String =
+    s"""(SELECT doc_id, CASE WHEN doc_id % 3 = 0
+       | THEN replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.',
+       |   'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', '')
+       |   || '「中文句子。」结尾带省略号…完'
+       | ELSE text || '. Planted tail!  Second one? Third.' END AS text
+       | FROM documents)""".stripMargin.replace("\n", " ")
+
   /** th fixture (round 15): every 3rd doc re-rendered as unsegmented
     * Thai — letters mapped 1:1 onto 26 Thai consonants (codepoint-
     * fallback fodder; consonant soup matches no lexicon word) — plus a
     * planted space-free phrase of multi-codepoint [[graft.ops.ThLexicon]]
     * words the FMM grain must return whole (ประเทศไทย = 9 codepoints).
     */
-  /** The fixture-transformed documents frame each tfidf variant ranks,
-    * keyed by query name — shared between the QueryDef registrations
-    * and `tools/ProbeR21Tfidf`, so the probe's window-form "before"
-    * plans carry the exact scan + fixture projection the registered
-    * heap-form queries do (a plan diff that shows ONLY window → heap).
-    */
-  private[graft] val tfidfVariantGrain: Map[String, String] = Map(
-    "text_tfidf_keywords" -> "ws",
-    "text_tfidf_keywords_cjk" -> "cjk-auto",
-    "text_tfidf_keywords_cjkdict" -> "cjk-dict",
-    "text_tfidf_keywords_thaidict" -> "thai-dict")
-
-  private[graft] def tfidfVariantDocs(variant: String)(
-      s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    variant match {
-      case "text_tfidf_keywords" => docs
-      case "text_tfidf_keywords_cjk" =>
-        docs.withColumn("text", expr(zhFixtureSpark))
-      case "text_tfidf_keywords_cjkdict" =>
-        docs.withColumn("text", expr(zhDictFixtureSpark))
-      case "text_tfidf_keywords_thaidict" =>
-        docs.withColumn("text", expr(thDictFixtureSpark))
-    }
-  }
-
   private val th26: String = "กขคงจชญดตถทนบปผฝพฟมยรลวสหอ"
   private val thDictPlant: String =
     "ประเทศไทยมีภาษาไทยและอาหารอร่อยมากเราชอบกินข้าวและว่ายน้ำ"
@@ -4015,16 +4008,11 @@ object Queries {
     // LEFT-JOINed back to the table so token-less docs keep dl=0 rows
     QueryDef("text_bm25_topk_cjkdict",
       (s, dir) => TextAnalysis.bm25TopK(
-        t(s, dir, "documents").withColumn("text", expr(
-          s"IF(doc_id % 3 = 0, concat(replace(translate(translate(substring(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-            s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', ''), '$zhDictPlant'), text)")),
+        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
         "doc_id", "text", terms = Seq("我们", "人工智能", "图书馆"), k = 25,
         wordGrain = "cjk-dict"),
       Some(TextAnalysis.bm25TopKSql(
-        s"(SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN " +
-          s"replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-          s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') || '$zhDictPlant' " +
-          s"ELSE text END AS text FROM documents)",
+        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
         "doc_id", "text", terms = Seq("我们", "人工智能", "图书馆"), k = 25,
         wordGrain = "cjk-dict"))),
 
@@ -4036,7 +4024,7 @@ object Queries {
     // exchanges, df joined never broadcast)
     QueryDef("text_tfidf_keywords",
       (s, dir) => TextAnalysis.tfidfKeywords(
-        tfidfVariantDocs("text_tfidf_keywords")(s, dir),
+        t(s, dir, "documents"),
         "doc_id", "text", k = 3),
       Some(TextAnalysis.tfidfKeywordsSql("documents", "doc_id", "text", k = 3))),
 
@@ -4047,7 +4035,7 @@ object Queries {
     // the untranslated 2/3 of the corpus keeps its ws keywords
     QueryDef("text_tfidf_keywords_cjk",
       (s, dir) => TextAnalysis.tfidfKeywords(
-        tfidfVariantDocs("text_tfidf_keywords_cjk")(s, dir),
+        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
         "doc_id", "text", k = 3, wordGrain = "cjk-auto"),
       Some(TextAnalysis.tfidfKeywordsSql(
         s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
@@ -4061,13 +4049,10 @@ object Queries {
     // keeps the cursor recursion an oracle-side triviality
     QueryDef("text_tfidf_keywords_cjkdict",
       (s, dir) => TextAnalysis.tfidfKeywords(
-        tfidfVariantDocs("text_tfidf_keywords_cjkdict")(s, dir),
+        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
         "doc_id", "text", k = 3, wordGrain = "cjk-dict"),
       Some(TextAnalysis.tfidfKeywordsSql(
-        s"(SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN " +
-          s"replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-          s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') || '$zhDictPlant' " +
-          s"ELSE text END AS text FROM documents)",
+        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
         "doc_id", "text", k = 3, wordGrain = "cjk-dict"))),
 
     // unigram LM-filter scoring on the cjk-auto grain: vocabulary AND
@@ -4270,20 +4255,9 @@ object Queries {
     // tail so both classes run in one corpus
     QueryDef("text_sentences_cjk",
       (s, dir) => TextAnalysis.sentences(
-        t(s, dir, "documents").withColumn("text", expr(
-          s"IF(doc_id % 3 = 0, " +
-            s"concat(replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.', " +
-            s"'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', ''), " +
-            s"'「中文句子。」结尾带省略号…完'), " +
-            s"text || '. Planted tail!  Second one? Third.')")),
+        t(s, dir, "documents").withColumn("text", expr(zhSentenceFixtureSpark)),
         "doc_id", "text"),
-      Some(TextAnalysis.sentencesSql(
-        s"""(SELECT doc_id, CASE WHEN doc_id % 3 = 0
-           | THEN replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.',
-           |   'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', '')
-           |   || '「中文句子。」结尾带省略号…完'
-           | ELSE text || '. Planted tail!  Second one? Third.' END AS text
-           | FROM documents)""".stripMargin.replace("\n", " "),
+      Some(TextAnalysis.sentencesSql(zhSentenceFixtureDuckTable,
         "doc_id", "text"))),
 
     // sentence-ALIGNED chunking (r14): sentences pack into fixed
@@ -4307,20 +4281,9 @@ object Queries {
     // sentence-chunking degenerated to one chunk per doc
     QueryDef("text_chunk_sentences_cjk",
       (s, dir) => TextAnalysis.chunkBySentences(
-        t(s, dir, "documents").withColumn("text", expr(
-          s"IF(doc_id % 3 = 0, " +
-            s"concat(replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.', " +
-            s"'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', ''), " +
-            s"'「中文句子。」结尾带省略号…完'), " +
-            s"text || '. Planted tail!  Second one? Third.')")),
+        t(s, dir, "documents").withColumn("text", expr(zhSentenceFixtureSpark)),
         "doc_id", "text", size = 16, grain = "cjk-auto"),
-      Some(TextAnalysis.chunkBySentencesSql(
-        s"""(SELECT doc_id, CASE WHEN doc_id % 3 = 0
-           | THEN replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.',
-           |   'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', '')
-           |   || '「中文句子。」结尾带省略号…完'
-           | ELSE text || '. Planted tail!  Second one? Third.' END AS text
-           | FROM documents)""".stripMargin.replace("\n", " "),
+      Some(TextAnalysis.chunkBySentencesSql(zhSentenceFixtureDuckTable,
         "doc_id", "text", size = 16, grain = "cjk-auto"))),
 
     // Canonical normalization (NFC + ascii-lower + whitespace collapse):
@@ -4853,15 +4816,10 @@ object Queries {
     // oracle-side triviality)
     QueryDef("text_vocab_cjkdict",
       (s, dir) => TextAnalysis.vocabulary(
-        t(s, dir, "documents").withColumn("text", expr(
-          s"IF(doc_id % 3 = 0, concat(replace(translate(translate(substring(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-            s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', ''), '$zhDictPlant'), text)")),
+        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
         "text", topV = 100, wordGrain = "cjk-dict"),
       Some(TextAnalysis.vocabularySql(
-        s"(SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN " +
-          s"replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-          s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') || '$zhDictPlant' " +
-          s"ELSE text END AS text FROM documents)",
+        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
         "text", topV = 100, wordGrain = "cjk-dict"))),
 
     // vocabulary on the thai-dict FMM grain (round 15): Thai is the
@@ -4886,7 +4844,7 @@ object Queries {
     // letter soup (Thai combining vowels rank as "keywords")
     QueryDef("text_tfidf_keywords_thaidict",
       (s, dir) => TextAnalysis.tfidfKeywords(
-        tfidfVariantDocs("text_tfidf_keywords_thaidict")(s, dir),
+        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
         "doc_id", "text", k = 3, wordGrain = "thai-dict"),
       Some(TextAnalysis.tfidfKeywordsSql(
         s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",

@@ -102,4 +102,53 @@ class ServiceFlowSpec extends SparkSpec {
       assert(rows.toSeq === Seq(("q-1", """{"userId":"u2","total":2.0}""")))
     } finally queries.foreach(_.stop())
   }
+
+  test("MemoryBus: concurrent driver publishes and sink tasks deliver every envelope intact") {
+    // Four driver threads and a four-partition sink (whose tasks append
+    // from ForeachWriter.close) publish to ONE topic at once: every
+    // eventId must arrive exactly once with the payload built for it.
+    val bus = new MemoryBus(spark)
+    val topic = classOf[Ping].getName
+    def env(id: String, n: Int): PublishedEvent = PublishedEvent(
+      EventMeta(eventId = id, eventType = topic),
+      s"""{"n":$n,"tag":"$id"}""".getBytes("UTF-8"))
+    val routed = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TopicEnvelope](
+      org.apache.spark.sql.Encoders.product[TopicEnvelope], spark.sqlContext)
+    val sink = bus.sinkEnvelopes(routed.toDF().repartition(4))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val drivers = (0 until 4).map { t =>
+      new Thread(() => try {
+        start.await()
+        (0 until 500).grouped(5).foreach { chunk =>
+          bus.publishEnvelopes(topic, chunk.map(i => env(s"drv-$t-$i", i)))
+          Thread.sleep(1)
+        }
+      } catch { case e: Throwable => errors.add(e) })
+    }
+    val batches = (0 until 4).map(b => (0 until 500).map { i =>
+      val e = env(s"sink-$b-$i", i)
+      TopicEnvelope(topic, e.meta, e.payload)
+    })
+    try {
+      drivers.foreach(_.start())
+      start.countDown()
+      batches.foreach(routed.addData(_))
+      sink.processAllAvailable()
+      drivers.foreach(_.join())
+    } finally sink.stop()
+    assert(errors.isEmpty, errors.toString)
+
+    val read = bus.source(topic).writeStream.format("memory")
+      .queryName("concurrent_publish").outputMode("append").start()
+    try read.processAllAvailable() finally read.stop()
+    val rows = spark.table("concurrent_publish")
+    val ids = rows.select($"meta.eventId").as[String].collect()
+    val expected = batches.flatten.map(_.meta.eventId) ++
+      (for (t <- 0 until 4; i <- 0 until 500) yield s"drv-$t-$i")
+    assert(ids.sorted.toSeq === expected.sorted)
+    val decoded = EnvelopeCodec.decodeWithMeta[Ping](rows).collect()
+    assert(decoded.length === 4000)
+    assert(decoded.forall { case (p, meta) => p.tag == meta.eventId })
+  }
 }
