@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional subset for fast local iteration; unset, every query runs
+    val only = onlyQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -17,10 +19,6 @@ object Verify {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional builder-side subset (comma-separated names) for fast local
-    // iteration; the driver never sets it, so its runs stay exhaustive
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names(n) })
     selected.foreach { case (name, fn) =>
@@ -36,6 +34,22 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** The queries a `SPARK_GRAFT_ONLY` value names (comma-separated;
+    * names are trimmed and empty ones dropped), or None when it is
+    * unset. Fails listing every name `known` lacks, and on a value that
+    * names nothing, so a typo cannot pass as an empty run.
+    */
+  private[graft] def onlyQueries(raw: Option[String],
+                                 known: String => Boolean = SparkEntry.queries.contains): Option[Set[String]] =
+    raw.map { v =>
+      val names = v.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(known)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY names no query: '$v'")
+      names
+    }
 
   /** JSON string literal: escapes backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in hand-written SQL would otherwise make the

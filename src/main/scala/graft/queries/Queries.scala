@@ -227,39 +227,65 @@ object Queries {
   private val urlFixtureDuckTable: String =
     s"(SELECT doc_id, $urlFixtureDuck AS url FROM documents)"
 
-  /** Mojibake fixture suffix: a phrase run through the ACTUAL
-    * corruption the op repairs (UTF-8 bytes read as cp1252), appended
-    * to every 3rd doc. Contains no quotes, so it embeds in both
-    * dialects' literals verbatim.
+  /** One document fixture in both dialects: a Spark SQL expression that
+    * rewrites `text` over a documents-shaped frame, and its DuckDB twin.
+    * Each rewrite is stated once per dialect, here, and
+    * QuerySchemaGuardSpec pins every pair row for row.
     */
-  private val mojiSuffix: String =
-    " " + graft.ops.Mojibake.mojibakeOf("café ’quoted’ «guille» – dash… 90° ¡sí! ñandú")
+  private[graft] class DocFixture(val spark: String, val duck: String) {
+    /** `df` with `text` rewritten. Rows that plant extra documents apply
+      * the fixture after their union, so the planted copies are
+      * rewritten like their originals.
+      */
+    def apply(df: DataFrame): DataFrame = df.withColumn("text", expr(spark))
 
-  /** 32-token boilerplate paragraph (one exactly-aligned chunk at
-    * size=stride=32) for the passage-dedup fixture.
+    /** The twin relation `(SELECT doc_id, <duck> AS text FROM <rel>)`; a
+      * multi-line `rel` goes on its own line, indented one more space.
+      */
+    def twin(rel: String = "documents"): String =
+      if (rel.contains('\n')) s"(SELECT doc_id, $duck AS text FROM\n ${rel.replace("\n", "\n ")})"
+      else s"(SELECT doc_id, $duck AS text FROM $rel)"
+  }
+
+  private[graft] object DocFixture {
+    /** The corpus as it is: the whitespace grain's fixture. */
+    val raw: DocFixture = new DocFixture("text", "text") {
+      override def apply(df: DataFrame): DataFrame = df
+      override def twin(rel: String): String = rel
+    }
+  }
+
+  private val upperAz = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+  private val lowerAz = "abcdefghijklmnopqrstuvwxyz"
+
+  /** Every 3rd doc re-rendered as UNSEGMENTED text in another script:
+    * letters lower-cased and mapped 1:1 onto `alphabet` (translate()
+    * maps codepoint for codepoint in both dialects), spaces removed.
+    * `cap` first cuts the text to 120 codepoints, `plant` is appended to
+    * the re-rendered rows and `tail` to the others.
     */
-  private val bp32: String = (1 to 32).map(i => "boiler").mkString(" ")
+  private def scriptFixture(alphabet: String, cap: Boolean = false,
+                            plant: String = "", tail: String = ""): DocFixture = {
+    def mapped(text: String) =
+      s"replace(translate(translate($text, '$upperAz', '$lowerAz'), '$lowerAz', '$alphabet'), ' ', '')"
+    val (sparkText, duckText) =
+      if (cap) ("substring(text, 1, 120)", "substr(text, 1, 120)") else ("text", "text")
+    def append(sparkBase: String, duckBase: String, suffix: String) =
+      if (suffix.isEmpty) (sparkBase, duckBase)
+      else (s"concat($sparkBase, '$suffix')", s"$duckBase || '$suffix'")
+    val (sparkThen, duckThen) = append(mapped(sparkText), mapped(duckText), plant)
+    val (sparkElse, duckElse) = append("text", "text", tail)
+    new DocFixture(s"IF(doc_id % 3 = 0, $sparkThen, $sparkElse)",
+      s"CASE WHEN doc_id % 3 = 0 THEN $duckThen ELSE $duckElse END")
+  }
 
-  /** Multi-byte fixture suffix for the byte-true WARC query: one 2-,
-    * 3-, and 4-byte UTF-8 character each, so every payload's byte
-    * length strictly exceeds its character count and a character-based
-    * Content-Length bound would provably mis-capture. No quotes, so it
-    * embeds in both dialects' literals verbatim.
-    */
-  private val mbSuffix: String = " é 中 😀"
-
-  /** zh fixture for the cjk-auto word-grain queries: every 3rd doc
-    * re-rendered as UNSEGMENTED Han text — letters mapped 1:1 onto Han
-    * codepoints (the 26 most frequent hanzi), spaces removed — so the
-    * whitespace grain provably returns n_words = 1 on those rows while
-    * the routed grain tokenizes per codepoint. translate() maps
-    * codepoint-for-codepoint in both dialects.
+  /** zh fixture for the cjk-auto word-grain queries: the script
+    * alphabet is the 26 most frequent hanzi, so the whitespace grain
+    * provably returns n_words = 1 on the re-rendered rows while the
+    * routed grain tokenizes per codepoint.
     */
   private val han26: String = "的一是不了人我在有他这为之大来以个中上们到说国和地也"
-  private val zhFixtureSpark: String =
-    s"IF(doc_id % 3 = 0, replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', ''), text)"
-  private val zhFixtureDuck: String =
-    s"CASE WHEN doc_id % 3 = 0 THEN replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') ELSE text END"
+  private val zhFixture: DocFixture = scriptFixture(han26)
 
   /** Planted phrase for the cjk-dict FMM queries: 2/3/4-codepoint
     * lexicon words plus single-char connectives that must fall back to
@@ -268,50 +294,174 @@ object Queries {
   private val zhDictPlant: String =
     "我们的朋友在中国学习中文他们每天在图书馆用人工智能练习普通话因为我们喜欢中国文化和历史"
 
-  /** The cjk-dict fixture as shared vals (round 15): length-capped
-    * translate rows + the planted lexicon phrase — the cap keeps the
-    * oracle's FMM cursor recursion a triviality.
+  /** The cjk-dict fixture (round 15): length-capped translate rows + the
+    * planted lexicon phrase — the cap keeps the oracle's FMM cursor
+    * recursion a triviality.
     */
-  private val zhDictFixtureSpark: String =
-    s"IF(doc_id % 3 = 0, concat(replace(translate(translate(substring(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', ''), '$zhDictPlant'), text)"
-  private val zhDictFixtureDuck: String =
-    s"CASE WHEN doc_id % 3 = 0 THEN replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      s"'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') || '$zhDictPlant' ELSE text END"
+  private val zhDictFixture: DocFixture = scriptFixture(han26, cap = true, plant = zhDictPlant)
 
-  /** Full-width sentence fixture shared by `text_sentences_cjk` and
-    * `text_chunk_sentences_cjk` (r14; the first query's comment says
-    * what each row class exercises).
-    */
-  private val zhSentenceFixtureSpark: String =
-    s"IF(doc_id % 3 = 0, " +
-      s"concat(replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.', " +
-      s"'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', ''), " +
-      s"'「中文句子。」结尾带省略号…完'), " +
-      s"text || '. Planted tail!  Second one? Third.')"
-  private val zhSentenceFixtureDuckTable: String =
-    s"""(SELECT doc_id, CASE WHEN doc_id % 3 = 0
-       | THEN replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '. planted tail! second one? third.',
-       |   'abcdefghijklmnopqrstuvwxyz.!?', '$han26。！？'), ' ', '')
-       |   || '「中文句子。」结尾带省略号…完'
-       | ELSE text || '. Planted tail!  Second one? Third.' END AS text
-       | FROM documents)""".stripMargin.replace("\n", " ")
-
-  /** th fixture (round 15): every 3rd doc re-rendered as unsegmented
-    * Thai — letters mapped 1:1 onto 26 Thai consonants (codepoint-
-    * fallback fodder; consonant soup matches no lexicon word) — plus a
-    * planted space-free phrase of multi-codepoint [[graft.ops.ThLexicon]]
-    * words the FMM grain must return whole (ประเทศไทย = 9 codepoints).
+  /** th fixture (round 15): letters mapped 1:1 onto 26 Thai consonants
+    * (codepoint-fallback fodder; consonant soup matches no lexicon
+    * word) — plus a planted space-free phrase of multi-codepoint
+    * [[graft.ops.ThLexicon]] words the FMM grain must return whole
+    * (ประเทศไทย = 9 codepoints).
     */
   private val th26: String = "กขคงจชญดตถทนบปผฝพฟมยรลวสหอ"
   private val thDictPlant: String =
     "ประเทศไทยมีภาษาไทยและอาหารอร่อยมากเราชอบกินข้าวและว่ายน้ำ"
-  private val thDictFixtureSpark: String =
-    s"IF(doc_id % 3 = 0, concat(replace(translate(translate(substring(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      s"'abcdefghijklmnopqrstuvwxyz', '$th26'), ' ', ''), '$thDictPlant'), text)"
-  private val thDictFixtureDuck: String =
-    s"CASE WHEN doc_id % 3 = 0 THEN replace(translate(translate(substr(text, 1, 120), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      s"'abcdefghijklmnopqrstuvwxyz', '$th26'), ' ', '') || '$thDictPlant' ELSE text END"
+  private val thDictFixture: DocFixture = scriptFixture(th26, cap = true, plant = thDictPlant)
+
+  /** Sentence-dedup fixture: zh rows end in a repeated full-width
+    * boilerplate sentence, the others in a repeated English one.
+    */
+  private val newsletterFixture: DocFixture = scriptFixture(han26,
+    plant = "。请关注我们的公众号。", tail = ". Subscribe to our newsletter today!")
+
+  /** The multi-sentence tail `text_sentences` and `text_chunk_sentences`
+    * plant on every doc.
+    */
+  private val sentenceTailFixture: DocFixture = new DocFixture(
+    "concat(text, '. Planted tail!  Second one? Third.')",
+    "text || '. Planted tail!  Second one? Third.'")
+
+  /** Full-width sentence fixture shared by `text_sentences_cjk` and
+    * `text_chunk_sentences_cjk` (r14; the first query's comment says
+    * what each row class exercises). Its twin keeps the layout its two
+    * oracles have always had (two spaces before FROM), so their SQL
+    * stays byte-stable.
+    */
+  private val zhSentenceFixture: DocFixture = new DocFixture(
+    "IF(doc_id % 3 = 0, " +
+      s"concat(replace(translate(translate(text, '$upperAz', '$lowerAz') || '. planted tail! second one? third.', " +
+      s"'$lowerAz.!?', '$han26。！？'), ' ', ''), " +
+      "'「中文句子。」结尾带省略号…完'), " +
+      "text || '. Planted tail!  Second one? Third.')",
+    "CASE WHEN doc_id % 3 = 0 " +
+      s" THEN replace(translate(translate(text, '$upperAz', '$lowerAz') || '. planted tail! second one? third.', " +
+      s"   '$lowerAz.!?', '$han26。！？'), ' ', '') " +
+      "   || '「中文句子。」结尾带省略号…完' " +
+      " ELSE text || '. Planted tail!  Second one? Third.' END") {
+    override def twin(rel: String): String = s"(SELECT doc_id, $duck AS text  FROM $rel)"
+  }
+
+  /** Case/spacing/NFC variants of ONE shared sentence on even/odd doc
+    * pairs (`dedup_exact_normalized`).
+    */
+  private val plantedSentenceFixture: DocFixture = new DocFixture(
+    "IF(doc_id % 2 = 0, " +
+      "concat('Shared  PLANTED\tsentence nr ', cast(doc_id div 2 AS STRING)), " +
+      "concat('shared planted sentence nr ', cast(doc_id div 2 AS STRING)))",
+    "CASE WHEN doc_id % 2 = 0 " +
+      "THEN 'Shared  PLANTED\tsentence nr ' || (doc_id // 2) " +
+      "ELSE 'shared planted sentence nr ' || (doc_id // 2) END")
+
+  /** 32-token boilerplate paragraph (one exactly-aligned chunk at
+    * size=stride=32) prepended to every doc for the passage-dedup
+    * fixture.
+    */
+  private val bp32: String = (1 to 32).map(i => "boiler").mkString(" ")
+  private val boilerplateFixture: DocFixture =
+    new DocFixture(s"concat('$bp32 ', text)", s"'$bp32 ' || text")
+
+  /** Mojibake fixture suffix: a phrase run through the ACTUAL
+    * corruption the op repairs (UTF-8 bytes read as cp1252), appended
+    * to every 3rd doc. Contains no quotes, so it embeds in both
+    * dialects' literals verbatim.
+    */
+  private val mojiSuffix: String =
+    " " + graft.ops.Mojibake.mojibakeOf("café ’quoted’ «guille» – dash… 90° ¡sí! ñandú")
+  private val mojibakeFixture: DocFixture = new DocFixture(
+    s"concat(text, IF(doc_id % 3 = 0, '$mojiSuffix', ''))",
+    s"text || CASE WHEN doc_id % 3 = 0 THEN '$mojiSuffix' ELSE '' END")
+
+  /** Markup planted around every doc (`text_strip_markup`): tags, nested
+    * entities and attributes.
+    */
+  private val markupFixture: DocFixture = new DocFixture(
+    "concat('<div class=\"hd\"><b>T</b></div> ', text, " +
+      "' &amp;lt; kept &quot;q&quot; &#39;a&#39; <br/> tail &gt;')",
+    "'<div class=\"hd\"><b>T</b></div> ' || text || " +
+      "' &amp;lt; kept &quot;q&quot; &#39;a&#39; <br/> tail &gt;'")
+
+  /** Crawl markup for the composed ingest chain (`pipeline_ingest`). */
+  private val crawlPageFixture: DocFixture = new DocFixture(
+    "concat('<p>Crawl <b>page</b></p> ', text, ' &amp; tail')",
+    "'<p>Crawl <b>page</b></p> ' || text || ' &amp; tail'")
+
+  /** Multilingual tails for the script profile (`text_scripts`). */
+  private val scriptTailFixture: DocFixture = new DocFixture(
+    "CASE WHEN doc_id % 4 = 1 THEN concat(text, repeat('中', cast(n_chars AS INT))) " +
+      "WHEN doc_id % 4 = 2 THEN concat(text, ' Пример Текста для проверки') " +
+      "WHEN doc_id % 4 = 3 THEN concat(text, ' مثال نصي 123') " +
+      "ELSE text END",
+    "CASE WHEN doc_id % 4 = 1 THEN text || repeat('中', n_chars::INT) " +
+      "WHEN doc_id % 4 = 2 THEN text || ' Пример Текста для проверки' " +
+      "WHEN doc_id % 4 = 3 THEN text || ' مثال نصي 123' " +
+      "ELSE text END")
+
+  /** Normalization suffix (`text_normalize`): a DECOMPOSED e+U+0301, an
+    * uppercase run, a tab and double spaces.
+    */
+  private val normalizeTailFixture: DocFixture = new DocFixture(
+    "concat(text, ' MIXED  Case\tÉcole  ')",
+    "text || ' MIXED  Case\tÉcole  '")
+
+  /** Multi-byte fixture suffix for the byte-true WARC query: one 2-,
+    * 3-, and 4-byte UTF-8 character each, so every payload's byte
+    * length strictly exceeds its character count and a character-based
+    * Content-Length bound would provably mis-capture. No quotes, so it
+    * embeds in both dialects' literals verbatim.
+    */
+  private val multiByteFixture: DocFixture =
+    new DocFixture("concat(text, ' é 中 😀')", "text || ' é 中 😀'")
+
+  /** Every document fixture by name; QuerySchemaGuardSpec replays each. */
+  private[graft] val docFixtures: Seq[(String, DocFixture)] = Seq(
+    "zh" -> zhFixture, "zh-dict" -> zhDictFixture, "th-dict" -> thDictFixture,
+    "newsletter" -> newsletterFixture, "sentence-tail" -> sentenceTailFixture,
+    "zh-sentence" -> zhSentenceFixture, "planted-sentence" -> plantedSentenceFixture,
+    "boilerplate" -> boilerplateFixture, "mojibake" -> mojibakeFixture,
+    "markup" -> markupFixture, "crawl-page" -> crawlPageFixture,
+    "script-tail" -> scriptTailFixture, "normalize-tail" -> normalizeTailFixture,
+    "multi-byte" -> multiByteFixture)
+
+  /** A word grain the text operators route on, with the fixture that
+    * gives it rows to route; `suffix` names its member of a grain family.
+    */
+  private final case class Grain(suffix: String, wordGrain: String, fixture: DocFixture)
+  private val ws = Grain("", "ws", DocFixture.raw)
+  private val cjk = Grain("_cjk", "cjk-auto", zhFixture)
+  private val cjkDict = Grain("_cjkdict", "cjk-dict", zhDictFixture)
+  private val thaiDict = Grain("_thaidict", "thai-dict", thDictFixture)
+
+  private type QueryBody = ((SparkSession, String) => DataFrame, String)
+
+  /** One query per grain from one row body: the ws member is named
+    * `base`, the others append their grain's suffix. `row` gets the grain
+    * and that grain's own argument, where the members really differ, and
+    * returns the Spark side and its oracle.
+    */
+  private def grainFamily[A](base: String, grains: (Grain, A)*)(row: (Grain, A) => QueryBody): Seq[QueryDef] =
+    grains.map { case (g, a) =>
+      val (spark, oracle) = row(g, a)
+      QueryDef(base + g.suffix, spark, Some(oracle))
+    }
+
+  private def grainFamily(base: String, grains: Grain*)(row: Grain => QueryBody): Seq[QueryDef] =
+    grainFamily(base, grains.map(_ -> (())): _*)((g, _) => row(g))
+
+  /** One rung of the LM-filter ladder on grain `g`: reference side =
+    * the first 100 docs, scored side = the rest, top-500 vocabulary.
+    */
+  private def lmRung(g: Grain,
+                     score: (DataFrame, DataFrame, String, String, Int, String) => DataFrame,
+                     scoreSql: (String, String, String, String, String, Int, String) => String): QueryBody = (
+    (s, dir) => {
+      val docs = g.fixture(t(s, dir, "documents"))
+      score(docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
+        "doc_id", "text", 500, g.wordGrain)
+    },
+    scoreSql(g.fixture.twin(), "doc_id >= 100", "doc_id < 100", "doc_id", "text", 500, g.wordGrain))
 
   /** Chat-conversation fixture (round 16): each doc rendered as a
     * JSON `[{role, content}, …]` turn array. Content words come from
@@ -1558,19 +1708,10 @@ object Queries {
     QueryDef("dedup_exact_normalized",
       (s, dir) => Dedup.exactDedup(
         TextAnalysis.normalize(
-          t(s, dir, "documents").withColumn("text",
-            expr("IF(doc_id % 2 = 0, " +
-              "concat('Shared  PLANTED\tsentence nr ', cast(doc_id div 2 AS STRING)), " +
-              "concat('shared planted sentence nr ', cast(doc_id div 2 AS STRING)))")),
-          "doc_id", "text"),
+          plantedSentenceFixture(t(s, dir, "documents")), "doc_id", "text"),
         "doc_id", "norm_text"),
       Some(Dedup.exactDedupSql(
-        s"""(${TextAnalysis.normalizeSql(
-          "(SELECT doc_id, CASE WHEN doc_id % 2 = 0 " +
-            "THEN 'Shared  PLANTED\tsentence nr ' || (doc_id // 2) " +
-            "ELSE 'shared planted sentence nr ' || (doc_id // 2) END AS text " +
-            "FROM documents)",
-          "doc_id", "text")})""",
+        s"""(${TextAnalysis.normalizeSql(plantedSentenceFixture.twin(), "doc_id", "text")})""",
         "doc_id", "norm_text"))),
 
     QueryDef("dedup_minhash_sig",
@@ -1581,10 +1722,8 @@ object Queries {
       (s, dir) => Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text"),
       Some(Dedup.minhashLshPairsSql("documents", "doc_id", "text"))),
 
-    QueryDef("dedup_minhash_keeper",
-      (s, dir) => Dedup.minhashDedupKeepers(t(s, dir, "documents"), "doc_id", "text"),
-      Some(Dedup.minhashDedupKeepersSql("documents", "doc_id", "text"))),
-
+  ) ++ grainFamily("dedup_minhash_keeper",
+    ws,
     // the keeper pass on the routed grain over the zh fixture: an
     // unsegmented doc is ONE ws token and has no 3-shingles, so the ws
     // keeper silently EXCLUDES every routed row (near-dup zh crawls
@@ -1592,14 +1731,7 @@ object Queries {
     // rows re-enter the pass and their translated near-dup structure
     // (the fixture maps text deterministically, so base-corpus
     // near-dups stay near-dups) collapses to keepers like any other
-    QueryDef("dedup_minhash_keeper_cjk",
-      (s, dir) => Dedup.minhashDedupKeepers(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", wordGrain = "cjk-auto"),
-      Some(Dedup.minhashDedupKeepersSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", wordGrain = "cjk-auto"))),
-
+    cjk,
     // the keeper on the cjk-dict FMM WORD grain (round 15): shingles
     // ride word tokens, so a zh near-dup pair differing by one char
     // INSIDE a dictionary word shingles at word windows, not codepoint
@@ -1607,26 +1739,17 @@ object Queries {
     // the scalar twin cannot run a segmentation cursor, so the derived
     // table precomputes per-doc FMM token LISTS (fmmTokListRelDuck via
     // Dedup.grainSource) and shingling consumes the lists directly
-    QueryDef("dedup_minhash_keeper_cjkdict",
-      (s, dir) => Dedup.minhashDedupKeepers(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "doc_id", "text", wordGrain = "cjk-dict"),
-      Some(Dedup.minhashDedupKeepersSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", wordGrain = "cjk-dict"))),
-
+    cjkDict,
     // the keeper on the thai-dict grain (round 16): previously spec-
     // pinned only (ThaiDictSpec) — this registers the driver-checked
     // oracle row, closing the r15 asymmetry where one dict grain had
     // a keeper oracle and the other didn't. Same grainSource-routed
     // recursive token-list twin as the cjkdict keeper
-    QueryDef("dedup_minhash_keeper_thaidict",
-      (s, dir) => Dedup.minhashDedupKeepers(
-        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
-        "doc_id", "text", wordGrain = "thai-dict"),
-      Some(Dedup.minhashDedupKeepersSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", wordGrain = "thai-dict"))),
+    thaiDict) { g => (
+      (s, dir) => Dedup.minhashDedupKeepers(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", wordGrain = g.wordGrain),
+      Dedup.minhashDedupKeepersSql(g.fixture.twin(), "doc_id", "text", wordGrain = g.wordGrain))
+  } ++ Seq(
 
     QueryDef("dedup_minhash_components",
       (s, dir) => Dedup.minhashDedupComponents(t(s, dir, "documents"), "doc_id", "text"),
@@ -1655,29 +1778,25 @@ object Queries {
       (s, dir) => Dedup.simhash(t(s, dir, "documents"), "doc_id", "text"),
       Some(Dedup.simhashSql("documents", "doc_id", "text"))),
 
+  ) ++ grainFamily("dedup_simhash_keeper",
     // SimHash near-dup KEEPER -- the acting twin of dedup_simhash and
     // the text-side sibling of mm_dedup_phash, both running on the
     // shared rep-collapse + distinct-hash-banding engine
     // (Dedup.hammingKeepers): exact-equal sketches collapse linearly,
     // 3x10-bit bands propose representative pairs, bit_count verifies
     // hamming <= 2, lowest id survives
-    QueryDef("dedup_simhash_keeper",
-      (s, dir) => Dedup.simhashKeepers(t(s, dir, "documents"), "doc_id", "text"),
-      Some(Dedup.simhashKeepersSql("documents", "doc_id", "text"))),
-
+    ws,
     // the simhash keeper on the routed grain over the zh fixture: on
     // the ws grain an unsegmented doc's simhash is the hash of its ONE
     // whole-document token — a single-codepoint edit flips ~half the
     // bits, so the hamming keeper can never see zh near-dups; routed
     // votes come from codepoint tokens and near-dups land within the
     // hamming radius like any other corpus
-    QueryDef("dedup_simhash_keeper_cjk",
-      (s, dir) => Dedup.simhashKeepers(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", wordGrain = "cjk-auto"),
-      Some(Dedup.simhashKeepersSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", wordGrain = "cjk-auto"))),
+    cjk) { g => (
+      (s, dir) => Dedup.simhashKeepers(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", wordGrain = g.wordGrain),
+      Dedup.simhashKeepersSql(g.fixture.twin(), "doc_id", "text", wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // exact all-pairs verifier on a deterministic 1-in-3 sample (the LSH
     // path covers the full corpus; all-pairs is O(n²) by construction).
@@ -1823,27 +1942,13 @@ object Queries {
           | FROM documents WHERE doc_id < 3)""".stripMargin,
         "doc_id", "text"))),
 
+  ) ++ grainFamily("dedup_containment",
     // the ACTING twin of text_winnow_pairs (report -> action, the same
     // pattern as pipeline_decontaminate_semantic): the planted partial
     // copies sit at containment 1.0 against their originals and carry
     // the higher id, so the lowest-id keeper drops exactly them; every
     // unpaired fixture doc survives
-    QueryDef("dedup_containment",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").select("doc_id", "text")
-        val planted = docs.where(col("doc_id") < 3)
-          .select((col("doc_id") + 100000).as("doc_id"),
-            concat(col("text"), lit(" extra tail words appended here")).as("text"))
-        TextAnalysis.containmentDedup(docs.unionByName(planted),
-          "doc_id", "text", threshold = 0.8)
-      },
-      Some(TextAnalysis.containmentDedupSql(
-        """(SELECT doc_id, text FROM documents
-          | UNION ALL
-          | SELECT doc_id + 100000, text || ' extra tail words appended here'
-          | FROM documents WHERE doc_id < 3)""".stripMargin,
-        "doc_id", "text", threshold = 0.8))),
-
+    ws -> ((3, 4, 100000)),
     // containment dedup on the routed grain over the zh fixture, with
     // an UNSEGMENTED planted copy (translated text + translated tail,
     // spaces removed): ws winnowing sees one giant token and no
@@ -1857,29 +1962,10 @@ object Queries {
     // feed is the ROLLING hash (graft_gram_rhashes — integer codepoint
     // folds, no gram-string build, no md5), removing the md5-over-6×-
     // gram-mass constant the r13 verdict flagged; the residual cost is
-    // the honest postings join over the Han third's gram volume
-    QueryDef("dedup_containment_cjk",
-      (s, dir) => {
-        val base = t(s, dir, "documents").select("doc_id", "text")
-        // offset 99999 (a multiple of 3) keeps each planted copy in its
-        // original's translate class, so zh originals get zh copies
-        val planted = base.where(col("doc_id") < 3)
-          .select((col("doc_id") + 99999).as("doc_id"),
-            concat(col("text"), lit(" extra tail words appended here")).as("text"))
-        TextAnalysis.containmentDedup(
-          base.unionByName(planted).withColumn("text", expr(zhFixtureSpark)),
-          "doc_id", "text", k = 5, w = 8, threshold = 0.8,
-          wordGrain = "cjk-auto")
-      },
-      Some(TextAnalysis.containmentDedupSql(
-        s"""(SELECT doc_id, $zhFixtureDuck AS text FROM
-          | (SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 99999, text || ' extra tail words appended here'
-          |  FROM documents WHERE doc_id < 3))""".stripMargin,
-        "doc_id", "text", k = 5, w = 8, threshold = 0.8,
-        wordGrain = "cjk-auto"))),
-
+    // the honest postings join over the Han third's gram volume.
+    // Offset 99999 (a multiple of 3) keeps each planted copy in its
+    // original's translate class, so zh originals get zh copies
+    cjk -> ((5, 8, 99999)),
     // containment dedup on the cjk-dict WORD grain (round 15): winnow
     // k-grams span k FMM words instead of k codepoints, so the
     // fingerprint guarantee ("shared run of >= w+k-1 tokens is caught")
@@ -1888,50 +1974,28 @@ object Queries {
     // word count. Same planted tail-copy construction as the cjk
     // variant; smaller k/w since word streams are shorter than
     // codepoint streams (multi-char words collapse to one token)
-    QueryDef("dedup_containment_cjkdict",
-      (s, dir) => {
-        val base = t(s, dir, "documents").select("doc_id", "text")
-        val planted = base.where(col("doc_id") < 3)
-          .select((col("doc_id") + 99999).as("doc_id"),
-            concat(col("text"), lit(" extra tail words appended here")).as("text"))
-        TextAnalysis.containmentDedup(
-          base.unionByName(planted).withColumn("text", expr(zhDictFixtureSpark)),
-          "doc_id", "text", k = 3, w = 4, threshold = 0.8,
-          wordGrain = "cjk-dict")
-      },
-      Some(TextAnalysis.containmentDedupSql(
-        s"""(SELECT doc_id, $zhDictFixtureDuck AS text FROM
-          | (SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 99999, text || ' extra tail words appended here'
-          |  FROM documents WHERE doc_id < 3))""".stripMargin,
-        "doc_id", "text", k = 3, w = 4, threshold = 0.8,
-        wordGrain = "cjk-dict"))),
-
+    cjkDict -> ((3, 4, 99999)),
     // the shingle surface on the SECOND lexicon (round 15): containment
     // dedup with winnow grams spanning FMM Thai words — grainSource
     // rewrites the twin through the maxLen-9 token-list relation, so
     // the same registry entry that gave Thai retrieval gives it
     // near-dup semantics at word grain (no zh-only code path anywhere)
-    QueryDef("dedup_containment_thaidict",
+    thaiDict -> ((3, 4, 99999))) { case (g, (k, w, offset)) => (
       (s, dir) => {
-        val base = t(s, dir, "documents").select("doc_id", "text")
-        val planted = base.where(col("doc_id") < 3)
-          .select((col("doc_id") + 99999).as("doc_id"),
+        val docs = t(s, dir, "documents").select("doc_id", "text")
+        val planted = docs.where(col("doc_id") < 3)
+          .select((col("doc_id") + offset).as("doc_id"),
             concat(col("text"), lit(" extra tail words appended here")).as("text"))
-        TextAnalysis.containmentDedup(
-          base.unionByName(planted).withColumn("text", expr(thDictFixtureSpark)),
-          "doc_id", "text", k = 3, w = 4, threshold = 0.8,
-          wordGrain = "thai-dict")
+        TextAnalysis.containmentDedup(g.fixture(docs.unionByName(planted)),
+          "doc_id", "text", k = k, w = w, threshold = 0.8, wordGrain = g.wordGrain)
       },
-      Some(TextAnalysis.containmentDedupSql(
-        s"""(SELECT doc_id, $thDictFixtureDuck AS text FROM
-          | (SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 99999, text || ' extra tail words appended here'
-          |  FROM documents WHERE doc_id < 3))""".stripMargin,
-        "doc_id", "text", k = 3, w = 4, threshold = 0.8,
-        wordGrain = "thai-dict"))),
+      TextAnalysis.containmentDedupSql(
+        g.fixture.twin(s"""(SELECT doc_id, text FROM documents
+          | UNION ALL
+          | SELECT doc_id + $offset, text || ' extra tail words appended here'
+          | FROM documents WHERE doc_id < 3)""".stripMargin),
+        "doc_id", "text", k = k, w = w, threshold = 0.8, wordGrain = g.wordGrain))
+  } ++ Seq(
 
     QueryDef("pipeline_sample",
       (s, dir) => graft.ops.Sampling.stratifiedSample(
@@ -2089,28 +2153,23 @@ object Queries {
       Some(Similarity.clusterProfileSql("embeddings",
         "vec_id", "embedding", nClusters = 8, iters = 2))),
 
+  ) ++ grainFamily("text_chunk",
     // document chunking for embedding pipelines: overlapping token
     // windows (32 tokens, stride 24), chunk content witnessed by one
     // portable hash of the joined tokens per chunk — pure projection +
-    // explode, zero shuffle
-    QueryDef("text_chunk",
-      (s, dir) => TextAnalysis.chunkDocuments(
-        t(s, dir, "documents"), "doc_id", "text"),
-      Some(TextAnalysis.chunkDocumentsSql("documents", "doc_id", "text"))),
-
+    // explode, zero shuffle. The chunkers spell the ws grain "token"
+    ws -> "token",
     // chunking on the routed cjk-auto word grain over the zh fixture:
     // an embedding pipeline whose encoder counts words needs a
     // "32-token" window to mean 32 ROUTED tokens on unsegmented rows
     // (per codepoint), not one whitespace mega-token per doc; the
     // chunk_hash witnesses that both engines cut identical routed
     // windows
-    QueryDef("text_chunk_cjk",
-      (s, dir) => TextAnalysis.chunkDocuments(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", grain = "cjk-auto"),
-      Some(TextAnalysis.chunkDocumentsSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", grain = "cjk-auto"))),
+    cjk -> "cjk-auto") { (g, grain) => (
+      (s, dir) => TextAnalysis.chunkDocuments(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", grain = grain),
+      TextAnalysis.chunkDocumentsSql(g.fixture.twin(), "doc_id", "text", grain = grain))
+  } ++ Seq(
 
     // subword (BPE) tokenization over the committed merge table — the
     // denomination a training run actually consumes. first_tokens
@@ -2802,28 +2861,23 @@ object Queries {
       },
       Some(graft.ops.Bpe.learnMergesSql("documents", "text"))),
 
+  ) ++ grainFamily("pipeline_datacard",
     // the corpus DATACARD: volume, exact-dup rate, language share,
     // quality pass rate, mean length as one (metric, value) table in
     // integer milli — the release summary a registry ingests per
     // corpus version; every number a composition of green families
-    QueryDef("pipeline_datacard",
-      (s, dir) => graft.ops.Datacard.datacard(
-        t(s, dir, "documents"), "doc_id", "text"),
-      Some(graft.ops.Datacard.datacardSql("documents", "doc_id", "text"))),
-
+    ws,
     // the datacard on the routed word grain over the zh fixture: the
     // quality gate stops auto-rejecting unsegmented rows and the
     // published token totals/means are denominated in routed words —
     // one consistent grain across the card (the ws card's BPE-ish
     // token classes already count CJK per codepoint; this card's
     // contract is word-grain consistency between gate and totals)
-    QueryDef("pipeline_datacard_cjk",
-      (s, dir) => graft.ops.Datacard.datacard(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", wordGrain = "cjk-auto"),
-      Some(graft.ops.Datacard.datacardSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", wordGrain = "cjk-auto"))),
+    cjk) { g => (
+      (s, dir) => graft.ops.Datacard.datacard(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", wordGrain = g.wordGrain),
+      graft.ops.Datacard.datacardSql(g.fixture.twin(), "doc_id", "text", wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // the datacard's 100 TB form: the exact card's one corpus-sized
     // exchange (countDistinct of the digest) swapped for the
@@ -2862,38 +2916,31 @@ object Queries {
     // counts it per doc with the lowest-(doc_id, chunk_idx) keeper rule
     QueryDef("dedup_passages",
       (s, dir) => Dedup.passageDedupReport(
-        t(s, dir, "documents").withColumn("text",
-          expr(s"concat('$bp32 ', text)")),
+        boilerplateFixture(t(s, dir, "documents")),
         "doc_id", "text", size = 32, stride = 32),
-      Some(Dedup.passageDedupReportSql(
-        s"(SELECT doc_id, '$bp32 ' || text AS text FROM documents)",
+      Some(Dedup.passageDedupReportSql(boilerplateFixture.twin(),
         "doc_id", "text", size = 32, stride = 32))),
 
+  ) ++ grainFamily("pipeline_chunk_manifest",
     // the chunk run's metadata-sized audit over text_chunk's grain:
     // chunks, docs, mean fill (integer milli of the window), and the
     // short-fragment count — read before encoding to decide whether
     // tails get dropped or re-packed. Non-overlapping config (stride =
     // size) so the short counter actually bites: with stride < size a
     // tail always exceeds size - stride
-    QueryDef("pipeline_chunk_manifest",
-      (s, dir) => TextAnalysis.chunkManifest(t(s, dir, "documents"),
-        "doc_id", "text", size = 32, stride = 32),
-      Some(TextAnalysis.chunkManifestSql("documents", "doc_id", "text",
-        size = 32, stride = 32))),
-
+    ws -> "token",
     // the manifest on the routed grain: the Spark side is the
     // CLOSED-FORM arithmetic over the count-only routed kernel
     // (graft_word_count 'cjk-auto' — no explode, no array), the oracle
     // aggregates the EXPLODED routed chunk grain — the hash compare
     // pins formula ≡ grain on the routed tokenization exactly as the
     // ws manifest pins it on the token grain
-    QueryDef("pipeline_chunk_manifest_cjk",
-      (s, dir) => TextAnalysis.chunkManifest(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", size = 32, stride = 32, grain = "cjk-auto"),
-      Some(TextAnalysis.chunkManifestSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", size = 32, stride = 32, grain = "cjk-auto"))),
+    cjk -> "cjk-auto") { (g, grain) => (
+      (s, dir) => TextAnalysis.chunkManifest(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", size = 32, stride = 32, grain = grain),
+      TextAnalysis.chunkManifestSql(g.fixture.twin(),
+        "doc_id", "text", size = 32, stride = 32, grain = grain))
+  } ++ Seq(
 
     // mojibake repair: the committed-derivation artifact table applied
     // as a constant replace chain; the fixture corrupts every 3rd doc
@@ -2902,12 +2949,8 @@ object Queries {
     // witnesses byte-exact repair plus untouched clean rows
     QueryDef("text_fix_mojibake",
       (s, dir) => graft.ops.Mojibake.fix(
-        t(s, dir, "documents").withColumn("text",
-          expr(s"concat(text, IF(doc_id % 3 = 0, '$mojiSuffix', ''))")),
-        "doc_id", "text"),
-      Some(graft.ops.Mojibake.fixSql(
-        s"(SELECT doc_id, text || CASE WHEN doc_id % 3 = 0 THEN '$mojiSuffix' ELSE '' END AS text FROM documents)",
-        "doc_id", "text"))),
+        mojibakeFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(graft.ops.Mojibake.fixSql(mojibakeFixture.twin(), "doc_id", "text"))),
 
     // ================= multimodal plumbing ===============================
     //
@@ -3212,57 +3255,38 @@ object Queries {
       (s, dir) => TextAnalysis.topNgrams(t(s, dir, "documents"), "text", n = 2, topK = 10),
       Some(TextAnalysis.topNgramsSql("documents", "text", n = 2, topK = 10))),
 
+  ) ++ grainFamily("text_collocations",
     // PMI-lift collocations (round 15): association-ranked word pairs —
     // raw-count top bigrams are "of the"; lift = p(xy)/(p(x)p(y))
     // surfaces pairs that co-occur MORE than their parts predict.
     // minCount floor before the joins, unhinted unigram joins (planner
     // broadcasts while stats fit, keyed past the threshold), top-k via
     // TakeOrderedAndProject
-    QueryDef("text_collocations",
-      (s, dir) => TextAnalysis.collocations(t(s, dir, "documents"),
-        "text", topK = 50, minCount = 5),
-      Some(TextAnalysis.collocationsSql("documents", "text",
-        topK = 50, minCount = 5))),
-
+    ws,
     // collocations on the cjk-auto grain over the zh fixture:
     // character-pair lift IS unsupervised zh word discovery — glued
     // pairs (translated word interiors) outscore incidental
     // adjacencies — i.e. the corpus-statistics step that NOMINATES
     // candidates for the committed ZhLexicon bands the dict grain
     // segments with (the other half of the dict-grain loop)
-    QueryDef("text_collocations_cjk",
-      (s, dir) => TextAnalysis.collocations(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "text", topK = 50, minCount = 5, wordGrain = "cjk-auto"),
-      Some(TextAnalysis.collocationsSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "text", topK = 50, minCount = 5, wordGrain = "cjk-auto"))),
-
+    cjk,
     // collocations on the cjk-dict grain: over FMM-segmented WORDS the
     // same statistic surfaces multiword expressions (adjacent lexicon
     // words that travel together — the planted phrase's word pairs)
     // instead of character glue; bigram construction rides the FMM
     // token array, the oracle the recursive token-list relation
-    QueryDef("text_collocations_cjkdict",
-      (s, dir) => TextAnalysis.collocations(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "text", topK = 50, minCount = 5, wordGrain = "cjk-dict"),
-      Some(TextAnalysis.collocationsSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "text", topK = 50, minCount = 5, wordGrain = "cjk-dict"))),
-
+    cjkDict,
     // collocations on the thai-dict grain: multiword expressions over
     // FMM Thai words — the fourth operator family the second lexicon
     // reaches off one registry entry (retrieval, scoring, shingle
     // dedup, now association mining); the twin rides the same maxLen-9
     // recursive token-list relation
-    QueryDef("text_collocations_thaidict",
-      (s, dir) => TextAnalysis.collocations(
-        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
-        "text", topK = 50, minCount = 5, wordGrain = "thai-dict"),
-      Some(TextAnalysis.collocationsSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        "text", topK = 50, minCount = 5, wordGrain = "thai-dict"))),
+    thaiDict) { g => (
+      (s, dir) => TextAnalysis.collocations(g.fixture(t(s, dir, "documents")),
+        "text", topK = 50, minCount = 5, wordGrain = g.wordGrain),
+      TextAnalysis.collocationsSql(g.fixture.twin(),
+        "text", topK = 50, minCount = 5, wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // composed pretraining corpus filter: dedup keeper ∧ language ∧
     // quality thresholds — one scan, text dropped before the only shuffle
@@ -3698,26 +3722,22 @@ object Queries {
         prefFixtureDuckRel, "doc_id", "prompt", "chosen", "rejected",
         "source"))),
 
+  ) ++ grainFamily("text_gopher_rules",
     // Gopher-style quality ruleset: per-rule 0/1 flags + conjunction.
     // minWords=50 sits at the corpus median (word counts run 10-99) so
     // both keep outcomes occur; the stop-hit rule also splits the corpus
-    QueryDef("text_gopher_rules",
-      (s, dir) => TextAnalysis.gopherRules(
-        t(s, dir, "documents"), "doc_id", "text", minWords = 50),
-      Some(TextAnalysis.gopherRulesSql("documents", "doc_id", "text", minWords = 50))),
-
+    ws,
     // the Gopher gate on the cjk-auto word grain over the zh fixture:
     // script-dominated rows (every 3rd doc, unsegmented Han) tokenize
     // per codepoint — the whitespace grain returns n_words = 1 on them
     // and every bound silently degrades; the routed grain restores a
     // real word count, so the minWords rule does actual work on zh rows
-    QueryDef("text_gopher_rules_cjk",
-      (s, dir) => TextAnalysis.gopherRules(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", minWords = 50, wordGrain = "cjk-auto"),
-      Some(TextAnalysis.gopherRulesSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", minWords = 50, wordGrain = "cjk-auto"))),
+    cjk) { g => (
+      (s, dir) => TextAnalysis.gopherRules(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", minWords = 50, wordGrain = g.wordGrain),
+      TextAnalysis.gopherRulesSql(g.fixture.twin(),
+        "doc_id", "text", minWords = 50, wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // THE END-TO-END CURATION DAG as one declarative plan: classifier
     // keep ∧ Gopher rules ∧ language ∧ exact-dedup keeper ∧ not
@@ -3846,105 +3866,63 @@ object Queries {
       Some(TextAnalysis.hashClassifierScoreSql(
         "documents", "doc_id", "text", dim = 4096))),
 
+  ) ++ grainFamily("text_unigram_score",
     // unigram corpus-frequency scoring — the LM-quality-filter shape in
     // exact integer arithmetic (no per-token log: libm last-ulp drift
     // would break cross-engine hash equality). Reference side = the
     // first 100 docs, scored side = the rest
-    QueryDef("text_unigram_score",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        TextAnalysis.unigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500)
-      },
-      Some(TextAnalysis.unigramScoreSql("documents",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500))),
-
+    ws,
+    // unigram LM-filter scoring on the cjk-auto grain: vocabulary AND
+    // scored tokens both ride the routed grain, so the unsegmented
+    // reference rows contribute a real codepoint unigram table instead
+    // of whole-document "tokens" with count 1
+    cjk,
+    // the unigram LM-filter rung on the cjk-dict WORD grain (round
+    // 15): unigram frequency over characters measures CHARACTER
+    // frequency; over FMM words it measures the word frequency the
+    // CCNet-style quality filter actually wants on zh. Reference
+    // vocabulary and scored tokens both ride graft_term_tf's dict
+    // mode; the oracle scans the id-carrying FMM recursion once and
+    // filters it into the ref/scored halves
+    cjkDict,
+    // the unigram LM-filter rung on the thai-dict grain (round 15):
+    // unigram frequency over Thai CODEPOINTS measures consonant/vowel
+    // frequency (combining marks rank as "tokens"); over FMM words it
+    // measures word frequency — the quality signal the grain exists
+    // for, on the script where the codepoint IR is worst
+    thaiDict)(lmRung(_, TextAnalysis.unigramScore, TextAnalysis.unigramScoreSql)) ++
+  grainFamily("text_bigram_score",
     // one order up the LM-filter ladder: bigram coverage sees WORD ORDER
     // (scrambled text scores low even when its unigrams are common) —
     // same ref/scored split, same exact-integer arithmetic
-    QueryDef("text_bigram_score",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        TextAnalysis.bigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500)
-      },
-      Some(TextAnalysis.bigramScoreSql("documents",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500))),
-
+    ws,
     // the second LM-ladder rung on the routed grain: bigrams of
     // CODEPOINT tokens on script-dominated rows — the character-n-gram
     // LM the CJK literature uses (word n-grams don't exist without
     // segmentation); on the ws grain every unsegmented doc is one
     // token and has NO bigrams at all, so the rung is silently blind
     // to exactly the rows it should be scoring
-    QueryDef("text_bigram_score_cjk",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark))
-        TextAnalysis.bigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "cjk-auto")
-      },
-      Some(TextAnalysis.bigramScoreSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "cjk-auto"))),
-
+    cjk,
     // the bigram rung on the cjk-dict WORD grain (round 16): codepoint
     // bigrams measure character adjacency; FMM-word bigrams carry the
     // word-order signal the rung exists for on zh (人工智能 is ONE
     // bigram of two lexicon words, not three character pairs). The
     // kernel routes graft_gram_tf to the FMM walk; the oracle grams
     // adjacent positions of the recursive token-LIST relation
-    QueryDef("text_bigram_score_cjkdict",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .withColumn("text", expr(zhDictFixtureSpark))
-        TextAnalysis.bigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "cjk-dict")
-      },
-      Some(TextAnalysis.bigramScoreSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "cjk-dict"))),
-
+    cjkDict)(lmRung(_, TextAnalysis.bigramScore, TextAnalysis.bigramScoreSql)) ++
+  grainFamily("text_trigram_score",
     // the third LM-ladder rung: trigram coverage sees two-step word
     // order (locally-plausible glued text scores low even when its
     // bigrams are common); same exact-integer discipline and
     // broadcast-top-V scale shape as the unigram/bigram rungs
-    QueryDef("text_trigram_score",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        TextAnalysis.trigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500)
-      },
-      Some(TextAnalysis.trigramScoreSql("documents",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500))),
-
+    ws,
     // the trigram rung on the thai-dict grain (round 16): Thai
     // codepoint trigrams are sub-syllable fragments (combining marks
     // count as "tokens"); FMM-word trigrams see real three-word order
     // — the rung's signal on the script whose codepoint IR is worst.
     // Completes the dict-grain scoring ladder (unigram r15, bigram/
     // trigram r16) on the second lexicon off one registry entry
-    QueryDef("text_trigram_score_thaidict",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .withColumn("text", expr(thDictFixtureSpark))
-        TextAnalysis.trigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "thai-dict")
-      },
-      Some(TextAnalysis.trigramScoreSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "thai-dict"))),
+    thaiDict)(lmRung(_, TextAnalysis.trigramScore, TextAnalysis.trigramScoreSql)) ++ Seq(
 
     // the ladder's TOP: stupid backoff (Brants et al. 2007) folds all
     // three rungs into one score — per trigram position take the
@@ -3971,6 +3949,7 @@ object Queries {
         docsPred = "doc_id >= 100", refPred = "doc_id < 100",
         "doc_id", "text", vocab = 500))),
 
+  ) ++ grainFamily("text_bm25_topk",
     // BM25 keyword retrieval — the LEXICAL search leg next to the
     // embedding-ANN family, in integer fixed-point (log-free Robertson
     // idf; no libm, no double sums — the unigram-score discipline).
@@ -3978,27 +3957,13 @@ object Queries {
     // so the idf weighting is exercised against the ~77%-df common
     // words: a short doc dense in 'dup' must outrank a long doc padded
     // with 'spark'/'vector'
-    QueryDef("text_bm25_topk",
-      (s, dir) => TextAnalysis.bm25TopK(t(s, dir, "documents"),
-        "doc_id", "text", terms = Seq("dup", "vector", "spark"), k = 25),
-      Some(TextAnalysis.bm25TopKSql("documents",
-        "doc_id", "text", terms = Seq("dup", "vector", "spark"), k = 25))),
-
+    ws -> Seq("dup", "vector", "spark"),
     // BM25 retrieval on the cjk-auto grain over the zh fixture:
     // single-codepoint Han query terms (的=translated 'a', 中='r') only
     // match at all because the routed grain tokenizes unsegmented rows
     // per codepoint — on the whitespace grain every zh doc is one giant
     // token, tf = 0 corpus-wide, and the result set is empty
-    QueryDef("text_bm25_topk_cjk",
-      (s, dir) => TextAnalysis.bm25TopK(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", terms = Seq("的", "中", "是"), k = 25,
-        wordGrain = "cjk-auto"),
-      Some(TextAnalysis.bm25TopKSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", terms = Seq("的", "中", "是"), k = 25,
-        wordGrain = "cjk-auto"))),
-
+    cjk -> Seq("的", "中", "是"),
     // BM25 on the cjk-dict FMM grain (r14, third consumer): MULTI-
     // codepoint query terms (我们/人工智能/图书馆) match as single
     // tokens — on the codepoint grain tf(人工智能) = 0 corpus-wide
@@ -4006,90 +3971,51 @@ object Queries {
     // segmentation is what makes zh retrieval by real words possible.
     // Oracle: per_doc comes from the id-carrying FMM recursion,
     // LEFT-JOINed back to the table so token-less docs keep dl=0 rows
-    QueryDef("text_bm25_topk_cjkdict",
-      (s, dir) => TextAnalysis.bm25TopK(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "doc_id", "text", terms = Seq("我们", "人工智能", "图书馆"), k = 25,
-        wordGrain = "cjk-dict"),
-      Some(TextAnalysis.bm25TopKSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", terms = Seq("我们", "人工智能", "图书馆"), k = 25,
-        wordGrain = "cjk-dict"))),
-
+    cjkDict -> Seq("我们", "人工智能", "图书馆"),
+    // BM25 retrieval on the thai-dict grain (round 15): the query
+    // terms are multi-codepoint LEXICON WORDS (ประเทศไทย = 9
+    // codepoints) that the planted phrase carries — on the codepoint
+    // grain tf(ประเทศไทย) = 0 corpus-wide, so like zh, dictionary
+    // segmentation is what makes Thai retrieval by real words
+    // possible; completes the same vocab/TF-IDF/BM25 consumer trio
+    // the cjk-dict grain proved, off one registry entry
+    thaiDict -> Seq("ประเทศไทย", "ภาษาไทย", "อาหาร")) { (g, terms) => (
+      (s, dir) => TextAnalysis.bm25TopK(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", terms = terms, k = 25, wordGrain = g.wordGrain),
+      TextAnalysis.bm25TopKSql(g.fixture.twin(),
+        "doc_id", "text", terms = terms, k = 25, wordGrain = g.wordGrain))
+  } ++ grainFamily("text_tfidf_keywords",
     // Per-doc top-3 TF-IDF keywords: the tagging primitive next to
     // BM25's retrieval leg (which docs match -> which terms
     // characterize). Exact-integer surrogate score tf * (1e6*N div df)
     // -- no libm log in the hash gate; one scan to leased tf rows, df
     // by second keyed agg, term-keyed join + per-doc window (all keyed
     // exchanges, df joined never broadcast)
-    QueryDef("text_tfidf_keywords",
-      (s, dir) => TextAnalysis.tfidfKeywords(
-        t(s, dir, "documents"),
-        "doc_id", "text", k = 3),
-      Some(TextAnalysis.tfidfKeywordsSql("documents", "doc_id", "text", k = 3))),
-
+    ws,
     // TF-IDF keywording on the cjk-auto grain over the zh fixture:
     // on the ws grain an unsegmented zh doc is ONE term with tf=1 —
     // the tf signal vanishes exactly where keywords are wanted; the
     // routed grain restores per-codepoint terms on routed rows while
     // the untranslated 2/3 of the corpus keeps its ws keywords
-    QueryDef("text_tfidf_keywords_cjk",
-      (s, dir) => TextAnalysis.tfidfKeywords(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", k = 3, wordGrain = "cjk-auto"),
-      Some(TextAnalysis.tfidfKeywordsSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", k = 3, wordGrain = "cjk-auto"))),
-
+    cjk,
     // keywords on the cjk-dict FMM grain (r14): a zh keyword list
     // should say 我们/人工智能, not single codepoints — the second
     // consumer proving cjk-dict is a grain, not a one-query trick. The
     // oracle's terms relation comes from the id-carrying FMM recursion
     // (fmmToksRelDuck Some(id)); the length-capped translate fixture
     // keeps the cursor recursion an oracle-side triviality
-    QueryDef("text_tfidf_keywords_cjkdict",
-      (s, dir) => TextAnalysis.tfidfKeywords(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "doc_id", "text", k = 3, wordGrain = "cjk-dict"),
-      Some(TextAnalysis.tfidfKeywordsSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", k = 3, wordGrain = "cjk-dict"))),
-
-    // unigram LM-filter scoring on the cjk-auto grain: vocabulary AND
-    // scored tokens both ride the routed grain, so the unsegmented
-    // reference rows contribute a real codepoint unigram table instead
-    // of whole-document "tokens" with count 1
-    QueryDef("text_unigram_score_cjk",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark))
-        TextAnalysis.unigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "cjk-auto")
-      },
-      Some(TextAnalysis.unigramScoreSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "cjk-auto"))),
-
-    // the unigram LM-filter rung on the cjk-dict WORD grain (round
-    // 15): unigram frequency over characters measures CHARACTER
-    // frequency; over FMM words it measures the word frequency the
-    // CCNet-style quality filter actually wants on zh. Reference
-    // vocabulary and scored tokens both ride graft_term_tf's dict
-    // mode; the oracle scans the id-carrying FMM recursion once and
-    // filters it into the ref/scored halves
-    QueryDef("text_unigram_score_cjkdict",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .withColumn("text", expr(zhDictFixtureSpark))
-        TextAnalysis.unigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "cjk-dict")
-      },
-      Some(TextAnalysis.unigramScoreSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "cjk-dict"))),
+    cjkDict,
+    // thai-dict on the per-doc TF-IDF consumer (round 15): the grain
+    // registry's generality proof on the DEEPEST committed ladder —
+    // the id-carrying recursive twin runs the maxLen-9 FMM cursor
+    // (8 probe rungs/position vs zh's 3) and keywords come back as
+    // multi-codepoint Thai WORDS; the codepoint grain would emit
+    // letter soup (Thai combining vowels rank as "keywords")
+    thaiDict) { g => (
+      (s, dir) => TextAnalysis.tfidfKeywords(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", k = 3, wordGrain = g.wordGrain),
+      TextAnalysis.tfidfKeywordsSql(g.fixture.twin(), "doc_id", "text", k = 3, wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // One-pass corpus profile per (lang, source): doc counts, exact-dup
     // counts (distinct digests), compiled-kernel token totals, chars,
@@ -4108,15 +4034,8 @@ object Queries {
     // fixture plants tags, nested entities, and attributes
     QueryDef("text_strip_markup",
       (s, dir) => TextAnalysis.stripMarkup(
-        t(s, dir, "documents").withColumn("text", expr(
-          "concat('<div class=\"hd\"><b>T</b></div> ', text, " +
-            "' &amp;lt; kept &quot;q&quot; &#39;a&#39; <br/> tail &gt;')")),
-        "doc_id", "text"),
-      Some(TextAnalysis.stripMarkupSql(
-        "(SELECT doc_id, '<div class=\"hd\"><b>T</b></div> ' || text || " +
-          "' &amp;lt; kept &quot;q&quot; &#39;a&#39; <br/> tail &gt;' AS text " +
-          "FROM documents)",
-        "doc_id", "text"))),
+        markupFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(TextAnalysis.stripMarkupSql(markupFixture.twin(), "doc_id", "text"))),
 
     // per-source Gopher-gate profile: pass rate + mean words per
     // source in one scan (gopherRules' carry hook keeps source in the
@@ -4180,8 +4099,7 @@ object Queries {
     // three-stage chain as nested derived tables
     QueryDef("pipeline_ingest",
       (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(
-          "concat('<p>Crawl <b>page</b></p> ', text, ' &amp; tail')"))
+        val docs = crawlPageFixture(t(s, dir, "documents"))
         val clean = TextAnalysis.stripMarkup(docs, "doc_id", "text")
           .select(col("doc_id"), col("clean_text").as("text"))
         val norm = TextAnalysis.normalize(clean, "doc_id", "text")
@@ -4192,10 +4110,7 @@ object Queries {
         "(SELECT doc_id, norm_text AS text FROM (" +
           TextAnalysis.normalizeSql(
             "(SELECT doc_id, clean_text AS text FROM (" +
-              TextAnalysis.stripMarkupSql(
-                "(SELECT doc_id, '<p>Crawl <b>page</b></p> ' || text || " +
-                  "' &amp; tail' AS text FROM documents)",
-                "doc_id", "text") + "))",
+              TextAnalysis.stripMarkupSql(crawlPageFixture.twin(), "doc_id", "text") + "))",
             "doc_id", "text") + "))",
         "doc_id", "text"))),
 
@@ -4218,18 +4133,8 @@ object Queries {
     // tie-breaks in fixed declaration order via CASE on both engines
     QueryDef("text_scripts",
       (s, dir) => TextAnalysis.scriptProfile(
-        t(s, dir, "documents").withColumn("text", expr(
-          "CASE WHEN doc_id % 4 = 1 THEN concat(text, repeat('中', cast(n_chars AS INT))) " +
-            "WHEN doc_id % 4 = 2 THEN concat(text, ' Пример Текста для проверки') " +
-            "WHEN doc_id % 4 = 3 THEN concat(text, ' مثال نصي 123') " +
-            "ELSE text END")),
-        "doc_id", "text"),
-      Some(TextAnalysis.scriptProfileSql(
-        "(SELECT doc_id, CASE WHEN doc_id % 4 = 1 THEN text || repeat('中', n_chars::INT) " +
-          "WHEN doc_id % 4 = 2 THEN text || ' Пример Текста для проверки' " +
-          "WHEN doc_id % 4 = 3 THEN text || ' مثال نصي 123' " +
-          "ELSE text END AS text FROM documents)",
-        "doc_id", "text"))),
+        scriptTailFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(TextAnalysis.scriptProfileSql(scriptTailFixture.twin(), "doc_id", "text"))),
 
     // Sentence segmentation: boundary-aware chunk units (terminal
     // punctuation + whitespace, punctuation kept with its sentence) --
@@ -4238,12 +4143,8 @@ object Queries {
     // spaces; zero shuffle, one projection + posexplode
     QueryDef("text_sentences",
       (s, dir) => TextAnalysis.sentences(
-        t(s, dir, "documents").withColumn("text",
-          concat(col("text"), lit(". Planted tail!  Second one? Third."))),
-        "doc_id", "text"),
-      Some(TextAnalysis.sentencesSql(
-        "(SELECT doc_id, text || '. Planted tail!  Second one? Third.' AS text FROM documents)",
-        "doc_id", "text"))),
+        sentenceTailFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(TextAnalysis.sentencesSql(sentenceTailFixture.twin(), "doc_id", "text"))),
 
     // CJK sentence segmentation (r14): full-width terminators 。！？…
     // break WITHOUT trailing whitespace (zh/ja put none), closing
@@ -4255,36 +4156,27 @@ object Queries {
     // tail so both classes run in one corpus
     QueryDef("text_sentences_cjk",
       (s, dir) => TextAnalysis.sentences(
-        t(s, dir, "documents").withColumn("text", expr(zhSentenceFixtureSpark)),
-        "doc_id", "text"),
-      Some(TextAnalysis.sentencesSql(zhSentenceFixtureDuckTable,
-        "doc_id", "text"))),
+        zhSentenceFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(TextAnalysis.sentencesSql(zhSentenceFixture.twin(), "doc_id", "text"))),
 
+  ) ++ grainFamily("text_chunk_sentences",
     // sentence-ALIGNED chunking (r14): sentences pack into fixed
     // token-budget bins (chunk = before div size, the prefix-sum
     // discipline) instead of fixed windows cutting mid-sentence — the
     // RAG chunk shape. One doc-keyed window + keyed agg; text never
-    // crosses a non-doc-keyed exchange
-    QueryDef("text_chunk_sentences",
-      (s, dir) => TextAnalysis.chunkBySentences(
-        t(s, dir, "documents").withColumn("text",
-          concat(col("text"), lit(". Planted tail!  Second one? Third."))),
-        "doc_id", "text", size = 24),
-      Some(TextAnalysis.chunkBySentencesSql(
-        "(SELECT doc_id, text || '. Planted tail!  Second one? Third.' AS text FROM documents)",
-        "doc_id", "text", size = 24))),
-
+    // crosses a non-doc-keyed exchange. Both members plant their own
+    // sentence tails in place of the grain fixtures
+    ws.copy(fixture = sentenceTailFixture) -> ((24, "token")),
     // the zh leg: r14's full-width sentence boundaries + the routed
     // token budget together — the first chunker that is end-to-end
     // right on unsegmented text (real sentence units, real budgets);
     // under the ASCII-only boundary every zh doc was ONE sentence and
     // sentence-chunking degenerated to one chunk per doc
-    QueryDef("text_chunk_sentences_cjk",
-      (s, dir) => TextAnalysis.chunkBySentences(
-        t(s, dir, "documents").withColumn("text", expr(zhSentenceFixtureSpark)),
-        "doc_id", "text", size = 16, grain = "cjk-auto"),
-      Some(TextAnalysis.chunkBySentencesSql(zhSentenceFixtureDuckTable,
-        "doc_id", "text", size = 16, grain = "cjk-auto"))),
+    cjk.copy(fixture = zhSentenceFixture) -> ((16, "cjk-auto"))) { case (g, (size, grain)) => (
+      (s, dir) => TextAnalysis.chunkBySentences(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", size = size, grain = grain),
+      TextAnalysis.chunkBySentencesSql(g.fixture.twin(), "doc_id", "text", size = size, grain = grain))
+  } ++ Seq(
 
     // Canonical normalization (NFC + ascii-lower + whitespace collapse):
     // the planted suffix carries a DECOMPOSED e+U+0301 (must compose),
@@ -4293,12 +4185,8 @@ object Queries {
     // by documented contract (full folding is implementation-variant)
     QueryDef("text_normalize",
       (s, dir) => TextAnalysis.normalize(
-        t(s, dir, "documents").withColumn("text",
-          concat(col("text"), lit(" MIXED  Case\tÉcole  "))),
-        "doc_id", "text"),
-      Some(TextAnalysis.normalizeSql(
-        s"(SELECT doc_id, text || ' MIXED  Case\tÉcole  ' AS text FROM documents)",
-        "doc_id", "text"))),
+        normalizeTailFixture(t(s, dir, "documents")), "doc_id", "text"),
+      Some(TextAnalysis.normalizeSql(normalizeTailFixture.twin(), "doc_id", "text"))),
 
     // late-interaction MaxSim retrieval (ColBERT scoring shape): each
     // query term independently finds its best CHUNK, docs win by
@@ -4360,18 +4248,8 @@ object Queries {
 
     QueryDef("dedup_sentences",
       (s, dir) => Dedup.dedupSentences(
-        t(s, dir, "documents").withColumn("text", expr(
-          s"IF(doc_id % 3 = 0, " +
-            s"concat(replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', ''), " +
-            s"'。请关注我们的公众号。'), " +
-            s"concat(text, '. Subscribe to our newsletter today!'))")),
-        "doc_id", "text", maxFreq = 10),
-      Some(Dedup.dedupSentencesSql(
-        s"(SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN " +
-          s"replace(translate(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '') " +
-          s"|| '。请关注我们的公众号。' " +
-          s"ELSE text || '. Subscribe to our newsletter today!' END AS text FROM documents)",
-        "doc_id", "text", maxFreq = 10))),
+        newsletterFixture(t(s, dir, "documents")), "doc_id", "text", maxFreq = 10),
+      Some(Dedup.dedupSentencesSql(newsletterFixture.twin(), "doc_id", "text", maxFreq = 10))),
 
     // exact substring-SPAN dedup (the ExactSubstr batch shape): stride-1
     // word 5-grams duplicated corpus-wide are struck at every covered
@@ -4400,14 +4278,10 @@ object Queries {
     // doc-specific translated prefix survives. clean_text is the
     // space-rejoined surviving token sequence (normalized form)
     QueryDef("dedup_spans_cjkdict",
-      (s, dir) => Dedup.dedupSpans(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "doc_id", "text", spanLen = 5, maxFreq = 10,
-        wordGrain = "cjk-dict"),
-      Some(Dedup.dedupSpansSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", spanLen = 5, maxFreq = 10,
-        wordGrain = "cjk-dict"))),
+      (s, dir) => Dedup.dedupSpans(zhDictFixture(t(s, dir, "documents")),
+        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = "cjk-dict"),
+      Some(Dedup.dedupSpansSql(zhDictFixture.twin(),
+        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = "cjk-dict"))),
 
     // incremental snapshot dedup: the new crawl keeps only documents whose
     // content digest is absent from the accumulated prior corpus. The
@@ -4514,39 +4388,19 @@ object Queries {
              |FROM w JOIN v ON v.ms >= w.s_ms AND v.ms <= w.e_ms
              |GROUP BY w.iv_id""".stripMargin)),
 
+  ) ++ grainFamily("pipeline_decontaminate",
     // benchmark decontamination: corpus docs sharing any 3-shingle with
     // the (small, broadcast) benchmark set are dropped — one corpus scan,
     // compiled shingle hashes + two-pointer probe of one broadcast array,
     // zero corpus shuffle and no (doc, shingle) explode
-    QueryDef("pipeline_decontaminate",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        graft.ops.Decontaminate.cleanDocs(
-          docs.where(col("doc_id") >= 25), docs.where(col("doc_id") < 25),
-          "doc_id", "text")
-      },
-      Some(graft.ops.Decontaminate.cleanDocsSql("documents",
-        benchPred = "doc_id < 25", corpusPred = "doc_id >= 25",
-        "doc_id", "text"))),
-
+    ws,
     // the guard on the routed grain over the zh fixture: an
     // unsegmented BENCHMARK (a zh eval set) has no ws 3-shingles at
     // all, so the ws guard vacuously passes every contaminated doc;
     // routed codepoint shingles restore the overlap signal — the
     // fixture's translate is deterministic, so zh bench items overlap
     // zh corpus docs exactly where their english sources did
-    QueryDef("pipeline_decontaminate_cjk",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark))
-        graft.ops.Decontaminate.cleanDocs(
-          docs.where(col("doc_id") >= 25), docs.where(col("doc_id") < 25),
-          "doc_id", "text", wordGrain = "cjk-auto")
-      },
-      Some(graft.ops.Decontaminate.cleanDocsSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        benchPred = "doc_id < 25", corpusPred = "doc_id >= 25",
-        "doc_id", "text", wordGrain = "cjk-auto"))),
-
+    cjk,
     // the guard on the cjk-dict FMM WORD grain (round 15): cjk-auto's
     // k=3 CODEPOINT shingles are a weak overlap witness on zh — three
     // consecutive Han chars recur incidentally across unrelated docs,
@@ -4557,35 +4411,24 @@ object Queries {
     // %3 rows) still kills. Oracle: predicates reference doc_id only,
     // so the fmm-token-list derived table (Dedup.grainSource) carries
     // them unchanged
-    QueryDef("pipeline_decontaminate_cjkdict",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark))
-        graft.ops.Decontaminate.cleanDocs(
-          docs.where(col("doc_id") >= 25), docs.where(col("doc_id") < 25),
-          "doc_id", "text", wordGrain = "cjk-dict")
-      },
-      Some(graft.ops.Decontaminate.cleanDocsSql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        benchPred = "doc_id < 25", corpusPred = "doc_id >= 25",
-        "doc_id", "text", wordGrain = "cjk-dict"))),
-
+    cjkDict,
     // decontamination on the thai-dict grain (round 16 — the last
     // dict-grain consumer family that had only the zh leg): witness
     // shingles are FMM Thai WORDS, so the planted lexicon phrase
     // shared by bench and corpus rows kills as verbatim k-word
     // leakage while incidental codepoint-trigram recurrence survives.
     // Same grainSource-routed oracle as the cjkdict leg
-    QueryDef("pipeline_decontaminate_thaidict",
+    thaiDict) { g => (
       (s, dir) => {
-        val docs = t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark))
+        val docs = g.fixture(t(s, dir, "documents"))
         graft.ops.Decontaminate.cleanDocs(
           docs.where(col("doc_id") >= 25), docs.where(col("doc_id") < 25),
-          "doc_id", "text", wordGrain = "thai-dict")
+          "doc_id", "text", wordGrain = g.wordGrain)
       },
-      Some(graft.ops.Decontaminate.cleanDocsSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
+      graft.ops.Decontaminate.cleanDocsSql(g.fixture.twin(),
         benchPred = "doc_id < 25", corpusPred = "doc_id >= 25",
-        "doc_id", "text", wordGrain = "thai-dict"))),
+        "doc_id", "text", wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // bloom-prefiltered decontamination: identical output to
     // pipeline_decontaminate (same oracle), but the corpus-side check is a
@@ -4633,32 +4476,25 @@ object Queries {
       Some(graft.ops.Sampling.qualityBandSql("documents",
         "doc_id", "lang", "n_chars", tieCol = "doc_id"))),
 
+  ) ++ grainFamily("pipeline_dsir",
     // DSIR-style data selection (hashed unigram+bigram importance
     // weights, exact-integer surrogate of the log-ratio — see
     // ops/Dsir.scala): target = English docs, keep the 50 raw docs most
     // target-like. Two corpus scans: B-row bucket table (broadcast),
     // then doc-grain scoring; selection is a TakeOrdered
-    QueryDef("pipeline_dsir",
-      (s, dir) => graft.ops.Dsir.selectFast(t(s, dir, "documents"),
-        "doc_id", "text", col("lang") === "en", n = 50),
-      Some(graft.ops.Dsir.selectSql("documents", "doc_id", "text",
-        "lang = 'en'", n = 50))),
-
+    ws -> "lang = 'en'",
     // DSIR on the routed grain over the zh fixture, targeting the
     // UNSEGMENTED rows: on the ws grain each zh doc contributes one
     // whole-document unigram and no bigrams — the target/raw
     // distributions carry ~no reusable signal on exactly the rows the
     // predicate selects for; routed grams are codepoint unigrams +
     // bigrams, so target-like (Han-dense) docs genuinely outscore
-    QueryDef("pipeline_dsir_cjk",
-      (s, dir) => graft.ops.Dsir.selectFast(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "doc_id", "text", expr("doc_id % 3 = 0"), n = 50,
-        wordGrain = "cjk-auto"),
-      Some(graft.ops.Dsir.selectSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "doc_id", "text", "doc_id % 3 = 0", n = 50,
-        wordGrain = "cjk-auto"))),
+    cjk -> "doc_id % 3 = 0") { (g, target) => (
+      (s, dir) => graft.ops.Dsir.selectFast(g.fixture(t(s, dir, "documents")),
+        "doc_id", "text", expr(target), n = 50, wordGrain = g.wordGrain),
+      graft.ops.Dsir.selectSql(g.fixture.twin(), "doc_id", "text", target, n = 50,
+        wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // SOFT dedup: down-weight near-dup clusters to unit total mass
     // instead of dropping members (duplicate-aware reweighting) —
@@ -4785,27 +4621,17 @@ object Queries {
       Some(Similarity.hardNegativesSql("embeddings", "vec_id", "embedding",
         "label", k = 5, queryPred = "vec_id < 10"))),
 
+  ) ++ grainFamily("text_vocab",
     // vocabulary builder: top-V words with cumulative coverage share
     // (the "how big a vocab covers 95% of tokens" curve) — one scan,
     // keyed partial-agg counts, TakeOrdered top-V, cumsum over V rows
-    QueryDef("text_vocab",
-      (s, dir) => TextAnalysis.vocabulary(t(s, dir, "documents"),
-        "text", topV = 100),
-      Some(TextAnalysis.vocabularySql("documents", "text", topV = 100))),
-
+    ws,
     // the vocabulary on the routed grain over the zh fixture: a ws
     // "vocabulary" of an unsegmented corpus is a table of whole
     // DOCUMENTS (each zh doc one token, cnt 1) — useless as a vocab
     // and it crowds the top-V; routed tokens give codepoint entries
     // with real counts alongside the latin words
-    QueryDef("text_vocab_cjk",
-      (s, dir) => TextAnalysis.vocabulary(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
-        "text", topV = 100, wordGrain = "cjk-auto"),
-      Some(TextAnalysis.vocabularySql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
-        "text", topV = 100, wordGrain = "cjk-auto"))),
-
+    cjk,
     // the cjk-dict FMM grain (r14): dictionary segmentation over the
     // committed ZhLexicon — planted multi-char zh words (我们/中国/
     // 图书馆/人工智能…) come back WHOLE in the vocabulary where the
@@ -4814,76 +4640,18 @@ object Queries {
     // replays FMM with a recursive CTE + bounded CASE ladder (the
     // routed text is length-capped so the cursor recursion stays an
     // oracle-side triviality)
-    QueryDef("text_vocab_cjkdict",
-      (s, dir) => TextAnalysis.vocabulary(
-        t(s, dir, "documents").withColumn("text", expr(zhDictFixtureSpark)),
-        "text", topV = 100, wordGrain = "cjk-dict"),
-      Some(TextAnalysis.vocabularySql(
-        s"(SELECT doc_id, $zhDictFixtureDuck AS text FROM documents)",
-        "text", topV = 100, wordGrain = "cjk-dict"))),
-
+    cjkDict,
     // vocabulary on the thai-dict FMM grain (round 15): Thai is the
     // unsegmented script where the codepoint fallback is WORST as an
     // IR (combining vowels/tone marks are separate codepoints — words
     // average 3-5), so the planted multi-codepoint ThLexicon words
     // must come back WHOLE (ประเทศไทย as one 9-codepoint token); the
     // consonant-soup translate rows exercise the codepoint fallback
-    QueryDef("text_vocab_thaidict",
-      (s, dir) => TextAnalysis.vocabulary(
-        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
-        "text", topV = 100, wordGrain = "thai-dict"),
-      Some(TextAnalysis.vocabularySql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        "text", topV = 100, wordGrain = "thai-dict"))),
-
-    // thai-dict on the per-doc TF-IDF consumer (round 15): the grain
-    // registry's generality proof on the DEEPEST committed ladder —
-    // the id-carrying recursive twin runs the maxLen-9 FMM cursor
-    // (8 probe rungs/position vs zh's 3) and keywords come back as
-    // multi-codepoint Thai WORDS; the codepoint grain would emit
-    // letter soup (Thai combining vowels rank as "keywords")
-    QueryDef("text_tfidf_keywords_thaidict",
-      (s, dir) => TextAnalysis.tfidfKeywords(
-        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
-        "doc_id", "text", k = 3, wordGrain = "thai-dict"),
-      Some(TextAnalysis.tfidfKeywordsSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", k = 3, wordGrain = "thai-dict"))),
-
-    // BM25 retrieval on the thai-dict grain (round 15): the query
-    // terms are multi-codepoint LEXICON WORDS (ประเทศไทย = 9
-    // codepoints) that the planted phrase carries — on the codepoint
-    // grain tf(ประเทศไทย) = 0 corpus-wide, so like zh, dictionary
-    // segmentation is what makes Thai retrieval by real words
-    // possible; completes the same vocab/TF-IDF/BM25 consumer trio
-    // the cjk-dict grain proved, off one registry entry
-    QueryDef("text_bm25_topk_thaidict",
-      (s, dir) => TextAnalysis.bm25TopK(
-        t(s, dir, "documents").withColumn("text", expr(thDictFixtureSpark)),
-        "doc_id", "text", terms = Seq("ประเทศไทย", "ภาษาไทย", "อาหาร"),
-        k = 25, wordGrain = "thai-dict"),
-      Some(TextAnalysis.bm25TopKSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        "doc_id", "text", terms = Seq("ประเทศไทย", "ภาษาไทย", "อาหาร"),
-        k = 25, wordGrain = "thai-dict"))),
-
-    // the unigram LM-filter rung on the thai-dict grain (round 15):
-    // unigram frequency over Thai CODEPOINTS measures consonant/vowel
-    // frequency (combining marks rank as "tokens"); over FMM words it
-    // measures word frequency — the quality signal the grain exists
-    // for, on the script where the codepoint IR is worst
-    QueryDef("text_unigram_score_thaidict",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .withColumn("text", expr(thDictFixtureSpark))
-        TextAnalysis.unigramScore(
-          docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
-          "doc_id", "text", vocab = 500, wordGrain = "thai-dict")
-      },
-      Some(TextAnalysis.unigramScoreSql(
-        s"(SELECT doc_id, $thDictFixtureDuck AS text FROM documents)",
-        docsPred = "doc_id >= 100", refPred = "doc_id < 100",
-        "doc_id", "text", vocab = 500, wordGrain = "thai-dict"))),
+    thaiDict) { g => (
+      (s, dir) => TextAnalysis.vocabulary(g.fixture(t(s, dir, "documents")),
+        "text", topV = 100, wordGrain = g.wordGrain),
+      TextAnalysis.vocabularySql(g.fixture.twin(), "text", topV = 100, wordGrain = g.wordGrain))
+  } ++ Seq(
 
     // the PERSISTED binary index: (v_id, sk, vec) parquet written first
     // touch — the columnar layout IS the index (prefilter reads only
@@ -4981,11 +4749,9 @@ object Queries {
     // on those rows — the zh fixture's translated repetition structure
     // mirrors its english source's
     QueryDef("text_repetition_cjk",
-      (s, dir) => TextAnalysis.repetitionSignalsLocal(
-        t(s, dir, "documents").withColumn("text", expr(zhFixtureSpark)),
+      (s, dir) => TextAnalysis.repetitionSignalsLocal(zhFixture(t(s, dir, "documents")),
         "doc_id", "text", wordGrain = "cjk-auto"),
-      Some(TextAnalysis.repetitionSignalsSql(
-        s"(SELECT doc_id, $zhFixtureDuck AS text FROM documents)",
+      Some(TextAnalysis.repetitionSignalsSql(zhFixture.twin(),
         "doc_id", "text", wordGrain = "cjk-auto"))),
 
     // the FULL Gopher repetition suite at document grain: duplicate
@@ -5540,12 +5306,8 @@ object Queries {
     QueryDef("io_warc_parse_bytes",
       (s, dir) => graft.ops.CorpusIO.parseWarcBytes(
         graft.ops.CorpusIO.warcBlobsBytes(
-          t(s, dir, "documents")
-            .withColumn("text", concat(col("text"), lit(mbSuffix))),
-          "doc_id", "text"), "blob"),
-      Some(graft.ops.CorpusIO.warcBytesRoundTripSql(
-        s"(SELECT doc_id, text || '$mbSuffix' AS text FROM documents)",
-        "doc_id", "text"))),
+          multiByteFixture(t(s, dir, "documents")), "doc_id", "text"), "blob"),
+      Some(graft.ops.CorpusIO.warcBytesRoundTripSql(multiByteFixture.twin(), "doc_id", "text"))),
 
     // content checksum. The oracle checksums the ORIGINAL table, so any
     // character lost in serialization fails the hash-sum compare

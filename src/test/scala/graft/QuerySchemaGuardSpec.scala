@@ -15,10 +15,60 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   * what query construction itself does — is the only reliable guard
   * against the local/driver divergence. No whitelist: collection-valued
   * results must be serialized (hex / CSV / JSON) in the registration.
+  *
+  * The registry itself is guarded here too: unique names, registered
+  * priced names, and every document fixture's two dialects in agreement.
   */
 class QuerySchemaGuardSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** `queryMap`/`oracleMap` are built with `.toMap`, so a duplicate name
+    * (say, a grain family emitting a row registered by hand too) would
+    * silently replace a row; and a `priced` name that is no query would
+    * silently un-price a build leg.
+    */
+  test("registered query names are unique and every priced name is registered") {
+    val dups = Queries.all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    val names = Queries.all.map(_.name).toSet
+    val unpriced = Queries.priced.filterNot(names)
+    assert(unpriced.isEmpty, s"priced names that are no query: ${unpriced.toSeq.sorted.mkString(", ")}")
+  }
+
+  /** Every document fixture's two dialects, replayed side by side: the
+    * Spark expression applied to the documents, and the DuckDB twin
+    * relation run through `spark.sql` over a `documents` view of the same
+    * table (the JudgeSpec replay: `//` becomes `div`). The rewritten
+    * `(doc_id, text)` rows must be identical, so a fixture edited in one
+    * dialect only fails here before any oracle compare runs.
+    */
+  test("every DocFixture's Spark expression and DuckDB twin rewrite the documents identically") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select("doc_id", "text").collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    docs.createOrReplaceTempView("documents")
+    val diverged = Queries.docFixtures.flatMap { case (name, fx) =>
+      val viaSpark = rows(fx(docs))
+      val viaTwin = rows(spark.sql(
+        s"SELECT doc_id, text FROM ${fx.twin().replace(" // ", " div ")} AS twin"))
+      assert(viaSpark.nonEmpty, s"$name: empty fixture output")
+      val bad = viaSpark.zipAll(viaTwin, null, null).filter { case (a, b) => a != b }
+      bad.headOption.map { case (a, b) => s"$name: spark $a vs twin $b (${bad.size} rows differ)" }
+    }
+    assert(diverged.isEmpty, diverged.mkString("\n"))
+    val raw = Queries.DocFixture.raw
+    assert((raw(docs) eq docs) && raw.twin("documents") === "documents",
+      "the ws grain's raw fixture leaves the frame and the relation untouched")
+  }
+
+  test("a fixture's twin puts a multi-line relation on its own line, indented one space") {
+    val fx = new Queries.DocFixture("text", "upper(text)")
+    assert(fx.twin() === "(SELECT doc_id, upper(text) AS text FROM documents)")
+    assert(fx.twin("(SELECT * FROM a\n UNION ALL\n SELECT * FROM b)") ===
+      "(SELECT doc_id, upper(text) AS text FROM\n (SELECT * FROM a\n  UNION ALL\n  SELECT * FROM b))")
+  }
 
   test("no registered query emits a top-level ArrayType or MapType column") {
     val offenders = Queries.all.flatMap { q =>
