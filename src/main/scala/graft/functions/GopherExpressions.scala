@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.ops.{DictGrain, ScalarGrain, WordGrain}
 
 /** Compiled Gopher-rule evaluation — one byte scan computing all seven
   * rule flags + the word count that the declarative
@@ -887,7 +888,7 @@ case class LangScores(child: Expression) extends UnaryExpression {
 /** `graft_gopher_flags(text, minWords, maxWords, minMeanLen, maxMeanLen,
   * maxSymbolRatio, minAlphaWordRatio, minStopHits, maxBulletRatio,
   * maxEllipsisRatio, stopWords, grain)` — see [[GopherOps.flags]];
-  * `grain` is `'ws'` or `'cjk-auto'`.
+  * `grain` names a scalar [[WordGrain]] (`'ws'`, `'cjk-auto'`).
   */
 case class GopherFlags(child: Expression,
                        minWords: Int, maxWords: Int,
@@ -896,10 +897,8 @@ case class GopherFlags(child: Expression,
                        minStopHits: Int, maxBulletRatio: Double,
                        maxEllipsisRatio: Double,
                        stopWords: Seq[String],
-                       grain: String = "ws") extends UnaryExpression {
-  require(grain == "ws" || grain == "cjk-auto",
-    s"grain must be 'ws' or 'cjk-auto', got $grain")
-  private val cjkAuto: Boolean = grain == "cjk-auto"
+                       grain: String = WordGrain.Ws.name) extends UnaryExpression {
+  private val cjkAuto: Boolean = WordGrain.scalar(grain).routed
   override def prettyName: String = "graft_gopher_flags"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -942,14 +941,9 @@ case class GopherFlags(child: Expression,
   * explode→groupBy(id, w)→count aggregate in TF-IDF / unigram-style
   * consumers.
   */
-case class TermTf(child: Expression, grain: String = "ws")
+case class TermTf(child: Expression, grain: String = WordGrain.Ws.name)
     extends UnaryExpression {
-  require(grain == "ws" || grain == "cjk-auto" ||
-      graft.ops.FmmLexicons.isDict(grain),
-    s"grain must be 'ws', 'cjk-auto' or a dict grain " +
-      s"(${graft.ops.FmmLexicons.byGrain.keys.mkString(", ")}), got $grain")
-  private val cjkAuto = grain == "cjk-auto"
-  private val dict = graft.ops.FmmLexicons.isDict(grain)
+  private val wordGrain = WordGrain(grain)
   override def prettyName: String = "graft_term_tf"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(new StructType()
@@ -960,17 +954,17 @@ case class TermTf(child: Expression, grain: String = "ws")
     case dt => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires STRING, got ${dt.catalogString}")
   }
-  override def nullSafeEval(s: Any): Any =
-    if (dict)
-      GopherOps.fmmTermTfPairs(s.asInstanceOf[UTF8String],
-        graft.ops.FmmLexicons(grain))
-    else GopherOps.termTfPairs(s.asInstanceOf[UTF8String], cjkAuto)
+  override def nullSafeEval(s: Any): Any = wordGrain match {
+    case d: DictGrain => GopherOps.fmmTermTfPairs(s.asInstanceOf[UTF8String], d.lexicon)
+    case g: ScalarGrain => GopherOps.termTfPairs(s.asInstanceOf[UTF8String], g.routed)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      if (dict)
-        s"${ev.value} = graft.functions.GopherOps.fmmTermTfPairs($s, " +
-          s"${graft.ops.FmmLexicons.javaRef(grain)});"
-      else s"${ev.value} = graft.functions.GopherOps.termTfPairs($s, $cjkAuto);")
+    nullSafeCodeGen(ctx, ev, s => wordGrain match {
+      case d: DictGrain =>
+        s"${ev.value} = graft.functions.GopherOps.fmmTermTfPairs($s, ${d.javaRef});"
+      case g: ScalarGrain =>
+        s"${ev.value} = graft.functions.GopherOps.termTfPairs($s, ${g.routed});"
+    })
   override protected def withNewChildInternal(c: Expression): TermTf =
     copy(child = c)
 }
@@ -978,16 +972,14 @@ case class TermTf(child: Expression, grain: String = "ws")
 /** `graft_fmm_tokens(text, keepEmpties[, grain])` — see
   * [[GopherOps.fmmTokens]]: the compiled dictionary word grain as
   * ARRAY<STRING> — forward maximum match over the committed lexicon
-  * the grain resolves to ([[graft.ops.FmmLexicons]]; default
-  * `'cjk-dict'` = [[graft.ops.ZhLexicon]]) on dominance-routed rows,
-  * whitespace grain otherwise.
+  * of the dict grain the literal names ([[graft.ops.DictGrain]];
+  * default `'cjk-dict'` = [[graft.ops.ZhLexicon]]) on dominance-routed
+  * rows, whitespace grain otherwise.
   */
 case class FmmTokens(child: Expression, keepEmpties: Boolean,
-                     grain: String = "cjk-dict")
+                     grain: String = WordGrain.CjkDict.name)
     extends UnaryExpression {
-  require(graft.ops.FmmLexicons.isDict(grain),
-    s"grain must be a dict grain " +
-      s"(${graft.ops.FmmLexicons.byGrain.keys.mkString(", ")}), got $grain")
+  private val wordGrain = WordGrain.dict(grain)
   override def prettyName: String = "graft_fmm_tokens"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -997,12 +989,11 @@ case class FmmTokens(child: Expression, keepEmpties: Boolean,
       s"$prettyName requires STRING, got ${dt.catalogString}")
   }
   override def nullSafeEval(s: Any): Any =
-    GopherOps.fmmTokens(s.asInstanceOf[UTF8String], keepEmpties,
-      graft.ops.FmmLexicons(grain))
+    GopherOps.fmmTokens(s.asInstanceOf[UTF8String], keepEmpties, wordGrain.lexicon)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.functions.GopherOps.fmmTokens($s, $keepEmpties, " +
-        s"${graft.ops.FmmLexicons.javaRef(grain)});")
+        s"${wordGrain.javaRef});")
   override protected def withNewChildInternal(c: Expression): FmmTokens =
     copy(child = c)
 }
@@ -1012,11 +1003,9 @@ case class FmmTokens(child: Expression, keepEmpties: Boolean,
   * ws-branch empties, the floor predicate's count-only kernel (the
   * dict twin of `graft_routed_token_count`).
   */
-case class FmmTokenCount(child: Expression, grain: String = "cjk-dict")
+case class FmmTokenCount(child: Expression, grain: String = WordGrain.CjkDict.name)
     extends UnaryExpression {
-  require(graft.ops.FmmLexicons.isDict(grain),
-    s"grain must be a dict grain " +
-      s"(${graft.ops.FmmLexicons.byGrain.keys.mkString(", ")}), got $grain")
+  private val wordGrain = WordGrain.dict(grain)
   override def prettyName: String = "graft_fmm_token_count"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
@@ -1026,12 +1015,10 @@ case class FmmTokenCount(child: Expression, grain: String = "cjk-dict")
       s"$prettyName requires STRING, got ${dt.catalogString}")
   }
   override def nullSafeEval(s: Any): Any =
-    GopherOps.fmmTokenCountAll(s.asInstanceOf[UTF8String],
-      graft.ops.FmmLexicons(grain))
+    GopherOps.fmmTokenCountAll(s.asInstanceOf[UTF8String], wordGrain.lexicon)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.GopherOps.fmmTokenCountAll($s, " +
-        s"${graft.ops.FmmLexicons.javaRef(grain)});")
+      s"${ev.value} = graft.functions.GopherOps.fmmTokenCountAll($s, ${wordGrain.javaRef});")
   override protected def withNewChildInternal(c: Expression): FmmTokenCount =
     copy(child = c)
 }
@@ -1039,14 +1026,14 @@ case class FmmTokenCount(child: Expression, grain: String = "cjk-dict")
 /** `graft_sentence_chunks(text, size, grain)` — see
   * [[GopherOps.sentenceChunks]]: row-local sentence-aligned chunking
   * as ARRAY<STRUCT<chunk_idx, n_sentences, n_tokens, chunk_text>> —
-  * zero shuffle, streaming-safe.
+  * zero shuffle, streaming-safe. `grain` names a scalar
+  * [[WordGrain]]: `'ws'` counts the chunkers' BPE-ish
+  * tokens, `'cjk-auto'` routed words.
   */
 case class SentenceChunks(child: Expression, size: Int, grain: String)
     extends UnaryExpression {
   require(size > 0, s"graft_sentence_chunks requires positive size, got $size")
-  require(grain == "token" || grain == "cjk-auto",
-    s"chunk grain must be 'token' or 'cjk-auto', got $grain")
-  private val cjkGrain = grain == "cjk-auto"
+  private val cjkGrain = WordGrain.scalar(grain).routed
   override def prettyName: String = "graft_sentence_chunks"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(new StructType()
@@ -1072,18 +1059,13 @@ case class SentenceChunks(child: Expression, size: Int, grain: String)
   * the row's distinct word-n-grams with counts as ARRAY<STRUCT<w,
   * tf>>, fused from raw text (no HOF child, no per-gram explode
   * grain); `'cjk-auto'` grams over the routed token sequence on
-  * script-dominated rows; dict grains ([[graft.ops.FmmLexicons]],
+  * script-dominated rows; dict grains ([[graft.ops.DictGrain]],
   * round 16) over the FMM word sequence via [[GopherOps.fmmGramTfPairs]].
   */
-case class GramTf(child: Expression, n: Int, grain: String = "ws")
+case class GramTf(child: Expression, n: Int, grain: String = WordGrain.Ws.name)
     extends UnaryExpression {
   require(n > 0, s"graft_gram_tf requires positive n, got $n")
-  require(grain == "ws" || grain == "cjk-auto" ||
-      graft.ops.FmmLexicons.isDict(grain),
-    s"grain must be 'ws', 'cjk-auto' or a dict grain " +
-      s"(${graft.ops.FmmLexicons.byGrain.keys.mkString(", ")}), got $grain")
-  private val cjkAuto = grain == "cjk-auto"
-  private val dict = graft.ops.FmmLexicons.isDict(grain)
+  private val wordGrain = WordGrain(grain)
   override def prettyName: String = "graft_gram_tf"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(new StructType()
@@ -1094,17 +1076,17 @@ case class GramTf(child: Expression, n: Int, grain: String = "ws")
     case dt => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires STRING, got ${dt.catalogString}")
   }
-  override def nullSafeEval(s: Any): Any =
-    if (dict)
-      GopherOps.fmmGramTfPairs(s.asInstanceOf[UTF8String], n,
-        graft.ops.FmmLexicons(grain))
-    else GopherOps.gramTfPairs(s.asInstanceOf[UTF8String], n, cjkAuto)
+  override def nullSafeEval(s: Any): Any = wordGrain match {
+    case d: DictGrain => GopherOps.fmmGramTfPairs(s.asInstanceOf[UTF8String], n, d.lexicon)
+    case g: ScalarGrain => GopherOps.gramTfPairs(s.asInstanceOf[UTF8String], n, g.routed)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      if (dict)
-        s"${ev.value} = graft.functions.GopherOps.fmmGramTfPairs($s, $n, " +
-          s"${graft.ops.FmmLexicons.javaRef(grain)});"
-      else s"${ev.value} = graft.functions.GopherOps.gramTfPairs($s, $n, $cjkAuto);")
+    nullSafeCodeGen(ctx, ev, s => wordGrain match {
+      case d: DictGrain =>
+        s"${ev.value} = graft.functions.GopherOps.fmmGramTfPairs($s, $n, ${d.javaRef});"
+      case g: ScalarGrain =>
+        s"${ev.value} = graft.functions.GopherOps.gramTfPairs($s, $n, ${g.routed});"
+    })
   override protected def withNewChildInternal(c: Expression): GramTf =
     copy(child = c)
 }

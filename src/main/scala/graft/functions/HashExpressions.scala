@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import graft.ops.{DictGrain, ScalarGrain, WordGrain}
 
 /** Native expressions for the portable-hash dedup pipeline.
   *
@@ -429,12 +430,10 @@ case class GaeAdvantages(child: Expression, gammaMilli: Int,
   * difference between a 9-minute and a seconds-scale scoring pass).
   */
 case class DsirBuckets(child: Expression, buckets: Int,
-                       grain: String = "ws")
+                       grain: String = WordGrain.Ws.name)
     extends StringCountExpression {
   require(buckets > 0, s"graft_dsir_buckets requires positive B, got $buckets")
-  require(grain == "ws" || grain == "cjk-auto",
-    s"grain must be 'ws' or 'cjk-auto', got $grain")
-  private val routed = grain == "cjk-auto"
+  private val routed = WordGrain.scalar(grain).routed
   override def prettyName: String = "graft_dsir_buckets"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(s: Any): Any =
@@ -532,11 +531,9 @@ case class BucketScore(child: Expression, weights: Seq[Long])
   * compiled twin of `size(<routed tokens, empties dropped>)` — a
   * count-only walk that never materializes token strings.
   */
-case class WordCount(child: Expression, grain: String = "ws")
+case class WordCount(child: Expression, grain: String = WordGrain.Ws.name)
     extends StringCountExpression {
-  require(grain == "ws" || grain == "cjk-auto",
-    s"grain must be 'ws' or 'cjk-auto', got $grain")
-  private val routed = grain == "cjk-auto"
+  private val routed = WordGrain.scalar(grain).routed
   override def prettyName: String = "graft_word_count"
   override def dataType: DataType = LongType
   override def nullSafeEval(s: Any): Any =
@@ -659,15 +656,10 @@ case class HashEmbedText(child: Expression, dim: Int)
   * equality — SQL `=`.
   */
 case class TermCounts(child: Expression, terms: Seq[String],
-                      grain: String = "ws")
+                      grain: String = WordGrain.Ws.name)
     extends StringCountExpression {
   require(terms.nonEmpty, "graft_term_counts requires at least one term")
-  require(grain == "ws" || grain == "cjk-auto" ||
-      graft.ops.FmmLexicons.isDict(grain),
-    s"grain must be 'ws', 'cjk-auto' or a dict grain " +
-      s"(${graft.ops.FmmLexicons.byGrain.keys.mkString(", ")}), got $grain")
-  private val routed = grain == "cjk-auto"
-  private val dict = graft.ops.FmmLexicons.isDict(grain)
+  private val wordGrain = WordGrain(grain)
   override def prettyName: String = "graft_term_counts"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -675,34 +667,33 @@ case class TermCounts(child: Expression, terms: Seq[String],
     terms.map(_.getBytes("UTF-8")).toArray
   @transient lazy val termStrs: Array[String] = terms.toArray
 
-  override def nullSafeEval(s: Any): Any =
-    if (dict)
+  override def nullSafeEval(s: Any): Any = wordGrain match {
+    case d: DictGrain =>
       GopherOps.fmmTermCounts(
         s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], termBytes,
-        termStrs, graft.ops.FmmLexicons(grain))
-    else if (routed)
+        termStrs, d.lexicon)
+    case g: ScalarGrain if g.routed =>
       GopherOps.routedTermCounts(
         s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], termBytes, termStrs)
-    else
+    case _ =>
       HashOps.termCounts(
         s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], termBytes)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // reference THIS instance so the term byte/string arrays build once,
     // not per row
     val ref = ctx.addReferenceObj("termCountsExpr", this, classOf[TermCounts].getName)
-    if (dict)
-      nullSafeCodeGen(ctx, ev, s =>
+    nullSafeCodeGen(ctx, ev, s => wordGrain match {
+      case d: DictGrain =>
         s"${ev.value} = graft.functions.GopherOps.fmmTermCounts($s, " +
-          s"$ref.termBytes(), $ref.termStrs(), " +
-          s"${graft.ops.FmmLexicons.javaRef(grain)});")
-    else if (routed)
-      nullSafeCodeGen(ctx, ev, s =>
+          s"$ref.termBytes(), $ref.termStrs(), ${d.javaRef});"
+      case g: ScalarGrain if g.routed =>
         s"${ev.value} = graft.functions.GopherOps.routedTermCounts($s, " +
-          s"$ref.termBytes(), $ref.termStrs());")
-    else
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.functions.HashOps.termCounts($s, $ref.termBytes());")
+          s"$ref.termBytes(), $ref.termStrs());"
+      case _ =>
+        s"${ev.value} = graft.functions.HashOps.termCounts($s, $ref.termBytes());"
+    })
   }
 
   override protected def withNewChildInternal(c: Expression): TermCounts =

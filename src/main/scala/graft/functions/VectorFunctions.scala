@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import graft.ops.WordGrain
 
 /** Native Catalyst expression for cosine similarity over embedding
   * arrays (`ARRAY<FLOAT>` / `ARRAY<DOUBLE>`).
@@ -256,15 +257,15 @@ object VectorFunctions {
       (e: Seq[Expression]) => StopCount(e(0), stringArrayLit(e(1), "graft_stop_count"))),
     "graft_term_counts" -> (classOf[TermCounts],
       (e: Seq[Expression]) => TermCounts(e(0), stringArrayLit(e(1), "graft_term_counts"),
-        if (e.length > 2) stringLit(e(2), "graft_term_counts") else "ws")),
+        if (e.length > 2) stringLit(e(2), "graft_term_counts") else WordGrain.Ws.name)),
     "graft_routed_tokens" -> (classOf[RoutedTokens],
       (e: Seq[Expression]) => RoutedTokens(e(0), boolLit(e(1), "graft_routed_tokens"))),
     "graft_fmm_tokens" -> (classOf[FmmTokens],
       (e: Seq[Expression]) => FmmTokens(e(0), boolLit(e(1), "graft_fmm_tokens"),
-        if (e.length > 2) stringLit(e(2), "graft_fmm_tokens") else "cjk-dict")),
+        if (e.length > 2) stringLit(e(2), "graft_fmm_tokens") else WordGrain.CjkDict.name)),
     "graft_fmm_token_count" -> (classOf[FmmTokenCount],
       (e: Seq[Expression]) => FmmTokenCount(e(0),
-        if (e.length > 1) stringLit(e(1), "graft_fmm_token_count") else "cjk-dict")),
+        if (e.length > 1) stringLit(e(1), "graft_fmm_token_count") else WordGrain.CjkDict.name)),
     "graft_sentence_chunks" -> (classOf[SentenceChunks],
       (e: Seq[Expression]) => SentenceChunks(e(0),
         intLit(e(1), "graft_sentence_chunks"),
@@ -273,10 +274,10 @@ object VectorFunctions {
       (e: Seq[Expression]) => RoutedTokenCount(e(0))),
     "graft_term_tf" -> (classOf[TermTf],
       (e: Seq[Expression]) => TermTf(e(0),
-        if (e.length > 1) stringLit(e(1), "graft_term_tf") else "ws")),
+        if (e.length > 1) stringLit(e(1), "graft_term_tf") else WordGrain.Ws.name)),
     "graft_gram_tf" -> (classOf[GramTf],
       (e: Seq[Expression]) => GramTf(e(0), intLit(e(1), "graft_gram_tf"),
-        if (e.length > 2) stringLit(e(2), "graft_gram_tf") else "ws")),
+        if (e.length > 2) stringLit(e(2), "graft_gram_tf") else WordGrain.Ws.name)),
     "graft_hash_embed" -> (classOf[HashEmbed],
       (e: Seq[Expression]) => HashEmbed(e(0), intLit(e(1), "graft_hash_embed"))),
     "graft_hash_embed_text" -> (classOf[HashEmbedText],
@@ -287,7 +288,7 @@ object VectorFunctions {
       (e: Seq[Expression]) => LowerCollapse(e(0))),
     "graft_dsir_buckets" -> (classOf[DsirBuckets],
       (e: Seq[Expression]) => DsirBuckets(e(0), intLit(e(1), "graft_dsir_buckets"),
-        if (e.length > 2) stringLit(e(2), "graft_dsir_buckets") else "ws")),
+        if (e.length > 2) stringLit(e(2), "graft_dsir_buckets") else WordGrain.Ws.name)),
     "graft_bucket_score" -> (classOf[BucketScore],
       (e: Seq[Expression]) => BucketScore(e(0), longArrayLit(e(1), "graft_bucket_score"))),
     "graft_backoff_stats" -> (classOf[BackoffStats],
@@ -299,7 +300,7 @@ object VectorFunctions {
       (e: Seq[Expression]) => BinarySketch(e(0), intLit(e(1), "graft_binary_sketch"))),
     "graft_word_count" -> (classOf[WordCount],
       (e: Seq[Expression]) => WordCount(e(0),
-        if (e.length > 1) stringLit(e(1), "graft_word_count") else "ws")),
+        if (e.length > 1) stringLit(e(1), "graft_word_count") else WordGrain.Ws.name)),
     "graft_url_canon" -> (classOf[UrlCanon],
       (e: Seq[Expression]) => UrlCanon(e(0))),
     "graft_lang_scores" -> (classOf[LangScores],
@@ -315,7 +316,7 @@ object VectorFunctions {
         intLit(e(7), "graft_gopher_flags"),
         doubleLit(e(8), "graft_gopher_flags"), doubleLit(e(9), "graft_gopher_flags"),
         stringArrayLit(e(10), "graft_gopher_flags"),
-        if (e.length > 11) stringLit(e(11), "graft_gopher_flags") else "ws")),
+        if (e.length > 11) stringLit(e(11), "graft_gopher_flags") else WordGrain.Ws.name)),
     "graft_url_domain" -> (classOf[UrlDomain],
       (e: Seq[Expression]) => UrlDomain(e(0)))
   )

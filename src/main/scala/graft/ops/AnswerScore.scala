@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import WordGrain.Ws
 
 /** Answer scoring (round 20) — the stage that PRODUCES the `passed` /
   * score columns the sampled-eval estimators consume
@@ -81,39 +82,40 @@ object AnswerScore {
     s"regexp_replace(regexp_replace(${PortableHash.asciiLower(s"coalesce($c, '')")}, " +
       s"'$punctDuck', '', 'g'), '[\\t\\n\\r]', ' ', 'g')"
 
+  /** The grain's tokens of normalized `c`, Spark. The callers filter
+    * empties out, so each grain keeps its cheap form: the plain split on
+    * ws, the routed kernel's own empty-dropping walk on cjk-auto.
+    */
+  private def splitSpark(c: String, grain: ScalarGrain): String =
+    grain.sparkTokens(normSpark(c), keepEmpties = !grain.routed)
+
+  /** [[splitSpark]], DuckDB. */
+  private def splitDuck(c: String, grain: ScalarGrain): String =
+    grain.duckTokens(normDuck(c), keepEmpties = !grain.routed)
+
   /** SQuAD token array, Spark: grain-routed split, empties and
     * articles dropped.
     */
-  private def toksSpark(c: String, grain: String): String = {
-    val split =
-      if (grain == "cjk-auto")
-        TextAnalysis.routedTokensSpark(normSpark(c), keepEmpties = false)
-      else s"split(${normSpark(c)}, ' ')"
-    s"filter($split, x -> x <> '' AND NOT (x IN $articles))"
-  }
+  private def toksSpark(c: String, grain: ScalarGrain): String =
+    s"filter(${splitSpark(c, grain)}, x -> x <> '' AND NOT (x IN $articles))"
 
   /** SQuAD token array, DuckDB. */
-  private def toksDuck(c: String, grain: String): String = {
-    val split =
-      if (grain == "cjk-auto")
-        TextAnalysis.routedTokensDuck(normDuck(c), keepEmpties = false)
-      else s"string_split(${normDuck(c)}, ' ')"
-    s"list_filter($split, x -> x <> '' AND NOT (x IN $articles))"
-  }
+  private def toksDuck(c: String, grain: ScalarGrain): String =
+    s"list_filter(${splitDuck(c, grain)}, x -> x <> '' AND NOT (x IN $articles))"
 
   /** CANONICAL normalized answer string (Spark): the token array
     * re-joined on single spaces — the grouping key majority voting
     * and any answer-keyed dedup share with [[emF1]]'s EM semantics
     * (two answers are the same vote iff they exact-match).
     */
-  def canonSpark(c: String, grain: String): String =
+  def canonSpark(c: String, grain: ScalarGrain): String =
     s"array_join(${toksSpark(c, grain)}, ' ')"
 
   /** [[canonSpark]]'s DuckDB twin — `array_to_string([])` is NULL on
     * DuckDB where Spark joins to `''` (the round-9 BPE-witness
     * class), so the empty case coalesces explicitly.
     */
-  def canonDuck(c: String, grain: String): String =
+  def canonDuck(c: String, grain: ScalarGrain): String =
     s"coalesce(array_to_string(${toksDuck(c, grain)}, ' '), '')"
 
   /** Clipped multiset intersection of two bound token arrays — the
@@ -136,9 +138,7 @@ object AnswerScore {
     * auditable instead of silent).
     */
   def emF1(df: DataFrame, id: String, pred: String, gold: String,
-           grain: String = "ws", maxTokens: Int = 2000): DataFrame = {
-    require(grain == "ws" || grain == "cjk-auto",
-      s"grain must be 'ws' or 'cjk-auto', got $grain")
+           grain: ScalarGrain = Ws, maxTokens: Int = 2000): DataFrame = {
     val body =
       s"named_struct(" +
         s"'np', cast(size(__tp) AS BIGINT), " +
@@ -178,7 +178,7 @@ object AnswerScore {
     * sets have no join row).
     */
   def emF1Sql(table: String, id: String, pred: String, gold: String,
-              grain: String = "ws", maxTokens: Int = 2000): String =
+              grain: ScalarGrain = Ws, maxTokens: Int = 2000): String =
     s"""WITH base AS (
        |  SELECT $id AS qid, ${toksDuck(pred, grain)} AS tp,
        |    ${toksDuck(gold, grain)} AS tg
@@ -249,9 +249,7 @@ object AnswerScore {
     * streaming family.
     */
   def majorityVote(df: DataFrame, prompt: String, answer: String,
-                   gold: String, grain: String = "ws"): DataFrame = {
-    require(grain == "ws" || grain == "cjk-auto",
-      s"grain must be 'ws' or 'cjk-auto', got $grain")
+                   gold: String, grain: ScalarGrain = Ws): DataFrame = {
     graft.functions.VectorFunctions.attach(df)
       .select(col(prompt).as("prompt_id"),
         expr(canonSpark(answer, grain)).as("__a"),
@@ -273,7 +271,7 @@ object AnswerScore {
     * lexicographic with the VARCHAR tie field, same tie-break).
     */
   def majorityVoteSql(table: String, prompt: String, answer: String,
-                      gold: String, grain: String = "ws"): String =
+                      gold: String, grain: ScalarGrain = Ws): String =
     s"""WITH cnt AS (
        |  SELECT prompt_id, a, count(*) AS c, min(g) AS g
        |  FROM (SELECT $prompt AS prompt_id,
@@ -504,14 +502,8 @@ object AnswerScore {
     * unnest+join formulation.
     */
   def overlapNgram(df: DataFrame, id: String, cand: String, ref: String,
-                   grain: String = "ws", maxTokens: Int = 2000): DataFrame = {
-    require(grain == "ws" || grain == "cjk-auto",
-      s"grain must be 'ws' or 'cjk-auto', got $grain")
-    val split =
-      if (grain == "cjk-auto")
-        (c: String) => TextAnalysis.routedTokensSpark(normSpark(c), keepEmpties = false)
-      else (c: String) => s"split(${normSpark(c)}, ' ')"
-    def toks(c: String) = s"filter(${split(c)}, x -> x <> '')"
+                   grain: ScalarGrain = Ws, maxTokens: Int = 2000): DataFrame = {
+    def toks(c: String) = s"filter(${splitSpark(c, grain)}, x -> x <> '')"
     def grams2(t: String): String =
       s"IF(size($t) < 2, array(), transform(sequence(1, size($t) - 1), " +
         s"i -> concat(element_at($t, i), ' ', element_at($t, i + 1))))"
@@ -549,12 +541,8 @@ object AnswerScore {
     * Oversized rows emit the single order-1 flag row, as Spark.
     */
   def overlapNgramSql(table: String, id: String, cand: String, ref: String,
-                      grain: String = "ws", maxTokens: Int = 2000): String = {
-    val split =
-      if (grain == "cjk-auto")
-        (c: String) => TextAnalysis.routedTokensDuck(normDuck(c), keepEmpties = false)
-      else (c: String) => s"string_split(${normDuck(c)}, ' ')"
-    def toks(c: String) = s"list_filter(${split(c)}, x -> x <> '')"
+                      grain: ScalarGrain = Ws, maxTokens: Int = 2000): String = {
+    def toks(c: String) = s"list_filter(${splitDuck(c, grain)}, x -> x <> '')"
     def grams2(t: String): String =
       s"CASE WHEN len($t) < 2 THEN [] ELSE list_transform(" +
         s"generate_series(1, len($t) - 1), i -> $t[i] || ' ' || $t[i + 1]) END"

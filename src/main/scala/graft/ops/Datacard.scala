@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import WordGrain.Ws
 
 /** Corpus DATACARD — the one-call summary table a curation run
   * publishes with a release (the "data card" every corpus paper
@@ -25,22 +26,19 @@ import org.apache.spark.sql.functions._
   */
 object Datacard {
 
-  /** `wordGrain = "ws"` (default) publishes token totals in the BPE-ish
-    * compiled token grain (`graft_token_count` — whose single-char
-    * catch-all class already tokenizes unsegmented scripts per
-    * codepoint) and gates quality on the whitespace word grain.
-    * `wordGrain = "cjk-auto"` routes BOTH through the
+  /** On [[WordGrain.Ws]] (default) the card publishes token totals in
+    * the chunkers' BPE-ish compiled token grain (`graft_token_count` —
+    * whose single-char catch-all class already tokenizes unsegmented
+    * scripts per codepoint) and gates quality on the whitespace word
+    * grain. [[WordGrain.CjkAuto]] routes BOTH through the
     * script-dominance-routed word grain: the Gopher gate stops
     * rejecting every unsegmented row (the judge of pass-rate), and the
     * published token totals/means are denominated in routed WORDS —
     * one consistent grain across the whole card.
     */
   def datacard(df: DataFrame, id: String, text: String,
-               wordGrain: String = "ws"): DataFrame = {
-    require(wordGrain == "ws" || wordGrain == "cjk-auto",
-      s"wordGrain must be 'ws' or 'cjk-auto', got $wordGrain")
-    val tok = if (wordGrain == "cjk-auto") s"graft_word_count($text, 'cjk-auto')"
-              else s"graft_token_count($text)"
+               wordGrain: ScalarGrain = Ws): DataFrame = {
+    val tok = TextAnalysis.chunkTokCount(text, wordGrain)
     val flagged = TextAnalysis.gopherRules(df, id, text, carry = Seq(text),
       wordGrain = wordGrain)
     val perRow = flagged
@@ -200,11 +198,8 @@ object Datacard {
 
   /** DuckDB twin of [[datacard]]. */
   def datacardSql(table: String, id: String, text: String,
-                  wordGrain: String = "ws"): String = {
-    val tok =
-      if (Dedup.requireGrain(wordGrain) == "cjk-auto")
-        s"len(${TextAnalysis.routedTokensDuck(text, keepEmpties = false)})"
-      else s"len(regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]'))"
+                  wordGrain: ScalarGrain = Ws): String = {
+    val tok = s"len(${TextAnalysis.chunkTokDuck(text, wordGrain)})"
     def milli(num: String) =
       s"CASE WHEN n_docs = 0 THEN 0 ELSE ($num) // n_docs END"
     s"""WITH m AS (

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import WordGrain.Ws
 
 /** Benchmark decontamination: drop every corpus document sharing ANY
   * k-word shingle with a benchmark/eval set — the standard guard against
@@ -25,11 +26,10 @@ object Decontaminate {
 
   def cleanDocs(corpus: DataFrame, bench: DataFrame,
                 id: String, text: String, k: Int = 3,
-                wordGrain: String = "ws"): DataFrame = {
-    Dedup.requireGrain(wordGrain)
+                wordGrain: WordGrain = Ws): DataFrame = {
     val attach = graft.functions.VectorFunctions.attach _
     // one row: the benchmark's distinct shingle hashes, sorted for the
-    // two-pointer probe. 'cjk-auto' shingles BOTH sides on the routed
+    // two-pointer probe. cjk-auto shingles BOTH sides on the routed
     // grain — an unsegmented benchmark (a zh eval set) has no ws
     // 3-shingles at all, so the ws guard vacuously passes every
     // contaminated doc; routed codepoint shingles restore the overlap
@@ -68,7 +68,7 @@ object Decontaminate {
                      id: String, text: String, k: Int = 3,
                      expectedShingles: Long = 1 << 16,
                      fpp: Double = 0.01,
-                     wordGrain: String = "ws"): DataFrame = {
+                     wordGrain: WordGrain = Ws): DataFrame = {
     val attach = graft.functions.VectorFunctions.attach _
     val benchHashes = attach(bench)
       .select(explode(expr(Dedup.nativeShingleHashes(text, k, wordGrain))).as("h"))
@@ -105,7 +105,7 @@ object Decontaminate {
   def cleanDocsFractional(corpus: DataFrame, bench: DataFrame,
                           id: String, text: String, k: Int = 3,
                           maxContamination: Double = 0.05,
-                          wordGrain: String = "ws"): DataFrame = {
+                          wordGrain: WordGrain = Ws): DataFrame = {
     val attach = graft.functions.VectorFunctions.attach _
     val benchSet = attach(bench)
       .select(explode(expr(Dedup.nativeShingleHashes(text, k, wordGrain))).as("h"))
@@ -147,7 +147,7 @@ object Decontaminate {
     */
   def contaminationReport(corpus: DataFrame, bench: DataFrame,
                           id: String, text: String, k: Int = 3,
-                          wordGrain: String = "ws"): DataFrame = {
+                          wordGrain: WordGrain = Ws): DataFrame = {
     val attach = graft.functions.VectorFunctions.attach _
     val benchSh = attach(bench)
       .select(col(id).as("bench_id"),
@@ -169,44 +169,52 @@ object Decontaminate {
         coalesce(col("n_corpus_docs"), lit(0L)).as("n_corpus_docs"))
   }
 
-  /** DuckDB twin of [[contaminationReport]]. */
+  /** DuckDB twin of [[contaminationReport]]. A dict grain reads the
+    * fmm-token-list relation ([[WordGrain.duckSource]]), which exposes
+    * ONLY ($id, __toks): benchPred / corpusPred must then reference $id
+    * alone (true of every registered twin — they split on doc_id ranges).
+    */
   def contaminationReportSql(corpusTable: String, benchPred: String,
                              corpusPred: String, id: String, text: String,
                              k: Int = 3,
-                             wordGrain: String = "ws"): String =
+                             wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(corpusTable, id, text)
     s"""WITH bsh AS (
-       |  SELECT DISTINCT $id AS bench_id, unnest(${Dedup.duckShingleHashes(text, k, wordGrain)}) AS h
-       |  FROM $corpusTable WHERE $benchPred),
+       |  SELECT DISTINCT $id AS bench_id, unnest(${Dedup.duckShingleHashes(toks, k)}) AS h
+       |  FROM $tbl WHERE $benchPred),
        |csh AS (
-       |  SELECT DISTINCT $id AS corpus_id, unnest(${Dedup.duckShingleHashes(text, k, wordGrain)}) AS h
-       |  FROM $corpusTable WHERE $corpusPred),
+       |  SELECT DISTINCT $id AS corpus_id, unnest(${Dedup.duckShingleHashes(toks, k)}) AS h
+       |  FROM $tbl WHERE $corpusPred),
        |hits AS (
        |  SELECT b.bench_id, count(DISTINCT c.corpus_id) AS n_corpus_docs,
        |         count(DISTINCT b.h) AS n_shingles_hit
        |  FROM bsh b JOIN csh c ON b.h = c.h
        |  GROUP BY b.bench_id),
        |base AS (
-       |  SELECT $id AS bench_id, len(${Dedup.duckShingleHashes(text, k, wordGrain)}) AS n_shingles
-       |  FROM $corpusTable WHERE $benchPred)
+       |  SELECT $id AS bench_id, len(${Dedup.duckShingleHashes(toks, k)}) AS n_shingles
+       |  FROM $tbl WHERE $benchPred)
        |SELECT base.bench_id, base.n_shingles::INT AS n_shingles,
        |  coalesce(hits.n_shingles_hit, 0)::BIGINT AS n_shingles_hit,
        |  coalesce(hits.n_corpus_docs, 0)::BIGINT AS n_corpus_docs
        |FROM base LEFT JOIN hits ON base.bench_id = hits.bench_id""".stripMargin
+  }
 
   /** DuckDB twin of [[cleanDocsFractional]] (`list_intersect` over the
-    * distinct hash arrays ≡ the two-pointer count).
+    * distinct hash arrays ≡ the two-pointer count; the grain's token
+    * source as in [[contaminationReportSql]]).
     */
   def cleanDocsFractionalSql(corpusTable: String, benchPred: String,
                              corpusPred: String, id: String, text: String,
                              k: Int = 3, maxContamination: Double = 0.05,
-                             wordGrain: String = "ws"): String =
+                             wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(corpusTable, id, text)
     s"""WITH bench_hs AS (
        |  SELECT coalesce(list_sort(list(DISTINCT h)), []::BIGINT[]) AS hs FROM (
-       |    SELECT unnest(${Dedup.duckShingleHashes(text, k, wordGrain)}) AS h
-       |    FROM $corpusTable WHERE $benchPred)),
+       |    SELECT unnest(${Dedup.duckShingleHashes(toks, k)}) AS h
+       |    FROM $tbl WHERE $benchPred)),
        |corpus AS (
-       |  SELECT $id, ${Dedup.duckShingleHashes(text, k, wordGrain)} AS doc_hs
-       |  FROM $corpusTable WHERE $corpusPred),
+       |  SELECT $id, ${Dedup.duckShingleHashes(toks, k)} AS doc_hs
+       |  FROM $tbl WHERE $corpusPred),
        |scored AS (
        |  SELECT c.$id, len(c.doc_hs) AS n_shingles,
        |    CASE WHEN len(c.doc_hs) = 0 THEN 0.0
@@ -215,6 +223,7 @@ object Decontaminate {
        |  FROM corpus c, bench_hs b)
        |SELECT $id, n_shingles::INT AS n_shingles, contamination
        |FROM scored WHERE contamination < $maxContamination""".stripMargin
+  }
 
   /** DuckDB twin: same shingle hashing, the one-row benchmark set cross
     * joined in (a scalar subquery breaks once DuckDB inlines the
@@ -226,21 +235,18 @@ object Decontaminate {
     * zero rows to NULL, and `NOT list_has_any(x, NULL)` is NULL — the
     * twin silently dropped every corpus row where the operator
     * correctly keeps all (empty benchmark ⇒ nothing is contaminated).
+    * The grain's token source as in [[contaminationReportSql]].
     */
   def cleanDocsSql(corpusTable: String, benchPred: String, corpusPred: String,
                    id: String, text: String, k: Int = 3,
-                   wordGrain: String = "ws"): String = {
-    // dict grains rewrite through Dedup.grainSource: the derived
-    // fmm-token-list table exposes ONLY ($id, __toks), so benchPred /
-    // corpusPred must reference $id alone under a dict grain (true of
-    // every registered twin — they split on doc_id ranges)
-    val (tbl, txt, g) = Dedup.grainSource(corpusTable, id, text, wordGrain)
+                   wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(corpusTable, id, text)
     s"""WITH bench_hs AS (
        |  SELECT coalesce(list_sort(list(DISTINCT h)), []::BIGINT[]) AS hs FROM (
-       |    SELECT unnest(${Dedup.duckShingleHashes(txt, k, g)}) AS h
+       |    SELECT unnest(${Dedup.duckShingleHashes(toks, k)}) AS h
        |    FROM $tbl WHERE $benchPred)),
        |corpus AS (
-       |  SELECT $id, ${Dedup.duckShingleHashes(txt, k, g)} AS doc_hs
+       |  SELECT $id, ${Dedup.duckShingleHashes(toks, k)} AS doc_hs
        |  FROM $tbl WHERE $corpusPred)
        |SELECT c.$id, len(c.doc_hs) AS n_shingles
        |FROM corpus c, bench_hs b
@@ -364,7 +370,7 @@ object Decontaminate {
     */
   def cleanDocsStreaming(corpusStream: DataFrame, bench: DataFrame,
                          id: String, text: String, k: Int = 3,
-                         wordGrain: String = "ws"): DataFrame = {
+                         wordGrain: WordGrain = Ws): DataFrame = {
     val attach = graft.functions.VectorFunctions.attach _
     val benchHs: Array[Long] = attach(bench)
       .select(explode(expr(Dedup.nativeShingleHashes(text, k, wordGrain))).as("h"))

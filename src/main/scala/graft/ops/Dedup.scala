@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import PortableHash._
+import WordGrain.Ws
 
 /** Document deduplication operators for large-scale training-data
   * pipelines: exact, MinHash+LSH (pairs and linear keepers), SimHash,
@@ -115,28 +116,12 @@ object Dedup {
     if (threshold > 0 && est <= threshold) broadcast(leased) else leased
   }
 
-  private[ops] def requireGrain(g: String): String =
-    TextAnalysis.requireWordGrain(g)
-
-  def duckShingles(text: String, k: Int = 3, grain: String = "ws"): String = {
-    // 'toklist' (round 15, internal): `text` is ALREADY a token-list
-    // expression — the dict-grain twins precompute the FMM token list
-    // as a recursive-CTE derived table ([[grainSource]]) because no
-    // scalar SQL expression can run a sequential segmentation cursor.
-    // Dict grain strings themselves are deliberately NOT accepted
-    // here: a twin builder that has not been routed through
-    // [[grainSource]] must fail loudly, not emit wrong-grain SQL.
-    require(grain == "ws" || grain == "cjk-auto" || grain == "toklist",
-      s"duckShingles grain must be 'ws', 'cjk-auto' or 'toklist' " +
-        s"(dict grains go through grainSource), got $grain")
-    // parenthesized: the routed form is a CASE expression and list
-    // indexing binds tighter than CASE in the DuckDB grammar
-    val w = if (grain == "cjk-auto")
-              s"(${TextAnalysis.routedTokensDuck(text, keepEmpties = true)})"
-            else if (grain == "toklist") s"($text)"
-            else s"string_split($text, ' ')"
-    val parts = (0 until k).map(j => s"$w[i + $j]").mkString(" || ' ' || ")
-    s"list_distinct(list_transform(generate_series(1, len($w) - ${k - 1}), i -> $parts))"
+  /** Distinct word k-shingles of a DuckDB token list — the list a
+    * grain's [[WordGrain.duckSource]] renders (indexable, empties kept).
+    */
+  def duckShingles(toks: String, k: Int = 3): String = {
+    val parts = (0 until k).map(j => s"$toks[i + $j]").mkString(" || ' ' || ")
+    s"list_distinct(list_transform(generate_series(1, len($toks) - ${k - 1}), i -> $parts))"
   }
 
   /** Distinct shingle-hash array (the whole-doc content set, hashed).
@@ -154,64 +139,32 @@ object Dedup {
     * Requires [[graft.functions.VectorFunctions.attach]] on the session.
     */
   def nativeShingleHashes(text: String, k: Int = 3,
-                          grain: String = "ws"): String = {
-    requireGrain(grain)
-    // 'cjk-auto': shingles over the ROUTED token sequence (codepoint
-    // k-grams on script-dominated rows — without it an unsegmented doc
+                          grain: WordGrain = Ws): String =
+    // shingles over the grain's token sequence: on cjk-auto codepoint
+    // k-grams on script-dominated rows (without it an unsegmented doc
     // is ONE ws token, has no k-shingles, and the whole minhash family
-    // is silently blind to it). Kernel child of a kernel — stays in
+    // is silently blind to it); on dict grains (round 15) the FMM WORD
+    // sequence (a zh near-dup pair differing by one character INSIDE a
+    // dictionary word shingles apart at codepoint grain but stays a
+    // near-dup at word grain). Kernel child of a kernel — stays in
     // whole-stage codegen, unlike a HOF child.
-    if (grain == "cjk-auto")
-      s"graft_shingle_hashes(graft_routed_tokens($text, true), $k)"
-    else if (FmmLexicons.isDict(grain))
-      // dict grains (round 15): shingles over the FMM WORD sequence —
-      // a zh near-dup pair differing by one character INSIDE a
-      // dictionary word shingles apart at codepoint grain but stays a
-      // near-dup at word grain; kernel child of a kernel, stays in
-      // whole-stage codegen
-      s"graft_shingle_hashes(graft_fmm_tokens($text, true, '$grain'), $k)"
-    else s"graft_shingle_hashes(split($text, ' '), $k)"
-  }
+    s"graft_shingle_hashes(${grain.sparkTokens(text, keepEmpties = true)}, $k)"
 
-  def duckShingleHashes(text: String, k: Int = 3,
-                        grain: String = "ws"): String =
-    s"list_distinct(${duckHashArrayOf(duckShingles(text, k, grain))})"
-
-  /** Dict-grain rewrite for the scalar SQL twins (round 15): FMM needs
-    * a recursive CTE, so for a dict grain the (table, text, grain)
-    * triple becomes (fmm-token-list derived table, `__toks`,
-    * `'toklist'`) and the twin's shingling consumes the list directly;
-    * ws/cjk-auto pass through untouched. The derived table exposes
-    * exactly ($id, __toks) — usable by every twin that references only
-    * the id and the text.
-    */
-  private[ops] def grainSource(table: String, id: String, text: String,
-                               grain: String): (String, String, String) =
-    if (FmmLexicons.isDict(grain))
-      (s"(${TextAnalysis.fmmTokListRelDuck(table, text, id, FmmLexicons(grain))})",
-        "__toks", "toklist")
-    else (table, text, grain)
+  def duckShingleHashes(toks: String, k: Int = 3): String =
+    s"list_distinct(${duckHashArrayOf(duckShingles(toks, k))})"
 
   /** Cheap `>= k`-token floor predicate matching the grain's shingle
-    * token sequence exactly (hs is empty iff it fails): ws counts the
-    * split WITH empties, cjk-auto the count-only routed kernel — the
-    * filter never materializes a token array on either grain.
+    * token sequence exactly (hs is empty iff it fails): the grain's
+    * count-only walk of its token array with empties kept — the filter
+    * never materializes a token array.
     */
-  def shingleFloorPred(text: String, k: Int, grain: String = "ws"): String =
-    if (requireGrain(grain) == "cjk-auto") s"graft_routed_token_count($text) >= $k"
-    else if (FmmLexicons.isDict(grain))
-      s"graft_fmm_token_count($text, '$grain') >= $k"
-    else s"size(split($text, ' ')) >= $k"
+  def shingleFloorPred(text: String, k: Int, grain: WordGrain = Ws): String =
+    s"${grain.sparkTokenCount(text)} >= $k"
 
-  /** DuckDB twin of [[shingleFloorPred]]. */
-  def duckShingleFloorPred(text: String, k: Int, grain: String = "ws"): String =
-    if (grain == "toklist") s"len($text) >= $k"
-    else if (requireGrain(grain) == "cjk-auto")
-      s"len(${TextAnalysis.routedTokensDuck(text, keepEmpties = true)}) >= $k"
-    else if (FmmLexicons.isDict(grain))
-      throw new IllegalArgumentException(
-        "dict-grain twins must rewrite through grainSource before the floor")
-    else s"len(string_split($text, ' ')) >= $k"
+  /** DuckDB twin of [[shingleFloorPred]] over a [[WordGrain.duckSource]]
+    * token list.
+    */
+  def duckShingleFloorPred(toks: String, k: Int): String = s"len($toks) >= $k"
 
   /** Exact dedup by content digest: (digest, keep_id = min id, dup count).
     * One partial-aggregated shuffle on md5(text).
@@ -423,8 +376,7 @@ object Dedup {
     */
   def dedupSpans(df: DataFrame, id: String, text: String,
                  spanLen: Int = 5, maxFreq: Int = 10,
-                 wordGrain: String = "ws"): DataFrame = {
-    requireGrain(wordGrain)
+                 wordGrain: WordGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(df)
     // the span token sequence rides the word grain (round 16 — was
     // hard-wired split-on-space, so zh/thai spans shingled at whatever
@@ -433,11 +385,7 @@ object Dedup {
     // split's contract. clean_text rejoins surviving tokens with
     // single spaces — normalized-form output on non-ws grains (the
     // dedupSentences convention).
-    val tokArr =
-      if (wordGrain == "cjk-auto") s"graft_routed_tokens($text, true)"
-      else if (FmmLexicons.isDict(wordGrain))
-        s"graft_fmm_tokens($text, true, '$wordGrain')"
-      else s"split($text, ' ')"
+    val tokArr = wordGrain.sparkTokens(text, keepEmpties = true)
     // gram DIGESTS, never gram text, cross the exchanges. md5 (128-bit)
     // deliberately: over ~10⁸ distinct grams a 64-bit hash carries real
     // collision odds, and a collision falsely strikes a clean span
@@ -494,16 +442,9 @@ object Dedup {
     */
   def dedupSpansSql(table: String, id: String, text: String,
                     spanLen: Int = 5, maxFreq: Int = 10,
-                    wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
-    // toklist: the FMM token-list derived table already carries the
-    // ordered per-doc word list; cjk-auto: routed codepoint tokens;
-    // keepEmpties=true throughout, mirroring the Spark side
-    val wSrc =
-      if (g == "toklist") s"($txt)"
-      else if (g == "cjk-auto")
-        s"(${TextAnalysis.routedTokensDuck(txt, keepEmpties = true)})"
-      else s"string_split($txt, ' ')"
+                    wordGrain: WordGrain = Ws): String = {
+    // keepEmpties=true, mirroring the Spark side
+    val (tbl, wSrc) = wordGrain.duckSource(table, id, text)
     val w = "w"
     val gramExpr = (0 until spanLen).map(j => s"$w[i + $j]").mkString(" || ' ' || ")
     s"""WITH d AS (SELECT $id, $wSrc AS $w FROM $tbl),
@@ -531,7 +472,7 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, id: String, text: String,
                         numHashes: Int = 16, k: Int = 3,
-                        wordGrain: String = "ws"): DataFrame = {
+                        wordGrain: WordGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(df)
     // filter BEFORE the projection on the equivalent cheap predicate:
     // hs is empty iff the doc has < k words, and filtering on size(hs)
@@ -549,12 +490,12 @@ object Dedup {
 
   def minhashSignaturesSql(table: String, id: String, text: String,
                            numHashes: Int = 16, k: Int = 3,
-                           wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
+                           wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
     val sigCols = (0 until numHashes).map { i =>
       s"list_min(list_transform(hs, h -> ${universal(i, "h")})) AS mh$i"
     }.mkString(", ")
-    s"SELECT $id, $sigCols FROM (SELECT $id, ${duckShingleHashes(txt, k, g)} AS hs FROM $tbl) WHERE len(hs) > 0"
+    s"SELECT $id, $sigCols FROM (SELECT $id, ${duckShingleHashes(toks, k)} AS hs FROM $tbl) WHERE len(hs) > 0"
   }
 
   /** MinHash LSH candidate pairs, exact-Jaccard verified.
@@ -576,7 +517,7 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, id: String, text: String,
                       bands: Int = 4, rowsPerBand: Int = 4, k: Int = 3,
                       threshold: Double = 0.5,
-                      wordGrain: String = "ws"): DataFrame = {
+                      wordGrain: WordGrain = Ws): DataFrame = {
     // The (id, hs) projection feeds FOUR plan branches (band rows twice
     // via the self-join, verify joins twice); without materialization
     // Spark re-scans the corpus and re-hashes per branch. The projection
@@ -627,7 +568,7 @@ object Dedup {
     */
   def minhashDedupKeepers(df: DataFrame, id: String, text: String,
                           bands: Int = 4, rowsPerBand: Int = 4,
-                          k: Int = 3, wordGrain: String = "ws"): DataFrame = {
+                          k: Int = 3, wordGrain: WordGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(df)
     // (band, bucket, id) feeds two branches (bucket minima + join back);
     // persist so the corpus is shingle-hashed once — the cached rows are
@@ -651,8 +592,8 @@ object Dedup {
 
   def minhashDedupKeepersSql(table: String, id: String, text: String,
                              bands: Int = 4, rowsPerBand: Int = 4,
-                             k: Int = 3, wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
+                             k: Int = 3, wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
     val bandSelects = (0 until bands).map { b =>
       val sig = (0 until rowsPerBand).map { r =>
         val i = b * rowsPerBand + r
@@ -662,7 +603,7 @@ object Dedup {
     }.mkString(" UNION ALL ")
     s"""WITH docs AS (
        |  SELECT _did, hs FROM
-       |    (SELECT $id AS _did, ${duckShingleHashes(txt, k, g)} AS hs FROM $tbl)
+       |    (SELECT $id AS _did, ${duckShingleHashes(toks, k)} AS hs FROM $tbl)
        |  WHERE len(hs) > 0),
        |bandrows AS ($bandSelects),
        |bucketmin AS (
@@ -685,7 +626,7 @@ object Dedup {
   def minhashDedupComponents(df: DataFrame, id: String, text: String,
                              bands: Int = 4, rowsPerBand: Int = 4,
                              k: Int = 3, iters: Int = 3,
-                             wordGrain: String = "ws"): DataFrame = {
+                             wordGrain: WordGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(df)
     val bandRows = Par.floor(fdf.where(expr(shingleFloorPred(text, k, wordGrain))), col(id))
       .select(col(id).as("_did"),
@@ -713,8 +654,8 @@ object Dedup {
   def minhashDedupComponentsSql(table: String, id: String, text: String,
                                 bands: Int = 4, rowsPerBand: Int = 4,
                                 k: Int = 3, iters: Int = 3,
-                                wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
+                                wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
     val bandSelects = (0 until bands).map { b =>
       val sig = (0 until rowsPerBand).map { r =>
         val i = b * rowsPerBand + r
@@ -735,7 +676,7 @@ object Dedup {
     }.mkString(",\n")
     s"""WITH docs AS (
        |  SELECT _did, hs FROM
-       |    (SELECT $id AS _did, ${duckShingleHashes(txt, k, g)} AS hs FROM $tbl)
+       |    (SELECT $id AS _did, ${duckShingleHashes(toks, k)} AS hs FROM $tbl)
        |  WHERE len(hs) > 0),
        |bandrows AS ($bandSelects),
        |l0 AS (SELECT DISTINCT _did, _did AS label FROM bandrows),
@@ -746,8 +687,8 @@ object Dedup {
   def minhashLshPairsSql(table: String, id: String, text: String,
                          bands: Int = 4, rowsPerBand: Int = 4, k: Int = 3,
                          threshold: Double = 0.5,
-                         wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
+                         wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
     val bandSelects = (0 until bands).map { b =>
       val sig = (0 until rowsPerBand).map { r =>
         val i = b * rowsPerBand + r
@@ -757,7 +698,7 @@ object Dedup {
     }.mkString(" UNION ALL ")
     s"""WITH docs AS (
        |  SELECT _did, hs FROM
-       |    (SELECT $id AS _did, ${duckShingleHashes(txt, k, g)} AS hs FROM $tbl)
+       |    (SELECT $id AS _did, ${duckShingleHashes(toks, k)} AS hs FROM $tbl)
        |  WHERE len(hs) > 0),
        |bandrows AS ($bandSelects),
        |cand AS (
@@ -777,15 +718,12 @@ object Dedup {
     * token hashes' j-th bits is positive). Linear scan, zero shuffle.
     */
   def simhash(df: DataFrame, id: String, text: String, bits: Int = 30,
-              wordGrain: String = "ws"): DataFrame = {
-    require(wordGrain == "ws" || wordGrain == "cjk-auto",
-      s"wordGrain must be 'ws' or 'cjk-auto', got $wordGrain")
-    // 'cjk-auto': votes come from ROUTED tokens — on the ws grain an
+              wordGrain: ScalarGrain = Ws): DataFrame = {
+    // cjk-auto: votes come from ROUTED tokens — on the ws grain an
     // unsegmented doc is ONE token, so its simhash is the hash of that
     // whole-document word and a one-codepoint edit flips ~half the
     // bits: the hamming keeper can never see unsegmented near-dups
-    val toks = if (wordGrain == "cjk-auto") s"graft_routed_tokens($text, true)"
-               else s"split($text, ' ')"
+    val toks = wordGrain.sparkTokens(text, keepEmpties = true)
     val fdf = graft.functions.VectorFunctions.attach(df)
     Par.floor(fdf, col(id))
       .select(col(id), expr(s"graft_simhash($toks, $bits)").as("simhash"))
@@ -801,10 +739,8 @@ object Dedup {
         s"shiftleft(cast(1 AS BIGINT), j), cast(0 AS BIGINT))), cast(0 AS BIGINT), (a, b) -> a + b)")
 
   def simhashSql(table: String, id: String, text: String, bits: Int = 30,
-                 wordGrain: String = "ws"): String = {
-    val toks = if (requireGrain(wordGrain) == "cjk-auto")
-                 s"(${TextAnalysis.routedTokensDuck(text, keepEmpties = true)})"
-               else s"string_split($text, ' ')"
+                 wordGrain: ScalarGrain = Ws): String = {
+    val toks = wordGrain.duckList(text, keepEmpties = true)
     val hashes = s"list_transform($toks, s -> ${duckStringHash("s")})"
     s"""SELECT $id, list_reduce(list_prepend(0::BIGINT,
        |  list_transform(generate_series(0, ${bits - 1}), j -> CASE WHEN
@@ -829,7 +765,7 @@ object Dedup {
   def dedupCensus(df: DataFrame, id: String, text: String,
                   bands: Int = 4, rowsPerBand: Int = 4,
                   k: Int = 3, iters: Int = 3,
-                  wordGrain: String = "ws"): DataFrame =
+                  wordGrain: WordGrain = Ws): DataFrame =
     minhashDedupComponents(df, id, text, bands, rowsPerBand, k, iters, wordGrain)
       .groupBy(col("component_id")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))
@@ -841,7 +777,7 @@ object Dedup {
   def dedupCensusSql(table: String, id: String, text: String,
                      bands: Int = 4, rowsPerBand: Int = 4,
                      k: Int = 3, iters: Int = 3,
-                     wordGrain: String = "ws"): String =
+                     wordGrain: WordGrain = Ws): String =
     s"""WITH comp AS (
        |${minhashDedupComponentsSql(table, id, text, bands, rowsPerBand, k, iters, wordGrain)}),
        |sizes AS (
@@ -939,14 +875,14 @@ object Dedup {
     */
   def simhashKeepers(df: DataFrame, id: String, text: String,
                      bits: Int = 30, maxHamming: Int = 2,
-                     wordGrain: String = "ws"): DataFrame =
+                     wordGrain: ScalarGrain = Ws): DataFrame =
     hammingKeepers(simhash(df, id, text, bits, wordGrain), id, "simhash",
       bits = bits, bands = 3, maxHamming = maxHamming)
 
   /** DuckDB twin of [[simhashKeepers]]. */
   def simhashKeepersSql(table: String, id: String, text: String,
                         bits: Int = 30, maxHamming: Int = 2,
-                        wordGrain: String = "ws"): String =
+                        wordGrain: ScalarGrain = Ws): String =
     hammingKeepersSql(simhashSql(table, id, text, bits, wordGrain), id, "simhash",
       bits = bits, bands = 3, maxHamming = maxHamming)
 
@@ -957,7 +893,7 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, id: String, text: String,
                         k: Int = 3, threshold: Double = 0.5,
-                        wordGrain: String = "ws"): DataFrame = {
+                        wordGrain: WordGrain = Ws): DataFrame = {
     // docs below k words are excluded on BOTH engines: an empty-vs-empty
     // pair would divide 0/0 — NaN, which Spark excludes at >= t but
     // DuckDB sorts above every number and would include
@@ -982,10 +918,10 @@ object Dedup {
 
   def ngramJaccardPairsSql(table: String, id: String, text: String,
                            k: Int = 3, threshold: Double = 0.5,
-                           wordGrain: String = "ws"): String = {
-    val (tbl, txt, g) = grainSource(table, id, text, wordGrain)
-    s"""WITH d AS (SELECT $id, ${duckShingleHashes(txt, k, g)} AS g FROM $tbl
-       |            WHERE ${duckShingleFloorPred(txt, k, g)}),
+                           wordGrain: WordGrain = Ws): String = {
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
+    s"""WITH d AS (SELECT $id, ${duckShingleHashes(toks, k)} AS g FROM $tbl
+       |            WHERE ${duckShingleFloorPred(toks, k)}),
        |p AS (SELECT a.$id AS a_id, b.$id AS b_id,
        |        len(list_intersect(a.g, b.g)) AS c, len(a.g) AS na, len(b.g) AS nb
        |      FROM d a JOIN d b ON a.$id < b.$id)
@@ -1083,7 +1019,7 @@ object Dedup {
     */
   def bandTable(df: DataFrame, id: String, text: String,
                 bands: Int = 4, rowsPerBand: Int = 4, k: Int = 3,
-                wordGrain: String = "ws"): DataFrame = {
+                wordGrain: WordGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(df)
     Par.floor(fdf.where(expr(shingleFloorPred(text, k, wordGrain))), col(id))
       .select(col(id).as("_did"),
@@ -1091,7 +1027,7 @@ object Dedup {
       .select(col("_did"),
         posexplode(expr(s"graft_band_buckets(hs, $bands, $rowsPerBand)")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .withColumn("grain", lit(requireGrain(wordGrain)))
+      .withColumn("grain", lit(wordGrain.name))
   }
 
   /** Fail-fast check that a persisted band table was built under
@@ -1100,7 +1036,7 @@ object Dedup {
     * Cost: a schema check + `head(1)` (one row off the first file;
     * band tables are constant-grain by construction).
     */
-  private def requireBandGrain(priorBands: DataFrame, wordGrain: String,
+  private def requireBandGrain(priorBands: DataFrame, wordGrain: WordGrain,
                                strict: Boolean = false): Unit = {
     require(priorBands.columns.contains("grain"),
       "band table has no 'grain' marker column — rebuild it with " +
@@ -1122,9 +1058,9 @@ object Dedup {
     }
     priorBands.select(col("grain")).head(1).foreach { r =>
       val g = r.getString(0)
-      require(g == wordGrain,
+      require(g == wordGrain.name,
         s"band table was built under wordGrain='$g' but the probe uses " +
-          s"'$wordGrain' — shingle hashes differ entirely between grains " +
+          s"'${wordGrain.name}' — shingle hashes differ entirely between grains " +
           "(every re-crawl row would silently report as new); rebuild the " +
           "band table or probe with the matching grain")
     }
@@ -1148,7 +1084,7 @@ object Dedup {
   def incrementalNearDup(newSnap: DataFrame, priorBands: DataFrame,
                          id: String, text: String,
                          bands: Int = 4, rowsPerBand: Int = 4,
-                         k: Int = 3, wordGrain: String = "ws",
+                         k: Int = 3, wordGrain: WordGrain = Ws,
                          strictGrain: Boolean = false): DataFrame = {
     requireBandGrain(priorBands, wordGrain, strictGrain)
     val newBands = bandTable(newSnap, id, text, bands, rowsPerBand, k, wordGrain)
@@ -1180,7 +1116,7 @@ object Dedup {
                                   id: String, text: String,
                                   bands: Int = 4, rowsPerBand: Int = 4,
                                   k: Int = 3,
-                                  wordGrain: String = "ws",
+                                  wordGrain: WordGrain = Ws,
                                   strictGrain: Boolean = false): DataFrame = {
     requireBandGrain(priorBands, wordGrain, strictGrain)
     val shift = 32 - Integer.numberOfLeadingZeros(math.max(bands - 1, 1))
@@ -1203,7 +1139,10 @@ object Dedup {
   def incrementalNearDupSql(table: String, newPred: String,
                             priorPred: String, id: String, text: String,
                             bands: Int = 4, rowsPerBand: Int = 4,
-                            k: Int = 3, wordGrain: String = "ws"): String = {
+                            k: Int = 3, wordGrain: WordGrain = Ws): String = {
+    // the band docs read the grain's token source; the final probe rows
+    // stay on `table` (a dict source exposes only the id and tokens)
+    val (tbl, toks) = wordGrain.duckSource(table, id, text)
     def bandSelects(src: String) = (0 until bands).map { b =>
       val sig = (0 until rowsPerBand).map { r =>
         val i = b * rowsPerBand + r
@@ -1213,13 +1152,13 @@ object Dedup {
     }.mkString(" UNION ALL ")
     s"""WITH docs_new AS (
        |  SELECT _did, hs FROM
-       |    (SELECT $id AS _did, ${duckShingleHashes(text, k, wordGrain)} AS hs
-       |     FROM $table WHERE $newPred)
+       |    (SELECT $id AS _did, ${duckShingleHashes(toks, k)} AS hs
+       |     FROM $tbl WHERE $newPred)
        |  WHERE len(hs) > 0),
        |docs_prior AS (
        |  SELECT _did, hs FROM
-       |    (SELECT $id AS _did, ${duckShingleHashes(text, k, wordGrain)} AS hs
-       |     FROM $table WHERE $priorPred)
+       |    (SELECT $id AS _did, ${duckShingleHashes(toks, k)} AS hs
+       |     FROM $tbl WHERE $priorPred)
        |  WHERE len(hs) > 0),
        |nb AS (${bandSelects("docs_new")}),
        |pb AS (${bandSelects("docs_prior")}),
@@ -1251,7 +1190,7 @@ object Dedup {
   def softDedupWeights(df: DataFrame, id: String, text: String,
                        bands: Int = 4, rowsPerBand: Int = 4,
                        k: Int = 3, iters: Int = 3,
-                       wordGrain: String = "ws"): DataFrame = {
+                       wordGrain: WordGrain = Ws): DataFrame = {
     // comp is consumed twice (sizes + the corpus join); without the
     // lease the whole iterated label propagation re-runs per reference
     // (r20 optimization — the frame is doc-grain, two longs per row)
@@ -1275,7 +1214,7 @@ object Dedup {
   def softDedupWeightsSql(table: String, id: String, text: String,
                           bands: Int = 4, rowsPerBand: Int = 4,
                           k: Int = 3, iters: Int = 3,
-                          wordGrain: String = "ws"): String =
+                          wordGrain: WordGrain = Ws): String =
     s"""WITH comp AS (
        |${minhashDedupComponentsSql(table, id, text, bands, rowsPerBand, k, iters, wordGrain)}),
        |sizes AS (

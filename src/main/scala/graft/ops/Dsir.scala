@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import WordGrain.Ws
 
 /** DSIR-style data selection via hashed n-gram importance weights
   * (Xie et al. 2023, "Data Selection for Language Models via Importance
@@ -49,16 +50,12 @@ import org.apache.spark.sql.functions._
 object Dsir {
 
   /** Word unigrams + bigrams of `text` (non-empty words), one array. */
-  private def sparkGramsExpr(text: String, wordGrain: String = "ws"): String = {
-    val w = if (Dedup.requireGrain(wordGrain) == "cjk-auto") s"graft_routed_tokens($text, false)"
-            else s"filter(split($text, ' '), w -> w <> '')"
-    PortableHash.let1("__w", w, "concat(__w, graft_ngrams(__w, 2))")
-  }
+  private def sparkGramsExpr(text: String, wordGrain: ScalarGrain): String =
+    PortableHash.let1("__w", wordGrain.sparkTokens(text, keepEmpties = false),
+      "concat(__w, graft_ngrams(__w, 2))")
 
-  private def duckGramsExpr(text: String, wordGrain: String = "ws"): String = {
-    val w = if (Dedup.requireGrain(wordGrain) == "cjk-auto")
-              s"(${TextAnalysis.routedTokensDuck(text, keepEmpties = false)})"
-            else s"list_filter(string_split($text, ' '), w -> w <> '')"
+  private def duckGramsExpr(text: String, wordGrain: ScalarGrain): String = {
+    val w = wordGrain.duckList(text, keepEmpties = false)
     s"list_concat($w, list_transform(generate_series(1, len($w) - 1), " +
       s"i -> $w[i] || ' ' || $w[i + 1]))"
   }
@@ -77,7 +74,7 @@ object Dsir {
     */
   def weights(docs: DataFrame, id: String, text: String,
               targetPred: Column, buckets: Int = 256,
-              wordGrain: String = "ws"): DataFrame = {
+              wordGrain: ScalarGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(docs)
     val grams = fdf
       .select(col(id), targetPred.as("__is_t"),
@@ -103,7 +100,7 @@ object Dsir {
     * — a TakeOrdered, never a global sort). */
   def select(docs: DataFrame, id: String, text: String, targetPred: Column,
              n: Int, buckets: Int = 256,
-             wordGrain: String = "ws"): DataFrame = {
+             wordGrain: ScalarGrain = Ws): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the unpartitioned rank window runs AFTER limit(n): its input is
     // <= n rows by construction, never the corpus
@@ -132,14 +129,12 @@ object Dsir {
   def weightsFast(docs: DataFrame, id: String, text: String,
                   targetPred: Column, buckets: Int = 256,
                   ref: Option[DataFrame] = None,
-                  wordGrain: String = "ws"): DataFrame = {
-    require(wordGrain == "ws" || wordGrain == "cjk-auto",
-      s"wordGrain must be 'ws' or 'cjk-auto', got $wordGrain")
+                  wordGrain: ScalarGrain = Ws): DataFrame = {
     val fdf = graft.functions.VectorFunctions.attach(docs)
     val refDf = graft.functions.VectorFunctions.attach(ref.getOrElse(docs))
     val counts = refDf
       .select(targetPred.as("__is_t"),
-        explode(expr(s"graft_dsir_buckets($text, $buckets, '$wordGrain')")).as("b"))
+        explode(expr(s"graft_dsir_buckets($text, $buckets, '${wordGrain.name}')")).as("b"))
       .groupBy(col("b")).agg(
         sum(when(col("__is_t"), 1L).otherwise(0L)).as("cnt_t"),
         count(lit(1)).as("cnt_r"))
@@ -166,15 +161,15 @@ object Dsir {
     // than the md5 gram kernel (19s) it rides next to.
     fdf.where(trim(col(text)) =!= "")
       .select(col(id),
-        expr(s"2 * graft_word_count($text, '$wordGrain') - 1").as("n_grams"),
-        expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '$wordGrain'), $wLit)")
+        expr(s"2 * graft_word_count($text, '${wordGrain.name}') - 1").as("n_grams"),
+        expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '${wordGrain.name}'), $wLit)")
           .as("w_sum"))
   }
 
   /** [[select]] over [[weightsFast]] — the registered scale path. */
   def selectFast(docs: DataFrame, id: String, text: String,
                  targetPred: Column, n: Int, buckets: Int = 256,
-                 wordGrain: String = "ws"): DataFrame = {
+                 wordGrain: ScalarGrain = Ws): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // rank window input is <= n rows (post-limit), never the corpus
     weightsFast(docs, id, text, targetPred, buckets, wordGrain = wordGrain)
@@ -196,11 +191,11 @@ object Dsir {
   def scoreStreaming(corpusStream: DataFrame, ref: DataFrame,
                      id: String, text: String, targetPred: Column,
                      minWeight: Long = 0L, buckets: Int = 256,
-                     wordGrain: String = "ws"): DataFrame = {
+                     wordGrain: ScalarGrain = Ws): DataFrame = {
     val refDf = graft.functions.VectorFunctions.attach(ref)
     val counts = refDf
       .select(targetPred.as("__is_t"),
-        explode(expr(s"graft_dsir_buckets($text, $buckets, '$wordGrain')")).as("b"))
+        explode(expr(s"graft_dsir_buckets($text, $buckets, '${wordGrain.name}')")).as("b"))
       .groupBy(col("b")).agg(
         sum(when(col("__is_t"), 1L).otherwise(0L)).as("cnt_t"),
         count(lit(1)).as("cnt_r"))
@@ -218,8 +213,8 @@ object Dsir {
     graft.functions.VectorFunctions.attach(corpusStream)
       .where(trim(col(text)) =!= "")
       .select(col(id),
-        expr(s"2 * graft_word_count($text, '$wordGrain') - 1").as("n_grams"),
-        expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '$wordGrain'), $wLit)")
+        expr(s"2 * graft_word_count($text, '${wordGrain.name}') - 1").as("n_grams"),
+        expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '${wordGrain.name}'), $wLit)")
           .as("w_sum"))
       .where(col("w_sum") >= minWeight)
   }
@@ -227,7 +222,7 @@ object Dsir {
   /** DuckDB twin of [[weights]]. */
   def weightsSql(table: String, id: String, text: String,
                  targetPredSql: String, buckets: Int = 256,
-                 wordGrain: String = "ws"): String =
+                 wordGrain: ScalarGrain = Ws): String =
     s"""WITH grams AS (
        |  SELECT $id, ($targetPredSql) AS is_t,
        |    (${PortableHash.duckStringHash("g.g")} % $buckets) AS b
@@ -248,7 +243,7 @@ object Dsir {
   /** DuckDB twin of [[select]]. */
   def selectSql(table: String, id: String, text: String,
                 targetPredSql: String, n: Int, buckets: Int = 256,
-                wordGrain: String = "ws"): String =
+                wordGrain: ScalarGrain = Ws): String =
     s"""WITH w AS (
        |${weightsSql(table, id, text, targetPredSql, buckets, wordGrain)})
        |SELECT $id, n_grams, w_sum,

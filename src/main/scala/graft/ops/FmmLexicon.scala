@@ -16,7 +16,7 @@ package graft.ops
   * swallow a run-token boundary), no duplicates, no spaces.
   *
   * Concrete lexicons are Scala `object`s so the codegen'd kernels can
-  * reference them as static fields ([[FmmLexicons.javaRef]]) — no
+  * reference them as static fields ([[DictGrain.javaRef]]) — no
   * per-row registry lookup, and with two instances the
   * `longestMatch` call sites stay at worst bimorphic.
   */
@@ -211,45 +211,4 @@ object FmmLexicon {
       0
     }
   }
-}
-
-/** Registry of the committed FMM grains — the single source of truth
-  * for which `wordGrain` strings are dictionary grains and which
-  * lexicon each resolves to (kernels, SQL twins, and the grain
-  * validators all route through here).
-  */
-object FmmLexicons {
-
-  /** grain string → lexicon. */
-  val byGrain: Map[String, FmmLexicon] =
-    Map("cjk-dict" -> ZhLexicon, "thai-dict" -> ThLexicon)
-
-  def isDict(grain: String): Boolean = byGrain.contains(grain)
-
-  def apply(grain: String): FmmLexicon =
-    byGrain.getOrElse(grain,
-      throw new IllegalArgumentException(s"no FMM lexicon for grain '$grain'"))
-
-  /** Static Java reference for the codegen'd kernels — resolved at
-    * CODEGEN time, so the generated row loop carries a constant field
-    * read, not a map lookup. Derived from the registry entry's class
-    * (round 16, ADVICE fix — the prior hand-written match could drift
-    * from [[byGrain]]: a lexicon added only there passed `isDict` and
-    * worked interpreted, then threw from every codegen'd kernel).
-    * Lexicons are Scala `object`s by the trait contract, so the class
-    * name is `graft.ops.XxLexicon$` and the static instance is its
-    * `MODULE$` field.
-    */
-  def javaRef(grain: String): String = {
-    val cls = apply(grain).getClass.getName
-    require(cls.endsWith("$"),
-      s"FMM lexicon for '$grain' must be a top-level object (got $cls) — " +
-        "codegen references it as a static MODULE$ field")
-    s"$cls.MODULE$$"
-  }
-
-  // init-time guard: every registered grain must yield a codegen
-  // reference (an anonymous/inner lexicon would fail here, at class
-  // load, instead of from the first codegen'd kernel at runtime)
-  byGrain.keys.foreach(javaRef)
 }

@@ -201,22 +201,6 @@ object Preference {
         (col(lprNew).cast("long") - col(lprRef).cast("long")))
         .as("margin_milli"))
 
-  /** DuckDB twin of [[dpoMargins]] (trunc-routed casts, the
-    * [[PolicyOpt]] domain convention; NULL log-probs out of domain on
-    * both dialects — round-19 self-review: a malformed pair would
-    * otherwise land in a junk NULL bin with a NULL margin mass).
-    */
-  def dpoMarginsSql(table: String, id: String, lpcNew: String,
-                    lpcRef: String, lprNew: String,
-                    lprRef: String): String =
-    s"""SELECT $id AS pair_id,
-       |  ((${graft.ops.PortableHash.truncToZero(s"$lpcNew")} - ${graft.ops.PortableHash.truncToZero(s"$lpcRef")})
-       |   - (${graft.ops.PortableHash.truncToZero(s"$lprNew")} - ${graft.ops.PortableHash.truncToZero(s"$lprRef")}))::BIGINT
-       |    AS margin_milli
-       |FROM $table
-       |WHERE $lpcNew IS NOT NULL AND $lpcRef IS NOT NULL
-       |  AND $lprNew IS NOT NULL AND $lprRef IS NOT NULL""".stripMargin
-
   /** Margin-BUCKET report over [[dpoMargins]] — the
     * [[rmCalibration]] binning applied to the implicit-reward margin:
     * pairs bucket by |margin| (fixed `binMilli` width, top bin open),

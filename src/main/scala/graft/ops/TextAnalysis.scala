@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import PortableHash._
+import WordGrain.{CjkAuto, Ws}
 
 /** Text analysis for training-data pipelines: language ID (marker-word
   * heuristic), quality scoring, token counting, and rolling-hash document
@@ -231,20 +232,15 @@ object TextAnalysis {
     */
   def winnowSets(df: DataFrame, id: String, text: String,
                  k: Int = 3, w: Int = 4,
-                 wordGrain: String = "ws"): DataFrame = {
-    Dedup.requireGrain(wordGrain)
-    // 'cjk-auto': positional grams over ROUTED tokens — an unsegmented
+                 wordGrain: WordGrain = Ws): DataFrame = {
+    // cjk-auto: positional grams over ROUTED tokens — an unsegmented
     // doc is one ws token with no k-grams, so ws winnowing selects
     // nothing on it and partial-copy detection is blind to it. Dict
     // grains (round 15) gram the FMM WORD sequence: a k-gram spans k
     // WORDS of context instead of k characters, so the fingerprint
     // guarantee ("any shared run of ≥ w+k-1 tokens is caught") speaks
     // the unit partial-copy detection on zh actually cares about
-    val toks =
-      if (wordGrain == "cjk-auto") s"graft_routed_tokens($text, true)"
-      else if (graft.ops.FmmLexicons.isDict(wordGrain))
-        s"graft_fmm_tokens($text, true, '$wordGrain')"
-      else s"split($text, ' ')"
+    val toks = wordGrain.sparkTokens(text, keepEmpties = true)
     // r14: the ROLLING gram-hash feed (graft_gram_rhashes/_winnow_r) —
     // token hashes are an integer codepoint fold computed once per
     // token, grams a k-term arithmetic fold; no gram-string build, no
@@ -296,7 +292,7 @@ object TextAnalysis {
   def winnowPairs(df: DataFrame, id: String, text: String,
                   k: Int = 3, w: Int = 4, minShared: Int = 2,
                   maxPostings: Int = 1000,
-                  wordGrain: String = "ws"): DataFrame =
+                  wordGrain: WordGrain = Ws): DataFrame =
     winnowPairsFull(df, id, text, k, w, minShared, maxPostings, wordGrain)
       .select(col("a_id"), col("b_id"), col("n_shared"), col("containment"))
 
@@ -307,7 +303,7 @@ object TextAnalysis {
   private def winnowPairsFull(df: DataFrame, id: String, text: String,
                               k: Int, w: Int, minShared: Int,
                               maxPostings: Int,
-                              wordGrain: String = "ws"): DataFrame = {
+                              wordGrain: WordGrain): DataFrame = {
     val sets = winnowSets(df, id, text, k, w, wordGrain)
       .select(col(id).as("d"), col("fingerprints"))
     val posts = sets.select(col("d"), explode(col("fingerprints")).as("fp"))
@@ -346,16 +342,18 @@ object TextAnalysis {
     // GB per executor on a 1000-node fleet) — heavy but bounded, and
     // strictly smaller than the recompute it replaces; maxPostings
     // bounds any one fingerprint's hot partition, not the total.
-    // NOTE for new grains: the ws inversion means any grain added to
-    // requireWordGrain must choose its branch here by probe, not
-    // default into the lease.
+    // NOTE for new grains: the ws inversion means a new grain must
+    // choose its branch here by probe, not default into the lease (the
+    // match is exhaustive, so the compiler asks).
     val boundedRaw = posts.withColumn("cnt",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
       .where(col("cnt") <= maxPostings).drop("cnt")
       .withColumn("n_fp",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("d"))))
-    val bounded =
-      if (wordGrain == "ws") boundedRaw else Caches.lease(boundedRaw)
+    val bounded = wordGrain match {
+      case Ws => boundedRaw
+      case CjkAuto | _: DictGrain => Caches.lease(boundedRaw)
+    }
     // containment = shared / min(|A|, |B|): 1.0 when one doc's selected
     // fingerprints all appear in the other — the asymmetric-copy signal
     // (a quote inside a long doc) that symmetric Jaccard-style ratios
@@ -396,7 +394,7 @@ object TextAnalysis {
                        k: Int = 3, w: Int = 4, minShared: Int = 2,
                        maxPostings: Int = 1000,
                        threshold: Double = 0.8,
-                       wordGrain: String = "ws"): DataFrame = {
+                       wordGrain: WordGrain = Ws): DataFrame = {
     val victims = winnowPairsFull(df, id, text, k, w, minShared, maxPostings,
         wordGrain)
       .where(col("containment") >= threshold)
@@ -412,7 +410,7 @@ object TextAnalysis {
                           k: Int = 3, w: Int = 4, minShared: Int = 2,
                           maxPostings: Int = 1000,
                           threshold: Double = 0.8,
-                          wordGrain: String = "ws"): String =
+                          wordGrain: WordGrain = Ws): String =
     s"""WITH pairs AS (
        |  SELECT b_id, containment FROM (
        |${winnowPairsFullSql(table, id, text, k, w, minShared, maxPostings, wordGrain)}) t),
@@ -427,7 +425,7 @@ object TextAnalysis {
                      k: Int = 3, w: Int = 4, minShared: Int = 2,
                      maxPostings: Int = 1000): String =
     s"""SELECT a_id, b_id, n_shared, containment FROM (
-       |${winnowPairsFullSql(table, id, text, k, w, minShared, maxPostings)}) t""".stripMargin
+       |${winnowPairsFullSql(table, id, text, k, w, minShared, maxPostings, Ws)}) t""".stripMargin
 
   /** The [[winnowPairsSql]] chain with n_a/n_b kept (twin of
     * [[winnowPairsFull]]).
@@ -435,16 +433,17 @@ object TextAnalysis {
   private def winnowPairsFullSql(table: String, id: String, text: String,
                                  k: Int, w: Int, minShared: Int,
                                  maxPostings: Int,
-                                 wordGrain: String = "ws"): String = {
-    // dict grains route through the fmm-token-list derived table
-    // (the Dedup.grainSource contract: it exposes only ($id, __toks),
-    // and the postings/agg CTEs reference nothing else — the final
-    // full-table SELECT in containmentDedupSql stays on the original)
-    val (tbl, txt, g) = Dedup.grainSource(table, id, text, wordGrain)
-    val words = if (g == "toklist") txt
-                else if (Dedup.requireGrain(g) == "cjk-auto")
-                  s"(${routedTokensDuck(txt, keepEmpties = true)})"
-                else s"string_split($txt, ' ')"
+                                 wordGrain: WordGrain): String = {
+    // dict grains read the fmm-token-list derived table (the
+    // WordGrain.duckSource contract: it exposes only ($id, __toks), and
+    // the postings/agg CTEs reference nothing else — the final
+    // full-table SELECT in containmentDedupSql stays on the original).
+    // This twin reads the dict list bare where the shingle twins
+    // parenthesize it; both forms are pinned in the oracle SQL.
+    val (tbl, words) = wordGrain match {
+      case d: DictGrain => (d.duckSource(table, id, text)._1, "__toks")
+      case s: ScalarGrain => s.duckSource(table, id, text)
+    }
     s"""WITH fps AS (
        |  SELECT $id AS d,
        |    CASE WHEN len(gh) = 0 THEN []::BIGINT[]
@@ -513,12 +512,10 @@ object TextAnalysis {
     * (identically on both engines).
     */
   def repetitionSignals(df: DataFrame, id: String, text: String,
-                        wordGrain: String = "ws"): DataFrame = {
+                        wordGrain: ScalarGrain = Ws): DataFrame = {
     // the OOM-safe exploded variant takes the grain too — large looped
     // zh spam is exactly the shape this path exists for
-    val w = if (Dedup.requireGrain(wordGrain) == "cjk-auto")
-              s"graft_routed_tokens($text, true)"
-            else s"split($text, ' ')"
+    val w = wordGrain.sparkTokens(text, keepEmpties = true)
     val base = graft.functions.VectorFunctions.attach(df)
       .select(col(id), expr(w).as("__w"))
       .where(expr("size(__w) >= 2"))
@@ -606,14 +603,11 @@ object TextAnalysis {
   }
 
   def repetitionSignalsLocal(df: DataFrame, id: String, text: String,
-                             wordGrain: String = "ws"): DataFrame = {
-    require(wordGrain == "ws" || wordGrain == "cjk-auto",
-      s"wordGrain must be 'ws' or 'cjk-auto', got $wordGrain")
-    // 'cjk-auto': repetition signals over ROUTED tokens — the ws grain
+                             wordGrain: ScalarGrain = Ws): DataFrame = {
+    // cjk-auto: repetition signals over ROUTED tokens — the ws grain
     // EXCLUDES unsegmented docs entirely (one token fails the >= 2
     // gate), so looped/template zh spam sails through unscored
-    val w = if (wordGrain == "cjk-auto") s"graft_routed_tokens($text, true)"
-            else s"split($text, ' ')"
+    val w = wordGrain.sparkTokens(text, keepEmpties = true)
     graft.functions.VectorFunctions.attach(df)
       .select(col(id), expr(w).as("__w"))
       .where(expr("size(__w) >= 2"))
@@ -628,10 +622,8 @@ object TextAnalysis {
     * arithmetic; unnest-based so the grouping mirrors the exploded plan).
     */
   def repetitionSignalsSql(table: String, id: String, text: String,
-                           wordGrain: String = "ws"): String = {
-    val w = if (Dedup.requireGrain(wordGrain) == "cjk-auto")
-              s"(${routedTokensDuck(text, keepEmpties = true)})"
-            else s"string_split($text, ' ')"
+                           wordGrain: ScalarGrain = Ws): String = {
+    val w = wordGrain.duckList(text, keepEmpties = true)
     s"""WITH d AS (
        |  SELECT $id,
        |    round(1.0 - len(list_distinct($w))::DOUBLE / len($w)::DOUBLE, 6) AS dwf,
@@ -770,7 +762,7 @@ object TextAnalysis {
     * scripts (a zh sentence is one "word"); the standard IR fallback
     * is each such codepoint as its own token.
     */
-  private val cjkRangeInterior: String =
+  private[ops] val cjkRangeInterior: String =
     graft.functions.GopherOps.cjkRanges.grouped(2)
       .map { case Array(a, b) => s"${a.toChar}-${b.toChar}" }.mkString
 
@@ -797,7 +789,7 @@ object TextAnalysis {
     val ncjk = s"(length($text) - length(regexp_replace($text, '$cjkCharClass', '')))"
     s"(2 * $ncjk >= length(replace($text, ' ', '')) AND $ncjk > 0)"
   }
-  private def cjkDominantDuck(text: String): String = {
+  private[ops] def cjkDominantDuck(text: String): String = {
     val ncjk = s"(length($text) - length(regexp_replace($text, '$cjkCharClass', '', 'g')))"
     s"(2 * $ncjk >= length(replace($text, ' ', '')) AND $ncjk > 0)"
   }
@@ -860,9 +852,7 @@ object TextAnalysis {
                   minStopHits: Int = 2, maxBulletRatio: Double = 0.9,
                   maxEllipsisRatio: Double = 0.3,
                   carry: Seq[String] = Nil,
-                  wordGrain: String = "ws"): DataFrame = {
-    require(wordGrain == "ws" || wordGrain == "cjk-auto",
-      s"wordGrain must be 'ws' or 'cjk-auto', got $wordGrain")
+                  wordGrain: ScalarGrain = Ws): DataFrame = {
     // COMPILED form (round 10; cjk-auto compiled round 12): the whole
     // rule set — script-dominance routing included — is one
     // `graft_gopher_flags` byte scan ([[graft.functions.GopherOps]],
@@ -873,7 +863,7 @@ object TextAnalysis {
     val stop = markerList(gopherStops, "spark")
     val flags = expr(s"graft_gopher_flags($text, $minWords, $maxWords, " +
       s"$minMeanLen, $maxMeanLen, $maxSymbolRatio, $minAlphaWordRatio, " +
-      s"$minStopHits, $maxBulletRatio, $maxEllipsisRatio, $stop, '$wordGrain')")
+      s"$minStopHits, $maxBulletRatio, $maxEllipsisRatio, $stop, '${wordGrain.name}')")
     graft.functions.VectorFunctions.attach(df)
       .select((col(id) +: carry.map(col)) :+ flags.as("__g"): _*)
       .select((col(id) +: carry.map(col)) ++ Seq(
@@ -896,7 +886,7 @@ object TextAnalysis {
                      minStopHits: Int = 2, maxBulletRatio: Double = 0.9,
                      maxEllipsisRatio: Double = 0.3,
                      carry: Seq[String] = Nil,
-                     wordGrain: String = "ws"): DataFrame = {
+                     wordGrain: ScalarGrain = Ws): DataFrame = {
     // `carry` passes extra input columns through the projection so fused
     // pipelines can keep text/source in the SAME single scan (Catalyst
     // collapses the adjacent Projects) instead of re-scanning to re-join
@@ -910,7 +900,7 @@ object TextAnalysis {
     // and the stop list is English — both would reject every routed row
     // by construction) and the alpha-word class widens to the
     // unsegmented scripts so it still rejects symbol/digit soup.
-    val routed = Dedup.requireGrain(wordGrain) == "cjk-auto"
+    val routed = wordGrain.routed
     // the HOF form is the DECLARATIVE parity baseline — it must stay
     // kernel-free, so the routed grain rides the regexp construction
     val w = if (routed) routedTokensRegex(text, keepEmpties = true)
@@ -981,11 +971,10 @@ object TextAnalysis {
                      maxSymbolRatio: Double = 0.1, minAlphaWordRatio: Double = 0.8,
                      minStopHits: Int = 2, maxBulletRatio: Double = 0.9,
                      maxEllipsisRatio: Double = 0.3,
-                     wordGrain: String = "ws"): String = {
+                     wordGrain: ScalarGrain = Ws): String = {
     val stop = markerList(gopherStops, "duck")
-    val routed = Dedup.requireGrain(wordGrain) == "cjk-auto"
-    val w = if (routed) routedTokensDuck(text, keepEmpties = true)
-            else s"string_split($text, ' ')"
+    val routed = wordGrain.routed
+    val w = wordGrain.duckTokens(text, keepEmpties = true)
     val l = s"string_split($text, chr(10))"
     val dom = cjkDominantDuck(text)
     val meanExpr = s"""(length(replace($text, ' ', '')) / (len($w)::DOUBLE)
@@ -1040,20 +1029,19 @@ object TextAnalysis {
     * total order: (cnt DESC, token ASC).
     */
   def vocabulary(df: DataFrame, text: String, topV: Int = 100,
-                 wordGrain: String = "ws"): DataFrame = {
+                 wordGrain: WordGrain = Ws): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // 'cjk-dict' (round 14): forward-maximum-match segmentation over
+    // cjk-dict (round 14): forward-maximum-match segmentation over
     // the committed ZhLexicon on dominance-routed rows — the word
     // grain a zh vocabulary actually wants (the codepoint grain is an
     // IR fallback; FMM returns 我们/中国 whole). Rides the same
     // graft_term_tf kernel, dict mode.
-    requireWordGrain(wordGrain)
     // round 13: rides the row-local (token, tf) pair kernel — one
     // exploded row per DISTINCT (doc, token), tf-weighted sums replace
     // the per-token count — and takes the routed grain (a ws "vocab"
     // over an unsegmented corpus is a table of whole documents)
     val counts = graft.functions.VectorFunctions.attach(df)
-      .select(explode(expr(s"graft_term_tf($text, '$wordGrain')")).as("p"))
+      .select(explode(expr(s"graft_term_tf($text, '${wordGrain.name}')")).as("p"))
       .select(col("p.w").as("token"), col("p.tf").as("tf"))
       .groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("__total"))
@@ -1068,108 +1056,16 @@ object TextAnalysis {
       .select(col("rank"), col("token"), col("cnt"), col("coverage"))
   }
 
-  /** Central word-grain validator (round 15): 'ws', 'cjk-auto', or
-    * any committed dictionary grain ([[FmmLexicons.byGrain]] —
-    * 'cjk-dict', 'thai-dict'). Returns the grain so call sites can
-    * validate inline; [[Dedup.requireGrain]] funnels here too.
-    */
-  private[ops] def requireWordGrain(g: String): String = {
-    require(g == "ws" || g == "cjk-auto" || FmmLexicons.isDict(g),
-      s"wordGrain must be 'ws', 'cjk-auto' or a dict grain " +
-        s"(${FmmLexicons.byGrain.keys.mkString(", ")}), got $g")
-    g
-  }
-
-  /** DuckDB twin of the `cjk-dict` grain as a token RELATION
-    * (`toks(token)` — FMM has a sequential cursor dependency no scalar
-    * list expression can express, so the twin is a recursive CTE over
-    * (row, cursor) with the committed lexicon unrolled as a bounded
-    * CASE ladder ([[ZhLexicon.duckFmmCase]], the PSL-resolver trick);
-    * non-dominated rows union in the ws grain. Iterations = max token
-    * count per doc — an oracle-side cost only, the Spark kernel is one
-    * scan. Caller opens `WITH RECURSIVE`.
-    *
-    * ORACLE-GRADE ONLY: the recursion advances ONE token per
-    * iteration, so the twin's cost is (longest routed doc's token
-    * count) × (a per-iteration CASE-ladder scan over every live row).
-    * Fine for the length-capped fixtures the oracle runs on; do NOT
-    * point the generated SQL at real corpora — cap routed text length
-    * first (the Spark kernel has no such limit; it is one linear scan
-    * per row).
-    */
-  private def fmmToksRelDuck(table: String, text: String,
-                             idExpr: Option[String] = None,
-                             lex: FmmLexicon = ZhLexicon): String = {
-    // rid keys the recursion rows; doc-consuming twins (tfidf) pass the
-    // real id column, corpus-level twins (vocabulary) synthesize one
-    val rid = idExpr.getOrElse("row_number() OVER ()")
-    s"""base AS (
-       |  SELECT $rid AS rid, $text AS t,
-       |    ${cjkDominantDuck(text)} AS routed
-       |  FROM $table),
-       |seg AS (
-       |  SELECT rid, t, CAST(1 AS BIGINT) AS pos, '' AS token
-       |  FROM base WHERE routed
-       |  UNION ALL
-       |  SELECT rid, t, pos + CASE WHEN tok = '' THEN 1 ELSE len(tok) END, tok
-       |  FROM (SELECT rid, t, pos,
-       |    ${lex.duckFmmCase("t", "pos", cjkRangeInterior)} AS tok
-       |    FROM seg WHERE pos <= len(t)) x),
-       |toks AS (
-       |  SELECT rid, token FROM seg WHERE token <> ''
-       |  UNION ALL
-       |  SELECT rid, unnest(list_filter(string_split(t, ' '), w -> w <> '')) AS token
-       |  FROM base WHERE NOT routed)""".stripMargin
-  }
-
-  /** Ordered per-doc token LIST relation on a dict grain (round 15) —
-    * the oracle feed for the SHINGLE family, where the consumer needs
-    * the whole token sequence per doc, not token rows: a complete
-    * `WITH RECURSIVE` SELECT (usable as a derived table) emitting
-    * `($id, __toks)` with `__toks` the FMM token list in text order.
-    * keepEmpties=TRUE semantics on the ws fallback branch
-    * (`string_split` unfiltered), mirroring `graft_fmm_tokens(t, true)`
-    * — the convention the ws/cjk-auto shingle twins already use. Same
-    * oracle-grade-only cost caveat as [[fmmToksRelDuck]].
-    */
-  private[ops] def fmmTokListRelDuck(table: String, text: String,
-                                     id: String, lex: FmmLexicon): String = {
-    s"""WITH RECURSIVE base AS (
-       |  SELECT $id AS rid, $text AS t,
-       |    ${cjkDominantDuck(text)} AS routed
-       |  FROM $table),
-       |seg AS (
-       |  SELECT rid, t, CAST(1 AS BIGINT) AS pos, '' AS token
-       |  FROM base WHERE routed
-       |  UNION ALL
-       |  SELECT rid, t, pos + CASE WHEN tok = '' THEN 1 ELSE len(tok) END, tok
-       |  FROM (SELECT rid, t, pos,
-       |    ${lex.duckFmmCase("t", "pos", cjkRangeInterior)} AS tok
-       |    FROM seg WHERE pos <= len(t)) x),
-       |tokord AS (
-       |  SELECT rid, token, pos AS ord FROM seg WHERE token <> ''
-       |  UNION ALL
-       |  SELECT rid, unnest(ls) AS token,
-       |         unnest(generate_series(1, len(ls))) AS ord
-       |  FROM (SELECT rid, string_split(t, ' ') AS ls FROM base WHERE NOT routed))
-       |SELECT rid AS $id, list(token ORDER BY ord ASC) AS __toks
-       |FROM tokord GROUP BY rid""".stripMargin
-  }
-
   /** DuckDB twin of [[vocabulary]]. */
   def vocabularySql(table: String, text: String, topV: Int = 100,
-                    wordGrain: String = "ws"): String = {
-    requireWordGrain(wordGrain)
-    val prelude =
-      if (FmmLexicons.isDict(wordGrain))
-        s"WITH RECURSIVE ${fmmToksRelDuck(table, text, None, FmmLexicons(wordGrain))},"
-      else {
-        val toks = if (wordGrain == "cjk-auto") routedTokensDuck(text, keepEmpties = false)
-                   else s"list_filter(string_split($text, ' '), w -> w <> '')"
+                    wordGrain: WordGrain = Ws): String = {
+    val prelude = wordGrain match {
+      case d: DictGrain => s"WITH RECURSIVE ${d.duckTokenRows(table, text)},"
+      case g: ScalarGrain =>
         s"""WITH toks AS (
-           |  SELECT unnest($toks) AS token
+           |  SELECT unnest(${g.duckTokens(text, keepEmpties = false)}) AS token
            |  FROM $table),""".stripMargin
-      }
+    }
     s"""$prelude
        |counts AS (SELECT token, count(*)::BIGINT AS cnt FROM toks GROUP BY token),
        |tot AS (SELECT sum(cnt)::BIGINT AS total FROM counts),
@@ -1214,29 +1110,28 @@ object TextAnalysis {
     * total order: (lift DESC, w1 ASC, w2 ASC).
     */
   def collocations(df: DataFrame, text: String, topK: Int = 50,
-                   minCount: Int = 5, wordGrain: String = "ws"): DataFrame = {
+                   minCount: Int = 5, wordGrain: WordGrain = Ws): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    requireWordGrain(wordGrain)
     val at = graft.functions.VectorFunctions.attach(df)
-    val (uniRows, biRows) =
-      if (FmmLexicons.isDict(wordGrain)) {
+    val (uniRows, biRows) = wordGrain match {
+      case d: DictGrain =>
         // dict grain: grams over the FMM token array. The bigram
         // transform is a HOF — CodegenFallback on that projection —
         // acceptable here: the FMM ladder dominates the row cost, and
         // the ws/cjk-auto mass path below stays kernel-fused.
-        val toks = s"graft_fmm_tokens($text, false, '$wordGrain')"
+        val toks = d.sparkTokens(text, keepEmpties = false)
         val bigrams = PortableHash.let1("__w", toks,
           "IF(size(__w) < 2, cast(array() AS ARRAY<STRING>), " +
             "transform(sequence(1, size(__w) - 1), i -> " +
             "concat(element_at(__w, i), ' ', element_at(__w, i + 1))))")
         (at.select(explode(expr(toks)).as("w"), lit(1L).as("tf")),
          at.select(explode(expr(bigrams)).as("g"), lit(1L).as("tf")))
-      } else {
-        (at.select(explode(expr(s"graft_gram_tf($text, 1, '$wordGrain')")).as("p"))
+      case g: ScalarGrain =>
+        (at.select(explode(expr(s"graft_gram_tf($text, 1, '${g.name}')")).as("p"))
            .select(col("p.w").as("w"), col("p.tf").as("tf")),
-         at.select(explode(expr(s"graft_gram_tf($text, 2, '$wordGrain')")).as("p"))
+         at.select(explode(expr(s"graft_gram_tf($text, 2, '${g.name}')")).as("p"))
            .select(col("p.w").as("g"), col("p.tf").as("tf")))
-      }
+    }
     // r20 note: uc feeds three consumers, but all three references are
     // IDENTICAL aggregate subtrees over one Exchange(w) — AQE runtime
     // stage reuse already dedups them (probed: leasing uc measured
@@ -1267,24 +1162,20 @@ object TextAnalysis {
 
   /** DuckDB twin of [[collocations]]. `id` keys the dict-grain FMM
     * recursion only (ignored on ws/cjk-auto); dict twins carry the
-    * same oracle-grade-only cost caveat as [[fmmToksRelDuck]].
+    * same oracle-grade-only cost caveat as [[DictGrain.duckTokenRows]].
     */
   def collocationsSql(table: String, text: String, topK: Int = 50,
-                      minCount: Int = 5, wordGrain: String = "ws",
+                      minCount: Int = 5, wordGrain: WordGrain = Ws,
                       id: String = "doc_id"): String = {
-    requireWordGrain(wordGrain)
-    val tfSrc =
-      if (FmmLexicons.isDict(wordGrain))
+    val tfSrc = wordGrain match {
+      case d: DictGrain =>
         // keepEmpties=TRUE relation filtered to the kernel's
         // keepEmpties=false sequence (empties dropped BEFORE adjacency
         // on both engines, so bigrams skip empty positions identically)
         s"(SELECT list_filter(__toks, x -> x <> '') AS ws FROM " +
-          s"(${fmmTokListRelDuck(table, text, id, FmmLexicons(wordGrain))}) __f)"
-      else {
-        val toks = if (wordGrain == "cjk-auto") routedTokensDuck(text, keepEmpties = false)
-                   else s"list_filter(string_split($text, ' '), x -> x <> '')"
-        s"(SELECT $toks AS ws FROM $table)"
-      }
+          s"(${d.duckTokenLists(table, text, id)}) __f)"
+      case g: ScalarGrain => s"(SELECT ${duckWordsX(text, g)} AS ws FROM $table)"
+    }
     s"""WITH tf AS (SELECT ws FROM $tfSrc __t),
        |uni AS (SELECT unnest(ws) AS w FROM tf),
        |uc AS (SELECT w, count(*)::BIGINT AS c FROM uni GROUP BY w),
@@ -1412,8 +1303,7 @@ object TextAnalysis {
     * is typically a SAMPLE (the op takes any frame).
     */
   def unigramScore(docs: DataFrame, ref: DataFrame, id: String, text: String,
-                   vocab: Int = 1000, wordGrain: String = "ws"): DataFrame = {
-    requireWordGrain(wordGrain)
+                   vocab: Int = 1000, wordGrain: WordGrain = Ws): DataFrame = {
     // cjk-auto: the vocabulary and the scored tokens both ride the
     // routed grain, so an unsegmented reference corpus yields a real
     // codepoint unigram table instead of whole-document "tokens".
@@ -1427,7 +1317,7 @@ object TextAnalysis {
     // corpus-sized token hash-aggregate disappears — value-identical
     // (Σ tf per term ≡ the token count) to the exploded construction
     // the DuckDB oracle replays
-    val pairs = s"graft_term_tf($text, '$wordGrain')"
+    val pairs = s"graft_term_tf($text, '${wordGrain.name}')"
     val refTerms = graft.functions.VectorFunctions.attach(ref)
       .select(explode(expr(pairs)).as("p"))
       .select(col("p.w").as("w"), col("p.tf").as("tf"))
@@ -1467,7 +1357,7 @@ object TextAnalysis {
     * partial-agg exchange of per-doc rows.
     */
   def bigramScore(docs: DataFrame, ref: DataFrame, id: String, text: String,
-                  vocab: Int = 1000, wordGrain: String = "ws"): DataFrame =
+                  vocab: Int = 1000, wordGrain: WordGrain = Ws): DataFrame =
     gramScore(docs, ref, id, text, n = 2, vocab, "n_bigrams",
       "avg_bigram_freq", wordGrain)
 
@@ -1483,13 +1373,12 @@ object TextAnalysis {
   private def gramScore(docs: DataFrame, ref: DataFrame, id: String,
                         text: String, n: Int, vocab: Int,
                         nCol: String, freqCol: String,
-                        wordGrain: String = "ws"): DataFrame = {
+                        wordGrain: WordGrain): DataFrame = {
     // dict grains (round 16): the kernel routes to the FMM WORD walk
     // (graft.functions.GopherOps.fmmGramTfPairs) — word n-grams over
     // characters measure character adjacency; over FMM words they
     // carry the word-order signal these LM-ladder rungs exist for
-    requireWordGrain(wordGrain)
-    val pairs = s"graft_gram_tf($text, $n, '$wordGrain')"
+    val pairs = s"graft_gram_tf($text, $n, '${wordGrain.name}')"
     val refGrams = graft.functions.VectorFunctions.attach(ref)
       .select(explode(expr(pairs)).as("p"))
       .select(col("p.w").as("g"), col("p.tf").as("tf"))
@@ -1522,72 +1411,82 @@ object TextAnalysis {
     * trigrams and are excluded identically on both engines.
     */
   def trigramScore(docs: DataFrame, ref: DataFrame, id: String, text: String,
-                   vocab: Int = 1000, wordGrain: String = "ws"): DataFrame =
+                   vocab: Int = 1000, wordGrain: WordGrain = Ws): DataFrame =
     gramScore(docs, ref, id, text, n = 3, vocab, "n_trigrams",
       "avg_trigram_freq", wordGrain)
 
   /** DuckDB twin of [[trigramScore]]. */
   def trigramScoreSql(table: String, docsPred: String, refPred: String,
                       id: String, text: String, vocab: Int = 1000,
-                      wordGrain: String = "ws"): String = {
-    if (FmmLexicons.isDict(Dedup.requireGrain(wordGrain)))
-      return gramScoreDictSql(table, docsPred, refPred, id, text, n = 3,
-        vocab, "n_trigrams", "avg_trigram_freq", FmmLexicons(wordGrain))
-    val w = if (wordGrain == "cjk-auto")
-              routedTokensDuck(text, keepEmpties = false)
-            else s"list_filter(string_split($text, ' '), x -> x <> '')"
-    val grams =
-      s"list_transform(generate_series(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2])"
-    s"""WITH rg AS (
-       |  SELECT unnest($grams) AS g FROM (SELECT $w AS ws FROM $table WHERE $refPred)),
-       |top AS (SELECT g, count(*) AS cnt FROM rg GROUP BY g
-       |        ORDER BY cnt DESC, g ASC LIMIT $vocab),
-       |total AS (SELECT count(*) AS total_ref FROM rg),
-       |dg AS (
-       |  SELECT $id, unnest($grams) AS g
-       |  FROM (SELECT $id, $w AS ws FROM $table WHERE $docsPred)),
-       |agg AS (
-       |  SELECT d.$id, count(*) AS n_trigrams,
-       |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
-       |         sum(coalesce(t.cnt, 0)) AS sum_cnt
-       |  FROM dg d LEFT JOIN top t ON d.g = t.g GROUP BY d.$id)
-       |SELECT $id, n_trigrams,
-       |  round(n_oov::DOUBLE / n_trigrams, 6) AS oov_ratio,
-       |  round(sum_cnt::DOUBLE / (n_trigrams::DOUBLE * total_ref), 6) AS avg_trigram_freq
-       |FROM agg, total""".stripMargin
+                      wordGrain: WordGrain = Ws): String =
+    gramScoreSql(table, docsPred, refPred, id, text, n = 3, vocab,
+      "n_trigrams", "avg_trigram_freq", wordGrain)
+
+  /** DuckDB twin of [[bigramScore]]. */
+  def bigramScoreSql(table: String, docsPred: String, refPred: String,
+                     id: String, text: String, vocab: Int = 1000,
+                     wordGrain: WordGrain = Ws): String =
+    gramScoreSql(table, docsPred, refPred, id, text, n = 2, vocab,
+      "n_bigrams", "avg_bigram_freq", wordGrain)
+
+  /** Shared n-gram-score twin ([[gramScore]]): empties dropped, grams
+    * over adjacent token positions, both preds filtering one scan. Dict
+    * grains (round 16) read the id-carrying ordered FMM token-LIST
+    * relation ([[DictGrain.duckTokenLists]]) once and both preds filter
+    * it on the id — same oracle-grade-only cost caveat as
+    * [[DictGrain.duckTokenRows]].
+    */
+  private def gramScoreSql(table: String, docsPred: String, refPred: String,
+                           id: String, text: String, n: Int, vocab: Int,
+                           nCol: String, freqCol: String,
+                           wordGrain: WordGrain): String = {
+    val tail =
+      s"""top AS (SELECT g, count(*) AS cnt FROM rg GROUP BY g
+         |        ORDER BY cnt DESC, g ASC LIMIT $vocab),
+         |total AS (SELECT count(*) AS total_ref FROM rg),""".stripMargin
+    val agg =
+      s"""agg AS (
+         |  SELECT d.$id, count(*) AS $nCol,
+         |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
+         |         sum(coalesce(t.cnt, 0)) AS sum_cnt
+         |  FROM dg d LEFT JOIN top t ON d.g = t.g GROUP BY d.$id)
+         |SELECT $id, $nCol,
+         |  round(n_oov::DOUBLE / $nCol, 6) AS oov_ratio,
+         |  round(sum_cnt::DOUBLE / ($nCol::DOUBLE * total_ref), 6) AS $freqCol
+         |FROM agg, total""".stripMargin
+    wordGrain match {
+      case d: DictGrain =>
+        val gramExpr = (0 until n).map(j => s"ws[i + $j]").mkString(" || ' ' || ")
+        val grams = s"list_transform(generate_series(1, len(ws) - ${n - 1}), i -> $gramExpr)"
+        s"""WITH d0 AS (
+           |  SELECT $id, list_filter(__toks, x -> x <> '') AS ws
+           |  FROM (${d.duckTokenLists(table, text, id)}) __f),
+           |rg AS (SELECT unnest($grams) AS g FROM d0 WHERE $refPred),
+           |$tail
+           |dg AS (SELECT $id, unnest($grams) AS g FROM d0 WHERE $docsPred),
+           |$agg""".stripMargin
+      case g: ScalarGrain =>
+        val w = duckWordsX(text, g)
+        val gramExpr = (0 until n).map(j => if (j == 0) "ws[i]" else s"ws[i + $j]")
+          .mkString(" || ' ' || ")
+        val grams = s"list_transform(generate_series(1, len(ws) - ${n - 1}), i -> $gramExpr)"
+        s"""WITH rg AS (
+           |  SELECT unnest($grams) AS g FROM (SELECT $w AS ws FROM $table WHERE $refPred)),
+           |$tail
+           |dg AS (
+           |  SELECT $id, unnest($grams) AS g
+           |  FROM (SELECT $id, $w AS ws FROM $table WHERE $docsPred)),
+           |$agg""".stripMargin
+    }
   }
 
-  /** Shared dict-grain n-gram-score twin (round 16): the id-carrying
-    * ordered FMM token-LIST relation ([[fmmTokListRelDuck]]) scanned
-    * once, empties filtered (the kernel walk never emits them — the
-    * collocations dict twin's convention), grams over adjacent list
-    * positions; both preds filter the per-doc relation on the id.
-    * Same oracle-grade-only cost caveat as [[fmmToksRelDuck]].
+  /** A scalar grain's tokens with empties dropped, as the collocation
+    * and LM-ladder twins spell them: their ws filter names its lambda
+    * variable `x` (the registered oracle SQL is pinned byte for byte).
     */
-  private def gramScoreDictSql(table: String, docsPred: String,
-                               refPred: String, id: String, text: String,
-                               n: Int, vocab: Int, nCol: String,
-                               freqCol: String, lex: FmmLexicon): String = {
-    val gramExpr = (0 until n).map(j => s"ws[i + $j]").mkString(" || ' ' || ")
-    val grams =
-      s"list_transform(generate_series(1, len(ws) - ${n - 1}), i -> $gramExpr)"
-    s"""WITH d0 AS (
-       |  SELECT $id, list_filter(__toks, x -> x <> '') AS ws
-       |  FROM (${fmmTokListRelDuck(table, text, id, lex)}) __f),
-       |rg AS (SELECT unnest($grams) AS g FROM d0 WHERE $refPred),
-       |top AS (SELECT g, count(*) AS cnt FROM rg GROUP BY g
-       |        ORDER BY cnt DESC, g ASC LIMIT $vocab),
-       |total AS (SELECT count(*) AS total_ref FROM rg),
-       |dg AS (SELECT $id, unnest($grams) AS g FROM d0 WHERE $docsPred),
-       |agg AS (
-       |  SELECT d.$id, count(*) AS $nCol,
-       |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
-       |         sum(coalesce(t.cnt, 0)) AS sum_cnt
-       |  FROM dg d LEFT JOIN top t ON d.g = t.g GROUP BY d.$id)
-       |SELECT $id, $nCol,
-       |  round(n_oov::DOUBLE / $nCol, 6) AS oov_ratio,
-       |  round(sum_cnt::DOUBLE / ($nCol::DOUBLE * total_ref), 6) AS $freqCol
-       |FROM agg, total""".stripMargin
+  private def duckWordsX(text: String, g: ScalarGrain): String = g match {
+    case Ws => s"list_filter(string_split($text, ' '), x -> x <> '')"
+    case CjkAuto => g.duckTokens(text, keepEmpties = false)
   }
 
   /** STUPID-BACKOFF scoring — the rung that makes the
@@ -1797,70 +1696,31 @@ object TextAnalysis {
        |FROM agg, totals""".stripMargin
   }
 
-  /** DuckDB twin of [[bigramScore]]. */
-  def bigramScoreSql(table: String, docsPred: String, refPred: String,
-                     id: String, text: String, vocab: Int = 1000,
-                     wordGrain: String = "ws"): String = {
-    if (FmmLexicons.isDict(Dedup.requireGrain(wordGrain)))
-      return gramScoreDictSql(table, docsPred, refPred, id, text, n = 2,
-        vocab, "n_bigrams", "avg_bigram_freq", FmmLexicons(wordGrain))
-    val w = if (wordGrain == "cjk-auto")
-              routedTokensDuck(text, keepEmpties = false)
-            else s"list_filter(string_split($text, ' '), x -> x <> '')"
-    val grams = s"list_transform(generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i + 1])"
-    s"""WITH rg AS (
-       |  SELECT unnest($grams) AS g FROM (SELECT $w AS ws FROM $table WHERE $refPred)),
-       |top AS (SELECT g, count(*) AS cnt FROM rg GROUP BY g
-       |        ORDER BY cnt DESC, g ASC LIMIT $vocab),
-       |total AS (SELECT count(*) AS total_ref FROM rg),
-       |dg AS (
-       |  SELECT $id, unnest($grams) AS g
-       |  FROM (SELECT $id, $w AS ws FROM $table WHERE $docsPred)),
-       |agg AS (
-       |  SELECT d.$id, count(*) AS n_bigrams,
-       |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
-       |         sum(coalesce(t.cnt, 0)) AS sum_cnt
-       |  FROM dg d LEFT JOIN top t ON d.g = t.g GROUP BY d.$id)
-       |SELECT $id, n_bigrams,
-       |  round(n_oov::DOUBLE / n_bigrams, 6) AS oov_ratio,
-       |  round(sum_cnt::DOUBLE / (n_bigrams::DOUBLE * total_ref), 6) AS avg_bigram_freq
-       |FROM agg, total""".stripMargin
-  }
-
   /** DuckDB twin of [[unigramScore]] (`docsPred`/`refPred` split one
     * table into the scored and reference sides, the decontamination
     * convention).
     */
   def unigramScoreSql(table: String, docsPred: String, refPred: String,
                       id: String, text: String, vocab: Int = 1000,
-                      wordGrain: String = "ws"): String = {
-    if (FmmLexicons.isDict(Dedup.requireGrain(wordGrain)))
-      // id-carrying FMM recursion scanned once; both preds filter the
-      // (id, token) relation — same rows the scalar branches feed
-      return s"""WITH RECURSIVE ${fmmToksRelDuck(table, text, Some(id), FmmLexicons(wordGrain))},
-         |ti AS (SELECT rid AS $id, token AS w FROM toks),
-         |rt AS (SELECT w FROM ti WHERE $refPred),
-         |top AS (SELECT w, count(*) AS cnt FROM rt GROUP BY w
-         |        ORDER BY cnt DESC, w ASC LIMIT $vocab),
-         |total AS (SELECT count(*) AS total_ref FROM rt),
-         |dt AS (SELECT $id, w FROM ti WHERE $docsPred),
-         |agg AS (
-         |  SELECT d.$id, count(*) AS n_tokens,
-         |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
-         |         sum(coalesce(t.cnt, 0)) AS sum_cnt
-         |  FROM dt d LEFT JOIN top t ON d.w = t.w GROUP BY d.$id)
-         |SELECT $id, n_tokens,
-         |  round(n_oov::DOUBLE / n_tokens, 6) AS oov_ratio,
-         |  round(sum_cnt::DOUBLE / (n_tokens::DOUBLE * total_ref), 6) AS avg_tok_freq
-         |FROM agg, total""".stripMargin
-    val tok = if (wordGrain == "cjk-auto")
-                routedTokensDuck(text, keepEmpties = false)
-              else s"list_filter(string_split($text, ' '), w -> w <> '')"
-    s"""WITH rt AS (SELECT unnest($tok) AS w FROM $table WHERE $refPred),
+                      wordGrain: WordGrain = Ws): String = {
+    val (rt, dt) = wordGrain match {
+      case d: DictGrain =>
+        // id-carrying FMM recursion scanned once; both preds filter the
+        // (id, token) relation — same rows the scalar branches feed
+        (s"WITH RECURSIVE ${d.duckTokenRows(table, text, Some(id))},\n" +
+           s"ti AS (SELECT rid AS $id, token AS w FROM toks),\n" +
+           s"rt AS (SELECT w FROM ti WHERE $refPred)",
+         s"dt AS (SELECT $id, w FROM ti WHERE $docsPred)")
+      case g: ScalarGrain =>
+        val tok = g.duckTokens(text, keepEmpties = false)
+        (s"WITH rt AS (SELECT unnest($tok) AS w FROM $table WHERE $refPred)",
+         s"dt AS (SELECT $id, unnest($tok) AS w FROM $table WHERE $docsPred)")
+    }
+    s"""$rt,
        |top AS (SELECT w, count(*) AS cnt FROM rt GROUP BY w
        |        ORDER BY cnt DESC, w ASC LIMIT $vocab),
        |total AS (SELECT count(*) AS total_ref FROM rt),
-       |dt AS (SELECT $id, unnest($tok) AS w FROM $table WHERE $docsPred),
+       |$dt,
        |agg AS (
        |  SELECT d.$id, count(*) AS n_tokens,
        |         sum(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS n_oov,
@@ -1913,13 +1773,12 @@ object TextAnalysis {
     */
   def bm25TopK(docs: DataFrame, id: String, text: String,
                terms: Seq[String], k: Int = 20,
-               wordGrain: String = "ws"): DataFrame = {
+               wordGrain: WordGrain = Ws): DataFrame = {
     require(terms.nonEmpty && terms.forall(t => t.nonEmpty && !t.contains("'")),
       "terms must be non-empty and quote-free")
-    // 'cjk-dict' (r14): retrieval on the FMM grain — multi-codepoint
+    // cjk-dict (r14): retrieval on the FMM grain — multi-codepoint
     // query terms (人工智能) match as ONE token; same doc-stats kernel,
     // dict mode
-    requireWordGrain(wordGrain)
     val termArr = terms.map(t => s"'$t'").mkString("array(", ", ", ")")
     // BOTH grains ride the one-scan doc-stats kernel; 'cjk-auto' routes
     // script-dominated rows to the codepoint grain inside the same scan
@@ -1929,7 +1788,7 @@ object TextAnalysis {
     val perDoc = Caches.lease(
       graft.functions.VectorFunctions.attach(docs)
         .select(col(id),
-          expr(s"graft_term_counts($text, $termArr, '$wordGrain')").as("__tc"))
+          expr(s"graft_term_counts($text, $termArr, '${wordGrain.name}')").as("__tc"))
         .select(col(id) +: (expr("element_at(__tc, 1)").as("dl") +:
           terms.indices.map(i =>
             expr(s"element_at(__tc, ${i + 2})").as(s"tf$i"))): _*))
@@ -1960,8 +1819,7 @@ object TextAnalysis {
     */
   def bm25TopKSql(table: String, id: String, text: String,
                   terms: Seq[String], k: Int = 20,
-                  wordGrain: String = "ws"): String = {
-    requireWordGrain(wordGrain)
+                  wordGrain: WordGrain = Ws): String = {
     val dfCols = terms.indices.map(i =>
       s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(", ")
     val termScore = terms.indices.map { i =>
@@ -1969,8 +1827,8 @@ object TextAnalysis {
       s"CASE WHEN tf$i > 0 THEN ($idf * 22 * tf$i * a) // (10 * tf$i * a + 3 * a + 9000 * dl) ELSE 0 END"
     }.mkString(" + ")
     val nMatched = terms.indices.map(i => s"CASE WHEN tf$i > 0 THEN 1 ELSE 0 END").mkString(" + ")
-    val perDocRel =
-      if (FmmLexicons.isDict(wordGrain)) {
+    val perDocRel = wordGrain match {
+      case d: DictGrain =>
         // id-carrying FMM recursion; the LEFT JOIN back to the table
         // restores token-less docs (empty/blank) as dl = 0 rows, the
         // row-per-doc shape the scalar ws/cjk-auto forms emit
@@ -1979,24 +1837,22 @@ object TextAnalysis {
         val tfAgg = terms.indices.map(i =>
           s"sum(CASE WHEN token = '${terms(i)}' THEN 1 ELSE 0 END) AS tf$i")
           .mkString(", ")
-        s"""RECURSIVE ${fmmToksRelDuck(table, text, Some(id), FmmLexicons(wordGrain))},
+        s"""RECURSIVE ${d.duckTokenRows(table, text, Some(id))},
            |agg AS (
            |  SELECT rid, count(*)::BIGINT AS dl, $tfAgg
            |  FROM toks GROUP BY rid),
            |per_doc AS (
            |  SELECT b.$id, coalesce(a.dl, 0)::BIGINT AS dl, $tfSums
            |  FROM $table b LEFT JOIN agg a ON b.$id = a.rid)""".stripMargin
-      } else {
-        val wsExpr =
-          if (wordGrain == "cjk-auto") routedTokensDuck(text, keepEmpties = false)
-          else s"list_filter(string_split($text, ' '), w -> w <> '')"
+      case g: ScalarGrain =>
+        val wsExpr = g.duckTokens(text, keepEmpties = false)
         val tfCols = terms.indices.map(i =>
           s"len(list_filter(ws, w -> w = '${terms(i)}')) AS tf$i").mkString(", ")
         s"""per_doc AS (
            |  SELECT $id, len(ws)::BIGINT AS dl, $tfCols
            |  FROM (SELECT $id, $wsExpr AS ws
            |        FROM $table))""".stripMargin
-      }
+    }
     s"""WITH $perDocRel,
        |meta AS (
        |  SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sum_dl, $dfCols
@@ -2071,12 +1927,10 @@ object TextAnalysis {
     * broadcast.
     */
   def tfidfKeywords(docs: DataFrame, id: String, text: String,
-                    k: Int = 3, wordGrain: String = "ws"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // 'cjk-dict' (r14): keywords on the FMM word grain — the form a zh
+                    k: Int = 3, wordGrain: WordGrain = Ws): DataFrame = {
+    // cjk-dict (r14): keywords on the FMM word grain — the form a zh
     // keyword list actually wants (我们/人工智能 whole, not codepoints);
     // same kernel, dict mode
-    requireWordGrain(wordGrain)
     // cjk-auto: script-dominated rows keyword per CODEPOINT term (the
     // ws grain makes an unsegmented zh doc ONE term with tf=1 — the
     // tf signal vanishes exactly where keywords are wanted).
@@ -2091,7 +1945,7 @@ object TextAnalysis {
     // value-identical to the exploded construction the oracle replays
     val terms = Caches.lease(
       graft.functions.VectorFunctions.attach(docs)
-        .select(col(id), explode(expr(s"graft_term_tf($text, '$wordGrain')")).as("p"))
+        .select(col(id), explode(expr(s"graft_term_tf($text, '${wordGrain.name}')")).as("p"))
         .select(col(id), col("p.w").as("w"), col("p.tf").as("tf"))
         .groupBy(col(id), col("w")).agg(sum(col("tf")).as("tf")))
     val dfreq = terms.groupBy(col("w")).agg(count(lit(1)).as("df"))
@@ -2119,11 +1973,10 @@ object TextAnalysis {
     */
   private[graft] def tfidfKeywordsWindow(docs: DataFrame, id: String,
                                          text: String, k: Int,
-                                         wordGrain: String): DataFrame = {
+                                         wordGrain: WordGrain): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    requireWordGrain(wordGrain)
     val terms = graft.functions.VectorFunctions.attach(docs)
-      .select(col(id), explode(expr(s"graft_term_tf($text, '$wordGrain')")).as("p"))
+      .select(col(id), explode(expr(s"graft_term_tf($text, '${wordGrain.name}')")).as("p"))
       .select(col(id), col("p.w").as("w"), col("p.tf").as("tf"))
       .groupBy(col(id), col("w")).agg(sum(col("tf")).as("tf"))
     val dfreq = terms.groupBy(col("w")).agg(count(lit(1)).as("df"))
@@ -2143,24 +1996,22 @@ object TextAnalysis {
     * recursion feeds the terms relation).
     */
   def tfidfKeywordsSql(table: String, id: String, text: String,
-                       k: Int = 3, wordGrain: String = "ws"): String = {
-    requireWordGrain(wordGrain)
-    val termsRel =
-      if (FmmLexicons.isDict(wordGrain))
-        s"""RECURSIVE ${fmmToksRelDuck(table, text, Some(id), FmmLexicons(wordGrain))},
+                       k: Int = 3, wordGrain: WordGrain = Ws): String = {
+    val termsRel = wordGrain match {
+      case d: DictGrain =>
+        s"""RECURSIVE ${d.duckTokenRows(table, text, Some(id))},
            |terms AS (
            |  SELECT rid AS $id, token AS w, count(*)::BIGINT AS tf
            |  FROM toks GROUP BY 1, 2)""".stripMargin
-      else {
-        val tok = if (wordGrain == "cjk-auto") routedTokensDuck(text, keepEmpties = false)
-                  else s"list_filter(string_split($text, ' '), w -> w <> '')"
+      case g: ScalarGrain =>
+        val tok = g.duckTokens(text, keepEmpties = false)
         s"""terms AS (
            |  SELECT $id, w, count(*)::BIGINT AS tf
            |  FROM (SELECT $id,
            |          unnest($tok) AS w
            |        FROM $table)
            |  GROUP BY 1, 2)""".stripMargin
-      }
+    }
     s"""WITH $termsRel,
        |dfreq AS (SELECT w, count(*)::BIGINT AS df FROM terms GROUP BY 1),
        |meta AS (SELECT count(*)::BIGINT AS n_docs FROM $table)
@@ -2590,31 +2441,35 @@ object TextAnalysis {
     * that before the raw-column empty filter below). Stateless — runs
     * unchanged on a streaming Dataset.
     */
-  /** Token expression of a chunk grain: `"token"` (default) is the
-    * BPE-ish compiled alternation both engines share; `"cjk-auto"` is
-    * the script-dominance-routed WORD grain (empties dropped) — the
-    * chunk denomination an embedding pipeline wants when its encoder
-    * counts words, where a "512-token" window on an unsegmented corpus
-    * must mean 512 routed tokens, not 512 whitespace mega-tokens.
-    * Either grain yields ≥1 token iff any non-space char exists, so
-    * the raw-column empty filter below serves both.
+  /** Token expression of a chunk grain: on [[WordGrain.Ws]] (default)
+    * the BPE-ish compiled alternation both engines share, not the
+    * whitespace split; on [[WordGrain.CjkAuto]] the
+    * script-dominance-routed WORD grain (empties dropped) — the chunk
+    * denomination an embedding pipeline wants when its encoder counts
+    * words, where a "512-token" window on an unsegmented corpus must
+    * mean 512 routed tokens, not 512 whitespace mega-tokens. Either
+    * grain yields ≥1 token iff any non-space char exists, so the
+    * raw-column empty filter below serves both. [[Datacard]] publishes
+    * its token totals in the same grain.
     */
-  private def chunkTokExpr(text: String, grain: String): String = {
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
-    if (grain == "cjk-auto") routedTokensSpark(text, keepEmpties = false)
-    else s"regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)"
+  private def chunkTokExpr(text: String, grain: ScalarGrain): String = grain match {
+    case Ws => s"regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)"
+    case CjkAuto => grain.sparkTokens(text, keepEmpties = false)
   }
-  private def chunkTokDuck(text: String, grain: String): String = {
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
-    if (grain == "cjk-auto") routedTokensDuck(text, keepEmpties = false)
-    else s"regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')"
+  private[ops] def chunkTokDuck(text: String, grain: ScalarGrain): String = grain match {
+    case Ws => s"regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')"
+    case CjkAuto => grain.duckTokens(text, keepEmpties = false)
+  }
+
+  /** `size(chunkTokExpr(text, grain))` as a compiled count-only walk. */
+  private[ops] def chunkTokCount(text: String, grain: ScalarGrain): String = grain match {
+    case Ws => s"graft_token_count($text)"
+    case CjkAuto => s"graft_word_count($text, '${grain.name}')"
   }
 
   def chunkDocuments(df: DataFrame, id: String, text: String,
                      size: Int = 32, stride: Int = 24,
-                     grain: String = "token"): DataFrame = {
+                     grain: ScalarGrain = Ws): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size,
       s"need 0 < stride <= size, got size=$size stride=$stride")
     // empty-doc filter on the RAW column, not on size(toks): a computed-
@@ -2649,7 +2504,7 @@ object TextAnalysis {
     */
   def hashEmbedChunks(df: DataFrame, id: String, text: String,
                       size: Int = 32, stride: Int = 24,
-                      dim: Int = 16, grain: String = "token"): DataFrame = {
+                      dim: Int = 16, grain: ScalarGrain = Ws): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size && dim > 0,
       s"need 0 < stride <= size and dim > 0, got size=$size stride=$stride dim=$dim")
     graft.functions.VectorFunctions.ensureRegistered(df.sparkSession)
@@ -2672,7 +2527,7 @@ object TextAnalysis {
     */
   def hashEmbedChunksSql(table: String, id: String, text: String,
                          size: Int = 32, stride: Int = 24,
-                         dim: Int = 16, grain: String = "token"): String = {
+                         dim: Int = 16, grain: ScalarGrain = Ws): String = {
     val h = PortableHash.duckStringHash("t")
     s"""(WITH etoks AS (
        |  SELECT $id AS doc_id,
@@ -2775,7 +2630,7 @@ object TextAnalysis {
   /** DuckDB twin of [[chunkDocuments]]. */
   def chunkDocumentsSql(table: String, id: String, text: String,
                         size: Int = 32, stride: Int = 24,
-                        grain: String = "token"): String =
+                        grain: ScalarGrain = Ws): String =
     s"""WITH toks AS (
        |  SELECT $id AS doc_id,
        |    ${chunkTokDuck(text, grain)} AS toks
@@ -2802,8 +2657,8 @@ object TextAnalysis {
     * caps), order is preserved, and the rule is pure integer
     * arithmetic so both engines agree exactly.
     *
-    * Grain: 'token' (BPE-ish compiled count) or 'cjk-auto' (routed
-    * word count) — with the r14 full-width sentence boundaries this is
+    * Grain: [[WordGrain.Ws]] (BPE-ish compiled count) or
+    * [[WordGrain.CjkAuto]] (routed word count) — with the r14 full-width sentence boundaries this is
     * the first chunker that does the right thing end-to-end on zh/ja:
     * real sentence units, real token budgets.
     *
@@ -2815,10 +2670,8 @@ object TextAnalysis {
     */
   def chunkBySentences(df: DataFrame, id: String, text: String,
                        size: Int = 64,
-                       grain: String = "token"): DataFrame = {
+                       grain: ScalarGrain = Ws): DataFrame = {
     require(size > 0, s"need size > 0, got $size")
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
     // COMPILED row-local form (graft_sentence_chunks): the packing is
     // per-document by definition, so the window/groupBy construction —
     // which shuffles the FULL TEXT corpus through its doc-keyed
@@ -2828,7 +2681,7 @@ object TextAnalysis {
     // baseline and the shape the DuckDB oracle replays.
     graft.functions.VectorFunctions.attach(df)
       .select(col(id),
-        explode(expr(s"graft_sentence_chunks($text, $size, '$grain')")).as("c"))
+        explode(expr(s"graft_sentence_chunks($text, $size, '${grain.name}')")).as("c"))
       .select(col(id), col("c.chunk_idx").as("chunk_idx"),
         col("c.n_sentences").as("n_sentences"),
         col("c.n_tokens").as("n_tokens"),
@@ -2845,13 +2698,10 @@ object TextAnalysis {
     */
   private[graft] def chunkBySentencesRelational(
       df: DataFrame, id: String, text: String,
-      size: Int = 64, grain: String = "token"): DataFrame = {
+      size: Int = 64, grain: ScalarGrain = Ws): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(size > 0, s"need size > 0, got $size")
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
-    val cnt = if (grain == "cjk-auto") "graft_word_count(sentence, 'cjk-auto')"
-              else "graft_token_count(sentence)"
+    val cnt = chunkTokCount("sentence", grain)
     val w = Window.partitionBy(col(id)).orderBy(col("sent_idx"))
     sentences(graft.functions.VectorFunctions.attach(df), id, text)
       .withColumn("__n", expr(cnt).cast("long"))
@@ -2868,13 +2718,8 @@ object TextAnalysis {
   /** DuckDB twin of [[chunkBySentences]]. */
   def chunkBySentencesSql(table: String, id: String, text: String,
                           size: Int = 64,
-                          grain: String = "token"): String = {
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
-    val cnt =
-      if (grain == "cjk-auto")
-        s"len(${routedTokensDuck("sentence", keepEmpties = false)})"
-      else "len(regexp_extract_all(sentence, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]'))"
+                          grain: ScalarGrain = Ws): String = {
+    val cnt = s"len(${chunkTokDuck("sentence", grain)})"
     s"""WITH s AS (${sentencesSql(table, id, text)}),
        |t AS (SELECT $id, sent_idx, sentence, ($cnt)::BIGINT AS n FROM s),
        |c AS (SELECT *,
@@ -2910,18 +2755,13 @@ object TextAnalysis {
     */
   def chunkManifest(df: DataFrame, id: String, text: String,
                     size: Int = 32, stride: Int = 24,
-                    grain: String = "token"): DataFrame = {
+                    grain: ScalarGrain = Ws): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size,
       s"need 0 < stride <= size, got size=$size stride=$stride")
-    // same fail-fast grain funnel as chunkTokExpr: a typo'd grain must
-    // throw here, not silently describe the 'token' chunker
-    require(grain == "token" || grain == "cjk-auto",
-      s"chunk grain must be 'token' or 'cjk-auto', got $grain")
     // the closed-form arithmetic must ride the SAME grain the chunker
-    // cuts: the routed grain's count-only kernel for 'cjk-auto', the
-    // BPE-ish token kernel otherwise
-    val cnt = if (grain == "cjk-auto") s"graft_word_count($text, 'cjk-auto')"
-              else s"graft_token_count($text)"
+    // cuts: the routed grain's count-only kernel on cjk-auto, the
+    // BPE-ish token kernel on ws
+    val cnt = chunkTokCount(text, grain)
     graft.functions.VectorFunctions.attach(df)
       .where(col(text).isNotNull && trim(col(text)) =!= "")
       .select(col(id).as("__id"),
@@ -2949,7 +2789,7 @@ object TextAnalysis {
     */
   def chunkManifestSql(table: String, id: String, text: String,
                        size: Int = 32, stride: Int = 24,
-                       grain: String = "token"): String =
+                       grain: ScalarGrain = Ws): String =
     s"""SELECT count(*)::BIGINT AS n_chunks,
        |  count(DISTINCT doc_id)::BIGINT AS n_docs,
        |  ((1000 * sum(n_tokens)) // (count(*) * $size))::BIGINT AS fill_milli,

@@ -151,7 +151,7 @@ object KernelizeTextOps extends Rule[LogicalPlan] {
     // on the optimizer's next fixed-point pass over plans the case
     // above (or an explicit graft_routed_tokens call) produced
     case Size(rt: graft.functions.RoutedTokens, false) if !rt.keepEmpties =>
-      Cast(graft.functions.WordCount(rt.child, "cjk-auto"), IntegerType)
+      Cast(graft.functions.WordCount(rt.child, graft.ops.WordGrain.CjkAuto.name), IntegerType)
   }
 
   /** `Some(vt)` when the regex literal is an accepted whitespace-run

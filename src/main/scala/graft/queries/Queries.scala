@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.entity.EntityStore
-import graft.ops.{Dedup, Multimodal, Pq, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Multimodal, Pq, Similarity, TextAnalysis, WordGrain}
 import graft.rpc.Rpc
 import graft.service.{RetryBackoff, RetryPolicy}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -428,11 +428,11 @@ object Queries {
   /** A word grain the text operators route on, with the fixture that
     * gives it rows to route; `suffix` names its member of a grain family.
     */
-  private final case class Grain(suffix: String, wordGrain: String, fixture: DocFixture)
-  private val ws = Grain("", "ws", DocFixture.raw)
-  private val cjk = Grain("_cjk", "cjk-auto", zhFixture)
-  private val cjkDict = Grain("_cjkdict", "cjk-dict", zhDictFixture)
-  private val thaiDict = Grain("_thaidict", "thai-dict", thDictFixture)
+  private final case class Grain[+G <: WordGrain](suffix: String, wordGrain: G, fixture: DocFixture)
+  private val ws = Grain("", WordGrain.Ws, DocFixture.raw)
+  private val cjk = Grain("_cjk", WordGrain.CjkAuto, zhFixture)
+  private val cjkDict = Grain("_cjkdict", WordGrain.CjkDict, zhDictFixture)
+  private val thaiDict = Grain("_thaidict", WordGrain.ThaiDict, thDictFixture)
 
   private type QueryBody = ((SparkSession, String) => DataFrame, String)
 
@@ -441,21 +441,23 @@ object Queries {
     * and that grain's own argument, where the members really differ, and
     * returns the Spark side and its oracle.
     */
-  private def grainFamily[A](base: String, grains: (Grain, A)*)(row: (Grain, A) => QueryBody): Seq[QueryDef] =
+  private def grainFamily[G <: WordGrain, A](base: String, grains: (Grain[G], A)*)(
+      row: (Grain[G], A) => QueryBody): Seq[QueryDef] =
     grains.map { case (g, a) =>
       val (spark, oracle) = row(g, a)
       QueryDef(base + g.suffix, spark, Some(oracle))
     }
 
-  private def grainFamily(base: String, grains: Grain*)(row: Grain => QueryBody): Seq[QueryDef] =
+  private def grainFamily[G <: WordGrain](base: String, grains: Grain[G]*)(
+      row: Grain[G] => QueryBody): Seq[QueryDef] =
     grainFamily(base, grains.map(_ -> (())): _*)((g, _) => row(g))
 
   /** One rung of the LM-filter ladder on grain `g`: reference side =
     * the first 100 docs, scored side = the rest, top-500 vocabulary.
     */
-  private def lmRung(g: Grain,
-                     score: (DataFrame, DataFrame, String, String, Int, String) => DataFrame,
-                     scoreSql: (String, String, String, String, String, Int, String) => String): QueryBody = (
+  private def lmRung(g: Grain[WordGrain],
+                     score: (DataFrame, DataFrame, String, String, Int, WordGrain) => DataFrame,
+                     scoreSql: (String, String, String, String, String, Int, WordGrain) => String): QueryBody = (
     (s, dir) => {
       val docs = g.fixture(t(s, dir, "documents"))
       score(docs.where(col("doc_id") >= 100), docs.where(col("doc_id") < 100),
@@ -1737,13 +1739,13 @@ object Queries {
     // INSIDE a dictionary word shingles at word windows, not codepoint
     // windows — the grain the shingle dedup family was missing. Oracle:
     // the scalar twin cannot run a segmentation cursor, so the derived
-    // table precomputes per-doc FMM token LISTS (fmmTokListRelDuck via
-    // Dedup.grainSource) and shingling consumes the lists directly
+    // table precomputes per-doc FMM token LISTS (DictGrain.duckTokenLists via
+    // WordGrain.duckSource) and shingling consumes the lists directly
     cjkDict,
     // the keeper on the thai-dict grain (round 16): previously spec-
     // pinned only (ThaiDictSpec) — this registers the driver-checked
     // oracle row, closing the r15 asymmetry where one dict grain had
-    // a keeper oracle and the other didn't. Same grainSource-routed
+    // a keeper oracle and the other didn't. Same duckSource-routed
     // recursive token-list twin as the cjkdict keeper
     thaiDict) { g => (
       (s, dir) => Dedup.minhashDedupKeepers(g.fixture(t(s, dir, "documents")),
@@ -1976,7 +1978,7 @@ object Queries {
     // codepoint streams (multi-char words collapse to one token)
     cjkDict -> ((3, 4, 99999)),
     // the shingle surface on the SECOND lexicon (round 15): containment
-    // dedup with winnow grams spanning FMM Thai words — grainSource
+    // dedup with winnow grams spanning FMM Thai words — duckSource
     // rewrites the twin through the maxLen-9 token-list relation, so
     // the same registry entry that gave Thai retrieval gives it
     // near-dup semantics at word grain (no zh-only code path anywhere)
@@ -2157,18 +2159,19 @@ object Queries {
     // document chunking for embedding pipelines: overlapping token
     // windows (32 tokens, stride 24), chunk content witnessed by one
     // portable hash of the joined tokens per chunk — pure projection +
-    // explode, zero shuffle. The chunkers spell the ws grain "token"
-    ws -> "token",
+    // explode, zero shuffle. On the ws grain the chunkers cut BPE-ish
+    // tokens, not whitespace words
+    ws,
     // chunking on the routed cjk-auto word grain over the zh fixture:
     // an embedding pipeline whose encoder counts words needs a
     // "32-token" window to mean 32 ROUTED tokens on unsegmented rows
     // (per codepoint), not one whitespace mega-token per doc; the
     // chunk_hash witnesses that both engines cut identical routed
     // windows
-    cjk -> "cjk-auto") { (g, grain) => (
+    cjk) { g => (
       (s, dir) => TextAnalysis.chunkDocuments(g.fixture(t(s, dir, "documents")),
-        "doc_id", "text", grain = grain),
-      TextAnalysis.chunkDocumentsSql(g.fixture.twin(), "doc_id", "text", grain = grain))
+        "doc_id", "text", grain = g.wordGrain),
+      TextAnalysis.chunkDocumentsSql(g.fixture.twin(), "doc_id", "text", grain = g.wordGrain))
   } ++ Seq(
 
     // subword (BPE) tokenization over the committed merge table — the
@@ -2575,7 +2578,7 @@ object Queries {
               "WHEN 1 THEN substring(text, 1, 12) " +
               "WHEN 2 THEN concat(substring(text, 1, 20), ' extra') " +
               "ELSE '' END")),
-        "doc_id", "pred", "gold", grain = "cjk-auto"),
+        "doc_id", "pred", "gold", grain = WordGrain.CjkAuto),
       Some(graft.ops.AnswerScore.emF1Sql(
         """(SELECT doc_id,
           |  CASE (doc_id % 4)
@@ -2585,7 +2588,7 @@ object Queries {
           |    ELSE '' END AS pred,
           |  substr(text, 1, 20) AS gold
           |FROM documents)""".stripMargin,
-        "doc_id", "pred", "gold", grain = "cjk-auto"))),
+        "doc_id", "pred", "gold", grain = WordGrain.CjkAuto))),
 
     // scored-frame -> pass@k composition (round 20): the EM flag from
     // eval_score_em_f1 IS the passed column the estimator consumes —
@@ -2928,18 +2931,18 @@ object Queries {
     // tails get dropped or re-packed. Non-overlapping config (stride =
     // size) so the short counter actually bites: with stride < size a
     // tail always exceeds size - stride
-    ws -> "token",
+    ws,
     // the manifest on the routed grain: the Spark side is the
     // CLOSED-FORM arithmetic over the count-only routed kernel
     // (graft_word_count 'cjk-auto' — no explode, no array), the oracle
     // aggregates the EXPLODED routed chunk grain — the hash compare
     // pins formula ≡ grain on the routed tokenization exactly as the
     // ws manifest pins it on the token grain
-    cjk -> "cjk-auto") { (g, grain) => (
+    cjk) { g => (
       (s, dir) => TextAnalysis.chunkManifest(g.fixture(t(s, dir, "documents")),
-        "doc_id", "text", size = 32, stride = 32, grain = grain),
+        "doc_id", "text", size = 32, stride = 32, grain = g.wordGrain),
       TextAnalysis.chunkManifestSql(g.fixture.twin(),
-        "doc_id", "text", size = 32, stride = 32, grain = grain))
+        "doc_id", "text", size = 32, stride = 32, grain = g.wordGrain))
   } ++ Seq(
 
     // mojibake repair: the committed-derivation artifact table applied
@@ -4002,7 +4005,7 @@ object Queries {
     // should say 我们/人工智能, not single codepoints — the second
     // consumer proving cjk-dict is a grain, not a one-query trick. The
     // oracle's terms relation comes from the id-carrying FMM recursion
-    // (fmmToksRelDuck Some(id)); the length-capped translate fixture
+    // (DictGrain.duckTokenRows Some(id)); the length-capped translate fixture
     // keeps the cursor recursion an oracle-side triviality
     cjkDict,
     // thai-dict on the per-doc TF-IDF consumer (round 15): the grain
@@ -4166,16 +4169,17 @@ object Queries {
     // RAG chunk shape. One doc-keyed window + keyed agg; text never
     // crosses a non-doc-keyed exchange. Both members plant their own
     // sentence tails in place of the grain fixtures
-    ws.copy(fixture = sentenceTailFixture) -> ((24, "token")),
+    ws.copy(fixture = sentenceTailFixture) -> 24,
     // the zh leg: r14's full-width sentence boundaries + the routed
     // token budget together — the first chunker that is end-to-end
     // right on unsegmented text (real sentence units, real budgets);
     // under the ASCII-only boundary every zh doc was ONE sentence and
     // sentence-chunking degenerated to one chunk per doc
-    cjk.copy(fixture = zhSentenceFixture) -> ((16, "cjk-auto"))) { case (g, (size, grain)) => (
+    cjk.copy(fixture = zhSentenceFixture) -> 16) { (g, size) => (
       (s, dir) => TextAnalysis.chunkBySentences(g.fixture(t(s, dir, "documents")),
-        "doc_id", "text", size = size, grain = grain),
-      TextAnalysis.chunkBySentencesSql(g.fixture.twin(), "doc_id", "text", size = size, grain = grain))
+        "doc_id", "text", size = size, grain = g.wordGrain),
+      TextAnalysis.chunkBySentencesSql(g.fixture.twin(), "doc_id", "text", size = size,
+        grain = g.wordGrain))
   } ++ Seq(
 
     // Canonical normalization (NFC + ascii-lower + whitespace collapse):
@@ -4279,9 +4283,9 @@ object Queries {
     // space-rejoined surviving token sequence (normalized form)
     QueryDef("dedup_spans_cjkdict",
       (s, dir) => Dedup.dedupSpans(zhDictFixture(t(s, dir, "documents")),
-        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = "cjk-dict"),
+        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = WordGrain.CjkDict),
       Some(Dedup.dedupSpansSql(zhDictFixture.twin(),
-        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = "cjk-dict"))),
+        "doc_id", "text", spanLen = 5, maxFreq = 10, wordGrain = WordGrain.CjkDict))),
 
     // incremental snapshot dedup: the new crawl keeps only documents whose
     // content digest is absent from the accumulated prior corpus. The
@@ -4409,7 +4413,7 @@ object Queries {
     // incidental char-trigram quoters while verbatim k-word eval
     // leakage (the planted lexicon phrase shared by bench and corpus
     // %3 rows) still kills. Oracle: predicates reference doc_id only,
-    // so the fmm-token-list derived table (Dedup.grainSource) carries
+    // so the fmm-token-list derived table (WordGrain.duckSource) carries
     // them unchanged
     cjkDict,
     // decontamination on the thai-dict grain (round 16 — the last
@@ -4417,7 +4421,7 @@ object Queries {
     // shingles are FMM Thai WORDS, so the planted lexicon phrase
     // shared by bench and corpus rows kills as verbatim k-word
     // leakage while incidental codepoint-trigram recurrence survives.
-    // Same grainSource-routed oracle as the cjkdict leg
+    // Same duckSource-routed oracle as the cjkdict leg
     thaiDict) { g => (
       (s, dir) => {
         val docs = g.fixture(t(s, dir, "documents"))
@@ -4750,9 +4754,9 @@ object Queries {
     // mirrors its english source's
     QueryDef("text_repetition_cjk",
       (s, dir) => TextAnalysis.repetitionSignalsLocal(zhFixture(t(s, dir, "documents")),
-        "doc_id", "text", wordGrain = "cjk-auto"),
+        "doc_id", "text", wordGrain = WordGrain.CjkAuto),
       Some(TextAnalysis.repetitionSignalsSql(zhFixture.twin(),
-        "doc_id", "text", wordGrain = "cjk-auto"))),
+        "doc_id", "text", wordGrain = WordGrain.CjkAuto))),
 
     // the FULL Gopher repetition suite at document grain: duplicate
     // line/paragraph fractions + top-3/4-gram fractions — the longer-

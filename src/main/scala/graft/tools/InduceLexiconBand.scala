@@ -39,8 +39,8 @@ object InduceLexiconBand {
     require(args.length >= 3,
       "usage: InduceLexiconBand <docsDir> <grain> <targetGrain> [topK] [minCount] [render]")
     val dir = args(0)
-    val grain = args(1)
-    val target = graft.ops.FmmLexicons(args(2))
+    val grain = graft.ops.WordGrain(args(1))
+    val target = graft.ops.WordGrain.dict(args(2)).lexicon
     val topK = if (args.length > 3) args(3).toInt else 500
     val minCount = if (args.length > 4) args(4).toInt else 20
     val render = if (args.length > 5) args(5) else "none"
@@ -92,7 +92,7 @@ object InduceLexiconBand {
       Cand(w, r.getDouble(4), r.getLong(3), status)
     }
     val byStatus = cands.groupBy(_.status).view.mapValues(_.length).toMap
-    println(s"[induce] corpus=$dir grain=$grain target=${args(2)} " +
+    println(s"[induce] corpus=$dir grain=${grain.name} target=${args(2)} " +
       s"topK=$topK minCount=$minCount render=$render colloc_secs=$secs")
     println(s"[induce] board=${board.length} " + byStatus.toSeq.sorted
       .map { case (k, v) => s"$k=$v" }.mkString(" "))

@@ -17,7 +17,8 @@ object LexiconCheck {
       }
     }
     var bad = false
-    graft.ops.FmmLexicons.byGrain.toSeq.sortBy(_._1).foreach { case (g, lex) =>
+    graft.ops.WordGrain.dicts.foreach { grain =>
+      val (g, lex) = (grain.name, grain.lexicon)
       val ws = lex.words
       val dups = ws.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
       val badLen = ws.filter(w => w.length < 2 || w.length > lex.maxLen).distinct

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.AnswerScore
+import graft.ops.{AnswerScore, ScalarGrain, WordGrain}
 
 /** Pins the answer-scoring family: SQuAD-style normalization (case,
   * ASCII punctuation, articles, whitespace), exact-match semantics,
@@ -12,7 +12,7 @@ class AnswerScoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def score(pred: String, gold: String,
-                    grain: String = "ws"): (Long, Long, Long, Long, Long, Long, Long) = {
+                    grain: ScalarGrain = WordGrain.Ws): (Long, Long, Long, Long, Long, Long, Long) = {
     val r = AnswerScore.emF1(Seq((1L, pred, gold)).toDF("id", "p", "g"),
       "id", "p", "g", grain = grain).collect().head
     (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
@@ -71,7 +71,7 @@ class AnswerScoreSpec extends SparkSpec {
     assert(ws._4 === 0L && ws._7 === 0L, "unsegmented Han: no word overlap")
     // routed grain: codepoint tokens -> m=4, p=1000, r=4/7=571,
     // f1 = 2*4*1000 div 11 = 727
-    val cjk = score("北京大学", "北京大学图书馆", grain = "cjk-auto")
+    val cjk = score("北京大学", "北京大学图书馆", grain = WordGrain.CjkAuto)
     assert(cjk === ((4L, 7L, 0L, 4L, 1000L, 571L, 727L)))
   }
 

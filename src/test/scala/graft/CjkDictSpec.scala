@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{TextAnalysis, ZhLexicon}
+import graft.ops.{TextAnalysis, WordGrain, ZhLexicon}
 import org.apache.spark.sql.functions._
 
 /** Pins the `cjk-dict` FMM word grain: the compiled kernel
@@ -129,7 +129,7 @@ class CjkDictSpec extends SparkSpec {
       (2L, "plain english words only here"),
       (3L, "我们在图书馆练习普通话")).toDF("doc_id", "text")
     val vocab = TextAnalysis.vocabulary(docs, "text", topV = 50,
-        wordGrain = "cjk-dict")
+        wordGrain = WordGrain.CjkDict)
       .select($"token", $"cnt").as[(String, Long)].collect().toMap
     assert(vocab("我们") == 3L, s"我们 must be whole with corpus tf 3: $vocab")
     assert(vocab.contains("人工智能") && vocab.contains("图书馆") &&
@@ -149,7 +149,7 @@ class CjkDictSpec extends SparkSpec {
       (3L, "plain english filler text here"),
       (4L, "more plain english filler words")).toDF("doc_id", "text")
     val kw = TextAnalysis.tfidfKeywords(docs, "doc_id", "text", k = 2,
-        wordGrain = "cjk-dict")
+        wordGrain = WordGrain.CjkDict)
       .select($"doc_id", $"keyword", $"rank").as[(Long, String, Int)]
       .collect().groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
     assert(kw(1L).head == "人工智能",
@@ -157,7 +157,7 @@ class CjkDictSpec extends SparkSpec {
     assert(kw(2L).head == "机器学习", s"doc 2 keywords: ${kw(2L)}")
     // under cjk-auto the same doc keywords to single codepoints
     val auto = TextAnalysis.tfidfKeywords(docs, "doc_id", "text", k = 2,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .where($"doc_id" === 1L).select($"keyword").as[String].collect().toSeq
     assert(auto.forall(_.length == 1),
       s"codepoint grain keywords must be single codepoints: $auto")
@@ -170,31 +170,30 @@ class CjkDictSpec extends SparkSpec {
       (3L, "plain english filler document here"),
       (4L, "another plain filler document text")).toDF("doc_id", "text")
     val dict = TextAnalysis.bm25TopK(docs, "doc_id", "text",
-        terms = Seq("人工智能"), k = 5, wordGrain = "cjk-dict")
+        terms = Seq("人工智能"), k = 5, wordGrain = WordGrain.CjkDict)
       .select($"doc_id").as[Long].collect().toSeq
     assert(dict == Seq(1L),
       s"dict grain must retrieve exactly the 人工智能 doc: $dict")
     // the codepoint grain tokenizes per char — a 4-codepoint term never
     // equals any token, tf = 0 corpus-wide, empty result
     val auto = TextAnalysis.bm25TopK(docs, "doc_id", "text",
-        terms = Seq("人工智能"), k = 5, wordGrain = "cjk-auto").count()
+        terms = Seq("人工智能"), k = 5, wordGrain = WordGrain.CjkAuto).count()
     assert(auto == 0L, "codepoint grain must be blind to multi-codepoint terms")
   }
 
   test("grain typos fail fast at the vocabulary entry point and the kernel") {
+    // the vocabulary entry point takes a WordGrain, so a typo can only
+    // arrive as text: through the grain parser, which names the valid
+    // grains, or as a kernel literal
     val docs = Seq((1L, "我们")).toDF("doc_id", "text")
     val e1 = intercept[IllegalArgumentException] {
-      TextAnalysis.vocabulary(docs, "text", wordGrain = "cjkdict")
+      TextAnalysis.vocabulary(docs, "text", wordGrain = WordGrain("cjkdict"))
     }
     assert(e1.getMessage.contains("cjk-dict"))
     val e2 = intercept[Exception] {
       docs.selectExpr("graft_term_tf(text, 'dict')").collect()
     }
     assert(e2.getMessage.contains("grain"))
-    val e3 = intercept[IllegalArgumentException] {
-      TextAnalysis.vocabularySql("documents", "text", wordGrain = "cjkdict")
-    }
-    assert(e3.getMessage.contains("cjk-dict"))
   }
 
   // ================= round 15: the grain reaches scoring + dedup =======
@@ -211,14 +210,14 @@ class CjkDictSpec extends SparkSpec {
       (2L, "人工智能人工智能"),
       (10L, "人工智能人工智能"),
       (11L, "智人工能智人工能")).toDF("doc_id", "text")
-    def score(grain: String) = TextAnalysis.unigramScore(
+    def score(grain: WordGrain) = TextAnalysis.unigramScore(
         docs.where($"doc_id" >= 10), docs.where($"doc_id" < 10),
         "doc_id", "text", vocab = 100, wordGrain = grain)
       .select($"doc_id", $"oov_ratio").as[(Long, Double)].collect().toMap
-    val auto = score("cjk-auto")
+    val auto = score(WordGrain.CjkAuto)
     assert(auto(10L) == 0.0 && auto(11L) == 0.0,
       s"codepoint grain sees identical char stats: $auto")
-    val dict = score("cjk-dict")
+    val dict = score(WordGrain.CjkDict)
     assert(dict(10L) == 0.0 && dict(11L) == 1.0,
       s"word grain must flag the scramble fully OOV: $dict")
   }
@@ -236,12 +235,12 @@ class CjkDictSpec extends SparkSpec {
     val a = period * 10
     val b = period * 9 + "人工智能公共汽东"
     val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    def keepers(grain: String) = graft.ops.Dedup.minhashDedupKeepers(
+    def keepers(grain: WordGrain) = graft.ops.Dedup.minhashDedupKeepers(
         docs, "doc_id", "text", wordGrain = grain)
       .as[(Long, Long)].collect().toMap
-    val auto = keepers("cjk-auto")
+    val auto = keepers(WordGrain.CjkAuto)
     assert(auto(2L) == 1L, s"codepoint grain must merge the pair: $auto")
-    val dict = keepers("cjk-dict")
+    val dict = keepers(WordGrain.CjkDict)
     assert(dict(2L) == 2L, s"word grain must keep the pair apart: $dict")
   }
 
@@ -257,12 +256,12 @@ class CjkDictSpec extends SparkSpec {
     val corpus = Seq(
       (10L, "的人工智能公共汽车图书馆的"),
       (11L, "图书馆的朋友喜欢历史")).toDF("doc_id", "text")
-    def clean(grain: String): Set[Long] = graft.ops.Decontaminate.cleanDocs(
+    def clean(grain: WordGrain): Set[Long] = graft.ops.Decontaminate.cleanDocs(
         corpus, bench, "doc_id", "text", wordGrain = grain)
       .select("doc_id").as[Long].collect().toSet
-    assert(clean("cjk-auto") == Set.empty[Long],
+    assert(clean(WordGrain.CjkAuto) == Set.empty[Long],
       "codepoint grain must strike both docs (shared char trigrams)")
-    assert(clean("cjk-dict") == Set(11L),
+    assert(clean(WordGrain.CjkDict) == Set(11L),
       "word grain must keep the one-word quoter and strike the phrase leak")
   }
 
@@ -303,20 +302,20 @@ class CjkDictSpec extends SparkSpec {
     val base = graft.ops.ZhLexicon.words.take(80).mkString
     val prior = Seq((100L, base)).toDF("doc_id", "text")
     val bands = graft.ops.Dedup.bandTable(prior, "doc_id", "text",
-      wordGrain = "cjk-dict")
+      wordGrain = WordGrain.CjkDict)
     assert(bands.select("grain").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("cjk-dict"))
     val newSnap = Seq(
       (1L, base + "的尾部噪声"),  // re-crawl + noise: must match 100
       (2L, "完全不同的另一篇文档内容和词汇都不一样")).toDF("doc_id", "text")
     val out = graft.ops.Dedup.incrementalNearDup(newSnap, bands,
-        "doc_id", "text", wordGrain = "cjk-dict")
+        "doc_id", "text", wordGrain = WordGrain.CjkDict)
       .collect().map(r => r.getLong(0) -> ((Option(r.get(1)), r.getBoolean(2)))).toMap
     assert(out(1L) == ((Some(100L), false)), s"re-crawl must match: $out")
     assert(out(2L)._2, s"fresh doc must keep: $out")
     val mismatch = intercept[IllegalArgumentException] {
       graft.ops.Dedup.incrementalNearDup(newSnap, bands, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
     }
     assert(mismatch.getMessage.contains("'cjk-dict'"))
   }
@@ -328,7 +327,7 @@ class CjkDictSpec extends SparkSpec {
       (3L, "one two"),                // ws fallback: 2 tokens
       (4L, "one two three four")).toDF("doc_id", "text")
     val viaPred = docs.where(org.apache.spark.sql.functions.expr(
-        graft.ops.Dedup.shingleFloorPred("text", 3, "cjk-dict")))
+        graft.ops.Dedup.shingleFloorPred("text", 3, WordGrain.CjkDict)))
       .select($"doc_id").as[Long].collect().toSet
     val viaArray = docs.where(
         org.apache.spark.sql.functions.expr(

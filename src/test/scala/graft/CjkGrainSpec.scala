@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.TextAnalysis
+import graft.ops.{TextAnalysis, WordGrain}
 import org.apache.spark.sql.functions._
 
 /** Pins the cjk-auto word grain ([[TextAnalysis.routedTokensSpark]] and
@@ -28,12 +28,12 @@ class CjkGrainSpec extends SparkSpec {
       .select($"n_words").as[Int].head()
     assert(ws == 1, s"whitespace grain must see ONE word on unsegmented zh, got $ws")
     val routed = TextAnalysis.gopherRules(df, "doc_id", "text", minWords = 2,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select($"n_words").as[Int].head()
     assert(routed == zh.length, s"routed grain must count codepoints, got $routed")
     // and the minWords rule now does real work on the zh row
     val keep = TextAnalysis.gopherRules(df, "doc_id", "text", minWords = 2,
-        wordGrain = "cjk-auto").select($"r_words").as[Int].head()
+        wordGrain = WordGrain.CjkAuto).select($"r_words").as[Int].head()
     assert(keep == 1)
   }
 
@@ -75,7 +75,7 @@ class CjkGrainSpec extends SparkSpec {
     assert(ws.toSeq === Seq((zh + zh, 1L)),
       "ws grain must collapse the unsegmented doc to ONE tf=1 term")
     val routed = TextAnalysis.tfidfKeywords(docs, "doc_id", "text", k = 3,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .where($"doc_id" === 1L).select($"keyword", $"tf").as[(String, Long)].collect()
     assert(routed.nonEmpty && routed.forall { case (kw, tf) =>
       kw.length == 1 && tf >= 2L },
@@ -90,7 +90,7 @@ class CjkGrainSpec extends SparkSpec {
     // ws grain: doc 10's single whole-document token only matches ref
     // doc 1's identical whole-document token — but that IS in-vocab
     val routed = TextAnalysis.unigramScore(score, ref, "doc_id", "text",
-        vocab = 100, wordGrain = "cjk-auto")
+        vocab = 100, wordGrain = WordGrain.CjkAuto)
       .select($"n_tokens", $"oov_ratio").as[(Long, Double)].head()
     assert(routed._1 == zh.length.toLong,
       s"routed grain must score per codepoint, got n_tokens=${routed._1}")
@@ -103,7 +103,7 @@ class CjkGrainSpec extends SparkSpec {
       (1L, zh), (2L, zh + zh), (3L, en), (4L, "词只出现一次")
     ).toDF("doc_id", "text")
     val routed = TextAnalysis.bm25TopK(docs, "doc_id", "text",
-      terms = Seq("中", "一"), k = 10, wordGrain = "cjk-auto")
+      terms = Seq("中", "一"), k = 10, wordGrain = WordGrain.CjkAuto)
       .select($"doc_id").as[Long].collect().toSet
     assert(routed.nonEmpty && routed.subsetOf(Set(1L, 2L, 4L)),
       s"Han terms must hit only the zh docs, got $routed")
@@ -125,7 +125,7 @@ class CjkGrainSpec extends SparkSpec {
       s"ws keeper must be blind to unsegmented docs, got $ws")
     // routed grain: codepoint 3-shingles -> both enter, near-dups collapse
     val routed = graft.ops.Dedup.minhashDedupKeepers(docs, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select($"doc_id", $"keep_id").as[(Long, Long)].collect().toMap
     assert(routed.keySet == Set(1L, 2L, 3L), s"routed keeper must cover all docs: $routed")
     assert(routed(2L) == 1L, s"the zh near-dup must collapse to its keeper: $routed")
@@ -143,10 +143,10 @@ class CjkGrainSpec extends SparkSpec {
     // routed grain (its documented identical-output contract), and both
     // must DROP the zh-contaminated doc the ws guard is blind to
     val exact = graft.ops.Decontaminate.cleanDocs(docs, bench,
-      "doc_id", "text", wordGrain = "cjk-auto")
+      "doc_id", "text", wordGrain = WordGrain.CjkAuto)
       .select($"doc_id").as[Long].collect().toSet
     val bloom = graft.ops.Decontaminate.cleanDocsBloom(docs, bench,
-      "doc_id", "text", wordGrain = "cjk-auto")
+      "doc_id", "text", wordGrain = WordGrain.CjkAuto)
       .select($"doc_id").as[Long].collect().toSet
     assert(exact == bloom, s"bloom must equal exact on the routed grain: $exact vs $bloom")
     assert(!exact.contains(1L) && !exact.contains(2L),
@@ -159,7 +159,7 @@ class CjkGrainSpec extends SparkSpec {
     // components + soft dedup: the zh near-dup pair forms one component
     // with weight 1/2; the english singleton keeps weight 1
     val w = graft.ops.Dedup.softDedupWeights(docs, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select($"doc_id", $"weight").as[(Long, Double)].collect().toMap
     assert(w(1L) == 0.5 && w(2L) == 0.5, s"zh near-dups must share mass: $w")
     assert(w(3L) == 1.0 && w(4L) == 1.0)
@@ -168,11 +168,11 @@ class CjkGrainSpec extends SparkSpec {
     // on the routed grain (same surrogate weights, same ordering)
     val target = expr("doc_id <= 2")
     val slow = graft.ops.Dsir.select(docs, "doc_id", "text", target, n = 4,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select($"doc_id", $"n_grams", $"w_sum", $"rank")
       .as[(Long, Long, Long, Int)].collect().toSet
     val fast = graft.ops.Dsir.selectFast(docs, "doc_id", "text", target, n = 4,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select($"doc_id", $"n_grams", $"w_sum", $"rank")
       .as[(Long, Long, Long, Int)].collect().toSet
     assert(slow == fast, s"declarative and fast DSIR must agree on the routed grain:\n$slow\n$fast")
@@ -182,23 +182,21 @@ class CjkGrainSpec extends SparkSpec {
   test("grain typos fail fast at every entry point; exploded ≡ local repetition on the routed grain") {
     val docs = Seq((1L, zh + zh), (2L, "looped looped looped words here")).toDF("doc_id", "text")
     // a typo'd grain must throw, never silently run the ws grain it was
-    // meant to replace (the documented fail-fast funnel)
+    // meant to replace: the ops take a WordGrain, so a typo can only
+    // arrive as text, through the one grain parser
     for (bad <- Seq("cjk_auto", "cjk", "bytes")) {
-      assert(intercept[Exception] {
-        graft.ops.Dedup.minhashSignatures(docs, "doc_id", "text", wordGrain = bad).collect()
-      }.getMessage.contains("wordGrain"), s"'$bad' must fail fast")
+      assert(intercept[IllegalArgumentException] {
+        graft.ops.Dedup.minhashSignatures(docs, "doc_id", "text",
+          wordGrain = WordGrain(bad)).collect()
+      }.getMessage.contains("'cjk-auto'"), s"'$bad' must fail fast")
     }
-    assert(intercept[Exception] {
-      graft.ops.Decontaminate.cleanDocsBloom(docs, docs, "doc_id", "text",
-        wordGrain = "cjk_auto").collect()
-    }.getMessage.contains("wordGrain"))
     // the OOM-safe exploded repetition variant matches its row-local
     // sibling on the routed grain (they share one oracle)
     val local = TextAnalysis.repetitionSignalsLocal(docs, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .as[(Long, Double, Double)].collect().toSet
     val exploded = TextAnalysis.repetitionSignals(docs, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .as[(Long, Double, Double)].collect().toSet
     assert(local == exploded, s"exploded and local must agree:\n$local\n$exploded")
     assert(local.exists(_._1 == 1L), "the unsegmented doc must be scored on the routed grain")
@@ -210,7 +208,7 @@ class CjkGrainSpec extends SparkSpec {
     // grain would count the apostrophe-free punctuation separately)
     val docs = Seq((1L, zh), (2L, "five plain words right here")).toDF("doc_id", "text")
     val ch = TextAnalysis.chunkDocuments(docs, "doc_id", "text",
-      size = 4, stride = 4, grain = "cjk-auto")
+      size = 4, stride = 4, grain = WordGrain.CjkAuto)
       .select($"doc_id", $"chunk_idx", $"n_tokens").as[(Long, Int, Long)].collect()
     val zhChunks = ch.filter(_._1 == 1L).sortBy(_._2).map(_._3).toSeq
     assert(zhChunks == Seq(4L, 4L, 4L, 1L), s"routed windows wrong: $zhChunks")
@@ -218,13 +216,13 @@ class CjkGrainSpec extends SparkSpec {
     assert(enChunks == Seq(4L, 1L), s"ws-routed latin windows wrong: $enChunks")
     // manifest closed form (count-only routed kernel) ≡ exploded grain
     val m = TextAnalysis.chunkManifest(docs, "doc_id", "text",
-      size = 4, stride = 4, grain = "cjk-auto").head()
+      size = 4, stride = 4, grain = WordGrain.CjkAuto).head()
     assert(m.getLong(0) == ch.length.toLong, "n_chunks must match the exploded grain")
     assert(m.getLong(1) == 2L)
     assert(m.getLong(3) == ch.count(_._3 < 2).toLong, "n_short must match the exploded grain")
     // hash-embed rides the same routed windows: one vector per chunk
     val emb = TextAnalysis.hashEmbedChunks(docs, "doc_id", "text",
-      size = 4, stride = 4, dim = 8, grain = "cjk-auto").collect()
+      size = 4, stride = 4, dim = 8, grain = WordGrain.CjkAuto).collect()
     assert(emb.length == ch.length, "hash-embed must cut the same routed windows")
   }
 
@@ -277,14 +275,14 @@ class CjkGrainSpec extends SparkSpec {
     // pre-r14 this doc was ONE sentence and ONE chunk
     val zhDoc = Seq((1L, "第一句话。第二句话。第三句话。")).toDF("doc_id", "text")
     val g3 = TextAnalysis.chunkBySentences(zhDoc, "doc_id", "text",
-        size = 8, grain = "cjk-auto")
+        size = 8, grain = WordGrain.CjkAuto)
       .orderBy($"chunk_idx")
       .select($"chunk_idx", $"n_sentences", $"n_tokens").as[(Int, Long, Long)]
       .collect().toSeq
     assert(g3 == Seq((0, 2L, 10L), (1, 1L, 5L)), s"zh bins wrong: $g3")
-    // grain typo fails fast
+    // grain typo fails fast, and the chunkers take only scalar grains
     val e = intercept[IllegalArgumentException] {
-      TextAnalysis.chunkBySentences(zhDoc, "doc_id", "text", grain = "cjk")
+      TextAnalysis.chunkBySentences(zhDoc, "doc_id", "text", grain = WordGrain.scalar("cjk"))
     }
     assert(e.getMessage.contains("grain"))
   }
@@ -309,7 +307,7 @@ class CjkGrainSpec extends SparkSpec {
       (i + 100L) -> sb.toString
     }
     val docs = (fixtures ++ fuzz).toDF("doc_id", "text")
-    for (grain <- Seq("token", "cjk-auto"); size <- Seq(4, 16)) {
+    for (grain <- Seq(WordGrain.Ws, WordGrain.CjkAuto); size <- Seq(4, 16)) {
       val k = TextAnalysis.chunkBySentences(docs, "doc_id", "text", size, grain)
         .collect().map(r => (r.getLong(0), r.getInt(1)) ->
           (r.getLong(2), r.getLong(3), r.getString(4))).toMap

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.TextAnalysis
+import graft.ops.{TextAnalysis, WordGrain}
 
 /** Pins [[TextAnalysis.collocations]] — PMI-lift collocation
   * extraction: exact lift arithmetic on a hand-computed corpus, the
@@ -61,12 +61,12 @@ class CollocationSpec extends SparkSpec {
     // dominated row; FMM over ZhLexicon segments 人工智能|图书馆
     val df = Seq.fill(3)("人工智能图书馆").toDF("text")
     val auto = TextAnalysis.collocations(df, "text", topK = 10,
-      minCount = 1, wordGrain = "cjk-auto")
+      minCount = 1, wordGrain = WordGrain.CjkAuto)
       .collect().map(r => (r.getString(1), r.getString(2)))
     // codepoint grain: adjacent character pairs (6 of them)
     assert(auto.contains(("人", "工")) && auto.contains(("能", "图")))
     val dict = TextAnalysis.collocations(df, "text", topK = 10,
-      minCount = 1, wordGrain = "cjk-dict")
+      minCount = 1, wordGrain = WordGrain.CjkDict)
       .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3)))
     assert(dict.toSeq === Seq(("人工智能", "图书馆", 3L)))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, WordGrain}
 import org.apache.spark.sql.functions._
 
 /** Round-15 guards on the dedup operators' runtime gates:
@@ -124,22 +124,22 @@ class DedupGateSpec extends SparkSpec {
     val zh = Seq((1L, "我们的朋友在中国学习中文我们的朋友在中国学习中文"),
       (2L, "plain english words repeated plain english words repeated"))
       .toDF("doc_id", "text")
-    val wsBands = Dedup.bandTable(zh, "doc_id", "text", wordGrain = "ws")
-    val autoBands = Dedup.bandTable(zh, "doc_id", "text", wordGrain = "cjk-auto")
+    val wsBands = Dedup.bandTable(zh, "doc_id", "text", wordGrain = WordGrain.Ws)
+    val autoBands = Dedup.bandTable(zh, "doc_id", "text", wordGrain = WordGrain.CjkAuto)
     val mixed = wsBands.unionByName(autoBands)
     val probe = Seq((10L, "plain english words repeated fresh")).toDF("doc_id", "text")
     // default: one-row peek sees 'ws' first and passes (the documented
     // constant-grain assumption)
     Dedup.incrementalNearDup(probe, mixed, "doc_id", "text",
-      wordGrain = "ws").collect()
+      wordGrain = WordGrain.Ws).collect()
     // opt-in strict: the full-scan min/max assert catches the union
     val e = intercept[IllegalArgumentException] {
       Dedup.incrementalNearDup(probe, mixed, "doc_id", "text",
-        wordGrain = "ws", strictGrain = true)
+        wordGrain = WordGrain.Ws, strictGrain = true)
     }
     assert(e.getMessage.contains("mixes grains"))
     // strict on a clean table passes
     Dedup.incrementalNearDup(probe, wsBands, "doc_id", "text",
-      wordGrain = "ws", strictGrain = true).collect()
+      wordGrain = WordGrain.Ws, strictGrain = true).collect()
   }
 }

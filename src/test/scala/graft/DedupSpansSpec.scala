@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, WordGrain}
 import org.apache.spark.sql.functions._
 
 /** Pins [[Dedup.dedupSpans]]: corpus-duplicated fixed-length word spans
@@ -43,7 +43,7 @@ class DedupSpansSpec extends SparkSpec {
     assert(ws.length === 12 && ws.forall(_.getLong(2) == 0L),
       "ws grain must see one token per doc and strike nothing")
     val dict = Dedup.dedupSpans(docs, "doc_id", "text",
-        spanLen = 5, maxFreq = 10, wordGrain = "cjk-dict")
+        spanLen = 5, maxFreq = 10, wordGrain = WordGrain.CjkDict)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(dict.length === 12)
     dict.foreach { case (i, clean, removed, n) =>

@@ -90,7 +90,7 @@ class DictGramSpec extends SparkSpec {
     val all = (ref ++ docs).toDF("doc_id", "text")
     val out = graft.ops.TextAnalysis.bigramScore(
         all.where($"doc_id" >= 100), all.where($"doc_id" < 100),
-        "doc_id", "text", vocab = 10, wordGrain = "cjk-dict")
+        "doc_id", "text", vocab = 10, wordGrain = graft.ops.WordGrain.CjkDict)
       .select($"doc_id", $"oov_ratio").as[(Long, Double)].collect().toMap
     assert(out(100L) === 0.0, "in-order doc: every bigram in reference")
     assert(out(101L) === 1.0, "reversed doc: no bigram in reference")

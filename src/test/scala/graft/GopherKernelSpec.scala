@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.TextAnalysis
+import graft.ops.{TextAnalysis, WordGrain}
 import org.apache.spark.sql.DataFrame
 
 /** Bit-parity of the compiled `graft_gopher_flags` kernel against the
@@ -79,16 +79,16 @@ class GopherKernelSpec extends SparkSpec {
       (15L, "ភាសាខ្មែរមិនមានចន្លោះ")                      // khmer
     ).toDF("doc_id", "text")
     val k = TextAnalysis.gopherRules(df, "doc_id", "text", minWords = 3,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.head.toString)
     val h = TextAnalysis.gopherRulesHof(df, "doc_id", "text", minWords = 3,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.head.toString)
     assert(k.toSeq === h.toSeq, "routed kernel and HOF gopher must agree bit-for-bit")
     // the exemption does real work: a routed row with enough tokens
     // passes the gate (pre-exemption it always failed mean-len + stop)
     val keep = TextAnalysis.gopherRules(df, "doc_id", "text", minWords = 3,
-        wordGrain = "cjk-auto").where("doc_id = 1").select("keep").collect().head.getInt(0)
+        wordGrain = WordGrain.CjkAuto).where("doc_id = 1").select("keep").collect().head.getInt(0)
     assert(keep === 1, "a clean routed zh row must pass the re-parameterized gate")
   }
 
@@ -106,10 +106,10 @@ class GopherKernelSpec extends SparkSpec {
     val cols = Seq("doc_id", "n_words", "r_words", "r_mean_len", "r_symbol",
       "r_alpha", "r_stop", "r_bullet", "r_ellipsis", "keep")
     val k = TextAnalysis.gopherRules(df, "doc_id", "text", minWords = 3,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.head.toString)
     val h = TextAnalysis.gopherRulesHof(df, "doc_id", "text", minWords = 3,
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.head.toString)
     assert(k.toSeq === h.toSeq)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis, WordGrain}
 import org.apache.spark.sql.functions._
 
 /** Edge-case coverage for the training-data operators — the cases the
@@ -625,7 +625,7 @@ class OpsSpec extends SparkSpec {
       "bandTable must stamp its grain on the artifact")
     val mismatch = intercept[IllegalArgumentException] {
       Dedup.incrementalNearDup(newSnap, wsBands, "doc_id", "text",
-        wordGrain = "cjk-auto")
+        wordGrain = WordGrain.CjkAuto)
     }
     assert(mismatch.getMessage.contains("'ws'") &&
       mismatch.getMessage.contains("'cjk-auto'"),
@@ -899,7 +899,7 @@ class OpsSpec extends SparkSpec {
       (3L, "solo"),
       (4L, "alpha beta alpha"),
       (4L, "beta beta gamma")).toDF("doc_id", "text")
-    for (grain <- Seq("ws", "cjk-auto")) {
+    for (grain <- Seq(WordGrain.Ws, WordGrain.CjkAuto)) {
       val heap = TextAnalysis.tfidfKeywords(docs, "doc_id", "text",
           k = 4, wordGrain = grain)
         .orderBy($"doc_id", $"rank")

@@ -228,10 +228,33 @@ class RoutedGrainSpec extends SparkSpec {
   }
 
   test("bad grain literal fails at analysis with a clear message") {
-    val e = intercept[Exception] {
-      df().selectExpr("graft_word_count(text, 'bytes')").collect()
+    // every grain-taking kernel, each with the grains it accepts: an
+    // unknown literal and the retired 'token' (the chunkers' old ws
+    // spelling) and 'toklist' (an old internal pseudo-grain) all fail
+    // at analysis, and the message lists the valid grains
+    val scalar = "'ws', 'cjk-auto'"
+    val dict = "'cjk-dict', 'thai-dict'"
+    val all = s"$scalar, $dict"
+    val kernels = Seq(
+      "graft_word_count(text, %s)" -> scalar,
+      "graft_dsir_buckets(text, 16, %s)" -> scalar,
+      "graft_gopher_flags(text, 50, 100000, 3.0, 10.0, 0.1, 0.8, 2, 0.9, 0.3, " +
+        "array('the'), %s)" -> scalar,
+      "graft_sentence_chunks(text, 16, %s)" -> scalar,
+      "graft_term_counts(text, array('a'), %s)" -> all,
+      "graft_term_tf(text, %s)" -> all,
+      "graft_gram_tf(text, 2, %s)" -> all,
+      "graft_fmm_tokens(text, true, %s)" -> dict,
+      "graft_fmm_token_count(text, %s)" -> dict)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for ((call, valid) <- kernels; bad <- Seq("bytes", "token", "toklist")) {
+      val e = intercept[Exception] {
+        df().selectExpr(call.format(s"'$bad'")).collect()
+      }
+      assert(messages(e).contains(s"grain '$bad' is not valid here; valid grains: $valid"),
+        s"${call.format(s"'$bad'")}: unexpected: ${messages(e)}")
     }
-    assert(e.getMessage.contains("grain"), s"unexpected: ${e.getMessage}")
   }
 
   test("r14 ranges: Lao/Myanmar/Khmer fixtures route to the codepoint grain") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Chat, Dedup, TextAnalysis}
+import graft.ops.{Chat, Dedup, TextAnalysis, WordGrain}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -252,7 +252,7 @@ class StreamingOpsSpec extends SparkSpec {
     val docs = MemoryStream[(Long, String)]
     val out = graft.ops.TextAnalysis.chunkDocuments(
       docs.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      size = 4, stride = 4, grain = "cjk-auto")
+      size = 4, stride = 4, grain = WordGrain.CjkAuto)
     val q = out.writeStream.format("memory").queryName("routed_stream")
       .outputMode("append").start()
     try {
@@ -292,7 +292,7 @@ class StreamingOpsSpec extends SparkSpec {
     val docs = MemoryStream[(Long, String)]
     val gated = graft.ops.Dsir.scoreStreaming(
       docs.toDF().toDF("doc_id", "text"), ref, "doc_id", "text",
-      targetPred = expr("doc_id <= 2"), minWeight = 1L, wordGrain = "cjk-auto")
+      targetPred = expr("doc_id <= 2"), minWeight = 1L, wordGrain = WordGrain.CjkAuto)
     val q = gated.writeStream.format("memory").queryName("dsir_cjk_stream")
       .outputMode("append").start()
     try {
@@ -305,11 +305,11 @@ class StreamingOpsSpec extends SparkSpec {
     // catches a suffix-varied zh re-crawl in-flight
     val prior = graft.ops.Dedup.bandTable(
       Seq((1L, zh)).toDF("doc_id", "text"), "doc_id", "text",
-      wordGrain = "cjk-auto")
+      wordGrain = WordGrain.CjkAuto)
     val crawl = MemoryStream[(Long, String)]
     val guarded = graft.ops.Dedup.incrementalNearDupStreaming(
       crawl.toDF().toDF("doc_id", "text"), prior, "doc_id", "text",
-      wordGrain = "cjk-auto")
+      wordGrain = WordGrain.CjkAuto)
     val q2 = guarded.writeStream.format("memory").queryName("neardup_cjk_stream")
       .outputMode("append").start()
     try {
@@ -604,7 +604,7 @@ class StreamingOpsSpec extends SparkSpec {
       (2L, "第一句话。第二句话。第三句话。"))
     val out = graft.ops.TextAnalysis.chunkBySentences(
       docs.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      size = 4, grain = "cjk-auto")
+      size = 4, grain = WordGrain.CjkAuto)
     val q = out.writeStream.format("memory").queryName("sentchunk_stream")
       .outputMode("append").start()
     try {
@@ -614,7 +614,7 @@ class StreamingOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getString(4)).toMap
       val batch = graft.ops.TextAnalysis.chunkBySentences(
           rows.toDF("doc_id", "text"), "doc_id", "text",
-          size = 4, grain = "cjk-auto").collect()
+          size = 4, grain = WordGrain.CjkAuto).collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getString(4)).toMap
       assert(got === batch, "streaming chunks must equal the batch operator")
       assert(got.keys.count(_._1 == 2L) > 1,

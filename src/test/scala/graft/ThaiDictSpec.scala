@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{TextAnalysis, ThLexicon}
+import graft.ops.{TextAnalysis, ThLexicon, WordGrain}
 import org.apache.spark.sql.functions._
 
 /** Pins the `thai-dict` FMM grain (round 15): the lexicon invariants at
@@ -126,7 +126,7 @@ class ThaiDictSpec extends SparkSpec {
       (2L, "plain english words only"),
       (3L, "เราชอบกินข้าวและว่ายน้ำและอาหาร")).toDF("doc_id", "text")
     val vocab = TextAnalysis.vocabulary(docs, "text", topV = 50,
-      wordGrain = "thai-dict").select($"token").as[String].collect().toSet
+      wordGrain = WordGrain.ThaiDict).select($"token").as[String].collect().toSet
     assert(vocab.contains("ประเทศไทย") && vocab.contains("ว่ายน้ำ") &&
       vocab.contains("อาหาร") && vocab.contains("และ"))
     // nothing was shredded: no bare combining-vowel "token" from a
@@ -148,20 +148,21 @@ class ThaiDictSpec extends SparkSpec {
     val a = period * 10
     val b = period * 9 + "ประเทศไทยว่ายน้ะ"
     val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    def keepers(grain: String) = graft.ops.Dedup.minhashDedupKeepers(
+    def keepers(grain: WordGrain) = graft.ops.Dedup.minhashDedupKeepers(
         docs, "doc_id", "text", wordGrain = grain)
       .as[(Long, Long)].collect().toMap
-    val auto = keepers("cjk-auto")
+    val auto = keepers(WordGrain.CjkAuto)
     assert(auto(2L) == 1L, s"codepoint grain must merge the pair: $auto")
-    val dict = keepers("thai-dict")
+    val dict = keepers(WordGrain.ThaiDict)
     assert(dict(2L) == 2L, s"word grain must keep the pair apart: $dict")
   }
 
   test("thai-dict registry wiring: unknown grain rejected, both dicts resolve") {
-    assert(graft.ops.FmmLexicons.isDict("thai-dict") &&
-      graft.ops.FmmLexicons.isDict("cjk-dict"))
+    assert(WordGrain.dict("thai-dict").lexicon eq ThLexicon)
+    assert(WordGrain.dict("cjk-dict").lexicon eq graft.ops.ZhLexicon)
+    assert(WordGrain.dicts == Seq(WordGrain.CjkDict, WordGrain.ThaiDict))
     intercept[IllegalArgumentException] {
-      graft.ops.FmmLexicons("thai_dict")
+      WordGrain.dict("thai_dict")
     }
     intercept[IllegalArgumentException] {
       Seq((1L, "x")).toDF("doc_id", "text")

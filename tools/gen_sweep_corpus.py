@@ -19,9 +19,10 @@ made the decontamination twins' list() aggregate NULL and the oracle
 dropped every corpus row (now coalesced to [] in Decontaminate).
 Embeddings MUST be 64-dim — the PQ configs slice 4x16.
 """
-import sys, duckdb, random, datetime, json
+import os, sys, duckdb, random, datetime, json
 
 out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/probe_diff"
+os.makedirs(out, exist_ok=True)
 random.seed(141)
 han = "的一是不了人我在有他这为之大来以个中上们到说国和地也要就出会可得于着下自"
 thai = "ไทยแบ่งคำไม่ได้เลยประโยคนี้"
