@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 /** Corpus interchange I/O: JSONL and CSV round-trips and the sharded
@@ -60,6 +61,17 @@ object CorpusIO {
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
+
+  /** Parquet source with the schema read from the footer on the driver.
+    * A bare `spark.read.parquet` runs a one-task schema-inference job
+    * while the DataFrame is being built; this read starts none. The
+    * schema equals Spark's inference (mergeSchema off, partition
+    * columns included), and the files are listed per call, so data
+    * regenerated in place is seen. Session confs the conversion honours
+    * (e.g. `nanosAsLong`) must be set before the call.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterSchema.infer(spark, path)).parquet(path)
 
   /** Partitioned parquet writer with bounded file sizes: the at-rest
     * layout of a curated corpus (`path/partitionCol=v/part-*.parquet`,
@@ -151,7 +163,7 @@ object CorpusIO {
       }
     }
     val nAfter = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val df = readParquet(spark, inPath)
     val out = sortCol.fold(df.repartition(nAfter))(c =>
       df.repartitionByRange(nAfter, col(c)))
     out.write.mode("overwrite").parquet(outPath)

@@ -125,7 +125,7 @@ object PqIndex {
     // without this the first index call in a fresh session fails analysis)
     graft.functions.VectorFunctions.ensureRegistered(spark)
     val w = dim / m
-    val cent = spark.read.parquet(s"$path/codebooks")
+    val cent = CorpusIO.readParquet(spark, s"$path/codebooks")
     val q = graft.functions.VectorFunctions.attach(queries)
       .select(col(queries.columns.head).as("v_id"),
         col(queries.columns(1)).as("vec"))
@@ -133,7 +133,7 @@ object PqIndex {
     val adc =
       if (packed) expr(s"graft_pq_adc_packed(qcodes, flat, $kSub)")
       else expr(s"graft_pq_adc(codes, flat, $kSub)")
-    val scored = spark.read.parquet(s"$path/codes").crossJoin(qrows)
+    val scored = CorpusIO.readParquet(spark, s"$path/codes").crossJoin(qrows)
       .where(col("q_id") =!= col("v_id"))
       .withColumn("sim", Pq.normSim(adc))
       .select(col("q_id"), col("v_id").as("c_id"), col("sim"))
@@ -185,9 +185,9 @@ object PqIndex {
     // without this the first index call in a fresh session fails analysis)
     graft.functions.VectorFunctions.ensureRegistered(spark)
     val w = dim / m
-    val coarse = broadcast(spark.read.parquet(s"$path/coarse"))
+    val coarse = broadcast(CorpusIO.readParquet(spark, s"$path/coarse"))
     val ccn = Pq.coarseWithNorms(coarse)
-    val cent = spark.read.parquet(s"$path/codebooks")
+    val cent = CorpusIO.readParquet(spark, s"$path/codebooks")
     val q = graft.functions.VectorFunctions.attach(queries)
       .select(col(queries.columns.head).as("v_id"),
         col(queries.columns(1)).as("vec"))
@@ -199,7 +199,7 @@ object PqIndex {
     val qrowsLocal = qrowsPlan.collect()
     val ci = qrowsPlan.schema.fieldIndex("cluster")
     val probedClusters = qrowsLocal.map(_.getLong(ci)).distinct.toSeq
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = CorpusIO.readParquet(spark, s"$path/codes")
       .where(col("cluster").isin(probedClusters: _*))
     val qrows = broadcast(spark.createDataFrame(
       java.util.Arrays.asList(qrowsLocal: _*), qrowsPlan.schema))
@@ -229,8 +229,8 @@ object PqIndex {
     // transformation touches them (Dataset ops resolve at construction;
     // without this the first index call in a fresh session fails analysis)
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    val coarse = broadcast(spark.read.parquet(s"$path/coarse"))
-    val cent = spark.read.parquet(s"$path/codebooks")
+    val coarse = broadcast(CorpusIO.readParquet(spark, s"$path/coarse"))
+    val cent = CorpusIO.readParquet(spark, s"$path/codebooks")
     // m and w come off the persisted codebooks — metadata-sized read
     val mw = cent.selectExpr("cast(max(sub) AS INT)", "cast(max(size(c_vec)) AS INT)").first()
     val m = mw.getInt(0) + 1
@@ -278,7 +278,7 @@ object PqIndex {
     // transformation touches them (Dataset ops resolve at construction;
     // without this the first index call in a fresh session fails analysis)
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    val coarse = broadcast(spark.read.parquet(s"$path/coarse"))
+    val coarse = broadcast(CorpusIO.readParquet(spark, s"$path/coarse"))
     val q = graft.functions.VectorFunctions.attach(queries)
       .select(col(queries.columns.head).as("q_id"),
         col(queries.columns(1)).as("q_vec"))
@@ -294,7 +294,7 @@ object PqIndex {
     val qrowsLocal = qrowsPlan.collect()
     val ci = qrowsPlan.schema.fieldIndex("cluster")
     val probedClusters = qrowsLocal.map(_.getLong(ci)).distinct.toSeq
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = CorpusIO.readParquet(spark, s"$path/vectors")
       .where(col("cluster").isin(probedClusters: _*))
     val qrows = broadcast(spark.createDataFrame(
       java.util.Arrays.asList(qrowsLocal: _*), qrowsPlan.schema))
@@ -319,7 +319,7 @@ object PqIndex {
   def appendIvfFlat(spark: SparkSession, path: String, newVectors: DataFrame,
                     idCol: String, vecCol: String): Unit = {
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    val coarse = broadcast(spark.read.parquet(s"$path/coarse"))
+    val coarse = broadcast(CorpusIO.readParquet(spark, s"$path/coarse"))
     val base = graft.functions.VectorFunctions.attach(newVectors)
       .select(col(idCol).as("v_id"), col(vecCol).as("vec"))
     Similarity.assignClusters(base, coarse)
@@ -369,8 +369,8 @@ object PqIndex {
     // without this the first index call in a fresh session fails analysis)
     graft.functions.VectorFunctions.ensureRegistered(spark)
     val w = dim / m
-    val coarse = broadcast(spark.read.parquet(s"$path/coarse"))
-    val cent = spark.read.parquet(s"$path/codebooks")
+    val coarse = broadcast(CorpusIO.readParquet(spark, s"$path/coarse"))
+    val cent = CorpusIO.readParquet(spark, s"$path/codebooks")
     val q = graft.functions.VectorFunctions.attach(queries)
       .select(col(queries.columns.head).as("v_id"),
         col(queries.columns(1)).as("vec"))
@@ -390,7 +390,7 @@ object PqIndex {
     val qrowsLocal = qrowsPlan.collect()
     val ci = qrowsPlan.schema.fieldIndex("cluster")
     val probedClusters = qrowsLocal.map(_.getLong(ci)).distinct.toSeq
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = CorpusIO.readParquet(spark, s"$path/codes")
       .where(col("cluster").isin(probedClusters: _*))
     val qrows = broadcast(spark.createDataFrame(
       java.util.Arrays.asList(qrowsLocal: _*), qrowsPlan.schema))
@@ -429,7 +429,7 @@ object PqIndex {
       .select(col(queries.columns.head).as("q_id"),
         col(queries.columns(1)).as("q_vec"),
         expr(s"graft_binary_sketch(${queries.columns(1)}, $bits)").as("q_sk")))
-    val idx = spark.read.parquet(s"$path/sketches")
+    val idx = CorpusIO.readParquet(spark, s"$path/sketches")
     val shortlist = qsk.select(col("q_id"), col("q_sk"))
       .join(idx.select(col("v_id"), col("sk")), col("q_id") =!= col("v_id"))
       .withColumn("sim", -expr("cast(bit_count(q_sk ^ sk) AS DOUBLE)"))

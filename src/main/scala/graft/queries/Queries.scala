@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.entity.EntityStore
-import graft.ops.{Dedup, Multimodal, Pq, Similarity, TextAnalysis, WordGrain}
+import graft.ops.{CorpusIO, Dedup, Multimodal, Pq, Similarity, TextAnalysis, WordGrain}
 import graft.rpc.Rpc
 import graft.service.{RetryBackoff, RetryPolicy}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -42,16 +42,17 @@ object Queries {
       // (read as TIMESTAMP_NTZ). Normalize both to a session-TZ
       // TIMESTAMP so every downstream query sees one shape; with the
       // UTC session both rebuilds are value-identical to DuckDB's
-      // native read.
+      // native read. The footer schema is converted under the session
+      // conf at read time, so nanosAsLong is set BEFORE the read.
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = CorpusIO.readParquet(s, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           // nanos-as-long; generator precision is µs so div 1000 is lossless
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
       }
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else CorpusIO.readParquet(s, s"$dir/$name.parquet")
 
   // TPC-H date columns are TIMESTAMP_NTZ in the testdata; unix_millis
   // needs TIMESTAMP — under the UTC session the cast is value-identical
@@ -103,7 +104,7 @@ object Queries {
       Similarity.kmeansCentroids(corpus, idCol, vecCol, n, iters)
         .write.mode("overwrite").parquet(s"$path/cent")
     }
-    s.read.parquet(s"$path/cent")
+    CorpusIO.readParquet(s, s"$path/cent")
   }
 
   /** First-touch persisted media payloads: planted PNG/WAV/GIF bytes are
@@ -136,7 +137,7 @@ object Queries {
       }
       media.write.mode("overwrite").parquet(s"$path/media")
     }
-    s.read.parquet(s"$path/media")
+    CorpusIO.readParquet(s, s"$path/media")
   }
 
   /** Shared oracle for BOTH curation-manifest variants (identical
@@ -4324,7 +4325,7 @@ object Queries {
           Dedup.bandTable(prior, "doc_id", "text").write
             .mode("overwrite").parquet(s"$path/bands")
         }
-        val priorBands = s.read.parquet(s"$path/bands")
+        val priorBands = CorpusIO.readParquet(s, s"$path/bands")
         val recrawl = docs.where(col("doc_id") >= 50 && col("doc_id") < 53)
           .select((col("doc_id") + 300000).as("doc_id"),
             concat(col("text"), lit(" appended crawl tail")).as("text"))
@@ -5358,7 +5359,7 @@ object Queries {
         // files and 18s of committer overhead vs ~2s at 100k rows/file —
         // the small-files explosion the operator doc warns about
         graft.ops.CorpusIO.writeSharded(docs, out, "lang", maxRecordsPerFile = 100000)
-        graft.ops.CorpusIO.checksum(s.read.parquet(out), "lang", "doc_id", "text")
+        graft.ops.CorpusIO.checksum(CorpusIO.readParquet(s, out), "lang", "doc_id", "text")
       },
       Some(graft.ops.CorpusIO.checksumSql("documents", "lang", "doc_id", "text"))),
 
@@ -5389,7 +5390,7 @@ object Queries {
         docs.repartition(32).write.mode("overwrite").parquet(frag)
         graft.ops.CorpusIO.compact(s, frag, out,
           targetBytes = 4 * 1024 * 1024, sortCol = Some("doc_id"))
-        graft.ops.CorpusIO.checksum(s.read.parquet(out), "source", "doc_id", "text")
+        graft.ops.CorpusIO.checksum(CorpusIO.readParquet(s, out), "source", "doc_id", "text")
       },
       Some(graft.ops.CorpusIO.checksumSql("documents", "source", "doc_id", "text"))),
 
@@ -5436,7 +5437,7 @@ object Queries {
         val ev = t(s, dir, "events")
         val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_zorder_${math.abs(dir.hashCode)}"
         graft.ops.CorpusIO.zorderWrite(s, ev, out, "user_id", "event_id", nFiles = 16)
-        graft.ops.CorpusIO.checksum(s.read.parquet(out),
+        graft.ops.CorpusIO.checksum(CorpusIO.readParquet(s, out),
           "event_type", "event_id", "props")
       },
       Some(graft.ops.CorpusIO.checksumSql("events", "event_type", "event_id", "props"))),

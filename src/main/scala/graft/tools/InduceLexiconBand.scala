@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.ops.CorpusIO
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -55,7 +56,7 @@ object InduceLexiconBand {
     val han26 = "的一是不了人我在有他这中大来上国个到说们为子和你地出道也时年得就那要下以生会自着去之过家学对可"
       .take(26)
     val th26 = "กขคงจชญดตถทนบปผฝพฟมยรลวสหอ"
-    val base = spark.read.parquet(s"$dir/documents.parquet")
+    val base = CorpusIO.readParquet(spark, s"$dir/documents.parquet")
     val docs = render match {
       case "zh" => base.withColumn("text", expr(
         s"replace(translate(lower(text), 'abcdefghijklmnopqrstuvwxyz', '$han26'), ' ', '')"))

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.ops.CorpusIO
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ProbeBpe {
@@ -9,7 +10,7 @@ object ProbeBpe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = CorpusIO.readParquet(spark, s"$dir/documents.parquet")
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
@@ -40,7 +41,7 @@ object ProbeBpe {
     // arg 2 is a corpus DIR iff it is not purely numeric (a digit
     // ANYWHERE in a path — /tmp/probe_1m — must not disqualify it)
     val learnDocs = args.lift(1).filter(a => !a.forall(_.isDigit))
-      .map(d => spark.read.parquet(s"$d/documents.parquet")).getOrElse(docs)
+      .map(d => CorpusIO.readParquet(spark, s"$d/documents.parquet")).getOrElse(docs)
     val ks = {
       val given = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit)).map(_.toInt)
       if (given.nonEmpty) given.toSeq else Seq(1000)

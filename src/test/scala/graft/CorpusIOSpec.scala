@@ -1,13 +1,20 @@
 package graft
 
 import graft.ops.CorpusIO
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampNTZType}
 
 /** Pins [[graft.ops.CorpusIO]] contracts the checksum oracle can't see:
   * the per-file row bound of the sharded writer (loaders schedule
   * per-file — one monolithic shard defeats the layout) and JSONL
   * byte-exactness on text the sf corpus doesn't contain (embedded
-  * newlines, quotes, backslashes, non-BMP unicode).
+  * newlines, quotes, backslashes, non-BMP unicode), and the footer
+  * schema of [[graft.ops.CorpusIO.readParquet]]: equal to Spark's own
+  * inference, and read without starting a Spark job.
   */
 class CorpusIOSpec extends SparkSpec {
   import spark.implicits._
@@ -185,5 +192,151 @@ class CorpusIOSpec extends SparkSpec {
     val next = rows.find(_.getString(0) == "https://x/next").get
     assert(next.getLong(3) == 4L)
     assert(next.getLong(4) == graft.ops.PortableHash.jvmStringHash("next"))
+  }
+
+  // ---------------- readParquet: the footer schema --------------------
+
+  private val testdata = "/root/testdata"
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def rmrf(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** Both the footer schema alone and the read built on it equal
+    * Spark's inference (the read would add partition columns itself).
+    */
+  private def assertInferred(path: String): Unit = {
+    val inferred = spark.read.parquet(path).schema
+    assert(FooterSchema.infer(spark, path) === inferred,
+      s"footer schema differs from Spark's inference on $path")
+    assert(CorpusIO.readParquet(spark, path).schema === inferred, path)
+  }
+
+  test("readParquet: the footer schema equals Spark's inference on every sf table") {
+    val tables = for {
+      sf <- Seq("sf0.001", "sf0.01", "sf0.1")
+      f <- Option(new java.io.File(s"$testdata/$sf").listFiles).toSeq.flatten
+      if f.getName.endsWith(".parquet")
+    } yield f.getPath
+    assert(tables.size == 30, s"expected the 10 tables of 3 scale factors, found $tables")
+    // the default, and the nanosAsLong the events reader sets
+    for (nanos <- Seq("false", "true"))
+      withConf(NanosAsLong, nanos)(tables.foreach(assertInferred))
+  }
+
+  test("readParquet: a partitioned dir keeps its partition column, its type and its pruning") {
+    val out = tmp("footer_part")
+    Seq((1L, java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5), 7),
+      (2L, java.time.LocalDateTime.of(2024, 6, 7, 8, 9, 10), 8))
+      .toDF("id", "ts", "cluster")
+      .write.mode("overwrite").partitionBy("cluster").parquet(out)
+    assertInferred(out)
+    val df = CorpusIO.readParquet(spark, out)
+    assert(df.schema("ts").dataType === TimestampNTZType)
+    assert(df.schema("cluster").dataType === IntegerType)
+    val probe = df.where($"cluster" === 7)
+    val scan = probe.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }
+    assert(scan.exists(_.partitionFilters.nonEmpty), "cluster must stay a directory-pruning column")
+    assert(probe.select($"id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("readParquet: INT64 TIMESTAMP(NANOS), NTZ and unannotated binary follow the session conf") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // the other encoding of the events table; Spark itself cannot write NANOS
+    val dir = tmp("footer_nanos")
+    rmrf(dir)
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,true));
+        |  optional int64 local_ts (TIMESTAMP(MICROS,false));
+        |  optional binary event_type (STRING);
+        |  optional binary raw;
+        |}""".stripMargin)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456000L)
+      .append("local_ts", 1700000000123456L).append("event_type", "click")
+      .append("raw", "bytes"))
+    finally w.close()
+    withConf(NanosAsLong, "true") {
+      assertInferred(dir)
+      val s = CorpusIO.readParquet(spark, dir).schema
+      assert(s("ts").dataType === LongType)
+      assert(s("local_ts").dataType === TimestampNTZType)
+      assert(s("event_type").dataType === StringType)
+      withConf("spark.sql.parquet.binaryAsString", "true") {
+        assertInferred(dir)
+        assert(CorpusIO.readParquet(spark, dir).schema("raw").dataType === StringType)
+      }
+      assert(CorpusIO.readParquet(spark, dir).select($"ts").as[Long].head() === 1700000000123456000L)
+    }
+  }
+
+  test("readParquet: a missing path or an empty dir fails at construct as Spark's read does") {
+    val missing = tmp("footer_missing")
+    rmrf(missing)
+    val e = intercept[AnalysisException](CorpusIO.readParquet(spark, missing))
+    assert(e.getMessage.contains("graft_iospec_footer_missing"), e.getMessage)
+    val empty = tmp("footer_empty")
+    rmrf(empty)
+    new java.io.File(empty).mkdirs()
+    val ours = intercept[AnalysisException](CorpusIO.readParquet(spark, empty))
+    val spark0 = intercept[AnalysisException](spark.read.parquet(empty))
+    assert(ours.getCondition === spark0.getCondition, ours.getMessage)
+  }
+
+  /** Spark jobs that `body` starts on this thread. A marker job runs
+    * after `body`: listener events arrive in order, so once its end is
+    * seen every earlier job start has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val markerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerId = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") markerId = e.jobId
+          else started.incrementAndGet()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId) markerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "construct")
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerEnded.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never ended")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("building a board row starts no Spark job once its first-touch builds exist") {
+    val sf = s"$testdata/sf0.001"
+    val rows = Seq("dedup_containment_cjkdict", "dedup_containment_thaidict",
+      "mm_decode_meta", "mm_phash", "mm_features", "dedup_simhash_keeper",
+      "rpc_correlation", "entity_latest_state")
+    rows.foreach(q => SparkEntry.queries(q)(spark, sf))   // first-touch builds
+    val started = rows.map(q => q -> jobsDuring(SparkEntry.queries(q)(spark, sf)))
+    assert(started.forall(_._2 == 0), s"jobs started while building: $started")
   }
 }
