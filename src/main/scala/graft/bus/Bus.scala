@@ -1,9 +1,8 @@
 package graft.bus
 
 import graft.envelope._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** The pluggable bus abstraction (reference: typebus/src/main/scala/io/
   * surfkit/typebus/bus/package.scala — `Publisher`/`Consumer`).
@@ -35,13 +34,15 @@ trait Bus {
     */
   def publish[T: Encoder](events: Seq[T], key: Option[T => String] = None): Unit
 
-  /** One fresh envelope per event for [[publish]]: payloads encoded
-    * through [[encodePayloads]], event type = the payload type's FQN.
+  /** One fresh envelope per event for [[publish]]: JSON payloads written
+    * through the engine ([[graft.envelope.PayloadCodec.payloads]]), so they
+    * are byte-identical to columnar-built ones; event type = the payload
+    * type's FQN.
     */
   protected def envelopesOf[T](events: Seq[T], key: Option[T => String])
                               (implicit enc: Encoder[T]): Seq[PublishedEvent] = {
     val fqn = EnvelopeCodec.fqnOf[T]
-    events.zip(encodePayloads(events)).map { case (e, payload) =>
+    events.zip(EnvelopeCodec.payloads(spark, events)).map { case (e, payload) =>
       PublishedEvent(
         EventMeta(
           eventId = java.util.UUID.randomUUID().toString,
@@ -76,17 +77,6 @@ trait Bus {
 
   /** All topics ever published/subscribed. */
   def topics: Set[String]
-
-  /** Serialize a typed batch to wire payloads THROUGH THE ENGINE — the
-    * same `to_json(struct(...))` path [[graft.envelope.EnvelopeCodec.encode]]
-    * uses, so driver-built envelopes (RPC clients, testkit publishes) are
-    * byte-identical to columnar-built ones for every encodable type.
-    */
-  def encodePayloads[T](events: Seq[T])(implicit enc: Encoder[T]): Seq[Array[Byte]] = {
-    val ds = spark.createDataset(events)(enc)
-    ds.select(to_json(struct(ds.columns.toIndexedSeq.map(col): _*)).as("j"))
-      .collect().map(_.getString(0).getBytes("UTF-8")).toSeq
-  }
 }
 
 /** In-memory bus over `MemoryStream` — the Structured Streaming analog of

@@ -3,7 +3,7 @@ package graft.envelope
 import org.apache.avro.{JsonProperties, LogicalTypes, Schema}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,9 +22,9 @@ import scala.jdk.CollectionConverters._
   * schema + one reused `GenericDatumWriter`/`Reader` and recycled
   * binary encoder/decoder per partition (no per-row setup) — a narrow
   * per-row transform, zero shuffle, streaming-safe. The envelope
-  * (`meta` struct, `uuid()`, reply threading) stays columnar and shares
-  * [[EnvelopeCodec]]'s shape, so routing/sinks/RPC work unchanged on
-  * Avro payloads.
+  * (`meta` struct, `uuid()`, reply threading) is [[PayloadCodec]]'s,
+  * shared with [[EnvelopeCodec]], so routing/sinks/RPC work unchanged on
+  * Avro payloads; this codec supplies only `writePayload` and `parse`.
   *
   * Decode failure semantics match [[EnvelopeCodec]]: undecodable
   * payloads are DROPPED from the typed view (resume-on-any-error,
@@ -146,182 +146,65 @@ object AvroPayloadCodec extends PayloadCodec {
       case (_, x) => x
     }
 
-  /** Per-partition Avro writer over rows whose column `structIdx` holds
-    * the payload struct: one parsed schema, one writer, recycled encoder.
+  /** One parsed schema, one reused writer and a recycled binary encoder:
+    * payload row → Avro bytes. Build it once per partition (or batch).
     */
-  private def writeIter(it: Iterator[Row], structIdx: Int, st: StructType,
-                        schemaJson: String)(build: (Row, Array[Byte]) => Row): Iterator[Row] = {
+  private def writer(schemaJson: String, st: StructType): Row => Array[Byte] = {
     val sch = new Schema.Parser().parse(schemaJson)
-    val writer = new GenericDatumWriter[GenericRecord](sch)
+    val w = new GenericDatumWriter[GenericRecord](sch)
     val baos = new ByteArrayOutputStream()
     var encoder: BinaryEncoder = null
-    it.map { r =>
+    r => {
       baos.reset()
       encoder = EncoderFactory.get().binaryEncoder(baos, encoder)
-      writer.write(toAvro(r.getStruct(structIdx), st, sch).asInstanceOf[GenericRecord], encoder)
-      encoder.flush()
-      build(r, baos.toByteArray)
-    }
-  }
-
-  /** JVM-side single-batch payload writer — the Avro analog of
-    * [[graft.bus.Bus.encodePayloads]] for driver-built envelopes (tests,
-    * RPC clients). Row values must follow the given Spark schema.
-    */
-  def writeRows(rows: Seq[Row], st: StructType, name: String): Seq[Array[Byte]] = {
-    val sch = avroSchemaOf(st, name)
-    val writer = new GenericDatumWriter[GenericRecord](sch)
-    val baos = new ByteArrayOutputStream()
-    var encoder: BinaryEncoder = null
-    rows.map { r =>
-      baos.reset()
-      encoder = EncoderFactory.get().binaryEncoder(baos, encoder)
-      writer.write(toAvro(r, st, sch).asInstanceOf[GenericRecord], encoder)
+      w.write(toAvro(r, st, sch).asInstanceOf[GenericRecord], encoder)
       encoder.flush()
       baos.toByteArray
     }
   }
 
-  override def encode[T](ds: Dataset[T], keyExpr: Option[Column],
-                         correlationId: Option[Column],
-                         responseTo: Option[Column],
-                         directReplyService: Option[String])
-                        (implicit enc: Encoder[T]): DataFrame = {
-    val fqn = EnvelopeCodec.fqnOf[T]
-    val st = enc.schema
-    val schemaJson = avroSchemaOf(st, fqn).toString
-    val flat = ds.toDF()
-    val pre = flat.select(
-      struct(flat.columns.toIndexedSeq.map(col): _*).as("__p"),
-      keyExpr.map(_.cast(StringType)).getOrElse(lit(null).cast(StringType)).as("__key"),
-      correlationId.getOrElse(lit(null).cast(StringType)).cast(StringType).as("__corr"),
-      responseTo.getOrElse(lit(null).cast(StringType)).cast(StringType).as("__resp"))
-    val bytesSchema = StructType(Seq(
-      StructField("__key", StringType, nullable = true),
-      StructField("__corr", StringType, nullable = true),
-      StructField("__resp", StringType, nullable = true),
+  /** JVM-side single-batch payload writer for driver-built envelopes
+    * (tests, RPC clients) from plain rows. Row values must follow the
+    * given Spark schema.
+    */
+  def writeRows(rows: Seq[Row], st: StructType, name: String): Seq[Array[Byte]] =
+    rows.map(writer(avroSchemaOf(st, name).toString, st))
+
+  protected def writePayload(df: DataFrame, st: StructType, name: String): DataFrame = {
+    val schemaJson = avroSchemaOf(st, name).toString
+    val i = df.schema.fieldIndex("payload")
+    val out = StructType(df.schema.fields.updated(i,
       StructField("payload", BinaryType, nullable = false)))
-    val withBytes = pre.mapPartitions(it =>
-      writeIter(it, 0, st, schemaJson)((r, b) => Row(r.get(1), r.get(2), r.get(3), b))
-    )(Encoders.row(bytesSchema))
-    val reply = directReplyService match {
-      case Some(svc) => struct(lit("").as("path"), lit(svc).as("service"))
-      case None => lit(null).cast(EnvelopeCodec.metaSchema("directReply").dataType)
-    }
-    withBytes.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(fqn).as("eventType"),
-        col("__corr").as("correlationId"),
-        lit(false).as("trace"),
-        reply.as("directReply"),
-        col("__key").as("key"),
-        lit(null).cast(StringType).as("socketId"),
-        col("__resp").as("responseTo"),
-        map().cast(MapType(StringType, StringType)).as("extra"),
-        current_timestamp().as("occurredAt")
-      ).as("meta"),
-      col("payload"))
+    df.mapPartitions { it =>
+      val write = writer(schemaJson, st)
+      it.map(r => Row.fromSeq(r.toSeq.updated(i, write(r.getStruct(i)))))
+    }(Encoders.row(out))
   }
 
-  /** Internal: decode to (meta, value, err) rows — value is the payload
-    * struct on success, err the failure text otherwise (the Avro analog
-    * of [[EnvelopeCodec]]'s corrupt-record canary).
+  /** Decode to (meta, value, err) rows — value is the payload struct on
+    * success, err the failure text otherwise (the Avro analog of
+    * [[EnvelopeCodec]]'s corrupt-record canary).
     */
-  private def parsedAvro[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val fqn = EnvelopeCodec.fqnOf[T]
+  protected def parse[T](df: DataFrame)(implicit enc: Encoder[T]): PayloadCodec.Parsed = {
     val st = enc.schema
-    val schemaJson = avroSchemaOf(st, fqn).toString
+    val schemaJson = avroSchemaOf(st, EnvelopeCodec.fqnOf[T]).toString
     val outSchema = StructType(Seq(
       StructField("meta", EnvelopeCodec.metaSchema, nullable = false),
       StructField("value", st, nullable = true),
       StructField("err", StringType, nullable = true)))
-    df.filter(col("meta.eventType") === fqn)
-      .select(col("meta"), col("payload"))
-      .mapPartitions { it =>
-        val sch = new Schema.Parser().parse(schemaJson)
-        val reader = new GenericDatumReader[GenericRecord](sch)
-        var decoder: BinaryDecoder = null
-        it.map { r =>
-          try {
-            decoder = DecoderFactory.get().binaryDecoder(r.getAs[Array[Byte]](1), decoder)
-            val rec = reader.read(null, decoder)
-            Row(r.getStruct(0), fromAvro(rec, st), null)
-          } catch {
-            case e: Throwable => Row(r.getStruct(0), null, String.valueOf(e))
-          }
+    val frame = df.select(col("meta"), col("payload")).mapPartitions { it =>
+      val sch = new Schema.Parser().parse(schemaJson)
+      val reader = new GenericDatumReader[GenericRecord](sch)
+      var decoder: BinaryDecoder = null
+      it.map { r =>
+        try {
+          decoder = DecoderFactory.get().binaryDecoder(r.getAs[Array[Byte]](1), decoder)
+          Row(r.getStruct(0), fromAvro(reader.read(null, decoder), st), null)
+        } catch {
+          case e: Throwable => Row(r.getStruct(0), null, String.valueOf(e))
         }
-      }(Encoders.row(outSchema))
-  }
-
-  override def decodeTyped[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[T] =
-    parsedAvro[T](df).where(col("value").isNotNull)
-      .select("value.*").as[T]
-
-  override def decodeWithMeta[T](df: DataFrame)
-                                (implicit enc: Encoder[T]): Dataset[(T, EventMeta)] = {
-    implicit val metaEnc: Encoder[EventMeta] = Encoders.product[EventMeta]
-    implicit val tupleEnc: Encoder[(T, EventMeta)] = Encoders.tuple(enc, metaEnc)
-    parsedAvro[T](df).where(col("value").isNotNull)
-      .select(col("value").as("_1"), col("meta").as("_2"))
-      .as[(T, EventMeta)]
-  }
-
-  override def decodeFailures[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val fqn = EnvelopeCodec.fqnOf[T]
-    implicit val excEnc: Encoder[ServiceException] = Encoders.product[ServiceException]
-    implicit val metaEnc: Encoder[EventMeta] = Encoders.product[EventMeta]
-    implicit val tupleEnc: Encoder[(ServiceException, EventMeta)] =
-      Encoders.tuple(excEnc, metaEnc)
-    val pairs = parsedAvro[T](df).where(col("err").isNotNull)
-      .select(
-        struct(
-          concat(lit(s"payload for $fqn failed to deserialize: "),
-            substring(col("err"), 1, 256)).as("message"),
-          lit("DeserializationException").as("throwableType"),
-          array().cast("array<string>").as("stackTrace"),
-          map().cast(MapType(StringType, StringType)).as("extra")
-        ).as("_1"),
-        col("meta").as("_2"))
-      .as[(ServiceException, EventMeta)]
-    // encodeReply threads exactly the F4 reply meta: responseTo = failed
-    // event's id, correlation/trace/directReply/extra carried over
-    encodeReply[ServiceException](pairs)
-  }
-
-  override def encodeReply[U](ds: Dataset[(U, EventMeta)], keyExpr: Option[Column])
-                             (implicit enc: Encoder[U]): DataFrame = {
-    val fqn = EnvelopeCodec.fqnOf[U]
-    val st = enc.schema
-    val schemaJson = avroSchemaOf(st, fqn).toString
-    // payload columns top-level so keyExpr written against U's fields
-    // resolves (same convention as the JSON codec)
-    val flat = ds.toDF().select(col("_2").as("__in_meta"), col("_1.*"))
-    val payloadCols = flat.columns.filter(_ != "__in_meta").map(col).toIndexedSeq
-    val pre = flat.select(
-      struct(payloadCols: _*).as("__p"),
-      col("__in_meta"),
-      keyExpr.map(_.cast(StringType)).getOrElse(lit(null).cast(StringType)).as("__key"))
-    val bytesSchema = StructType(Seq(
-      StructField("__in_meta", EnvelopeCodec.metaSchema, nullable = false),
-      StructField("__key", StringType, nullable = true),
-      StructField("payload", BinaryType, nullable = false)))
-    val withBytes = pre.mapPartitions(it =>
-      writeIter(it, 0, st, schemaJson)((r, b) => Row(r.get(1), r.get(2), b))
-    )(Encoders.row(bytesSchema))
-    withBytes.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(fqn).as("eventType"),
-        col("__in_meta.correlationId").as("correlationId"),
-        col("__in_meta.trace").as("trace"),
-        col("__in_meta.directReply").as("directReply"),
-        col("__key").as("key"),
-        col("__in_meta.socketId").as("socketId"),
-        col("__in_meta.eventId").as("responseTo"),
-        col("__in_meta.extra").as("extra"),
-        current_timestamp().as("occurredAt")
-      ).as("meta"),
-      col("payload"))
+      }
+    }(Encoders.row(outSchema))
+    PayloadCodec.Parsed(frame, col("value").isNotNull, col("value"), col("err"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.envelope
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,25 +63,150 @@ final case class ServiceException(
   * scala/io/surfkit/typebus/Typebus.scala:20-64), which lets it swap Avro
   * binary and Avro-JSON serde behind one bus.
   *
+  * The envelope is written once, here: [[encode]], [[encodeReply]],
+  * [[decodeTyped]], [[decodeWithMeta]], [[decodeFailures]] and the
+  * driver-side [[payloads]] build every meta struct through
+  * [[EnvelopeCodec.meta]]/[[EnvelopeCodec.replyMeta]]. A codec supplies
+  * only its bytes:
+  *  - [[writePayload]] replaces the payload struct column `payload` with
+  *    its BINARY bytes, keeping every other column;
+  *  - [[parse]] reads the `payload` of envelopes already filtered to T's
+  *    event type into a [[PayloadCodec.Parsed]] frame that keeps `meta`.
+  *
   * Implementations: [[EnvelopeCodec]] (JSON-in-binary, fully columnar —
   * the reference's `AvroJsonStream` analog, Mapper.scala:131-158) and
   * [[AvroPayloadCodec]] (Avro binary via GenericDatumWriter/Reader —
   * the reference's default `AvroByteStreams`, Mapper.scala:11-121).
   */
 trait PayloadCodec {
+  import EnvelopeCodec.{fqnOf, meta, replyMeta}
+
+  /** `df` with its `payload` column (a struct of schema `st`, the payload
+    * type named `name`) replaced by the serialized BINARY bytes.
+    */
+  protected def writePayload(df: DataFrame, st: StructType, name: String): DataFrame
+
+  /** Parse the `payload` of `df` (envelopes of T's event type only). */
+  protected def parse[T](df: DataFrame)(implicit enc: Encoder[T]): PayloadCodec.Parsed
+
+  private def parsed[T](df: DataFrame)(implicit enc: Encoder[T]): PayloadCodec.Parsed =
+    parse[T](df.filter(col("meta.eventType") === fqnOf[T]))
+
+  /** Envelope rows: `payload` (a struct over `df`, schema `st`) goes
+    * through [[writePayload]] next to the `carry` columns, then `meta` is
+    * built over those. Every payload write precedes its meta, so a codec
+    * that serializes outside the plan still sees the meta inputs.
+    */
+  private def envelope(df: DataFrame, carry: Seq[Column], payload: Column,
+                       st: StructType, name: String)(header: Column): DataFrame =
+    writePayload(df.select(carry :+ payload.as("payload"): _*), st, name)
+      .select(header.as("meta"), col("payload"))
+
+  private def keyOf(keyExpr: Option[Column]): Column =
+    keyExpr.getOrElse(lit(null).cast(StringType))
+
+  /** Wrap a typed dataset into fresh envelope rows. `keyExpr` is the
+    * partition key extractor (reference: bus/package.scala:32-46
+    * `StreamBuilder.withPartitionKey`); it becomes the Kafka message key /
+    * shuffle key downstream.
+    */
   def encode[T](ds: Dataset[T], keyExpr: Option[Column] = None,
                 correlationId: Option[Column] = None,
                 responseTo: Option[Column] = None,
                 directReplyService: Option[String] = None)
-               (implicit enc: Encoder[T]): DataFrame
-  def decodeTyped[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[T]
-  def decodeWithMeta[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[(T, EventMeta)]
-  def decodeFailures[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame
+               (implicit enc: Encoder[T]): DataFrame = {
+    val flat = ds.toDF()
+    val none = lit(null).cast(StringType)
+    envelope(flat,
+      Seq(keyOf(keyExpr).as("__key"), correlationId.getOrElse(none).as("__corr"),
+        responseTo.getOrElse(none).as("__resp")),
+      struct(flat.columns.toIndexedSeq.map(col): _*), enc.schema, fqnOf[T])(
+      meta(lit(fqnOf[T]), correlationId = col("__corr"), key = col("__key"),
+        responseTo = col("__resp"),
+        directReply = directReplyService.fold(EnvelopeCodec.noReply)(svc =>
+          struct(lit("").as("path"), lit(svc).as("service")))))
+  }
+
+  /** Build REPLY envelopes from `(U, inputMeta)` pairs under
+    * [[EnvelopeCodec.replyMeta]] — what closes the RPC loop:
+    * [[graft.rpc.Rpc.correlate]] joins `request.eventId === reply.responseTo`.
+    * `keyExpr` is written against U's fields.
+    */
   def encodeReply[U](ds: Dataset[(U, EventMeta)], keyExpr: Option[Column] = None)
-                    (implicit enc: Encoder[U]): DataFrame
+                    (implicit enc: Encoder[U]): DataFrame = {
+    // payload columns top-level (so keyExpr resolves), input meta under a
+    // reserved name
+    val flat = ds.toDF().select(col("_2").as("__in_meta"), col("_1.*"))
+    val payload = struct(flat.columns.filter(_ != "__in_meta").map(col).toIndexedSeq: _*)
+    envelope(flat, Seq(col("__in_meta"), keyOf(keyExpr).as("__key")), payload,
+      enc.schema, fqnOf[U])(replyMeta(col("__in_meta"), fqnOf[U], col("__key")))
+  }
+
+  /** Typed payloads of T's envelopes. Unusable payloads are DROPPED,
+    * matching the reference's resume-on-any-error supervision
+    * (KafkaBus.scala:109-112): a poison message must not kill the stream.
+    * Route them to an error report via [[decodeFailures]] (F4). Mirrors
+    * the reader-lookup-by-eventType dispatch (reference:
+    * bus/package.scala:141-142).
+    */
+  def decodeTyped[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[T] = {
+    val p = parsed[T](df)
+    p.frame.where(p.ok).select(p.value.as("value")).select("value.*").as[T]
+  }
+
+  /** [[decodeTyped]] keeping the metadata — the shape the reference's
+    * handlers see: `(T, EventMeta)` (reference: bus/package.scala:143-150,
+    * handlers are `(T, EventMeta) => Future[U]`).
+    */
+  def decodeWithMeta[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[(T, EventMeta)] = {
+    val p = parsed[T](df)
+    p.frame.where(p.ok).select(p.value.as("_1"), col("meta").as("_2"))
+      .as[(T, EventMeta)](Encoders.tuple(enc, Encoders.product[EventMeta]))
+  }
+
+  /** F4: the error side-channel — T's envelopes whose payload failed to
+    * deserialize, as `ServiceException` reply envelopes addressed to the
+    * failed event, with no key (reference: `Publisher.produceErrorReport`,
+    * bus/package.scala:93-125 — any handler/decode failure becomes a
+    * published ServiceException instead of a stream death).
+    */
+  def decodeFailures[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
+    val p = parsed[T](df)
+    val excFqn = classOf[ServiceException].getName
+    val report = struct(
+      concat(lit(s"payload for ${fqnOf[T]} failed to deserialize: "),
+        substring(p.err, 1, 256)).as("message"),
+      lit("DeserializationException").as("throwableType"),
+      array().cast("array<string>").as("stackTrace"),
+      map().cast(MapType(StringType, StringType)).as("extra"))
+    envelope(p.frame.where(!p.ok), Seq(col("meta")), report,
+      Encoders.product[ServiceException].schema, excFqn)(
+      replyMeta(col("meta"), excFqn, lit(null).cast(StringType)))
+  }
+
+  /** Driver-side payload bytes of a typed batch, written THROUGH THE
+    * ENGINE by [[writePayload]], so driver-built envelopes (RPC clients,
+    * testkit publishes) are byte-identical to columnar-built ones. A
+    * collect of the batch itself: for small driver batches only.
+    */
+  def payloads[T](spark: SparkSession, events: Seq[T])
+                 (implicit enc: Encoder[T]): Seq[Array[Byte]] = {
+    val df = spark.createDataset(events).toDF()
+    writePayload(df.select(struct(df.columns.toIndexedSeq.map(col): _*).as("payload")),
+      enc.schema, fqnOf[T]).collect().map(_.getAs[Array[Byte]](0)).toSeq
+  }
 }
 
-/** Envelope codec: typed `Dataset[T]` ↔ enveloped `DataFrame`.
+object PayloadCodec {
+  /** A codec's parse of T's envelopes: `frame` keeps the input `meta`;
+    * `ok` marks a usable payload; `value` (T's struct) is read only where
+    * `ok` holds and `err` (the failure text) only where it does not.
+    */
+  final case class Parsed(frame: DataFrame, ok: Column, value: Column, err: Column)
+}
+
+/** Envelope codec: the meta builders every envelope shares, and the
+  * JSON-in-binary payload codec.
   *
   * The reference's DEFAULT serde is Avro binary via avro4s
   * (reference: typebus/src/main/scala/io/surfkit/typebus/Mapper.scala:46-67)
@@ -124,132 +249,67 @@ object EnvelopeCodec extends PayloadCodec {
     StructField("payload", BinaryType, nullable = false)
   ))
 
-  /** Wrap a typed dataset into envelope rows. `keyExpr` is the partition
-    * key extractor (reference: bus/package.scala:32-46
-    * `StreamBuilder.withPartitionKey`); it becomes the Kafka message key /
-    * shuffle key downstream.
+  /** A NULL reply address. */
+  val noReply: Column = lit(null).cast(metaSchema("directReply").dataType)
+
+  /** The one builder of a meta struct (field-for-field the reference's
+    * `EventMeta`, in [[metaSchema]] order): a fresh `uuid()` eventId, the
+    * given fields, and NULL / false / an empty `extra` / now for the rest.
     */
-  override def encode[T](ds: Dataset[T], keyExpr: Option[Column],
-                         correlationId: Option[Column],
-                         responseTo: Option[Column],
-                         directReplyService: Option[String])
-                        (implicit enc: Encoder[T]): DataFrame = {
-    val fqn = fqnOf[T]
-    val reply = directReplyService match {
-      case Some(svc) => struct(lit("").as("path"), lit(svc).as("service"))
-      case None      => lit(null).cast(metaSchema("directReply").dataType)
-    }
-    ds.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(fqn).as("eventType"),
-        correlationId.getOrElse(lit(null).cast(StringType)).as("correlationId"),
-        lit(false).as("trace"),
-        reply.as("directReply"),
-        keyExpr.map(_.cast(StringType)).getOrElse(lit(null).cast(StringType)).as("key"),
-        lit(null).cast(StringType).as("socketId"),
-        responseTo.getOrElse(lit(null).cast(StringType)).as("responseTo"),
-        map().cast(MapType(StringType, StringType)).as("extra"),
-        current_timestamp().as("occurredAt")
-      ).as("meta"),
-      to_json(struct(ds.columns.map(col).toIndexedSeq: _*)).cast(BinaryType).as("payload")
-    )
-  }
+  def meta(eventType: Column,
+           correlationId: Column = lit(null),
+           trace: Column = lit(false),
+           directReply: Column = noReply,
+           key: Column = lit(null),
+           socketId: Column = lit(null),
+           responseTo: Column = lit(null),
+           extra: Column = map().cast(MapType(StringType, StringType)),
+           occurredAt: Column = current_timestamp()): Column =
+    struct(
+      expr("uuid()").as("eventId"),
+      eventType.as("eventType"),
+      correlationId.cast(StringType).as("correlationId"),
+      trace.as("trace"),
+      directReply.as("directReply"),
+      key.cast(StringType).as("key"),
+      socketId.cast(StringType).as("socketId"),
+      responseTo.cast(StringType).as("responseTo"),
+      extra.as("extra"),
+      occurredAt.as("occurredAt"))
 
-  /** Unwrap envelope rows of a given payload type back into `(T, meta)`.
-    * Mirrors the reader-lookup-by-eventType dispatch
-    * (reference: bus/package.scala:141-142).
+  /** The reference's replyAndCommit rule (KafkaBus.scala:136-182): a
+    * fresh event of `eventType` answering the meta struct `in` —
+    * `responseTo = in.eventId`; correlationId, trace, directReply,
+    * socketId and extra threaded from `in`; occurredAt = now.
     */
-  def decode[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val fqn = fqnOf[T]
-    df.filter(col("meta.eventType") === fqn)
-      .select(col("meta"), from_json(col("payload").cast(StringType), enc.schema).as("value"))
-  }
+  def replyMeta(in: Column, eventType: String, key: Column): Column =
+    meta(lit(eventType),
+      correlationId = in("correlationId"), trace = in("trace"),
+      directReply = in("directReply"), key = key, socketId = in("socketId"),
+      responseTo = in("eventId"), extra = in("extra"))
 
-  /** Internal: parse payload JSON with a corrupt-record canary column.
-    * PERMISSIVE from_json yields an all-null struct (not a NULL struct)
-    * for malformed input, so "did it parse" needs the canary; "is it
-    * usable" additionally needs every non-nullable field present (a
-    * valid-JSON `{"n": null}` against a non-nullable Int would otherwise
-    * kill the stream with NOT_NULL_ASSERT_VIOLATION at deserialization).
+  /** JSON payload bytes: `to_json` of the payload struct. */
+  protected def writePayload(df: DataFrame, st: StructType, name: String): DataFrame =
+    df.withColumn("payload", to_json(col("payload")).cast(BinaryType))
+
+  /** JSON parse with a corrupt-record canary column. PERMISSIVE from_json
+    * yields an all-null struct (not a NULL struct) for malformed input,
+    * so "did it parse" needs the canary; "is it usable" additionally
+    * needs every non-nullable field present (a valid-JSON `{"n": null}`
+    * against a non-nullable Int would otherwise kill the stream with
+    * NOT_NULL_ASSERT_VIOLATION at deserialization).
     */
-  private val Corrupt = "_graft_corrupt"
-
-  private def parsed[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val fqn = fqnOf[T]
-    val pschema = enc.schema.add(Corrupt, StringType)
-    df.filter(col("meta.eventType") === fqn)
-      .select(col("meta"),
-        from_json(col("payload").cast(StringType), pschema,
-          Map("columnNameOfCorruptRecord" -> Corrupt)).as("pv"))
-  }
-
-  private def okCond[T](implicit enc: Encoder[T]): Column =
-    enc.schema.fields.filterNot(_.nullable)
+  protected def parse[T](df: DataFrame)(implicit enc: Encoder[T]): PayloadCodec.Parsed = {
+    val corrupt = "_graft_corrupt"
+    val frame = df.select(col("meta"),
+      from_json(col("payload").cast(StringType), enc.schema.add(corrupt, StringType),
+        Map("columnNameOfCorruptRecord" -> corrupt)).as("pv"))
+    val ok = enc.schema.fields.filterNot(_.nullable)
       .map(f => col(s"pv.${f.name}").isNotNull)
-      .foldLeft(col("pv").isNotNull && col(s"pv.$Corrupt").isNull)(_ && _)
-
-  private def payloadStruct[T](implicit enc: Encoder[T]): Column =
-    struct(enc.schema.fieldNames.toIndexedSeq.map(n => col(s"pv.$n").as(n)): _*)
-
-  /** Typed view of [[decode]] — payload only. Unusable payloads (corrupt
-    * JSON or missing non-nullable fields) are DROPPED, matching the
-    * reference's resume-on-any-error supervision (KafkaBus.scala:109-112):
-    * a poison message must not kill the stream. Route them to an error
-    * report via [[decodeFailures]] (F4).
-    */
-  override def decodeTyped[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[T] =
-    parsed[T](df).where(okCond[T])
-      .select(payloadStruct[T].as("value")).select("value.*").as[T]
-
-  /** Typed view of [[decode]] keeping the metadata — the shape the
-    * reference's handlers see: `(T, EventMeta)` (reference:
-    * bus/package.scala:143-150, handlers are `(T, EventMeta) => Future[U]`).
-    * Unusable payloads are dropped (see [[decodeTyped]]).
-    */
-  override def decodeWithMeta[T](df: DataFrame)
-                                (implicit enc: Encoder[T]): Dataset[(T, EventMeta)] = {
-    implicit val metaEnc: Encoder[EventMeta] =
-      org.apache.spark.sql.Encoders.product[EventMeta]
-    implicit val tupleEnc: Encoder[(T, EventMeta)] =
-      org.apache.spark.sql.Encoders.tuple(enc, metaEnc)
-    parsed[T](df).where(okCond[T])
-      .select(payloadStruct[T].as("_1"), col("meta").as("_2"))
-      .as[(T, EventMeta)]
-  }
-
-  /** F4: the error side-channel — envelopes whose payload failed to
-    * deserialize (corrupt JSON or missing non-nullable fields), as
-    * `ServiceException` reply envelopes addressed to the failed event
-    * (reference: `Publisher.produceErrorReport`, bus/package.scala:93-125
-    * — any handler/decode failure becomes a published ServiceException
-    * instead of a stream death).
-    */
-  override def decodeFailures[T](df: DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val fqn = fqnOf[T]
-    val bad = parsed[T](df).where(!okCond[T])
-      .withColumn("payload",
-        coalesce(col(s"pv.$Corrupt"), lit("<missing non-nullable field>")))
-    bad.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(classOf[ServiceException].getName).as("eventType"),
-        col("meta.correlationId").as("correlationId"),
-        col("meta.trace").as("trace"),
-        col("meta.directReply").as("directReply"),
-        lit(null).cast(StringType).as("key"),
-        col("meta.socketId").as("socketId"),
-        col("meta.eventId").as("responseTo"),
-        col("meta.extra").as("extra"),
-        current_timestamp().as("occurredAt")
-      ).as("meta"),
-      to_json(struct(
-        concat(lit(s"payload for $fqn failed to deserialize: "),
-          substring(col("payload").cast(StringType), 1, 256)).as("message"),
-        lit("DeserializationException").as("throwableType"),
-        array().cast("array<string>").as("stackTrace"),
-        map().cast(MapType(StringType, StringType)).as("extra")
-      )).cast(BinaryType).as("payload"))
+      .foldLeft(col("pv").isNotNull && col(s"pv.$corrupt").isNull)(_ && _)
+    val value = struct(enc.schema.fieldNames.toIndexedSeq.map(n => col(s"pv.$n").as(n)): _*)
+    PayloadCodec.Parsed(frame, ok, value,
+      coalesce(col(s"pv.$corrupt"), lit("<missing non-nullable field>")))
   }
 
   /** K1+K2 publish routing, computed IN THE PLAN (executor side): every
@@ -268,36 +328,5 @@ object EnvelopeCodec extends PayloadCodec {
         array(lit(outTopic), col("meta.directReply.service")))
       .otherwise(array(lit(outTopic)))
     envelopes.select(explode(topics).as("topic"), col("meta"), col("payload"))
-  }
-
-  /** Build REPLY envelopes from `(U, inputMeta)` pairs — the reference's
-    * replyAndCommit enrichment (KafkaBus.scala:136-182): fresh eventId,
-    * eventType = U's FQN, `responseTo = in.eventId`, correlationId /
-    * trace / directReply / extra threaded from the input meta, occurredAt
-    * = now. This is what closes the RPC loop: [[graft.rpc.Rpc.correlate]]
-    * joins `request.eventId === reply.responseTo`.
-    */
-  override def encodeReply[U](ds: Dataset[(U, EventMeta)], keyExpr: Option[Column])
-                             (implicit enc: Encoder[U]): DataFrame = {
-    val fqn = fqnOf[U]
-    // payload columns top-level (so keyExpr written against U's fields
-    // resolves), input meta tucked under a reserved name
-    val flat = ds.toDF().select(col("_2").as("__in_meta"), col("_1.*"))
-    val payloadCols = flat.columns.filter(_ != "__in_meta").map(col).toIndexedSeq
-    flat.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(fqn).as("eventType"),
-        col("__in_meta.correlationId").as("correlationId"),
-        col("__in_meta.trace").as("trace"),
-        col("__in_meta.directReply").as("directReply"),
-        keyExpr.map(_.cast(StringType)).getOrElse(lit(null).cast(StringType)).as("key"),
-        col("__in_meta.socketId").as("socketId"),
-        col("__in_meta.eventId").as("responseTo"),
-        col("__in_meta.extra").as("extra"),
-        current_timestamp().as("occurredAt")
-      ).as("meta"),
-      to_json(struct(payloadCols: _*)).cast(BinaryType).as("payload")
-    )
   }
 }

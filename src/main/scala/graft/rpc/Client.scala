@@ -34,11 +34,9 @@ final class Client(val service: String, bus: Bus,
   def call[T](requests: Seq[T], correlationId: Option[String] = None)
              (implicit enc: Encoder[T]): Seq[String] = {
     val fqn = EnvelopeCodec.fqnOf[T]
-    val payloads = codec.encode(bus.spark.createDataset(requests)(enc))(enc)
-      .select("payload").collect().map(_.getAs[Array[Byte]](0)).toSeq
     val ids = requests.map(_ => java.util.UUID.randomUUID().toString)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    bus.publishEnvelopes(fqn, ids.zip(payloads).map { case (id, p) =>
+    bus.publishEnvelopes(fqn, ids.zip(codec.payloads(bus.spark, requests)).map { case (id, p) =>
       PublishedEvent(
         EventMeta(
           eventId = id, eventType = fqn,

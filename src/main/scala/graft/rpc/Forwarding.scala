@@ -1,6 +1,6 @@
 package graft.rpc
 
-import graft.envelope.RpcClient
+import graft.envelope.{EnvelopeCodec, RpcClient}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
@@ -25,18 +25,12 @@ object Forwarding {
         coalesce(col("meta.extra"), map().cast(MapType(StringType, StringType))),
         map(extra.flatMap { case (k, v) => Seq(lit(k), lit(v)) }.toSeq: _*))
     envelopes.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        col("meta.eventType").as("eventType"),
-        col("meta.correlationId").as("correlationId"),
-        col("meta.trace").as("trace"),
-        struct(lit(to.path).as("path"), lit(to.service).as("service")).as("directReply"),
-        col("meta.key").as("key"),
-        col("meta.socketId").as("socketId"),
-        col("meta.responseTo").as("responseTo"),
-        extraCol.as("extra"),
-        col("meta.occurredAt").as("occurredAt")
-      ).as("meta"),
+      EnvelopeCodec.meta(col("meta.eventType"),
+        correlationId = col("meta.correlationId"), trace = col("meta.trace"),
+        directReply = struct(lit(to.path).as("path"), lit(to.service).as("service")),
+        key = col("meta.key"), socketId = col("meta.socketId"),
+        responseTo = col("meta.responseTo"), extra = extraCol,
+        occurredAt = col("meta.occurredAt")).as("meta"),
       col("payload"))
   }
 }

@@ -3,7 +3,7 @@ package graft.service
 import graft.envelope.EnvelopeCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, MapType, StringType}
+import org.apache.spark.sql.types.BinaryType
 
 /** O1/O2: observability side-channels.
   *
@@ -49,18 +49,9 @@ object Traces {
       .where((lit(busTrace) || col("meta.trace")) &&
         !col("meta.eventType").isin(traceTypes.toSeq: _*))
       .select(
-        struct(
-          expr("uuid()").as("eventId"),
-          lit(kind).as("eventType"),
-          col("meta.correlationId").as("correlationId"),
-          lit(false).as("trace"), // self-trace suppression downstream
-          col("meta.directReply").as("directReply"),
-          lit(null).cast(StringType).as("key"),
-          lit(null).cast(StringType).as("socketId"),
-          col("meta.eventId").as("responseTo"),
-          map().cast(MapType(StringType, StringType)).as("extra"),
-          current_timestamp().as("occurredAt")
-        ).as("meta"),
+        // trace stays false: self-trace suppression downstream
+        EnvelopeCodec.meta(lit(kind), correlationId = col("meta.correlationId"),
+          directReply = col("meta.directReply"), responseTo = col("meta.eventId")).as("meta"),
         to_json(struct(
           struct(lit(service.name).as("name"), lit(service.id).as("id")).as("service"),
           to_json(col("meta")).as("eventMeta"),
@@ -83,18 +74,8 @@ object Traces {
       .option("rowsPerSecond", rowsPerSecond).load()
       .select(unix_millis(col("timestamp")).as("ts"))
     hb.select(
-      struct(
-        expr("uuid()").as("eventId"),
-        lit(classOf[Hb].getName).as("eventType"),
-        lit(null).cast(StringType).as("correlationId"),
-        lit(false).as("trace"),
-        lit(null).cast(EnvelopeCodec.metaSchema("directReply").dataType).as("directReply"),
-        lit(null).cast(StringType).as("key"),
-        lit(null).cast(StringType).as("socketId"),
-        lit(null).cast(StringType).as("responseTo"),
-        map().cast(MapType(StringType, StringType)).as("extra"),
-        timestamp_millis(col("ts")).as("occurredAt")
-      ).as("meta"),
+      EnvelopeCodec.meta(lit(classOf[Hb].getName),
+        occurredAt = timestamp_millis(col("ts"))).as("meta"),
       to_json(struct(col("ts"))).cast(BinaryType).as("payload"))
   }
 }
