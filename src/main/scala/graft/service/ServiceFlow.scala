@@ -52,11 +52,13 @@ object RetryPolicy {
   * Future[U]` handler becomes a typed map over `(T, EventMeta)` rows —
   * SURVEY.md §2 T1).
   */
-final case class StreamBuilder[T, U](
+final case class StreamBuilder(
     inFqn: String,
     outFqn: Option[String],
     transform: DataFrame => DataFrame,
-    partitionKey: Option[Column] = None,
+    /** Stored, not applied yet: [[ServiceFlow.start]] and
+      * [[ServiceFlow.startPublishing]] run `transform` without retrying.
+      */
     retry: Option[RetryPolicy] = None,
     isServiceStream: Boolean = false,
     /** F4 error side-channel: unparseable input envelopes → ServiceException
@@ -122,7 +124,7 @@ final class ServiceFlow(val name: String, val bus: Bus,
 
   val serviceId: String = java.util.UUID.randomUUID().toString
   private val startedAt = new java.sql.Timestamp(System.currentTimeMillis())
-  private val builders = new java.util.concurrent.CopyOnWriteArrayList[StreamBuilder[_, _]]()
+  private val builders = new java.util.concurrent.CopyOnWriteArrayList[StreamBuilder]()
 
   /** T1: typed request->response transform (reference: Service.scala:53-54
     * -> Module.op2, Module.scala:52-63). `f` runs per event with its
@@ -134,11 +136,11 @@ final class ServiceFlow(val name: String, val bus: Bus,
                           (implicit encT: Encoder[T], encU: Encoder[U]): ServiceFlow = {
     registry.register[T]()
     registry.register[U]()
-    val b = StreamBuilder[T, U](
+    val b = StreamBuilder(
       EnvelopeCodec.fqnOf[T], Some(EnvelopeCodec.fqnOf[U]),
       df => codec.encodeReply[U](
         mapWithMeta(codec.decodeWithMeta[T](df), f), partitionKey),
-      partitionKey, retry,
+      retry,
       failures = df => codec.decodeFailures[T](df))
     builders.add(b); this
   }
@@ -159,15 +161,14 @@ final class ServiceFlow(val name: String, val bus: Bus,
     implicit val keyedEnc: Encoder[(String, EventMeta)] =
       Encoders.tuple(Encoders.STRING, metaEnc)
     implicit val outEnc: Encoder[(S, EventMeta)] = Encoders.tuple(encS, metaEnc)
-    val b = StreamBuilder[T, S](
+    val b = StreamBuilder(
       EnvelopeCodec.fqnOf[T], Some(EnvelopeCodec.fqnOf[S]),
       df => {
         val reqs = codec.decodeWithMeta[T](df)
           .map { case (t, m) => (idOf(t), m) }
         val joined = reqs.joinWith(state, reqs("_1") === state("_1"), "inner")
         codec.encodeReply[S](joined.map { case ((_, m), (_, s)) => (s, m) })
-      },
-      None, None)
+      })
     builders.add(b); this
   }
 
@@ -179,10 +180,9 @@ final class ServiceFlow(val name: String, val bus: Bus,
   def registerSink[T](f: Dataset[(T, EventMeta)] => Unit)
                      (implicit encT: Encoder[T]): ServiceFlow = {
     registry.register[T]()
-    val b = StreamBuilder[T, Nothing](
+    val b = StreamBuilder(
       EnvelopeCodec.fqnOf[T], None,
-      df => { f(codec.decodeWithMeta[T](df)); spark.emptyDataFrame },
-      None, None)
+      df => { f(codec.decodeWithMeta[T](df)); spark.emptyDataFrame })
     builders.add(b); this
   }
 
@@ -193,11 +193,11 @@ final class ServiceFlow(val name: String, val bus: Bus,
                                  (implicit encT: Encoder[T], encU: Encoder[U]): ServiceFlow = {
     registry.register[T]()
     registry.register[U]()
-    val b = StreamBuilder[T, U](
+    val b = StreamBuilder(
       EnvelopeCodec.fqnOf[T], Some(EnvelopeCodec.fqnOf[U]),
       df => codec.encodeReply[U](
         mapWithMeta(codec.decodeWithMeta[T](df), f)),
-      None, None, isServiceStream = true)
+      isServiceStream = true)
     builders.add(b); this
   }
 
@@ -212,16 +212,6 @@ final class ServiceFlow(val name: String, val bus: Bus,
     implicit val outEnc: Encoder[(U, EventMeta)] = Encoders.tuple(encU, metaEnc)
     in.map { case (t, m) => (f(t, m), m) }
   }
-
-  /** T4: type-based dispatch over a merged envelope stream: first branch
-    * whose type matches wins; unhandled types raise, matching the
-    * reference's throw when no PF is defined (bus/package.scala:151).
-    * On a per-topic bus this is a no-op filter Catalyst prunes at source.
-    */
-  def dispatch(envelopes: DataFrame): Seq[(String, DataFrame)] =
-    builders.asScala.toSeq.map { b =>
-      b.inFqn -> b.transform(envelopes.filter(col("meta.eventType") === b.inFqn))
-    }
 
   /** Compile the registry into one StreamingQuery per handler — the
     * physical-plan build (reference: TypebusKafkaConsumer ctor,
