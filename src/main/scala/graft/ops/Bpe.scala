@@ -292,19 +292,19 @@ object Bpe {
       .where(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
       .where(col("f") >= minFreq)
+      .limit(math.min(maxVocab.toLong + 1, Int.MaxValue).toInt)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     // the maxJudges/maxPostings-convention guard on the driver-side
     // histogram: on heavy-tailed web text the DISTINCT-word count is
     // not vocabulary-bounded by construction — minFreq=1 collects the
-    // full tail. Two loud walls, zero extra jobs: the collect itself
-    // dies at spark.driver.maxResultSize for pathological sizes, and
-    // this require names the knobs for the fits-but-absurd band
-    // (50M words × ~30 B/entry ≈ 1.5 GB of driver state — past that,
-    // raise minFreq; a real trainer prunes singletons anyway).
+    // full tail. The limit bounds the collect at maxVocab + 1 words
+    // BEFORE any of it reaches the driver, and this require names the
+    // knobs (50M words × ~30 B/entry ≈ 1.5 GB of driver state — past
+    // that, raise minFreq; a real trainer prunes singletons anyway).
     require(hist.length <= maxVocab,
-      s"learnMergesLocal: histogram has ${hist.length} distinct words " +
-        s"(> maxVocab=$maxVocab) — raise minFreq (currently $minFreq) " +
-        s"to prune the tail before driver-side training")
+      s"learnMergesLocal: histogram has more than maxVocab=$maxVocab distinct " +
+        s"words — raise minFreq (currently $minFreq) to prune the tail " +
+        s"before driver-side training")
     val words: Array[Array[String]] = hist.map(_._1.map(_.toString).toArray)
     val freqs: Array[Long] = hist.map(_._2)
     val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]

@@ -121,6 +121,59 @@ class BpeSpec extends SparkSpec {
       minFreq = 3L, maxVocab = 3).nonEmpty)
   }
 
+  /** Summed `resultSize` of the result tasks (the ones that return rows
+    * to the driver) that `body` runs on this thread. A marker job runs
+    * after `body`: listener events arrive in order, so once its end is
+    * seen every earlier task end has been counted.
+    */
+  private def resultBytesDuring[A](body: => A): (A, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"result-bytes-${java.util.UUID.randomUUID}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val markerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerId = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") markerId = e.jobId
+          else e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ResultTask" && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId) markerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerEnded.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never ended")
+      (out, bytes.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("learnMergesLocal: the maxVocab guard fires before the histogram reaches the driver") {
+    // 20k distinct words against maxVocab = 3: the collect must stop at
+    // 4 words, so the result tasks return a few KB (task metrics and 4
+    // rows), not the whole histogram (~120 KB compressed)
+    val docs = spark.range(0, 20000, 1, 2).select(col("id").as("doc_id"),
+      concat(lit("distinctword"), col("id").cast("string")).as("text"))
+    val (e, bytes) = resultBytesDuring(intercept[IllegalArgumentException] {
+      Bpe.learnMergesLocal(docs, "text", k = 2, maxVocab = 3)
+    })
+    assert(e.getMessage.contains("more than maxVocab=3") && e.getMessage.contains("minFreq"),
+      e.getMessage)
+    assert(bytes < 16 * 1024, s"result tasks returned $bytes bytes to the driver")
+  }
+
   test("merge learning stops early when no eligible pair remains") {
     // single 2-char word: one merge exhausts every alnum pair
     val docs = Seq((1L, "ab")).toDF("doc_id", "text")
