@@ -110,6 +110,34 @@ object Dsir {
         row_number().over(Window.orderBy(col("w_sum").desc, col(id).asc)))
   }
 
+  /** Pass 1 of [[weightsFast]] and [[scoreStreaming]]: the per-bucket
+    * (target, raw) gram counts of `ref`, COLLECTED (B rows, metadata-sized
+    * — the [[PqIndex]]/contamination-guard precedent) and folded into the
+    * per-bucket weight literal `cnt_t·T_r − cnt_r·T_t` that
+    * `graft_bucket_score` scores against. One function, so the streaming
+    * gate and the batch weights cannot drift apart.
+    */
+  private def weightLiteral(ref: DataFrame, text: String, targetPred: Column,
+                            buckets: Int, wordGrain: ScalarGrain): String = {
+    val counts = graft.functions.VectorFunctions.attach(ref)
+      .select(targetPred.as("__is_t"),
+        explode(expr(s"graft_dsir_buckets($text, $buckets, '${wordGrain.name}')")).as("b"))
+      .groupBy(col("b")).agg(
+        sum(when(col("__is_t"), 1L).otherwise(0L)).as("cnt_t"),
+        count(lit(1)).as("cnt_r"))
+      .collect()
+    val cntT = new Array[Long](buckets)
+    val cntR = new Array[Long](buckets)
+    counts.foreach { r =>
+      val b = r.getLong(0).toInt
+      cntT(b) = r.getLong(1); cntR(b) = r.getLong(2)
+    }
+    val totT = cntT.sum
+    val totR = cntR.sum
+    Array.tabulate(buckets)(b => cntT(b) * totR - cntR(b) * totT)
+      .mkString("array(", "L, ", "L)")
+  }
+
   /** The SCALE formulation of [[weights]] — identical values, compiled
     * end to end. Two structural upgrades over the declarative twin
     * (which measured 531s at 1M docs — per-gram md5 through interpreted
@@ -129,26 +157,15 @@ object Dsir {
   def weightsFast(docs: DataFrame, id: String, text: String,
                   targetPred: Column, buckets: Int = 256,
                   ref: Option[DataFrame] = None,
-                  wordGrain: ScalarGrain = Ws): DataFrame = {
-    val fdf = graft.functions.VectorFunctions.attach(docs)
-    val refDf = graft.functions.VectorFunctions.attach(ref.getOrElse(docs))
-    val counts = refDf
-      .select(targetPred.as("__is_t"),
-        explode(expr(s"graft_dsir_buckets($text, $buckets, '${wordGrain.name}')")).as("b"))
-      .groupBy(col("b")).agg(
-        sum(when(col("__is_t"), 1L).otherwise(0L)).as("cnt_t"),
-        count(lit(1)).as("cnt_r"))
-      .collect()
-    val cntT = new Array[Long](buckets)
-    val cntR = new Array[Long](buckets)
-    counts.foreach { r =>
-      val b = r.getLong(0).toInt
-      cntT(b) = r.getLong(1); cntR(b) = r.getLong(2)
-    }
-    val totT = cntT.sum
-    val totR = cntR.sum
-    val w = Array.tabulate(buckets)(b => cntT(b) * totR - cntR(b) * totT)
-    val wLit = w.mkString("array(", "L, ", "L)")
+                  wordGrain: ScalarGrain = Ws): DataFrame =
+    scored(docs, id, text,
+      weightLiteral(ref.getOrElse(docs), text, targetPred, buckets, wordGrain), buckets, wordGrain)
+
+  /** Pass 2 of [[weightsFast]] and [[scoreStreaming]]: (id, n_grams,
+    * w_sum) per non-empty doc, scored against the weight literal `wLit`.
+    */
+  private def scored(docs: DataFrame, id: String, text: String, wLit: String,
+                     buckets: Int, wordGrain: ScalarGrain): DataFrame =
     // zero grams ⟺ zero words ⟺ trim(text) = '' — filter on the CHEAP
     // equivalent BEFORE projecting (a post-projection filter on a
     // computed column is pushed below the project with the kernel
@@ -159,12 +176,11 @@ object Dsir {
     // compiled word count, NOT `size(filter(split(...)))` — that
     // interpreted split-filter alone measured 32s at 1M docs, costlier
     // than the md5 gram kernel (19s) it rides next to.
-    fdf.where(trim(col(text)) =!= "")
+    graft.functions.VectorFunctions.attach(docs).where(trim(col(text)) =!= "")
       .select(col(id),
         expr(s"2 * graft_word_count($text, '${wordGrain.name}') - 1").as("n_grams"),
         expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '${wordGrain.name}'), $wLit)")
           .as("w_sum"))
-  }
 
   /** [[select]] over [[weightsFast]] — the registered scale path. */
   def selectFast(docs: DataFrame, id: String, text: String,
@@ -192,31 +208,8 @@ object Dsir {
                      id: String, text: String, targetPred: Column,
                      minWeight: Long = 0L, buckets: Int = 256,
                      wordGrain: ScalarGrain = Ws): DataFrame = {
-    val refDf = graft.functions.VectorFunctions.attach(ref)
-    val counts = refDf
-      .select(targetPred.as("__is_t"),
-        explode(expr(s"graft_dsir_buckets($text, $buckets, '${wordGrain.name}')")).as("b"))
-      .groupBy(col("b")).agg(
-        sum(when(col("__is_t"), 1L).otherwise(0L)).as("cnt_t"),
-        count(lit(1)).as("cnt_r"))
-      .collect()
-    val cntT = new Array[Long](buckets)
-    val cntR = new Array[Long](buckets)
-    counts.foreach { r =>
-      val b = r.getLong(0).toInt
-      cntT(b) = r.getLong(1); cntR(b) = r.getLong(2)
-    }
-    val totT = cntT.sum
-    val totR = cntR.sum
-    val w = Array.tabulate(buckets)(b => cntT(b) * totR - cntR(b) * totT)
-    val wLit = w.mkString("array(", "L, ", "L)")
-    graft.functions.VectorFunctions.attach(corpusStream)
-      .where(trim(col(text)) =!= "")
-      .select(col(id),
-        expr(s"2 * graft_word_count($text, '${wordGrain.name}') - 1").as("n_grams"),
-        expr(s"graft_bucket_score(graft_dsir_buckets($text, $buckets, '${wordGrain.name}'), $wLit)")
-          .as("w_sum"))
-      .where(col("w_sum") >= minWeight)
+    scored(corpusStream, id, text, weightLiteral(ref, text, targetPred, buckets, wordGrain),
+      buckets, wordGrain).where(col("w_sum") >= minWeight)
   }
 
   /** DuckDB twin of [[weights]]. */
