@@ -79,7 +79,7 @@ final case class ServiceException(
   * the reference's default `AvroByteStreams`, Mapper.scala:11-121).
   */
 trait PayloadCodec {
-  import EnvelopeCodec.{fqnOf, meta, replyMeta}
+  import EnvelopeCodec.{fqnOf, meta, noReply, replyMeta}
 
   /** `df` with its `payload` column (a struct of schema `st`, the payload
     * type named `name`) replaced by the serialized BINARY bytes.
@@ -102,8 +102,7 @@ trait PayloadCodec {
     writePayload(df.select(carry :+ payload.as("payload"): _*), st, name)
       .select(header.as("meta"), col("payload"))
 
-  private def keyOf(keyExpr: Option[Column]): Column =
-    keyExpr.getOrElse(lit(null).cast(StringType))
+  private def orNull(c: Option[Column]): Column = c.getOrElse(lit(null).cast(StringType))
 
   /** Wrap a typed dataset into fresh envelope rows. `keyExpr` is the
     * partition key extractor (reference: bus/package.scala:32-46
@@ -116,14 +115,13 @@ trait PayloadCodec {
                 directReplyService: Option[String] = None)
                (implicit enc: Encoder[T]): DataFrame = {
     val flat = ds.toDF()
-    val none = lit(null).cast(StringType)
     envelope(flat,
-      Seq(keyOf(keyExpr).as("__key"), correlationId.getOrElse(none).as("__corr"),
-        responseTo.getOrElse(none).as("__resp")),
+      Seq(orNull(keyExpr).as("__key"), orNull(correlationId).as("__corr"),
+        orNull(responseTo).as("__resp")),
       struct(flat.columns.toIndexedSeq.map(col): _*), enc.schema, fqnOf[T])(
       meta(lit(fqnOf[T]), correlationId = col("__corr"), key = col("__key"),
         responseTo = col("__resp"),
-        directReply = directReplyService.fold(EnvelopeCodec.noReply)(svc =>
+        directReply = directReplyService.fold(noReply)(svc =>
           struct(lit("").as("path"), lit(svc).as("service")))))
   }
 
@@ -138,7 +136,7 @@ trait PayloadCodec {
     // reserved name
     val flat = ds.toDF().select(col("_2").as("__in_meta"), col("_1.*"))
     val payload = struct(flat.columns.filter(_ != "__in_meta").map(col).toIndexedSeq: _*)
-    envelope(flat, Seq(col("__in_meta"), keyOf(keyExpr).as("__key")), payload,
+    envelope(flat, Seq(col("__in_meta"), orNull(keyExpr).as("__key")), payload,
       enc.schema, fqnOf[U])(replyMeta(col("__in_meta"), fqnOf[U], col("__key")))
   }
 
@@ -181,7 +179,7 @@ trait PayloadCodec {
       map().cast(MapType(StringType, StringType)).as("extra"))
     envelope(p.frame.where(!p.ok), Seq(col("meta")), report,
       Encoders.product[ServiceException].schema, excFqn)(
-      replyMeta(col("meta"), excFqn, lit(null).cast(StringType)))
+      replyMeta(col("meta"), excFqn))
   }
 
   /** Driver-side payload bytes of a typed batch, written THROUGH THE
@@ -250,7 +248,7 @@ object EnvelopeCodec extends PayloadCodec {
   ))
 
   /** A NULL reply address. */
-  val noReply: Column = lit(null).cast(metaSchema("directReply").dataType)
+  private[envelope] val noReply: Column = lit(null).cast(metaSchema("directReply").dataType)
 
   /** The one builder of a meta struct (field-for-field the reference's
     * `EventMeta`, in [[metaSchema]] order): a fresh `uuid()` eventId, the
@@ -280,9 +278,10 @@ object EnvelopeCodec extends PayloadCodec {
   /** The reference's replyAndCommit rule (KafkaBus.scala:136-182): a
     * fresh event of `eventType` answering the meta struct `in` —
     * `responseTo = in.eventId`; correlationId, trace, directReply,
-    * socketId and extra threaded from `in`; occurredAt = now.
+    * socketId and extra threaded from `in`; occurredAt = now; `key`
+    * the reply's own partition key (NULL when it has none).
     */
-  def replyMeta(in: Column, eventType: String, key: Column): Column =
+  def replyMeta(in: Column, eventType: String, key: Column = lit(null)): Column =
     meta(lit(eventType),
       correlationId = in("correlationId"), trace = in("trace"),
       directReply = in("directReply"), key = key, socketId = in("socketId"),
