@@ -314,18 +314,20 @@ object TextAnalysis {
     // second window keys on d — one postings-sized exchange of longs.
     //
     // The guarded postings are LEASED on KERNEL grains (r20
-    // optimization): the frame is consumed twice by the self-join below
-    // (plus a third time by containmentDedup's survivor anti-join
-    // pushed under a caller's union), and without the lease EACH
-    // reference recomputes the fingerprint scan and both windows — the
-    // formatted plan showed four full winnow+window chains on
-    // dedup_containment_cjkdict, and AQE's broadcast conversion of one
-    // join side defeats ReusedExchange (the two sides are different
+    // optimization): the frame is consumed twice by the self-join
+    // below, and without the lease EACH reference recomputes the
+    // fingerprint scan and both windows — AQE's broadcast conversion of
+    // one join side defeats ReusedExchange (the two sides are different
     // exchange node types, so runtime stage dedup never fires).
     // Measured at sf0.1 (ProbeR20Opt, median of 5 interleaved reps):
     // 6.0s shipped vs 3.3s leased on the cjk-dict leg; forcing a
     // shuffle-hash self-join instead (exchange-reuse shape) only
-    // reached 5.0s. On the WS grain the trade INVERTS (ProbeR20Ws, 6
+    // reached 5.0s. The lease also keeps the self-join PARALLEL: a
+    // no-lease variant of containmentDedup (with its victim set planned
+    // once) starts fewer jobs at 200 docs, but at sf0.1 AQE coalesced
+    // the self-join stage to a single task and the _cjk, _cjkdict and
+    // _thaidict rows went from ~2.7s to ~5.5s exec wall at equal task
+    // CPU. On the WS grain the trade INVERTS (ProbeR20Ws, 6
     // interleaved reps: ~1.7s unleased vs ~2.4s leased — a space-split
     // recompute is cheaper than the cache serialization), so the lease
     // is conditional on the tokenize being a kernel (cjk-auto / dict).
@@ -387,8 +389,9 @@ object TextAnalysis {
     *
     * Scale shape: the victim set is derived from the pair frame (same
     * postings-join cost as the report — run AFTER linear keeper dedup,
-    * as documented there) and removed with a left_anti join keyed on the
-    * id; no new shuffle class beyond the pairs themselves.
+    * as documented there) and removed with a left_outer join keyed on
+    * the id plus a `victim IS NULL` filter; no new shuffle class beyond
+    * the pairs themselves.
     */
   def containmentDedup(df: DataFrame, id: String, text: String,
                        k: Int = 3, w: Int = 4, minShared: Int = 2,
@@ -400,8 +403,19 @@ object TextAnalysis {
       .where(col("containment") >= threshold)
       .select(col("b_id").as("victim")) // a_id < b_id: b is the higher id
       .distinct()
+    // NOT a left_anti join: Catalyst's PushDownLeftSemiAntiJoin pushes a
+    // semi/anti join below a Union into every branch, and the whole
+    // victim pipeline (postings self-join, pair aggregate, distinct,
+    // broadcast) is copied with it — the registry rows feed a
+    // docs ∪ planted union, and at 200 docs AQE reused none of the
+    // copies (15 jobs per row instead of 9). The rule has no case for
+    // outer joins, so the union stays below this join and the victims
+    // are planned once. `victims` is distinct, so no row is duplicated;
+    // a null id or a fingerprint-less doc finds no victim and survives,
+    // exactly as under left_anti.
     df.select(col(id))
-      .join(victims, col(id) === col("victim"), "left_anti")
+      .join(victims, col(id) === col("victim"), "left_outer")
+      .where(col("victim").isNull)
       .select(col(id))
   }
 

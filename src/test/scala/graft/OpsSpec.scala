@@ -552,6 +552,49 @@ class OpsSpec extends SparkSpec {
       "planted partial copies must drop; originals, unrelated and short docs survive")
   }
 
+  test("containment dedup over a union keeps the left_anti survivors and plans the victim set once") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Union}
+    val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    val other = "one two three four five six seven eight nine ten eleven twelve thirteen"
+    val first = Seq[(Option[Long], String)](
+      (Some(1L), base),
+      (Some(2L), other),
+      (Some(3L), base + " extra tail words appended here"), // victim in this branch
+      (Some(4L), "short doc"),                              // no fingerprints
+      (None, base + " a null id carries a copy"))           // null id
+      .toDF("doc_id", "text")
+    val second = Seq[(Option[Long], String)](
+      (Some(5L), other + " more trailing content here too")) // victim in the other branch
+      .toDF("doc_id", "text")
+    val input = first.unionByName(second)
+    val out = TextAnalysis.containmentDedup(input, "doc_id", "text", threshold = 0.8)
+    // the left_anti formulation the operator replaced
+    val victims = TextAnalysis.winnowPairs(input, "doc_id", "text")
+      .where($"containment" >= 0.8).select($"b_id".as("victim")).distinct()
+    val antiKept = input.select($"doc_id")
+      .join(victims, $"doc_id" === $"victim", "left_anti")
+    def ids(df: DataFrame): Seq[Option[Long]] =
+      df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq.sorted
+    assert(ids(out) === ids(antiKept))
+    assert(ids(out) === Seq(None, Some(1L), Some(2L), Some(4L)),
+      "a victim in each branch drops; short docs and null ids survive")
+    val plan = out.queryExecution.optimizedPlan
+    val pairAggs = plan.collect {
+      case a: Aggregate if a.groupingExpressions.map {
+        case r: AttributeReference => r.name
+        case e => e.sql
+      } == Seq("a_id", "b_id") => a
+    }
+    assert(pairAggs.size === 1, s"the pair aggregate must be planned once:\n$plan")
+    val underUnion = plan.collect { case u: Union => u.collect {
+      case j: Join if j.joinType == LeftAnti || j.joinType == LeftSemi => j
+    } }.flatten
+    assert(underUnion.isEmpty, s"no semi/anti join may be pushed into the union's branches:\n$plan")
+  }
+
   test("stupid backoff: each doc lands on the highest reference-seen order; OOV contributes zero") {
     import spark.implicits._
     val ref = Seq((0L, "the quick brown fox jumps")).toDF("doc_id", "text")

@@ -405,6 +405,26 @@ class PlanAuditSpec extends SparkSpec {
       s"no exchange may carry the text column:\n$p")
   }
 
+  test("dedup_containment family: no expensive semi/anti join is cloned into a union's branches") {
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Union}
+    // each row anti-joins (docs ∪ planted) with its victim set; a semi or
+    // anti join over a Union is pushed into every branch, copying its
+    // right side — here the postings self-join and the pair aggregate
+    for (name <- Seq("dedup_containment", "dedup_containment_cjk",
+                     "dedup_containment_cjkdict", "dedup_containment_thaidict")) {
+      val p = Queries.queryMap(name)(spark, sf).queryExecution.optimizedPlan
+      val cloned = p.collect { case u: Union => u.collect {
+        case j: Join if (j.joinType == LeftAnti || j.joinType == LeftSemi) &&
+          j.right.find {
+            case _: Aggregate | _: Join => true
+            case _ => false
+          }.isDefined => j
+      } }.flatten
+      assert(cloned.isEmpty, s"$name: the victim pipeline must be planned once, not per branch:\n$p")
+    }
+  }
+
   test("text_chunk_sentences: ZERO shuffle — chunks come straight off the scan projection") {
     val p = plan("text_chunk_sentences")
     assert(!p.contains("Exchange"),
