@@ -97,8 +97,8 @@ trait PayloadCodec {
     * built over those. Every payload write precedes its meta, so a codec
     * that serializes outside the plan still sees the meta inputs.
     */
-  private def envelope(df: DataFrame, carry: Seq[Column], payload: Column,
-                       st: StructType, name: String)(header: Column): DataFrame =
+  private[graft] def envelope(df: DataFrame, carry: Seq[Column], payload: Column,
+                              st: StructType, name: String)(header: Column): DataFrame =
     writePayload(df.select(carry :+ payload.as("payload"): _*), st, name)
       .select(header.as("meta"), col("payload"))
 

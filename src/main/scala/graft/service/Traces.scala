@@ -1,9 +1,9 @@
 package graft.service
 
-import graft.envelope.EnvelopeCodec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.envelope.{EnvelopeCodec, PayloadCodec}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.StructType
 
 /** O1/O2: observability side-channels.
   *
@@ -40,23 +40,25 @@ object Traces {
   /** The trace side output for a stream of envelopes: one trace envelope
     * per input envelope that is trace-enabled (service-wide `busTrace` or
     * per-event `meta.trace`, reference: bus/package.scala:69-74), except
-    * trace events themselves (self-trace suppression, :68).
+    * trace events themselves (self-trace suppression, :68). The payload
+    * is written by `codec`, the service's own serde, as the reference
+    * writes traces through the bus's serde.
     */
   def sideOutput(envelopes: DataFrame, service: ServiceIdentifier,
-                 kind: String, busTrace: Boolean = false): DataFrame = {
+                 kind: String, busTrace: Boolean = false,
+                 codec: PayloadCodec = EnvelopeCodec): DataFrame = {
     require(traceTypes.contains(kind), s"unknown trace kind $kind")
-    envelopes
-      .where((lit(busTrace) || col("meta.trace")) &&
-        !col("meta.eventType").isin(traceTypes.toSeq: _*))
-      .select(
-        // trace stays false: self-trace suppression downstream
-        EnvelopeCodec.meta(lit(kind), correlationId = col("meta.correlationId"),
-          directReply = col("meta.directReply"), responseTo = col("meta.eventId")).as("meta"),
-        to_json(struct(
-          struct(lit(service.name).as("name"), lit(service.id).as("id")).as("service"),
-          to_json(col("meta")).as("eventMeta"),
-          base64(col("payload")).as("eventPayload")
-        )).cast(BinaryType).as("payload"))
+    val traced = envelopes.where((lit(busTrace) || col("meta.trace")) &&
+      !col("meta.eventType").isin(traceTypes.toSeq: _*))
+    val payload = struct(
+      struct(lit(service.name).as("name"), lit(service.id).as("id")).as("service"),
+      to_json(col("meta")).as("eventMeta"),
+      base64(col("payload")).as("eventPayload"))
+    val st = traced.select(payload).schema.head.dataType.asInstanceOf[StructType]
+    codec.envelope(traced, Seq(col("meta")), payload, st, kind)(
+      // trace stays false: self-trace suppression downstream
+      EnvelopeCodec.meta(lit(kind), correlationId = col("meta.correlationId"),
+        directReply = col("meta.directReply"), responseTo = col("meta.eventId")))
   }
 
   /** O2: heartbeat stream — `Hb(ts)` events on a fixed cadence from the
@@ -66,16 +68,20 @@ object Traces {
     * NOTE: the rate source always has more data, so
     * `StreamingQuery.processAllAvailable()` blocks indefinitely on a
     * heartbeat query — poll the sink instead.
+    *
+    * The `Hb` payload is written by `codec`, so the service's own
+    * `decodeTyped[Hb]` reads it back.
     */
   final case class Hb(ts: Long)
 
-  def heartbeat(spark: SparkSession, rowsPerSecond: Int = 1): DataFrame = {
+  def heartbeat(spark: SparkSession, rowsPerSecond: Int = 1,
+                codec: PayloadCodec = EnvelopeCodec): DataFrame = {
     val hb = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond).load()
       .select(unix_millis(col("timestamp")).as("ts"))
-    hb.select(
+    codec.envelope(hb, Seq(col("ts")), struct(col("ts")),
+      Encoders.product[Hb].schema, classOf[Hb].getName)(
       EnvelopeCodec.meta(lit(classOf[Hb].getName),
-        occurredAt = timestamp_millis(col("ts"))).as("meta"),
-      to_json(struct(col("ts"))).cast(BinaryType).as("payload"))
+        occurredAt = timestamp_millis(col("ts"))))
   }
 }
