@@ -96,6 +96,8 @@ trait PayloadCodec {
     * through [[writePayload]] next to the `carry` columns, then `meta` is
     * built over those. Every payload write precedes its meta, so a codec
     * that serializes outside the plan still sees the meta inputs.
+    * [[graft.service.Traces]] builds its trace and heartbeat envelopes
+    * here too, so they carry the service's payload format.
     */
   private[graft] def envelope(df: DataFrame, carry: Seq[Column], payload: Column,
                               st: StructType, name: String)(header: Column): DataFrame =
