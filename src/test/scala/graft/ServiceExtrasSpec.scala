@@ -192,59 +192,45 @@ class ServiceExtrasSpec extends SparkSpec {
     val m = traces.head.getStruct(0)
     assert(m.getAs[String]("eventType") === Traces.InTrace)
     assert(m.getAs[String]("responseTo") === "t-1")
-    val payload = new String(traces.head.getAs[Array[Byte]](1), "UTF-8")
-    assert(payload.contains("\"svc\"") && payload.contains("eventPayload"))
+    // the JSON codec's exact trace payload bytes
+    assert(new String(traces.head.getAs[Array[Byte]](1), "UTF-8") ===
+      """{"service":{"name":"svc","id":"id-1"},"eventMeta":"{\"eventId\":\"t-1\",""" +
+      """\"eventType\":\"graft.Ping\",\"trace\":true,\"extra\":{},""" +
+      """\"occurredAt\":\"1970-01-01T00:00:00.000Z\"}","eventPayload":"eyJ4IjoidC0xIn0="}""")
     // busTrace=true traces everything except trace events themselves
     assert(Traces.sideOutput(env, Traces.ServiceIdentifier("svc", "id-1"),
       Traces.OutTrace, busTrace = true).count() === 2)
   }
 
-  test("traces: the JSON codec's trace payload bytes are pinned (O1)") {
-    val env = Seq(PublishedEvent(EventMeta(eventId = "t-1", eventType = "graft.Ping",
-      correlationId = Some("c"), trace = true, occurredAt = new java.sql.Timestamp(0)),
-      """{"x":"t-1"}""".getBytes("UTF-8"))).toDS().toDF()
-    val Seq(t) = Traces.sideOutput(env, Traces.ServiceIdentifier("svc", "id-1"),
-      Traces.InTrace).collect().toSeq
-    assert(new String(t.getAs[Array[Byte]](1), "UTF-8") ===
-      """{"service":{"name":"svc","id":"id-1"},"eventMeta":"{\"eventId\":\"t-1\",""" +
-      """\"eventType\":\"graft.Ping\",\"correlationId\":\"c\",\"trace\":true,""" +
-      """\"extra\":{},\"occurredAt\":\"1970-01-01T00:00:00.000Z\"}",""" +
-      """"eventPayload":"eyJ4IjoidC0xIn0="}""")
+  /** A heartbeat stream's envelopes, collected once its memory sink is
+    * non-empty. Sleep-poll: the rate source always has more data, so
+    * processAllAvailable would block indefinitely.
+    */
+  private def heartbeatRows(name: String, codec: PayloadCodec): Array[org.apache.spark.sql.Row] = {
+    val q = Traces.heartbeat(spark, rowsPerSecond = 10, codec = codec)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      val deadline = System.currentTimeMillis() + 15000
+      var n = 0L
+      while (n == 0 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(300)
+        n = spark.table(name).count()
+      }
+      spark.table(name).collect()
+    } finally q.stop()
   }
 
   test("heartbeat emits Hb envelopes from the rate source (O2)") {
-    val q = Traces.heartbeat(spark, rowsPerSecond = 10)
-      .writeStream.format("memory").queryName("hb").outputMode("append").start()
-    try {
-      // sleep-poll: the rate source always has more data, so
-      // processAllAvailable would block indefinitely
-      val deadline = System.currentTimeMillis() + 15000
-      var n = 0L
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(300)
-        n = spark.table("hb").count()
-      }
-      assert(n > 0)
-      val r = spark.table("hb").limit(1).collect().head
-      assert(r.getStruct(0).getAs[String]("eventType") === classOf[Traces.Hb].getName)
-      assert(new String(r.getAs[Array[Byte]](1), "UTF-8").startsWith("""{"ts":"""))
-    } finally q.stop()
+    val rows = heartbeatRows("hb", EnvelopeCodec)
+    assert(rows.nonEmpty)
+    val r = rows.head
+    assert(r.getStruct(0).getAs[String]("eventType") === classOf[Traces.Hb].getName)
+    assert(new String(r.getAs[Array[Byte]](1), "UTF-8").startsWith("""{"ts":"""))
   }
 
   test("heartbeat on an Avro service writes Hb through the service's codec (O2)") {
-    val q = Traces.heartbeat(spark, rowsPerSecond = 10, codec = AvroPayloadCodec)
-      .writeStream.format("memory").queryName("hb_avro").outputMode("append").start()
-    val rows = try {
-      val deadline = System.currentTimeMillis() + 15000
-      var n = 0L
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(300)
-        n = spark.table("hb_avro").count()
-      }
-      spark.table("hb_avro").collect()
-    } finally q.stop()
+    val rows = heartbeatRows("hb_avro", AvroPayloadCodec)
     assert(rows.nonEmpty)
-    // a snapshot: the sink table keeps growing while the query runs
     val env = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       spark.table("hb_avro").schema)
     val emitted = rows.map(_.getStruct(0).getAs[java.sql.Timestamp]("occurredAt").getTime)
