@@ -75,10 +75,11 @@ case class BloomMightContain(bytes: Array[Byte], child: Expression)
 }
 
 /** `graft_bloom_any(sketchBytes, hashes)` — true iff ANY element of the
-  * LONG array might be in the sketched set. The codegen'd short-circuit
-  * loop replaces `exists(hashes, h -> graft_bloom_contains(..., h))`,
-  * whose lambda would drop the probe out of whole-stage codegen into
-  * interpreted eval. Null elements are skipped (a null shingle carries
+  * LONG array might be in the sketched set. The compiled short-circuit
+  * loop ([[HashOps.bloomAny]]) replaces
+  * `exists(hashes, h -> graft_bloom_contains(..., h))`, whose lambda
+  * would drop the probe out of whole-stage codegen into interpreted
+  * eval. Null elements are skipped (a null shingle carries
   * no membership evidence), matching the exists-with-null-skip the
   * decontamination op needs.
   */
@@ -93,32 +94,13 @@ case class BloomAnyContain(bytes: Array[Byte], child: Expression)
       s"$prettyName requires ARRAY<BIGINT>, got ${dt.catalogString}")
   }
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i) && bloom.mightContainLong(arr.getLong(i))) return true
-      i += 1
-    }
-    false
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    HashOps.bloomAny(bloom, v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftBloom", bloom, classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |${ev.value} = false;
-         |final int $n = $c.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$c.isNullAt($i) && $ref.mightContainLong($c.getLong($i))) {
-         |    ${ev.value} = true; break;
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.HashOps.bloomAny($ref, $c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BloomAnyContain =

@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** JVM implementations of the [[graft.ops.PortableHash]] arithmetic,
   * shared by the interpreted `eval` and generated code of the native
@@ -579,6 +580,100 @@ object HashOps {
     new GenericArrayData(out)
   }
 
+  private def elemAt(v: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+
+  /** Cosine of two FLOAT/DOUBLE vectors over their common prefix: the
+    * three accumulations (a·b, a·a, b·b) fused into one ascending-index
+    * pass, each bit-equal to its separate `list_reduce` fold in the
+    * oracle. Zero-magnitude convention: sim(0⃗, ·) = 0. Without it the
+    * engines DIVERGE, not just misbehave — Spark 0/0 is NaN (sorts
+    * greatest), DuckDB x/0 is NULL (sorts last) — and a real corpus DOES
+    * contain zero embeddings (failed encoder output).
+    */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var ab = 0.0; var aa = 0.0; var bb = 0.0; var i = 0
+    while (i < n) {
+      val x = elemAt(a, i, aFloat); val y = elemAt(b, i, bFloat)
+      ab += x * y; aa += x * x; bb += y * y; i += 1
+    }
+    val den = math.sqrt(aa) * math.sqrt(bb)
+    if (den == 0.0) 0.0 else ab / den
+  }
+
+  /** Squared L2 distance over the common prefix, ascending-index fold. */
+  def dist2(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0; var i = 0
+    while (i < n) {
+      val d = elemAt(a, i, aFloat) - elemAt(b, i, bFloat)
+      acc += d * d; i += 1
+    }
+    acc
+  }
+
+  /** Inner product over the common prefix, ascending-index fold. */
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += elemAt(a, i, aFloat) * elemAt(b, i, bFloat); i += 1 }
+    acc
+  }
+
+  /** PQ asymmetric-distance lookup Σ_j flat[j·kSub + codes[j]], folded in
+    * subspace order; null and out-of-range codes contribute nothing.
+    */
+  def pqAdc(codes: ArrayData, flat: ArrayData, kSub: Int): Double = {
+    val m = codes.numElements()
+    val n = flat.numElements()
+    var acc = 0.0; var j = 0
+    while (j < m) {
+      if (!codes.isNullAt(j)) {
+        val idx = j * kSub + codes.getInt(j)
+        if (idx >= 0 && idx < n) acc += flat.getDouble(idx)
+      }
+      j += 1
+    }
+    acc
+  }
+
+  /** [[pqAdc]] over byte-packed codes (one unsigned byte per code). */
+  def pqAdcPacked(codes: Array[Byte], flat: ArrayData, kSub: Int): Double = {
+    val n = flat.numElements()
+    var acc = 0.0; var j = 0
+    while (j < codes.length) {
+      val idx = j * kSub + (codes(j) & 0xff)
+      if (idx < n) acc += flat.getDouble(idx)
+      j += 1
+    }
+    acc
+  }
+
+  /** Sign-bit sketch of the first `bits` dims: bit i set iff `vec[i] > 0`. */
+  def binarySketch(vec: ArrayData, bits: Int, isFloat: Boolean): Long = {
+    val n = math.min(bits, vec.numElements())
+    var acc = 0L; var i = 0
+    while (i < n) {
+      if (elemAt(vec, i, isFloat) > 0.0) acc |= (1L << i)
+      i += 1
+    }
+    acc
+  }
+
+  /** True iff any non-null element might be in the bloom sketch
+    * (short-circuits on the first hit; a null carries no evidence).
+    */
+  def bloomAny(bloom: BloomFilter, hashes: ArrayData): Boolean = {
+    val n = hashes.numElements()
+    var i = 0
+    while (i < n) {
+      if (!hashes.isNullAt(i) && bloom.mightContainLong(hashes.getLong(i))) return true
+      i += 1
+    }
+    false
+  }
+
   /** Pack int8 quantization codes (each in [-127, 127]) into a signed
     * byte array — the at-rest / in-memory form that actually realizes
     * the 4× compression vs float32 (Spark `ARRAY<INT>` holds 4-byte
@@ -597,7 +692,7 @@ object HashOps {
     * double fold as every other cosine in the engine (bit-equal to the
     * list-of-int folds the oracle runs — small-int products and sums are
     * exact in double), but scanning 1-byte codes straight out of the
-    * packed binary. NaN for a zero-norm side, like the float kernel.
+    * packed binary. 0 for a zero-norm side, like the float kernel.
     */
   def cosineI8(a: Array[Byte], b: Array[Byte]): Double = {
     val n = math.min(a.length, b.length)
@@ -608,7 +703,7 @@ object HashOps {
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    // zero-magnitude convention (see CosineSim): sim(0⃗, ·) = 0
+    // zero-magnitude convention (see [[cosine]]): sim(0⃗, ·) = 0
     val den = math.sqrt(na) * math.sqrt(nb)
     if (den == 0.0) 0.0 else dot / den
   }
@@ -687,7 +782,7 @@ object HashOps {
       var dot = 0.0
       var i = 1
       while (i <= dims) {
-        val x = if (elemIsFloat) vec.getFloat(i - 1).toDouble else vec.getDouble(i - 1)
+        val x = elemAt(vec, i - 1, elemIsFloat)
         val w = (((j.toLong * 64 + i - 1) * 2654435761L) % 1000003L).toDouble / 1000003.0 - 0.5
         dot += x * w
         i += 1

@@ -6,13 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native distance/product kernels for the PQ index build and search —
-  * same rationale as [[CosineSim]]: the HOF formulation
+/** Native FLOAT/DOUBLE pair kernels (cosine, squared distance, dot) for
+  * the ANN scan and the PQ index build and search. The HOF formulation
   * (`aggregate(zip_with(...))`) is CodegenFallback and interprets a
-  * lambda per element with an intermediate zipped array per pair; these
-  * compile to one fused loop inside whole-stage codegen. Both fold in
-  * sequential index order, bit-identical to the `list_reduce` twins the
-  * DuckDB oracle runs.
+  * lambda per element with an intermediate zipped array per pair; each
+  * kernel's loop is one [[HashOps]] static, called by `nullSafeEval` and
+  * by a one-call `doGenCode` that stays inside whole-stage codegen. All
+  * fold in sequential index order, bit-identical to the `list_reduce`
+  * twins the DuckDB oracle runs.
   */
 trait VectorKernel extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -22,6 +23,9 @@ trait VectorKernel extends BinaryExpression {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
+
+  /** The two element-type flags as Java literals for a codegen call. */
+  protected def floatFlags: String = s"${elemIsFloat(left)}, ${elemIsFloat(right)}"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -41,37 +45,12 @@ trait VectorKernel extends BinaryExpression {
 case class SquaredDistance(left: Expression, right: Expression) extends VectorKernel {
   override def prettyName: String = "graft_dist2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    val (lf, rf) = (elemIsFloat(left), elemIsFloat(right))
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xv - yv
-      acc += d * d; i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any = HashOps.dist2(
+    a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], elemIsFloat(left), elemIsFloat(right))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.$lGet($i) - (double) $b.$rGet($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HashOps.dist2($a, $b, $floatFlags);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredDistance =
@@ -85,35 +64,12 @@ case class SquaredDistance(left: Expression, right: Expression) extends VectorKe
 case class DotProduct(left: Expression, right: Expression) extends VectorKernel {
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    val (lf, rf) = (elemIsFloat(left), elemIsFloat(right))
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv; i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any = HashOps.dot(
+    a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], elemIsFloat(left), elemIsFloat(right))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double) $a.$lGet($i) * (double) $b.$rGet($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HashOps.dot($a, $b, $floatFlags);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -148,40 +104,12 @@ case class PqAdc(left: Expression, right: Expression, kSub: Int)
           s"got ${l.catalogString} / ${r.catalogString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (codes, flat) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val m = codes.numElements()
-    val n = flat.numElements()
-    var acc = 0.0; var j = 0
-    while (j < m) {
-      if (!codes.isNullAt(j)) {
-        val idx = j * kSub + codes.getInt(j)
-        if (idx >= 0 && idx < n) acc += flat.getDouble(idx)
-      }
-      j += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    HashOps.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], kSub)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m"); val n = ctx.freshName("n")
-      val j = ctx.freshName("j"); val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $m = $a.numElements();
-         |int $n = $b.numElements();
-         |double $acc = 0.0;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    int $idx = $j * $kSub + $a.getInt($j);
-         |    if ($idx >= 0 && $idx < $n) $acc += $b.getDouble($idx);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HashOps.pqAdc($a, $b, $kSub);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
@@ -214,34 +142,12 @@ case class PqAdcPacked(left: Expression, right: Expression, kSub: Int)
           s"got ${l.catalogString} / ${r.catalogString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[Array[Byte]]
-    val flat = b.asInstanceOf[ArrayData]
-    val n = flat.numElements()
-    var acc = 0.0; var j = 0
-    while (j < codes.length) {
-      val idx = j * kSub + (codes(j) & 0xff)
-      if (idx < n) acc += flat.getDouble(idx)
-      j += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    HashOps.pqAdcPacked(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData], kSub)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val j = ctx.freshName("j")
-      val idx = ctx.freshName("idx"); val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $b.numElements();
-         |double $acc = 0.0;
-         |for (int $j = 0; $j < $a.length; $j++) {
-         |  int $idx = $j * $kSub + (((int) $a[$j]) & 0xff);
-         |  if ($idx < $n) $acc += $b.getDouble($idx);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HashOps.pqAdcPacked($a, $b, $kSub);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcPacked =
@@ -273,34 +179,12 @@ case class BinarySketch(child: Expression, bits: Int)
       s"$prettyName requires ARRAY<FLOAT|DOUBLE>, got ${dt.catalogString}")
   }
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val n = math.min(bits, x.numElements())
-    val f = elemIsFloat
-    var acc = 0L; var i = 0
-    while (i < n) {
-      val xv = if (f) x.getFloat(i).toDouble else x.getDouble(i)
-      if (xv > 0.0) acc |= (1L << i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(v: Any): Any =
+    HashOps.binarySketch(v.asInstanceOf[ArrayData], bits, elemIsFloat)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($bits, $v.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (((double) $v.$get($i)) > 0.0) $acc |= (1L << $i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.HashOps.binarySketch($v, $bits, $elemIsFloat);")
 
   override protected def withNewChildInternal(c: Expression): BinarySketch =
     copy(child = c)

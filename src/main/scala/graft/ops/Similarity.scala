@@ -58,7 +58,7 @@ object Similarity {
     def dot(x: String, y: String) =
       s"aggregate(zip_with($x, $y, (p, q) -> cast(p AS DOUBLE) * cast(q AS DOUBLE)), " +
         s"cast(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    // zero-magnitude convention (see CosineSim): sim(0⃗, ·) = 0. Without
+    // zero-magnitude convention (see HashOps.cosine): sim(0⃗, ·) = 0. Without
     // it the ENGINES diverge, not just misbehave — Spark 0/0 is NaN
     // (sorts greatest), DuckDB x/0 is NULL (sorts last under DESC) —
     // and real corpora contain zero embeddings (failed encoder output).

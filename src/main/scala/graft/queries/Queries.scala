@@ -43,7 +43,11 @@ object Queries {
       // TIMESTAMP so every downstream query sees one shape; with the
       // UTC session both rebuilds are value-identical to DuckDB's
       // native read. The footer schema is converted under the session
-      // conf at read time, so nanosAsLong is set BEFORE the read.
+      // conf at read time, so nanosAsLong is set BEFORE the read. It is
+      // left set: restoring it after the read would break the NANOS
+      // path, because Spark reads the conf again when the scan is
+      // planned (ParquetFileFormat.buildReaderWithPartitionValues calls
+      // setupHadoopConf, which reads SQLConf.legacyParquetNanosAsLong).
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = CorpusIO.readParquet(s, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
@@ -63,12 +67,12 @@ object Queries {
   private def dsum(c: String): String =
     s"cast(sum(cast($c AS DECIMAL(18,2))) AS DOUBLE)"
 
-  /** First-touch index location: the sanitized dir path (readable) PLUS
-    * a digest of the RAW dir string — sanitization alone collides
-    * ("/a/b" and "/a_b" both map to "_a_b"), which with the
-    * data-fingerprinted signature would degrade to alternating rebuild
-    * thrash; the digest makes distinct dirs structurally unable to share
-    * an index path.
+  /** First-touch index (and io-row scratch) location: the sanitized dir
+    * path (readable) PLUS a digest of the RAW dir string — sanitization
+    * alone collides ("/a/b" and "/a_b" both map to "_a_b"), which with
+    * the data-fingerprinted signature would degrade to alternating
+    * rebuild thrash; the digest makes distinct dirs structurally unable
+    * to share a path.
     */
   private def idxPath(kind: String, dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
@@ -5319,7 +5323,7 @@ object Queries {
     QueryDef("io_roundtrip_jsonl",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_jsonl_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_jsonl", dir)
         graft.ops.CorpusIO.writeJsonl(docs, out)
         graft.ops.CorpusIO.checksum(
           graft.ops.CorpusIO.readJsonl(s, out, docs.schema),
@@ -5334,7 +5338,7 @@ object Queries {
       (s, dir) => {
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_csv_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_csv", dir)
         graft.ops.CorpusIO.writeCsv(ev, out)
         graft.ops.CorpusIO.readCsv(s, out, ev.schema)
           .groupBy(col("event_type"))
@@ -5353,7 +5357,7 @@ object Queries {
     QueryDef("io_sharded_manifest",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_shard_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_shard", dir)
         // file bound sized for real shards (CorpusIOSpec pins the bound
         // mechanism itself): 100-row files at a 1M-doc probe meant 10k
         // files and 18s of committer overhead vs ~2s at 100k rows/file —
@@ -5368,7 +5372,7 @@ object Queries {
     QueryDef("io_roundtrip_orc",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_orc_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_orc", dir)
         graft.ops.CorpusIO.writeOrc(docs, out)
         graft.ops.CorpusIO.checksum(graft.ops.CorpusIO.readOrc(s, out),
           "source", "doc_id", "text")
@@ -5385,8 +5389,8 @@ object Queries {
     QueryDef("io_compact",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val frag = s"${System.getProperty("java.io.tmpdir")}/graft_io_frag_${math.abs(dir.hashCode)}"
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_compact_${math.abs(dir.hashCode)}"
+        val frag = idxPath("io_frag", dir)
+        val out = idxPath("io_compact", dir)
         docs.repartition(32).write.mode("overwrite").parquet(frag)
         graft.ops.CorpusIO.compact(s, frag, out,
           targetBytes = 4 * 1024 * 1024, sortCol = Some("doc_id"))
@@ -5402,7 +5406,7 @@ object Queries {
     QueryDef("io_schema_evolution",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_evo_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_evo", dir)
         docs.select(col("doc_id"), col("text"), col("source"))
           .write.mode("overwrite").parquet(s"$out/v1")
         docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
@@ -5435,7 +5439,7 @@ object Queries {
     QueryDef("io_zorder",
       (s, dir) => {
         val ev = t(s, dir, "events")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_zorder_${math.abs(dir.hashCode)}"
+        val out = idxPath("io_zorder", dir)
         graft.ops.CorpusIO.zorderWrite(s, ev, out, "user_id", "event_id", nFiles = 16)
         graft.ops.CorpusIO.checksum(CorpusIO.readParquet(s, out),
           "event_type", "event_id", "props")

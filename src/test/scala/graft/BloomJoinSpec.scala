@@ -145,14 +145,4 @@ class BloomJoinSpec extends SparkSpec {
     assert(viaBloom == viaExact && viaBloom.size == 2)
   }
 
-  private def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
-    val conf = spark.conf
-    val old = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
 }

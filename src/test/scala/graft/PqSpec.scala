@@ -80,17 +80,20 @@ class PqSpec extends SparkSpec {
   }
 
   test("graft_pq_adc: codegen/interpreted parity and known lookup sum") {
-    val df = VectorFunctions.attach(Seq(
+    // through parquet: a local Seq relation would have the projection
+    // folded into it and evaluated interpreted on both runs
+    val path = java.nio.file.Files.createTempDirectory("graft_pq_adc_spec").toString
+    Seq(
       (Seq(1, 0), Seq(10.0, 20.0, 30.0, 40.0)), // 1*2+1=idx1 -> 20 ; 1*2+0=idx2 -> 30
       (Seq(0, 1), Seq(10.0, 20.0, 30.0, 40.0))  // idx0 -> 10 ; idx3 -> 40
-    ).toDF("codes", "flat"))
+    ).toDF("codes", "flat").coalesce(1).write.mode("overwrite").parquet(path)
+    val df = VectorFunctions.attach(spark.read.parquet(path))
     val sel = df.select(expr("graft_pq_adc(codes, flat, 2)").as("s"))
     assert(sel.as[Double].collect().toSeq == Seq(50.0, 50.0))
-    val interp = {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try sel.as[Double].collect().toSeq
-      finally spark.conf.unset("spark.sql.codegen.wholeStage")
-    }
+    // wholeStage off alone still compiles the projection; NO_CODEGEN
+    // makes it call nullSafeEval
+    val interp = withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { sel.as[Double].collect().toSeq }
     assert(interp == Seq(50.0, 50.0))
   }
 

@@ -20,4 +20,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
   }
+
+  /** Runs `body` with the session confs set, restoring each afterwards. */
+  protected def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val old = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+  }
 }

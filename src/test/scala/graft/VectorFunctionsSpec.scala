@@ -296,4 +296,86 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(p.matches("(?s).*\\*\\(\\d+\\) Project \\[graft_cosine.*"),
       s"graft_cosine projection must stay inside whole-stage codegen:\n$p")
   }
+
+  test("vector and bloom kernels: interpreted eval equals generated code, edge rows included") {
+    import spark.implicits._
+    VectorFunctions.ensureRegistered(spark)
+    // parquet-backed, so no rule folds the projection into a local
+    // relation (which would evaluate it interpreted on both runs)
+    val path = java.nio.file.Files.createTempDirectory("graft_kernel_parity").toString
+    spark.sql(
+      """SELECT 0 AS id, array(1.5f, -2.0f, 0.25f, 3.0f) AS ff,
+        |  array(0.5d, 1.0d, -1.0d, 2.0d) AS dd, array(1, 0) AS codes,
+        |  array(10d, 20d, 30d, 40d) AS flat, unhex('0100') AS packed, array(5L, 6L) AS hs
+        |UNION ALL SELECT 1, array(1.0f, CAST(NULL AS FLOAT), 2.0f),
+        |  array(CAST(NULL AS DOUBLE), 1d, 2d), array(1, NULL),
+        |  array(10d, 20d, 30d, 40d), unhex('00'), array(CAST(NULL AS BIGINT), 5L)
+        |UNION ALL SELECT 2, CAST(array() AS ARRAY<FLOAT>), CAST(array() AS ARRAY<DOUBLE>),
+        |  CAST(array() AS ARRAY<INT>), CAST(array() AS ARRAY<DOUBLE>), unhex(''),
+        |  CAST(array() AS ARRAY<BIGINT>)
+        |UNION ALL SELECT 3, array(0f, 0f, 0f, 0f), array(0d, 0d, 0d, 0d), array(0, 1),
+        |  array(10d, 20d, 30d, 40d), unhex('0001'), array(6L)
+        |UNION ALL SELECT 4, array(-1f), array(2d, 2d), array(7, 1), array(10d, 20d, 30d, 40d),
+        |  unhex('FF01'), array(7L, 8L)
+        |UNION ALL SELECT 5, NULL, NULL, NULL, NULL, NULL, NULL
+        |""".stripMargin).write.mode("overwrite").parquet(path)
+    val rows = spark.read.parquet(path)
+    val sketch = graft.ops.BloomJoin.sketchOf(Seq(5L).toDF("v"), "v", expected = 10)
+    val kernels = Seq(
+      "graft_cosine(ff, dd)", "graft_cosine(dd, reverse(dd))", "graft_cosine(ff, reverse(ff))",
+      "graft_dist2(ff, dd)", "graft_dist2(dd, reverse(ff))",
+      "graft_dot(ff, dd)", "graft_dot(reverse(dd), ff)",
+      "graft_pq_adc(codes, flat, 2)", "graft_pq_adc_packed(packed, flat, 2)",
+      "graft_binary_sketch(ff, 10)", "graft_binary_sketch(dd, 2)",
+      graft.ops.BloomJoin.anySql(sketch, "hs"))
+    def run(k: String): (Seq[(Int, Any)], Boolean) = {
+      val sel = rows.selectExpr("id", k)
+      val wholeStage = sel.queryExecution.executedPlan
+        .find(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined
+      (sel.collect().map(r => r.getInt(0) -> r.get(1)).toSeq.sortBy(_._1), wholeStage)
+    }
+    val generated = kernels.map { k =>
+      // wholeStage off alone still compiles the projection; NO_CODEGEN
+      // makes it call each kernel's nullSafeEval
+      val (interp, interpWs) = withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run(k))
+      val (gen, genWs) = run(k)
+      assert(!interpWs && genWs, s"$k: the two runs must take different eval paths")
+      assert(interp == gen, s"$k: interpreted $interp != generated $gen")
+      k -> gen.toMap
+    }.toMap
+    assert(generated.values.forall(_(5) == null), "a NULL input yields NULL")
+    assert(Seq(0, 1, 2).forall(k => generated(kernels(k))(3) == 0.0), "sim(0, .) = 0")
+    assert(generated("graft_pq_adc(codes, flat, 2)") ==
+      Map(0 -> 50.0, 1 -> 20.0, 2 -> 0.0, 3 -> 50.0, 4 -> 40.0, 5 -> null),
+      "null and out-of-range codes contribute nothing")
+    assert(generated("graft_pq_adc_packed(packed, flat, 2)") ==
+      Map(0 -> 50.0, 1 -> 10.0, 2 -> 0.0, 3 -> 50.0, 4 -> 40.0, 5 -> null))
+    assert(generated("graft_binary_sketch(ff, 10)")(0) == 13L, "bits beyond the length are 0")
+    assert(generated(kernels.last) ==
+      Map(0 -> true, 1 -> true, 2 -> false, 3 -> false, 4 -> false, 5 -> null))
+  }
+
+  test("arity guard: one argument past the largest arity fails analysis, for every function") {
+    VectorFunctions.ensureRegistered(spark)
+    VectorFunctions.all.foreach { f =>
+      val n = f.arities.max + 1
+      val e = intercept[Exception](
+        spark.sql(s"SELECT ${f.name}(${Seq.fill(n)("NULL").mkString(", ")})"))
+      assert(s"${f.name} expects [0-9]+( or [0-9]+)* argument\\(s\\), got $n".r
+        .findFirstIn(e.getMessage).isDefined, s"${f.name}: ${e.getMessage}")
+    }
+    val e = intercept[Exception](
+      spark.sql("SELECT graft_term_counts(NULL, NULL, NULL, NULL)"))
+    assert(e.getMessage.contains("graft_term_counts expects 2 or 3 argument(s), got 4"),
+      e.getMessage)
+  }
+
+  test("a column where an INT literal is required fails analysis naming the function") {
+    import spark.implicits._
+    VectorFunctions.ensureRegistered(spark)
+    val df = Seq((Seq("a", "b", "c"), 2)).toDF("x", "k")
+    val e = intercept[Exception](df.selectExpr("graft_winnow(x, k, 5)"))
+    assert(e.getMessage.contains("graft_winnow expects a literal INT argument"), e.getMessage)
+  }
 }
