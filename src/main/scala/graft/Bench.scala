@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -71,6 +72,10 @@ object Bench {
     // for every steady-state query.
     val priced = graft.queries.Queries.priced
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
+    // codegen compiles per timed rep (the JVM-wide Janino count, which in
+    // local mode covers the executors too): a warm steady-state query
+    // compiles nothing, so a nonzero median is a per-rep recompile
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, List[Long]]
     // A rep that threw is never a sample: a query dying early would
     // otherwise LOWER its reading and the total. Its last message lands
     // in bench_out.json's "failed" map instead.
@@ -83,11 +88,14 @@ object Bench {
       // runs next — measured 3.7x inflation on mm_resize (1.4s isolated
       // vs 5.4s interleaved) purely from inherited heap pressure.
       System.gc()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try {
         run(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
         samples.updateWith(name)(prev => Some(t :: prev.getOrElse(Nil)))
+        val c = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        compiles.updateWith(name)(prev => Some(c :: prev.getOrElse(Nil)))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name rep $rep failed: $e")
@@ -118,14 +126,17 @@ object Bench {
     // The driver only keeps a 2,000-char tail of stdout, which truncates
     // the per-query map once it grows past ~55 queries — persist the full
     // line next to the build so every timing stays auditable per round.
-    // The file also carries the per-query p25/median/p75 spread (the
-    // stdout line keeps the driver's flat name->median contract).
+    // The file also carries the per-query p25/median/p75 spread and the
+    // median codegen compiles per rep (the stdout line keeps the driver's
+    // flat name->median contract).
     val spread = samples.map { case (name, ts) =>
       val sorted = ts.sorted.toIndexedSeq
+      val cs = compiles(name).sorted
       s"\"" + name + "\":{" +
         s"\"p25\":${quantile(sorted, 0.25)}," +
         s"\"p50\":${quantile(sorted, 0.50)}," +
-        s"\"p75\":${quantile(sorted, 0.75)}}"
+        s"\"p75\":${quantile(sorted, 0.75)}," +
+        s"\"compiles\":${cs(cs.size / 2)}}"
     }.mkString("{", ",", "}")
     val pricedRan = queries.keys.filter(priced).map("\"" + _ + "\"").mkString("[", ",", "]")
     val failedJson = failed.map { case (name, msg) =>

@@ -3,6 +3,7 @@ package graft.ops
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CacheSession
 import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for persisted operator intermediates.
@@ -28,6 +29,15 @@ import org.apache.spark.storage.StorageLevel
   * `releaseAll` is safe to call at any time — an unpersisted plan simply
   * recomputes — so a coarse per-query cadence (what Bench and Verify do)
   * is always correct.
+  *
+  * [[lease]] does not call `Dataset.persist`: Spark's cache path clones
+  * the session on every persist, and each clone's stages compile their
+  * generated code again (the codegen cache is per session class loader),
+  * so a leased plan recompiled every stage on every query. `lease`
+  * caches through one reused clone instead ([[CacheSession]]), rebuilt
+  * only when the session or its confs change. Persist only through
+  * `lease`; CachesGuardSpec fails on any other `.persist(`/`.cache()` in
+  * `src/main`.
   */
 object Caches {
   private val global = new ConcurrentLinkedQueue[DataFrame]()
@@ -41,7 +51,7 @@ object Caches {
     */
   def lease(df: DataFrame,
             level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    df.persist(level)
+    CacheSession.cache(df, level)
     current.get().add(df)
     df
   }

@@ -78,8 +78,15 @@ class BloomJoinSpec extends SparkSpec {
 
   test("probe expressions survive both codegen and interpreted eval") {
     val sketch = BloomJoin.sketchOf(Seq(5L).toDF("v"), "v", expected = 10)
-    val df = VectorFunctions.attach(Seq((5L, Seq(5L)), (6L, Seq(6L))).toDF("k", "hs"))
-    val sel = df.select(
+    // through parquet: a local Seq relation would have the projection
+    // folded into it and evaluated interpreted on both runs
+    val path = java.nio.file.Files.createTempDirectory("graft_bloom_probe_spec").toString
+    Seq((5L, Seq(5L)), (6L, Seq(6L))).toDF("k", "hs")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val df = VectorFunctions.attach(spark.read.parquet(path))
+    // a def: each run plans afresh, so the interpreted run is not handed
+    // the first run's whole-stage plan
+    def sel = df.select(
       expr(BloomJoin.containsSql(sketch, "k")).as("c"),
       expr(BloomJoin.anySql(sketch, "hs")).as("a"))
     val codegen = sel.collect()

@@ -208,6 +208,74 @@ class OpsSpec extends SparkSpec {
     assert(outer.storageLevel == StorageLevel.NONE)
   }
 
+  test("Caches.lease: a leased plan compiles no classes on its second run") {
+    import graft.ops.Caches
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = Caches.scoped {
+      val agg = Caches.lease((1 to 100).map(i => (i % 7, i)).toDF("k", "v")
+        .groupBy("k").agg(sum("v").as("s")))
+      // toRdd, as Bench and the board run a query: collect() ran warm
+      // even through a per-call session clone
+      agg.as("a").join(agg.as("b"), "k").queryExecution.toRdd.count()
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    val before = compiles
+    run()
+    assert(compiles - before == 0,
+      "every cache must go through the one reused session, whose stages hit the codegen cache")
+  }
+
+  test("Caches.lease: a changed conf gets a fresh cache session") {
+    import graft.ops.Caches
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    def cachedShufflePartitions(): Seq[Int] = Caches.scoped {
+      val agg = Caches.lease((1 to 10).map(i => (i % 3, i)).toDF("k", "v").groupBy("k").count())
+      val cached = agg.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cachedPlan
+      }.get
+      Plans.collect(cached) { case s: ShuffleExchangeExec => s.outputPartitioning.numPartitions }
+    }
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(cachedShufflePartitions() == Seq(n))
+    withSQLConf("spark.sql.shuffle.partitions" -> (n + 3).toString) {
+      assert(cachedShufflePartitions() == Seq(n + 3))
+    }
+    assert(cachedShufflePartitions() == Seq(n))
+  }
+
+  test("Caches.lease: the cache session has Spark's cache confs off, reused while unchanged") {
+    import org.apache.spark.sql.execution.CacheSession
+    val autoBucketed = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val finalStage = "spark.sql.adaptive.applyFinalStageShuffleOptimizations"
+    val cacheSession = CacheSession.session(spark)
+    assert(cacheSession ne spark)
+    assert(cacheSession.conf.get(autoBucketed) == "false")
+    assert(cacheSession.conf.get(finalStage) == "false")
+    assert(spark.conf.get(autoBucketed) == "true", "the parent's confs stay as they were")
+    assert(CacheSession.session(spark) eq cacheSession)
+    // Spark does not clone a session that has both off: neither does lease
+    withSQLConf(autoBucketed -> "false", finalStage -> "false") {
+      assert(CacheSession.session(spark) eq spark)
+    }
+    // with the cached plan's partitioning allowed to change, only
+    // the bucketed-scan conf is turned off, as in Spark's clone
+    withSQLConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+      val s = CacheSession.session(spark)
+      assert((s ne spark) && s.conf.get(autoBucketed) == "false")
+      assert(s.conf.get(finalStage) == spark.conf.get(finalStage))
+    }
+    // an optimizer rule added after the clone reaches the next cache session
+    graft.plans.KernelizeTextOps.install(spark)
+    try assert(CacheSession.session(spark).experimental.extraOptimizations
+      .contains(graft.plans.KernelizeTextOps))
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.KernelizeTextOps)
+  }
+
   test("simhash of identical docs is identical; of empty doc is stable") {
     val sh = Dedup.simhash(docs, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -88,7 +88,8 @@ class PqSpec extends SparkSpec {
       (Seq(0, 1), Seq(10.0, 20.0, 30.0, 40.0))  // idx0 -> 10 ; idx3 -> 40
     ).toDF("codes", "flat").coalesce(1).write.mode("overwrite").parquet(path)
     val df = VectorFunctions.attach(spark.read.parquet(path))
-    val sel = df.select(expr("graft_pq_adc(codes, flat, 2)").as("s"))
+    // a def: a second action on one Dataset reuses its generated plan
+    def sel = df.select(expr("graft_pq_adc(codes, flat, 2)").as("s"))
     assert(sel.as[Double].collect().toSeq == Seq(50.0, 50.0))
     // wholeStage off alone still compiles the projection; NO_CODEGEN
     // makes it call nullSafeEval
