@@ -53,8 +53,6 @@ object CacheSession {
     */
   def cache(df: DataFrame, level: StorageLevel): Unit = {
     val parent = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val session = of(parent)
-    if (session eq parent) df.persist(level)
-    else parent.sharedState.cacheManager.cacheQuery(session, df.queryExecution.analyzed, None, level)
+    parent.sharedState.cacheManager.cacheQuery(of(parent), df.queryExecution.analyzed, None, level)
   }
 }
